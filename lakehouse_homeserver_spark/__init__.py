@@ -26,8 +26,9 @@ Design rules (100 TB):
 - DataFrame/SQL only; RDDs never.
 - Broadcast small dimensions explicitly; let AQE handle skew.
 - No ``collect()`` in any operator path; drivers only orchestrate.
-- Python UDFs only as Arrow-batched pandas UDFs, and only where
-  built-ins genuinely cannot express the semantics.
+- Python only where built-ins genuinely cannot express the
+  semantics, and always as Arrow batches: map kernels through
+  ``map_rows`` / ``mapInArrow``, pandas only for grouped ops.
 """
 
 __version__ = "0.1.0"

@@ -14,8 +14,9 @@ aggregates inside whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEC = "decimal(18,2)"
 
@@ -71,3 +72,35 @@ def make_registry():
         return deco
 
     return queries, oracles, query
+
+
+def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
+    """The one map path across the Python boundary: ``df.mapInArrow``
+    with a per-row kernel. ``fn(*row)`` receives the input columns'
+    Python values (``to_pylist``; NULL is ``None``) and returns an
+    iterable of output tuples in ``schema`` order — one for a 1:1
+    kernel, zero or more for a fan-out; ``schema`` is a StructType or
+    a DDL string, as for ``mapInArrow``. Each input batch yields one
+    typed Arrow batch, so a NULL stays a typed NULL and a float NaN
+    stays NaN: a kernel whose contract is NULL returns ``None``.
+    Grouped semantics (``applyInPandas``) are the only pandas path."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            inputs = [c.to_pylist() for c in batch.columns]
+            rows = [out for row in zip(*inputs) for out in fn(*row)]
+            cols = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(run, schema)

@@ -8,7 +8,7 @@ missing composition on the EXPORT side: exact dedup -> Gopher quality
 gate -> WebDataset shard packing -> verified parse-back, as ONE
 driver-certified query that reuses the certified code paths verbatim
 (`gopher_gate` from operators/text.py, `_wds_assemble` /
-`wds_sample_batches` / `tar_pack` / PNG codec from
+`wds_sample_rows` / `tar_pack` / PNG codec from
 operators/multimodal.py) — no copies, so the composition cannot
 drift from the standalone certificates.
 
@@ -25,13 +25,13 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table as T
 
-from .common import make_registry
+from .common import make_registry, map_rows
 from .dedup import SQL_NORM, norm_text
 from .multimodal import (
     WDS_N_SHARDS,
     WDS_SCHEMA,
     _wds_assemble,
-    wds_sample_batches,
+    wds_sample_rows,
 )
 from .text import _gopher_oracle_tail, gopher_gate
 
@@ -93,7 +93,7 @@ def k7_multimodal_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics) -> Gopher gate (`gopher_gate`, the IDENTICAL r11-
     certified rule body) -> WebDataset packing (`_wds_assemble`: real
     ustar, header checksums, same-key .txt/.img pairs with a real PNG
-    payload) -> verified parse-back (`wds_sample_batches`: checksum
+    payload) -> verified parse-back (`wds_sample_rows`: checksum
     walk, pairing contract, PNG decode). The oracle recomputes the
     dedup window, the gate rules, the pairing row-numbers, and both
     member digests from plaintext — so the hash certifies that ONLY
@@ -103,7 +103,7 @@ def k7_multimodal_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design: dedup is one hash-partition window on the content
     digest; the gate is map-only array arithmetic fused into the same
     scan; packing shuffles each surviving doc exactly once (by
-    shard); parse+decode is map-only Arrow-batched — a shard never
+    shard); parse+decode is one map-only `map_rows` pass — a shard never
     leaves the executor that read it. No driver collects, no
     all-pairs anywhere; identical scale shape to the two standalone
     certificates it composes."""
@@ -123,6 +123,4 @@ def k7_multimodal_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = deduped.join(keep, "doc_id")
 
     # stage 3 + 4 — pack into real shards, walk them back verified
-    return corpus_to_wds_shards(survivors).mapInPandas(
-        wds_sample_batches, WDS_SCHEMA
-    )
+    return map_rows(corpus_to_wds_shards(survivors), wds_sample_rows, WDS_SCHEMA)

@@ -3,10 +3,11 @@
 Design: media (image/audio/video) lives in the lakehouse as an opaque
 ``binary`` payload column plus a typed metadata struct — exactly how
 parquet stores it natively (BinaryType + StructType, no special
-format needed). Decode / feature-extraction runs as Arrow-batched
-``mapInPandas`` over the binary column: executors stream batches of
-payloads through a pandas function without ever materializing the
-corpus in one place.
+format needed). Decode / feature-extraction kernels are per-row
+functions run through ``map_rows`` (``mapInArrow``) over the binary
+column: executors stream Arrow batches of payloads through the kernel
+without ever materializing the corpus in one place. pandas is used
+only where a kernel needs grouped semantics (``applyInPandas``).
 
 The media codec libraries (PIL/librosa/av) are NOT in this
 environment. The codecs this module needs are implemented from their
@@ -15,7 +16,7 @@ zlib inflate, CRC chunks, all five scanline filters), baseline JPEG
 (ITU-T T.81 — Huffman, DCT, 4:2:0; see functions/jpeg.py), WAV/RIFF
 and u8 PCM. Formats beyond those (GIF/WebP/TIFF, MP3/AAC, video
 codecs) stay behind loud NotImplementedError seams. The generic
-feature kernel (`decode_features_batches`) additionally keeps a
+feature kernel (`decode_features_row`) additionally keeps a
 deterministic byte-level fallback so the PLUMBING certificate
 (schema, partitioning, Arrow batch shape) is payload-agnostic and
 oracle-checkable: the DuckDB oracle reproduces the same features
@@ -23,8 +24,6 @@ from the same bytes.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +39,7 @@ from pyspark.sql.types import (
 
 from ..sources import load_table as T
 
-from .common import make_registry
+from .common import make_registry, map_rows
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -73,6 +72,14 @@ DECODE_SCHEMA = StructType(
 )
 
 
+PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
 def _decode_image_real(payload: bytes):
     """Format-sniffing image decode over the REAL from-spec codecs:
     PNG (r10, stdlib zlib + numpy unfilter) and baseline JPEG (r11,
@@ -94,46 +101,21 @@ def _decode_image_real(payload: bytes):
     )
 
 
-def decode_features_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched feature extraction over binary payloads.
-
-    pandas in, pandas out — one row per payload; the deterministic
+def decode_features_row(doc_id, b):
+    """Feature extraction over one binary payload: the deterministic
     fallback computes byte-level features (length, first byte, sum of
     the first 16 bytes) in place of codec output.
-    """
-    import pandas as pd
 
-    for pdf in batches:
-        payloads = pdf["payload"]
-        # NULL payload -> all-NULL feature row; empty payload ->
-        # (0, 0, NULL). Both mirror the oracle exactly (r7 review):
-        # DuckDB ascii(substring('',1,1)) = 0 — the old -1 sentinel
-        # diverged — and SUM over an empty series is NULL, not 0.
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload_bytes": pd.array(
-                    [None if b is None else len(b) for b in payloads],
-                    dtype="Int64",
-                ),
-                "first_byte": pd.array(
-                    [
-                        None if b is None else (b[0] if len(b) else 0)
-                        for b in payloads
-                    ],
-                    dtype="Int64",
-                ),
-                "byte_sum_head16": pd.array(
-                    [
-                        None
-                        if b is None or not len(b)
-                        else int(sum(b[:16]))
-                        for b in payloads
-                    ],
-                    dtype="Int64",
-                ),
-            }
-        )
+    NULL payload -> all-NULL feature row; empty payload -> (0, 0,
+    NULL). Both mirror the oracle exactly: DuckDB
+    ascii(substring('',1,1)) = 0, and SUM over an empty series is
+    NULL, not 0.
+    """
+    if b is None:
+        return [(doc_id, None, None, None)]
+    if not b:
+        return [(doc_id, 0, 0, None)]
+    return [(doc_id, len(b), b[0], sum(b[:16]))]
 
 
 @query(
@@ -149,14 +131,14 @@ def decode_features_batches(batches: Iterator, _nothing=None):
     """,
 )
 def k5_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column feature extraction via Arrow-batched mapInPandas
-    (SURVEY K5). The payload crosses to Python once, as Arrow batches,
-    on the executors — no driver involvement, no per-row pickling.
+    """Binary-column feature extraction via `map_rows` (SURVEY K5).
+    The payload crosses to Python once, as Arrow batches, on the
+    executors — no driver involvement, no per-row pickling.
     (Oracle works because fixture text is ASCII: byte==char.)
     """
     media = media_table(spark, sf_dir)
-    return media.select("doc_id", "payload").mapInPandas(
-        decode_features_batches, DECODE_SCHEMA
+    return map_rows(
+        media.select("doc_id", "payload"), decode_features_row, DECODE_SCHEMA
     )
 
 
@@ -256,9 +238,8 @@ RESIZE_REAL_SCHEMA = StructType(
 RESIZE_FACTOR = 2  # 8x8 source -> 4x4 thumbnail (exact 2x2 box)
 
 
-def resize_png_batches(batches: Iterator, _nothing=None):
-    """REAL resize stage (VERDICT r10 next-round #2 — replaces the
-    r1 md5-digest stand-in): per payload, full PNG decode
+def resize_png_row(doc_id, p):
+    """REAL resize stage: per payload, full PNG decode
     (`png_decode_rgb`: CRC walk + inflate + 5-filter unapply), exact
     2x2 integer box downsample (floor of the 4-pixel sum / 4 — no
     float, bit-identical in any engine), re-encode through
@@ -269,37 +250,24 @@ def resize_png_batches(batches: Iterator, _nothing=None):
     the arithmetic. NULL payload -> all-NULL row (matching the
     oracle's NULL-body propagation)."""
     import numpy as np
-    import pandas as pd
 
-    def one(p):
-        if p is None:
-            return (None, None, None)
-        px = png_decode_rgb(p).astype(np.int64)
-        h, w, _ = px.shape
-        if h % RESIZE_FACTOR or w % RESIZE_FACTOR:
-            raise ValueError(
-                f"resize expects dims divisible by {RESIZE_FACTOR}, "
-                f"got {w}x{h}"
-            )
-        th, tw = h // RESIZE_FACTOR, w // RESIZE_FACTOR
-        small = (
-            px.reshape(th, RESIZE_FACTOR, tw, RESIZE_FACTOR, 3)
-            .sum(axis=(1, 3))
-            // (RESIZE_FACTOR * RESIZE_FACTOR)
-        ).astype(np.uint8)
-        back = png_decode_rgb(png_encode_rgb(small))
-        return (tw, th, bytes(back.reshape(-1)).hex())
-
-    for pdf in batches:
-        out = [one(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.array([o[0] for o in out], dtype="Int64"),
-                "height": pd.array([o[1] for o in out], dtype="Int64"),
-                "thumb_hex": [o[2] for o in out],
-            }
+    if p is None:
+        return [(doc_id, None, None, None)]
+    px = png_decode_rgb(p).astype(np.int64)
+    h, w, _ = px.shape
+    if h % RESIZE_FACTOR or w % RESIZE_FACTOR:
+        raise ValueError(
+            f"resize expects dims divisible by {RESIZE_FACTOR}, "
+            f"got {w}x{h}"
         )
+    th, tw = h // RESIZE_FACTOR, w // RESIZE_FACTOR
+    small = (
+        px.reshape(th, RESIZE_FACTOR, tw, RESIZE_FACTOR, 3)
+        .sum(axis=(1, 3))
+        // (RESIZE_FACTOR * RESIZE_FACTOR)
+    ).astype(np.uint8)
+    back = png_decode_rgb(png_encode_rgb(small))
+    return [(doc_id, tw, th, bytes(back.reshape(-1)).hex())]
 
 
 @query(
@@ -345,22 +313,14 @@ def k5_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output size is bounded by construction (4x4x3 = 48 pixel bytes +
     fixed PNG framing) — the property that keeps a 100 TB resize
     job's write volume predictable. Scale shape: two chained map-only
-    Arrow-batched mapInPandas passes fused into the scan stage; the
-    payload never shuffles, per-image work is O(pixels).
+    `map_rows` passes fused into the scan stage; the payload never
+    shuffles, per-image work is O(pixels).
     """
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("pixels"))
-    png = src.mapInPandas(
-        png_encode_batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return png.mapInPandas(resize_png_batches, RESIZE_REAL_SCHEMA)
+    png = map_rows(src, png_encode_row, PAYLOAD_SCHEMA)
+    return map_rows(png, resize_png_row, RESIZE_REAL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -383,6 +343,23 @@ PPM_DECODE_SCHEMA = StructType(
 )
 
 
+def rgb_stats_row(doc_id, px) -> tuple:
+    """The PPM_DECODE_SCHEMA row of a decoded (h, w, 3) image: its
+    geometry and per-channel means (the row every RGB decoder emits).
+    A zero-pixel image has NULL means, not NaN."""
+    h, w, _ = px.shape
+    if not px.size:
+        return (doc_id, w, h, None, None, None)
+    return (
+        doc_id,
+        w,
+        h,
+        float(px[:, :, 0].mean()),
+        float(px[:, :, 1].mean()),
+        float(px[:, :, 2].mean()),
+    )
+
+
 def ppm_payload_col():
     """P6 payload assembled from the row's text: real PPM header +
     exactly w*h*3 pixel bytes (the text cycled via rpad). This is the
@@ -392,60 +369,34 @@ def ppm_payload_col():
     return F.concat(F.lit(PPM_HEADER), F.encode(body, "UTF-8"))
 
 
-def decode_ppm_batches(batches: Iterator, _nothing=None):
+def decode_ppm_row(doc_id, b):
     """REAL image decode (not a stub): parses the P6 header (magic,
     dimensions, maxval), validates payload length, reinterprets the
     pixel buffer as a (h, w, 3) uint8 array with numpy, and emits
     per-channel means — the same steps PIL/imageio would perform for
     an uncompressed format, with zero external codec dependency.
-    PNG has a real stdlib-zlib decode (png_decode_rgb, r10) and
-    baseline JPEG a real Huffman+IDCT decode (functions/jpeg.py,
-    r11); only out-of-scope formats keep the loud
-    NotImplementedError path in _decode_image_real."""
+    PNG has a real stdlib-zlib decode (png_decode_rgb) and baseline
+    JPEG a real Huffman+IDCT decode (functions/jpeg.py); only
+    out-of-scope formats keep the loud NotImplementedError path in
+    _decode_image_real.
+
+    A NULL payload propagates a NULL feature row instead of crashing
+    the stage: the payload synth (text-derived) yields NULL for NULL
+    text, and a single NULL row must not kill a 100 TB decode pass."""
     import numpy as np
-    import pandas as pd
 
-    def one(b: bytes):
-        if b is None:
-            # NULL payload: propagate a NULL feature row instead of
-            # crashing the stage (r7 review) — the payload synth
-            # (text-derived) yields NULL for NULL text, and a single
-            # NULL row must not kill a 100 TB decode pass.
-            return (None, None, None, None, None)
-        b = bytes(b)
-        if not b.startswith(b"P6"):
-            raise ValueError("not a P6 PPM payload")
-        # header = three whitespace-delimited fields after the magic
-        parts = b.split(b"\n", 3)
-        w, h = (int(x) for x in parts[1].split())
-        maxval = int(parts[2])
-        if maxval != 255:
-            raise ValueError("only 8-bit PPM supported")
-        px = np.frombuffer(parts[3][: w * h * 3], dtype=np.uint8).reshape(
-            h, w, 3
-        )
-        return (
-            w,
-            h,
-            float(px[:, :, 0].mean()),
-            float(px[:, :, 1].mean()),
-            float(px[:, :, 2].mean()),
-        )
-
-    for pdf in batches:
-        decoded = [one(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                # nullable Int64 so a NULL-payload row crosses Arrow
-                # as null instead of poisoning the column to float
-                "width": pd.array([d[0] for d in decoded], dtype="Int64"),
-                "height": pd.array([d[1] for d in decoded], dtype="Int64"),
-                "mean_r": [d[2] for d in decoded],
-                "mean_g": [d[3] for d in decoded],
-                "mean_b": [d[4] for d in decoded],
-            }
-        )
+    if b is None:
+        return [(doc_id, None, None, None, None, None)]
+    if not b.startswith(b"P6"):
+        raise ValueError("not a P6 PPM payload")
+    # header = three whitespace-delimited fields after the magic
+    parts = b.split(b"\n", 3)
+    w, h = (int(x) for x in parts[1].split())
+    maxval = int(parts[2])
+    if maxval != 255:
+        raise ValueError("only 8-bit PPM supported")
+    px = np.frombuffer(parts[3][: w * h * 3], dtype=np.uint8).reshape(h, w, 3)
+    return [rgb_stats_row(doc_id, px)]
 
 
 @query(
@@ -480,13 +431,13 @@ def k5_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     real (compressed formats too — PNG since r10, baseline JPEG since
     r11; only out-of-scope codecs keep the loud seam).
 
-    Scale shape: one map-only mapInPandas pass, payload never
+    Scale shape: one map-only `map_rows` pass, payload never
     shuffled; at 100 TB the decode parallelism is the scan
     parallelism.
     """
     d = T(spark, sf_dir, "documents")
     media = d.select("doc_id", ppm_payload_col().alias("payload"))
-    return media.mapInPandas(decode_ppm_batches, PPM_DECODE_SCHEMA)
+    return map_rows(media, decode_ppm_row, PPM_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -786,61 +737,25 @@ def png_decode_rgb(b: bytes):
     return px
 
 
-def png_encode_batches(batches: Iterator, _nothing=None):
+def png_encode_row(doc_id, px):
     """Ingestion stand-in: pixels (text-derived, 8x8 RGB — same byte
     derivation as the PPM cert) -> a REAL zlib-compressed PNG file
     per row. NULL pixels propagate a NULL payload."""
     import numpy as np
-    import pandas as pd
 
-    for pdf in batches:
-        payloads = [
-            None
-            if px is None
-            else png_encode_rgb(
-                np.frombuffer(bytes(px), dtype=np.uint8).reshape(
-                    PPM_H, PPM_W, _PNG_BPP
-                )
-            )
-            for px in pdf["pixels"]
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "payload": payloads}
-        )
+    if px is None:
+        return [(doc_id, None)]
+    img = np.frombuffer(px, dtype=np.uint8).reshape(PPM_H, PPM_W, _PNG_BPP)
+    return [(doc_id, png_encode_rgb(img))]
 
 
-def png_decode_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched REAL compressed-image decode: full PNG parse
-    (CRC-verified chunks, inflate, 5-filter un-filtering) per payload,
-    then per-channel means. Mirrors decode_ppm_batches' NULL
-    contract."""
-    import pandas as pd
-
-    def one(p):
-        if p is None:
-            return (None, None, None, None, None)
-        px = png_decode_rgb(p)
-        h, w, _ = px.shape
-        return (
-            w,
-            h,
-            float(px[:, :, 0].mean()),
-            float(px[:, :, 1].mean()),
-            float(px[:, :, 2].mean()),
-        )
-
-    for pdf in batches:
-        decoded = [one(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.array([d[0] for d in decoded], dtype="Int64"),
-                "height": pd.array([d[1] for d in decoded], dtype="Int64"),
-                "mean_r": [d[2] for d in decoded],
-                "mean_g": [d[3] for d in decoded],
-                "mean_b": [d[4] for d in decoded],
-            }
-        )
+def png_decode_row(doc_id, p):
+    """REAL compressed-image decode: full PNG parse (CRC-verified
+    chunks, inflate, 5-filter un-filtering) per payload, then
+    per-channel means. Mirrors decode_ppm_row's NULL contract."""
+    if p is None:
+        return [(doc_id, None, None, None, None, None)]
+    return [rgb_stats_row(doc_id, png_decode_rgb(p))]
 
 
 @query(
@@ -877,7 +792,7 @@ def k5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode round trip bit-for-bit. 8x8 keeps each mean an exact
     sum/64 (no float drift).
 
-    Scale shape: two chained map-only mapInPandas passes (encode
+    Scale shape: two chained map-only `map_rows` passes (encode
     stand-in, decode) fused into one stage — payload never shuffles;
     at 100 TB decode parallelism is scan parallelism, per-image work
     is O(pixels). Baseline JPEG gained its own from-spec decode
@@ -887,16 +802,8 @@ def k5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("pixels"))
-    png = src.mapInPandas(
-        png_encode_batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return png.mapInPandas(png_decode_batches, PPM_DECODE_SCHEMA)
+    png = map_rows(src, png_encode_row, PAYLOAD_SCHEMA)
+    return map_rows(png, png_decode_row, PPM_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -917,50 +824,46 @@ PCM_SCHEMA = StructType(
 )
 
 
-def pcm_frame_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched REAL audio decode: interpret the binary payload
-    as unsigned 8-bit PCM (an actual WAV sample format — no codec
-    library needed), window into overlapping frames, and emit
-    per-frame amplitude features. One input row fans out to
-    n_frames output rows — the mapInPandas contract that a
-    frame-level audio pipeline (VAD, loudness gating) needs.
+def _r6(v: float) -> float:
+    """HALF_UP at 6 dp to match DuckDB/Spark ROUND — python round()
+    is banker's and disagrees exactly at the boundary, which sum/256
+    (a terminating binary fraction) hits routinely."""
+    import math
+
+    return math.floor(v * 1e6 + 0.5) / 1e6
+
+
+def pcm_frame_rows(doc_id, payload):
+    """REAL audio decode: interpret the binary payload as unsigned
+    8-bit PCM (an actual WAV sample format — no codec library
+    needed), window into overlapping frames, and emit per-frame
+    amplitude features. One input row fans out to n_frames output
+    rows — the contract a frame-level audio pipeline (VAD, loudness
+    gating) needs. A NULL payload emits no frames — the oracle's
+    WHERE nb >= FRAME excludes NULL lengths the same way.
 
     Numeric contract: per-frame sums are int64 over u8 samples —
     EXACT and order-independent — so rms/mean are single IEEE ops on
     identical operands in any engine; no float-reduction ordering
     anywhere.
     """
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    def r6(v: float) -> float:
-        # HALF_UP at 6 dp to match DuckDB/Spark ROUND — python round()
-        # is banker's and disagrees exactly at the boundary, which
-        # sum/256 (a terminating binary fraction) hits routinely.
-        return math.floor(v * 1e6 + 0.5) / 1e6
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "frame_idx", "sum_amp", "rms", "mean_amp")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            if payload is None:
-                # NULL payload emits no frames — the oracle's
-                # WHERE nb >= FRAME excludes NULL lengths the same
-                # way (r7 review NULL-guard pass).
-                continue
-            x = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-            n_frames = (len(x) - PCM_FRAME) // PCM_HOP + 1 if len(x) >= PCM_FRAME else 0
-            for fi in range(n_frames):
-                fr = x[fi * PCM_HOP : fi * PCM_HOP + PCM_FRAME]
-                s = int(fr.sum())
-                ssq = int((fr * fr).sum())
-                out["doc_id"].append(doc_id)
-                out["frame_idx"].append(fi)
-                out["sum_amp"].append(s)
-                out["rms"].append(r6((ssq / PCM_FRAME) ** 0.5))
-                out["mean_amp"].append(r6(s / PCM_FRAME))
-        yield pd.DataFrame(out)
+    if payload is None:
+        return
+    x = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+    n_frames = (len(x) - PCM_FRAME) // PCM_HOP + 1 if len(x) >= PCM_FRAME else 0
+    for fi in range(n_frames):
+        fr = x[fi * PCM_HOP : fi * PCM_HOP + PCM_FRAME]
+        s = int(fr.sum())
+        ssq = int((fr * fr).sum())
+        yield (
+            doc_id,
+            fi,
+            s,
+            _r6((ssq / PCM_FRAME) ** 0.5),
+            _r6(s / PCM_FRAME),
+        )
 
 
 @query(
@@ -1003,7 +906,7 @@ def k5_pcm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowing every VAD / loudness-gate / feature-extract audio
     pipeline starts with.
 
-    Plan shape: map-only mapInPandas fan-out (1 payload row →
+    Plan shape: map-only `map_rows` fan-out (1 payload row →
     n_frames rows), Arrow-batched, no shuffle; at 100 TB the frame
     explosion happens executor-side and never lands in an exchange.
     The payload bytes here are the utf-8 document text (the fixture's
@@ -1012,9 +915,7 @@ def k5_pcm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads flow through the identical plumbing.
     """
     m = media_table(spark, sf_dir)
-    return m.select("doc_id", "payload").mapInPandas(
-        pcm_frame_batches, PCM_SCHEMA
-    )
+    return map_rows(m.select("doc_id", "payload"), pcm_frame_rows, PCM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1081,63 +982,26 @@ def _parse_wav(wav: bytes) -> tuple[int, int, int, int, bytes]:
     return fmt_tag, rate, channels, bits, pcm
 
 
-def wav_roundtrip_batches(batches):
-    """Encode each payload into a WAV container, then parse it back
-    with the chunk walker and emit header fields + exact PCM stats."""
-    import math
+def wav_roundtrip_row(doc_id, payload):
+    """Encode a payload into a WAV container, then parse it back with
+    the chunk walker and emit header fields + exact PCM stats.
 
+    A NULL payload keeps the oracle's shape: the header constants
+    are emitted unconditionally, the PCM-derived fields go NULL. A
+    zero-sample payload has NULL stats with n_samples=0 (list_sum over
+    an empty list is NULL in the oracle)."""
     import numpy as np
-    import pandas as pd
 
-    for pdf in batches:
-        out = {
-            k: []
-            for k in (
-                "doc_id",
-                "sample_rate",
-                "channels",
-                "bits",
-                "n_samples",
-                "sum_amp",
-                "mean_amp",
-            )
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            out["doc_id"].append(doc_id)
-            if payload is None:
-                # Oracle parity for NULL text: the header constants
-                # are emitted unconditionally there, the PCM-derived
-                # fields go NULL (r7 review NULL-guard pass).
-                out["sample_rate"].append(WAV_RATE)
-                out["channels"].append(WAV_CHANNELS)
-                out["bits"].append(WAV_BITS)
-                out["n_samples"].append(None)
-                out["sum_amp"].append(None)
-                out["mean_amp"].append(None)
-                continue
-            wav = _build_wav(bytes(payload))
-            fmt_tag, rate, channels, bits, pcm = _parse_wav(wav)
-            if fmt_tag != 1:
-                raise ValueError(f"expected PCM fmt tag, got {fmt_tag}")
-            x = np.frombuffer(pcm, dtype=np.uint8).astype(np.int64)
-            s = int(x.sum())
-            out["sample_rate"].append(rate)
-            out["channels"].append(channels)
-            out["bits"].append(bits)
-            out["n_samples"].append(len(x))
-            if len(x):
-                out["sum_amp"].append(s)
-                out["mean_amp"].append(math.floor(s / len(x) * 1e6 + 0.5) / 1e6)
-            else:
-                # zero-sample payload: list_sum over an empty list is
-                # NULL in the oracle (and s/0 would crash) — emit
-                # NULL stats with n_samples=0 (r7 review ZeroDivision)
-                out["sum_amp"].append(None)
-                out["mean_amp"].append(None)
-        pdf_out = pd.DataFrame(out)
-        for c in ("n_samples", "sum_amp"):
-            pdf_out[c] = pd.array(pdf_out[c], dtype="Int64")
-        yield pdf_out
+    if payload is None:
+        return [(doc_id, WAV_RATE, WAV_CHANNELS, WAV_BITS, None, None, None)]
+    fmt_tag, rate, channels, bits, pcm = _parse_wav(_build_wav(payload))
+    if fmt_tag != 1:
+        raise ValueError(f"expected PCM fmt tag, got {fmt_tag}")
+    x = np.frombuffer(pcm, dtype=np.uint8).astype(np.int64)
+    if not len(x):
+        return [(doc_id, rate, channels, bits, 0, None, None)]
+    s = int(x.sum())
+    return [(doc_id, rate, channels, bits, len(x), s, _r6(s / len(x)))]
 
 
 @query(
@@ -1170,14 +1034,15 @@ def k5_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameters, per-doc sums match the text bytes the payload stands
     in for.
 
-    Same scale shape as every K5 op: Arrow-batched mapInPandas,
+    Same scale shape as every K5 op: one `map_rows` pass,
     map-only, payload bytes never shuffle. Compressed AUDIO codecs
     (MP3/AAC) stay behind the documented seam; container
     parsing (RIFF here, like the P6 header parse for images) is the
     part a 100 TB media pipeline runs BEFORE any codec."""
     m = media_table(spark, sf_dir)
-    return m.select("doc_id", "payload").mapInPandas(
-        wav_roundtrip_batches,
+    return map_rows(
+        m.select("doc_id", "payload"),
+        wav_roundtrip_row,
         "doc_id long, sample_rate int, channels int, bits int, "
         "n_samples bigint, sum_amp bigint, mean_amp double",
     )
@@ -1262,21 +1127,47 @@ AHASH_SCHEMA = StructType(
 )
 
 
-def _gray_to_band_frame(doc_ids, gray):
-    """Shared aHash tail (r10 review): per-image grayscale-sum rows ->
-    mean-threshold bits (integer cross-multiply, no division) -> 8
-    little-bit-order band bytes as the b0..b7 int32 frame both
-    near-dup kernels emit. `gray` is (n, n_pixels) int64."""
-    import numpy as np
-    import pandas as pd
+def _ahash_near_dup_pairs(payloads: DataFrame, gray_of) -> DataFrame:
+    """Shared aHash tail of every image near-dup query. One
+    batch-vectorized mapInArrow pass over the (doc_id, payload)
+    frame: NULL payloads (NULL source text) carry no image and are
+    dropped; `gray_of(list_of_payload_bytes)` returns the batch's
+    (n, n_pixels) int64 grayscale sums; mean-threshold bits (integer
+    cross-multiply, no division) pack into the 8 little-bit-order
+    band bytes b0..b7. Then the banded candidate join.
 
-    npx = gray.shape[1]
-    bits = (gray * npx > gray.sum(axis=1, keepdims=True)).astype(np.uint8)
-    bands = np.packbits(bits, axis=1, bitorder="little")
-    out = {"doc_id": doc_ids}
-    for j in range(8):
-        out[f"b{j}"] = bands[:, j].astype("int32")
-    return pd.DataFrame(out)
+    The hash table fans out 4 ways (two band-join sides + two
+    Hamming-verify sides); without materialization each branch re-runs
+    the decode kernel (measured 7.3 s -> 2.6 s at sf0.1). One eager
+    localCheckpoint of the 9-int-per-doc table is the write-once
+    fan-out shape a production pipeline persists anyway; it also makes
+    the count that drives the band plan a cheap read."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(AHASH_SCHEMA)
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            batch = batch.filter(pc.is_valid(batch.column(1)))
+            if not batch.num_rows:
+                continue
+            gray = gray_of(batch.column(1).to_pylist())
+            npx = gray.shape[1]
+            bits = gray * npx > gray.sum(axis=1, keepdims=True)
+            bands = np.packbits(bits, axis=1, bitorder="little")
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0)]
+                + [pa.array(bands[:, j].astype(np.int32)) for j in range(8)],
+                schema=arrow_schema,
+            )
+
+    hashes = payloads.mapInArrow(run, AHASH_SCHEMA).localCheckpoint(eager=True)
+    m, r = _ahash_band_plan(hashes.count())
+    return _ahash_candidate_pairs(hashes, m, r)
 
 
 @query(
@@ -1300,7 +1191,7 @@ def k5_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join and no recall loss. All arithmetic is integer; the
     DuckDB oracle recomputes identical hashes from the same bytes.
 
-    100 TB design: hashing is a map-only Arrow-batched numpy kernel
+    100 TB design: hashing is a map-only batch-vectorized numpy kernel
     over the decoded pixels (the per-pixel threshold as a Column
     expression tree fanned out 4x through the self-join and stalled
     Catalyst optimization — the same >10²-term lesson as
@@ -1323,49 +1214,23 @@ def k5_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hdr = len(PPM_HEADER)
     npx = PPM_W * PPM_H
 
-    def ahash_batches(batches: Iterator, _nothing=None):
+    def ppm_gray(payloads):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            # NULL payloads (NULL source text) can't carry an image;
-            # drop them from the batch — a hash row for them would be
-            # meaningless and the fixed-geometry reshape below needs
-            # every payload present (r7 review NULL-guard pass).
-            mask = pdf["payload"].notna()
-            if not mask.all():
-                pdf = pdf[mask]
-            if not len(pdf):
-                continue
-            # Fixed-geometry P6: validate headers, then decode the
-            # WHOLE batch as one (n, 64, 3) reshape — a per-image
-            # Python loop here measured 4.6 s of the query's 6 s at
-            # sf0.1; the batch form is ~µs/image (the BLAS shape).
-            raw = np.frombuffer(
-                b"".join(bytes(p) for p in pdf["payload"]), dtype=np.uint8
-            ).reshape(len(pdf), hdr + 3 * npx)
-            if not (raw[:, :2] == np.frombuffer(b"P6", np.uint8)).all():
-                raise ValueError("not a P6 PPM payload")
-            gray = raw[:, hdr:].reshape(len(pdf), npx, 3).astype(
-                np.int64
-            ).sum(axis=2)
-            yield _gray_to_band_frame(pdf["doc_id"], gray)
+        # Fixed-geometry P6: validate headers, then decode the WHOLE
+        # batch as one (n, 64, 3) reshape — a per-image Python loop
+        # here measured 4.6 s of the query's 6 s at sf0.1; the batch
+        # form is ~µs/image (the BLAS shape).
+        raw = np.frombuffer(b"".join(payloads), dtype=np.uint8).reshape(
+            len(payloads), hdr + 3 * npx
+        )
+        if not (raw[:, :2] == np.frombuffer(b"P6", np.uint8)).all():
+            raise ValueError("not a P6 PPM payload")
+        return (
+            raw[:, hdr:].reshape(len(payloads), npx, 3).astype(np.int64).sum(axis=2)
+        )
 
-
-    # The hash table fans out 4 ways (two band-join sides + two
-    # Hamming-verify sides); without materialization each branch re-runs
-    # the decode kernel (measured 7.3 s -> 2.6 s at sf0.1). One eager
-    # localCheckpoint of the 9-int-per-doc hash table is the
-    # write-once-fan-out shape a production pipeline persists anyway
-    # (same precedent as the near-dup pair-table memoization).
-    hashes = media.mapInPandas(ahash_batches, AHASH_SCHEMA).localCheckpoint(
-        eager=True
-    )
-    # The checkpoint makes this count a metadata-cheap read of the
-    # already-materialized 9-int-per-doc table; it drives the band
-    # plan, nothing else.
-    m, r = _ahash_band_plan(hashes.count())
-    return _ahash_candidate_pairs(hashes, m, r)
+    return _ahash_near_dup_pairs(media, ppm_gray)
 
 
 def _ahash_band_plan(n_docs: int) -> tuple:
@@ -1466,7 +1331,7 @@ def _ahash_candidate_pairs(hashes: DataFrame, m: int, r: int) -> DataFrame:
 def k5_png_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE multimodal dedup pipeline over COMPRESSED media
     (r10): binary PNG payloads (zlib IDAT, CRC'd chunks, all-5-filter
-    scanlines — the ingestion stand-in `png_encode_batches` builds
+    scanlines — the ingestion stand-in `png_encode_row` builds
     real files) -> REAL codec decode (`png_decode_rgb`: chunk walk +
     CRC verify + inflate + un-filter) -> 64-bit aHash over the decoded
     pixels -> pigeonhole banded near-dup pairs. This is the CLIP-style
@@ -1482,7 +1347,7 @@ def k5_png_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition exchange (192-byte pixel rows, PRE-payload — see the
     inline comment below; the sf fixtures are single-split scans that
     would otherwise serialize the per-image codec kernel onto one
-    core), then the Arrow-batched encode+decode+hash pass and the
+    core), then the encode+decode+hash passes and the
     band-bucket equi-join as the only data-sized shuffle, with
     corpus-scaled banding via `_ahash_band_plan`; the per-image cost
     beyond the aHash twin is the codec
@@ -1508,47 +1373,19 @@ def k5_png_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = d.select(
         "doc_id", F.encode(body, "UTF-8").alias("pixels")
     ).repartition(spark.sparkContext.defaultParallelism)
-    png = src.mapInPandas(
-        png_encode_batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    png = map_rows(src, png_encode_row, PAYLOAD_SCHEMA)
 
-    def png_ahash_batches(batches: Iterator, _nothing=None):
+    def png_gray(payloads):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            mask = pdf["payload"].notna()
-            if not mask.all():
-                pdf = pdf[mask]
-            if not len(pdf):
-                continue
-            # Real decode per image (zlib inflate + 5-filter unapply),
-            # then the same integer aHash as k5_ahash_near_dup: gray
-            # sums, mean threshold via integer cross-multiply, 8 band
-            # bytes. Per-image work is O(pixels); the batch loop is
-            # the honest cost profile of compressed-codec ingestion.
-            px = np.stack(
-                [png_decode_rgb(p) for p in pdf["payload"]]
-            ).astype(np.int64)
-            n, h, w_, _ = px.shape
-            gray = px.reshape(n, h * w_, 3).sum(axis=2)
-            yield _gray_to_band_frame(pdf["doc_id"], gray)
+        # Real decode per image (zlib inflate + 5-filter unapply);
+        # per-image work is O(pixels), the honest cost profile of
+        # compressed-codec ingestion.
+        px = np.stack([png_decode_rgb(p) for p in payloads]).astype(np.int64)
+        n, h, w_, _ = px.shape
+        return px.reshape(n, h * w_, 3).sum(axis=2)
 
-
-    # Same write-once-fan-out materialization as k5_ahash_near_dup
-    # (the hash table feeds 4 plan branches; without it each re-runs
-    # the full encode+decode kernel).
-    hashes = png.mapInPandas(png_ahash_batches, AHASH_SCHEMA).localCheckpoint(
-        eager=True
-    )
-    m, r = _ahash_band_plan(hashes.count())
-    return _ahash_candidate_pairs(hashes, m, r)
+    return _ahash_near_dup_pairs(png, png_gray)
 
 
 # ---------------------------------------------------------------------------
@@ -1590,55 +1427,27 @@ def _jpeg_quadrant_payload(b) -> bytes | None:
     return jpeg_encode_baseline(y, cb, cr)
 
 
-def jpeg_encode_batches(batches: Iterator, _nothing=None):
+def jpeg_encode_row(doc_id, pixels):
     """Ingestion stand-in over `_jpeg_quadrant_payload`. The entropy
     machinery exercised is complete: 4 MCUs, cross-MCU DC prediction
     on three components, EOB coding, byte stuffing, all four Annex K
     Huffman tables."""
-    import pandas as pd
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    _jpeg_quadrant_payload(p) for p in pdf["pixels"]
-                ],
-            }
-        )
+    return [(doc_id, _jpeg_quadrant_payload(pixels))]
 
 
-def jpeg_decode_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched REAL JPEG decode: full marker walk, Huffman
-    decode, dequantize, IDCT, 4:2:0 upsample, YCbCr->RGB. Emits the
-    RGB of each 8x8 block's top-left pixel (blocks are constant by
-    construction) as 48 hex bytes. NULL payload -> all-NULL row."""
-    import pandas as pd
-
+def jpeg_decode_row(doc_id, p):
+    """REAL JPEG decode: full marker walk, Huffman decode, dequantize,
+    IDCT, 4:2:0 upsample, YCbCr->RGB. Emits the RGB of each 8x8
+    block's top-left pixel (blocks are constant by construction) as
+    48 hex bytes. NULL payload -> all-NULL row."""
     from ..functions.jpeg import jpeg_decode_baseline
 
-    def one(p):
-        if p is None:
-            return (None, None, None)
-        px = jpeg_decode_baseline(p)
-        if px.ndim != 3 or px.shape != (JPEG_H, JPEG_W, 3):
-            raise ValueError(f"unexpected decoded shape {px.shape}")
-        return (
-            JPEG_W,
-            JPEG_H,
-            bytes(px[::8, ::8].reshape(-1)).hex(),
-        )
-
-    for pdf in batches:
-        out = [one(p) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.array([o[0] for o in out], dtype="Int64"),
-                "height": pd.array([o[1] for o in out], dtype="Int64"),
-                "quad_hex": [o[2] for o in out],
-            }
-        )
+    if p is None:
+        return [(doc_id, None, None, None)]
+    px = jpeg_decode_baseline(p)
+    if px.ndim != 3 or px.shape != (JPEG_H, JPEG_W, 3):
+        raise ValueError(f"unexpected decoded shape {px.shape}")
+    return [(doc_id, JPEG_W, JPEG_H, bytes(px[::8, ::8].reshape(-1)).hex())]
 
 
 def _jpeg_rgb_val_sql(
@@ -1722,7 +1531,7 @@ def k5_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-lossless at quantizer 1 (|err| <= 3, pinned by pytest).
 
     Scale shape: identical to k5_png_decode — two chained map-only
-    Arrow-batched mapInPandas passes; payload never shuffles; decode
+    `map_rows` passes; payload never shuffles; decode
     parallelism is scan parallelism, per-image work O(pixels).
     Progressive/arithmetic/12-bit/DRI variants stay loud ValueErrors
     (functions/jpeg.py names each).
@@ -1737,16 +1546,8 @@ def k5_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = d.select(
         "doc_id", F.encode(body, "UTF-8").alias("pixels")
     ).repartition(spark.sparkContext.defaultParallelism)
-    jpg = src.mapInPandas(
-        jpeg_encode_batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return jpg.mapInPandas(jpeg_decode_batches, JPEG_DECODE_SCHEMA)
+    jpg = map_rows(src, jpeg_encode_row, PAYLOAD_SCHEMA)
+    return map_rows(jpg, jpeg_decode_row, JPEG_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1790,48 +1591,19 @@ def media_mixed_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline 4:2:0 JPEG (quadrant-constant 32x32) — the honest shape
     of a crawled image corpus, where the dedup stage cannot assume
     one codec. Payload synthesis is the same pre-encode repartition
-    + Arrow-batched mapInPandas as the single-format pipelines."""
+    + `map_rows` pass as the single-format pipelines."""
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select(
         "doc_id", F.encode(body, "UTF-8").alias("pixels")
     ).repartition(spark.sparkContext.defaultParallelism)
 
-    def encode_mixed(batches: Iterator, _nothing=None):
-        import numpy as np
-        import pandas as pd
+    def encode_mixed(doc_id, b):
+        if b is None or doc_id % 2:
+            return jpeg_encode_row(doc_id, b)
+        return png_encode_row(doc_id, b[:192])
 
-        def one(doc_id, b):
-            if b is None:
-                return None
-            if doc_id % 2 == 0:
-                return png_encode_rgb(
-                    np.frombuffer(
-                        bytes(b)[:192], dtype=np.uint8
-                    ).reshape(PPM_H, PPM_W, _PNG_BPP)
-                )
-            return _jpeg_quadrant_payload(b)
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        one(i, p)
-                        for i, p in zip(pdf["doc_id"], pdf["pixels"])
-                    ],
-                }
-            )
-
-    return src.mapInPandas(
-        encode_mixed,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
+    return map_rows(src, encode_mixed, PAYLOAD_SCHEMA)
 
 
 @query(
@@ -1860,20 +1632,18 @@ def k5_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a NULL-bearing corpus.
 
     100 TB design: identical to k5_png_near_dup — pre-encode
-    repartition (18-192-byte pixel rows), one Arrow-batched map-only
-    encode+decode+hash pass, band-bucket equi-join as the only
+    repartition (18-192-byte pixel rows), map-only
+    encode and decode+hash passes, band-bucket equi-join as the only
     data-sized shuffle, corpus-scaled banding via _ahash_band_plan;
     the sniff adds one magic-bytes branch per image."""
     png_or_jpg = media_mixed_payloads(spark, sf_dir)
 
-    def mixed_ahash_batches(batches: Iterator, _nothing=None):
+    def mixed_gray(payloads):
         import numpy as np
-        import pandas as pd
 
         from ..functions.jpeg import jpeg_decode_baseline
 
         def gray_cells(p):
-            p = bytes(p)
             if p[:8] == PNG_SIG:
                 px = png_decode_rgb(p).astype(np.int64)
                 return px.sum(axis=2).reshape(-1)
@@ -1884,20 +1654,9 @@ def k5_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             raise ValueError("unknown media payload magic")
 
-        for pdf in batches:
-            mask = pdf["payload"].notna()
-            if not mask.all():
-                pdf = pdf[mask]
-            if not len(pdf):
-                continue
-            gray = np.stack([gray_cells(p) for p in pdf["payload"]])
-            yield _gray_to_band_frame(pdf["doc_id"], gray)
+        return np.stack([gray_cells(p) for p in payloads])
 
-    hashes = png_or_jpg.mapInPandas(
-        mixed_ahash_batches, AHASH_SCHEMA
-    ).localCheckpoint(eager=True)
-    m, r = _ahash_band_plan(hashes.count())
-    return _ahash_candidate_pairs(hashes, m, r)
+    return _ahash_near_dup_pairs(png_or_jpg, mixed_gray)
 
 
 # ---------------------------------------------------------------------------
@@ -1921,40 +1680,27 @@ MJPEG_SCHEMA = StructType(
 )
 
 
-def mjpeg_encode_batches(batches: Iterator, _nothing=None):
+def mjpeg_encode_row(doc_id, b):
     """Ingestion stand-in: 36 text-derived bytes per row -> a REAL
     Motion-JPEG stream (MJPEG is literally concatenated baseline JPEG
     frames — the format video pipelines split before per-frame work).
     Frame f's 16x16 image uses bytes [6f..6f+3] as its four 8x8 Y
     block constants and bytes [6f+4]/[6f+5] as its global Cb/Cr."""
     import numpy as np
-    import pandas as pd
 
     from ..functions.jpeg import jpeg_encode_baseline
 
-    def one(b):
-        if b is None:
-            return None
-        a = np.frombuffer(
-            bytes(b)[: MJPEG_FRAMES * _MJPEG_BYTES_PER_FRAME],
-            dtype=np.uint8,
-        )
-        frames = []
-        for f in range(MJPEG_FRAMES):
-            fb = a[f * 6 : f * 6 + 6]
-            y = np.repeat(np.repeat(fb[:4].reshape(2, 2), 8, 0), 8, 1)
-            cb = np.full((8, 8), fb[4], np.uint8)
-            cr = np.full((8, 8), fb[5], np.uint8)
-            frames.append(jpeg_encode_baseline(y, cb, cr))
-        return b"".join(frames)
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [one(p) for p in pdf["pixels"]],
-            }
-        )
+    if b is None:
+        return [(doc_id, None)]
+    a = np.frombuffer(b[: MJPEG_FRAMES * _MJPEG_BYTES_PER_FRAME], dtype=np.uint8)
+    frames = []
+    for f in range(MJPEG_FRAMES):
+        fb = a[f * 6 : f * 6 + 6]
+        y = np.repeat(np.repeat(fb[:4].reshape(2, 2), 8, 0), 8, 1)
+        cb = np.full((8, 8), fb[4], np.uint8)
+        cr = np.full((8, 8), fb[5], np.uint8)
+        frames.append(jpeg_encode_baseline(y, cb, cr))
+    return [(doc_id, b"".join(frames))]
 
 
 def _mjpeg_frame_end(p: bytes, pos: int) -> int:
@@ -2005,7 +1751,7 @@ def _mjpeg_frame_end(p: bytes, pos: int) -> int:
             )
 
 
-def mjpeg_frame_batches(batches: Iterator, _nothing=None):
+def mjpeg_frame_rows(doc_id, p):
     """REAL video frame sampling: split the MJPEG stream at frame
     boundaries with the segment-aware walker above, decode every
     MJPEG_EVERY-th frame with the full baseline decoder, and emit its
@@ -2013,42 +1759,28 @@ def mjpeg_frame_batches(batches: Iterator, _nothing=None):
     decoded — the skip is the point of frame sampling at 100 TB. One
     clip row fans out to ceil(MJPEG_FRAMES/MJPEG_EVERY) frame rows.
     NULL payload -> no rows (a missing clip has no frames)."""
-    import pandas as pd
-
     from ..functions.jpeg import jpeg_decode_baseline
 
-    def frames_of(p):
-        p = bytes(p)
-        bounds = []
-        pos = 0
-        while pos < len(p):
-            end = _mjpeg_frame_end(p, pos)
-            bounds.append((pos, end))
-            pos = end
-        return bounds
-
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "frame_no", "width", "height", "quad_hex")}
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            if p is None:
-                continue
-            bounds = frames_of(p)
-            for f in range(0, len(bounds), MJPEG_EVERY):
-                s, e = bounds[f]
-                px = jpeg_decode_baseline(bytes(p)[s:e])
-                if px.shape != (MJPEG_FRAME_H, MJPEG_FRAME_W, 3):
-                    raise ValueError(f"unexpected frame shape {px.shape}")
-                out["doc_id"].append(doc_id)
-                out["frame_no"].append(f)
-                out["width"].append(MJPEG_FRAME_W)
-                out["height"].append(MJPEG_FRAME_H)
-                out["quad_hex"].append(
-                    bytes(px[::8, ::8].reshape(-1)).hex()
-                )
-        pdf_out = pd.DataFrame(out)
-        for c in ("frame_no", "width", "height"):
-            pdf_out[c] = pd.array(pdf_out[c], dtype="Int64")
-        yield pdf_out
+    if p is None:
+        return
+    bounds = []
+    pos = 0
+    while pos < len(p):
+        end = _mjpeg_frame_end(p, pos)
+        bounds.append((pos, end))
+        pos = end
+    for f in range(0, len(bounds), MJPEG_EVERY):
+        s, e = bounds[f]
+        px = jpeg_decode_baseline(p[s:e])
+        if px.shape != (MJPEG_FRAME_H, MJPEG_FRAME_W, 3):
+            raise ValueError(f"unexpected frame shape {px.shape}")
+        yield (
+            doc_id,
+            f,
+            MJPEG_FRAME_W,
+            MJPEG_FRAME_H,
+            bytes(px[::8, ::8].reshape(-1)).hex(),
+        )
 
 
 def _mjpeg_quad_hex_sql() -> str:
@@ -2103,7 +1835,7 @@ def k5_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame decode + sampling stride in one verdict.
 
     Scale shape: pre-encode repartition (36-used-byte rows), then two
-    chained map-only Arrow-batched passes with executor-side fan-out
+    chained map-only `map_rows` passes with executor-side fan-out
     (1 clip row -> {MJPEG_FRAMES // MJPEG_EVERY} frame rows); payloads
     never shuffle. NULL-text rows carry no clip and emit no frames
     (oracle: WHERE text IS NOT NULL)."""
@@ -2112,16 +1844,8 @@ def k5_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = d.select(
         "doc_id", F.encode(body, "UTF-8").alias("pixels")
     ).repartition(spark.sparkContext.defaultParallelism)
-    clips = src.mapInPandas(
-        mjpeg_encode_batches,
-        StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("payload", BinaryType()),
-            ]
-        ),
-    )
-    return clips.mapInPandas(mjpeg_frame_batches, MJPEG_SCHEMA)
+    clips = map_rows(src, mjpeg_encode_row, PAYLOAD_SCHEMA)
+    return map_rows(clips, mjpeg_frame_rows, MJPEG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2173,29 +1897,26 @@ ULAW_SCHEMA = StructType(
 )
 
 
-def ulaw_decode_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched mu-law stream decode: payload bytes are G.711
-    codes; emit exact integer PCM stats per payload. NULL payload ->
-    NULL stats row; empty payload -> (0, NULL, NULL, NULL), matching
+def _g711_stats(codes: bytes, decode) -> tuple:
+    """(n_samples, sum_pcm, min_pcm, max_pcm) of a G.711 code stream,
+    exact integers; an empty stream -> (0, NULL, NULL, NULL), matching
     the oracle's empty-list aggregates."""
     import numpy as np
-    import pandas as pd
 
-    def one(p):
-        if p is None:
-            return (None, None, None, None)
-        x = np.frombuffer(bytes(p), dtype=np.uint8)
-        if not len(x):
-            return (0, None, None, None)
-        pcm = ulaw_decode(x)
-        return (len(x), int(pcm.sum()), int(pcm.min()), int(pcm.max()))
+    x = np.frombuffer(codes, dtype=np.uint8)
+    if not len(x):
+        return (0, None, None, None)
+    pcm = decode(x)
+    return (len(x), int(pcm.sum()), int(pcm.min()), int(pcm.max()))
 
-    for pdf in batches:
-        out = [one(p) for p in pdf["payload"]]
-        frame = {"doc_id": pdf["doc_id"]}
-        for i, c in enumerate(("n_samples", "sum_pcm", "min_pcm", "max_pcm")):
-            frame[c] = pd.array([o[i] for o in out], dtype="Int64")
-        yield pd.DataFrame(frame)
+
+def ulaw_decode_row(doc_id, p):
+    """mu-law stream decode: payload bytes are G.711 codes; emit
+    exact integer PCM stats per payload. NULL payload -> NULL stats
+    row."""
+    if p is None:
+        return [(doc_id, None, None, None, None)]
+    return [(doc_id, *_g711_stats(p, ulaw_decode))]
 
 
 _ULAW_PCM_SQL = """list_transform(
@@ -2238,15 +1959,13 @@ def k5_ulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode(decode(c)) == c identity over all 256 codes (0x7F's
     negative zero canonicalizes to 0xFF, per spec).
 
-    Scale shape: one map-only mapInPandas pass, payload never
+    Scale shape: one map-only `map_rows` pass, payload never
     shuffles; mu-law expansion is a constant-time table-free bit
     formula per sample, so decode runs at scan speed. Compressed
     PERCEPTUAL audio (MP3/AAC) remains the documented out-of-scope
     seam; companded telephony audio no longer is."""
     m = media_table(spark, sf_dir)
-    return m.select("doc_id", "payload").mapInPandas(
-        ulaw_decode_batches, ULAW_SCHEMA
-    )
+    return map_rows(m.select("doc_id", "payload"), ulaw_decode_row, ULAW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2357,45 +2076,27 @@ def bmp_decode(b: bytes):
     return rows[:, :, ::-1].copy()  # BGR -> RGB
 
 
-def bmp_roundtrip_batches(batches: Iterator, _nothing=None):
-    """Encode each row's text-derived 8x8 RGB pixels into a real BMP
-    and decode it back: header checks, bottom-up un-flip, BGR->RGB,
-    per-channel means. Mirrors png_encode/decode's NULL contract."""
+def _lossless_roundtrip_row(doc_id, px, encode, decode, fmt: str):
+    """Encode a row's text-derived 8x8 RGB pixels with a lossless
+    codec, decode them back, and emit the decoded image's
+    `rgb_stats_row`. Any daylight between input and decode is a codec
+    bug, never acceptable drift, so it raises by name. NULL pixels ->
+    all-NULL row, as in the PNG decode."""
     import numpy as np
-    import pandas as pd
 
-    def one(px):
-        if px is None:
-            return (None, None, None, None, None)
-        arr = np.frombuffer(bytes(px)[:192], dtype=np.uint8).reshape(
-            PPM_H, PPM_W, 3
-        )
-        dec = bmp_decode(bmp_encode(arr))
-        if not np.array_equal(dec, arr):
-            # lossless format: any daylight between input and decode
-            # is a codec bug, never acceptable drift
-            raise ValueError("BMP round-trip mismatch")
-        h, w, _ = dec.shape
-        return (
-            w,
-            h,
-            float(dec[:, :, 0].mean()),
-            float(dec[:, :, 1].mean()),
-            float(dec[:, :, 2].mean()),
-        )
+    if px is None:
+        return [(doc_id, None, None, None, None, None)]
+    arr = np.frombuffer(px[:192], dtype=np.uint8).reshape(PPM_H, PPM_W, 3)
+    dec = decode(encode(arr))
+    if not np.array_equal(dec, arr):
+        raise ValueError(f"{fmt} round-trip mismatch")
+    return [rgb_stats_row(doc_id, dec)]
 
-    for pdf in batches:
-        decoded = [one(p) for p in pdf["pixels"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.array([d[0] for d in decoded], dtype="Int64"),
-                "height": pd.array([d[1] for d in decoded], dtype="Int64"),
-                "mean_r": [d[2] for d in decoded],
-                "mean_g": [d[3] for d in decoded],
-                "mean_b": [d[4] for d in decoded],
-            }
-        )
+
+def bmp_roundtrip_row(doc_id, px):
+    """BMP round trip: header checks, bottom-up un-flip, BGR->RGB,
+    per-channel means."""
+    return _lossless_roundtrip_row(doc_id, px, bmp_encode, bmp_decode, "BMP")
 
 
 @query(
@@ -2430,13 +2131,13 @@ def k5_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     means and fails the hash; padded geometries and the top-down
     variant are pinned by the dedicated pytest).
 
-    Scale shape: identical to k5_png_decode — one Arrow-batched
+    Scale shape: identical to k5_png_decode — one `map_rows`
     map-only pass, payload never shuffles, per-image work O(pixels).
     """
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("pixels"))
-    return src.mapInPandas(bmp_roundtrip_batches, PPM_DECODE_SCHEMA)
+    return map_rows(src, bmp_roundtrip_row, PPM_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2487,28 +2188,12 @@ def alaw_encode(pcm):
     return np.bitwise_xor(aval, mask).astype(np.uint8)
 
 
-def alaw_decode_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched A-law stream decode; same NULL/empty contract
-    as the mu-law twin (NULL payload -> NULL stats; empty payload ->
-    (0, NULL, NULL, NULL))."""
-    import numpy as np
-    import pandas as pd
-
-    def one(p):
-        if p is None:
-            return (None, None, None, None)
-        x = np.frombuffer(bytes(p), dtype=np.uint8)
-        if not len(x):
-            return (0, None, None, None)
-        pcm = alaw_decode(x)
-        return (len(x), int(pcm.sum()), int(pcm.min()), int(pcm.max()))
-
-    for pdf in batches:
-        out = [one(p) for p in pdf["payload"]]
-        frame = {"doc_id": pdf["doc_id"]}
-        for i, c in enumerate(("n_samples", "sum_pcm", "min_pcm", "max_pcm")):
-            frame[c] = pd.array([o[i] for o in out], dtype="Int64")
-        yield pd.DataFrame(frame)
+def alaw_decode_row(doc_id, p):
+    """A-law stream decode; same NULL/empty contract as the mu-law
+    twin."""
+    if p is None:
+        return [(doc_id, None, None, None, None)]
+    return [(doc_id, *_g711_stats(p, alaw_decode))]
 
 
 _ALAW_PCM_SQL = """list_transform(
@@ -2556,12 +2241,10 @@ def k5_alaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike mu-law's 0x7F).
 
     Scale shape: identical to the mu-law twin — one map-only
-    Arrow-batched pass, constant-time bit formula per sample, decode
+    `map_rows` pass, constant-time bit formula per sample, decode
     at scan speed."""
     m = media_table(spark, sf_dir)
-    return m.select("doc_id", "payload").mapInPandas(
-        alaw_decode_batches, ULAW_SCHEMA
-    )
+    return map_rows(m.select("doc_id", "payload"), alaw_decode_row, ULAW_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2819,45 +2502,11 @@ def gif_decode(b: bytes):
     return palette[idx.reshape(h, w)]
 
 
-def gif_roundtrip_batches(batches: Iterator, _nothing=None):
-    """Encode each row's text-derived 8x8 RGB pixels into a real
-    GIF87a and decode it back; pins decode == input exactly (the
-    64-pixel tile has <= 64 distinct colors, so the palette is exact
-    and GIF is lossless here). Same NULL contract as the PNG/BMP
-    twins."""
-    import numpy as np
-    import pandas as pd
-
-    def one(px):
-        if px is None:
-            return (None, None, None, None, None)
-        arr = np.frombuffer(bytes(px)[:192], dtype=np.uint8).reshape(
-            PPM_H, PPM_W, 3
-        )
-        dec = gif_decode(gif_encode(arr))
-        if not np.array_equal(dec, arr):
-            raise ValueError("GIF round-trip mismatch")
-        h, w, _ = dec.shape
-        return (
-            w,
-            h,
-            float(dec[:, :, 0].mean()),
-            float(dec[:, :, 1].mean()),
-            float(dec[:, :, 2].mean()),
-        )
-
-    for pdf in batches:
-        decoded = [one(p) for p in pdf["pixels"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.array([d[0] for d in decoded], dtype="Int64"),
-                "height": pd.array([d[1] for d in decoded], dtype="Int64"),
-                "mean_r": [d[2] for d in decoded],
-                "mean_g": [d[3] for d in decoded],
-                "mean_b": [d[4] for d in decoded],
-            }
-        )
+def gif_roundtrip_row(doc_id, px):
+    """GIF87a round trip; pins decode == input exactly (the 64-pixel
+    tile has <= 64 distinct colors, so the palette is exact and GIF
+    is lossless here)."""
+    return _lossless_roundtrip_row(doc_id, px, gif_encode, gif_decode, "GIF")
 
 
 @query(
@@ -2892,12 +2541,12 @@ def k5_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     LZW + container end-to-end.
 
     Scale shape: identical to the other image certs — one map-only
-    Arrow-batched pass, payload never shuffles, per-image cost
+    `map_rows` pass, payload never shuffles, per-image cost
     O(pixels) (LZW is linear-time)."""
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("pixels"))
-    return src.mapInPandas(gif_roundtrip_batches, PPM_DECODE_SCHEMA)
+    return map_rows(src, gif_roundtrip_row, PPM_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3055,55 +2704,35 @@ def wds_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def wds_sample_batches(batches: Iterator, _nothing=None):
-    """Arrow-batched shard parse: ustar walk (checksums verified) ->
-    enforce the WebDataset pairing contract (members arrive as
-    adjacent same-key .txt/.img pairs — the property streaming
-    loaders rely on; any stray, misordered, or odd member raises) ->
-    decode the PNG half, digest both halves."""
+def wds_sample_rows(shard_id, blob):
+    """Shard parse: ustar walk (checksums verified) -> enforce the
+    WebDataset pairing contract (members arrive as adjacent same-key
+    .txt/.img pairs — the property streaming loaders rely on; any
+    stray, misordered, or odd member raises) -> decode the PNG half,
+    digest both halves. One shard row fans out to one row per
+    sample."""
     import hashlib
 
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "doc_id", "shard_id", "sample_index", "txt_chars",
-            "txt_digest", "img_w", "img_h", "pixel_digest",
-        )}
-        for shard_id, blob in zip(pdf["shard_id"], pdf["shard"]):
-            members = list(tar_unpack(blob))
-            if len(members) % 2:
-                raise ValueError(
-                    f"shard {shard_id}: odd member count {len(members)}"
-                )
-            for idx in range(0, len(members), 2):
-                (tname, tdata), (iname, idata) = members[idx], members[idx + 1]
-                tkey, tdot, text_ext = tname.partition(".")
-                ikey, idot, img_ext = iname.partition(".")
-                if (text_ext, img_ext) != ("txt", "img") or tkey != ikey:
-                    raise ValueError(
-                        "WebDataset pairing violation: "
-                        f"{tname!r} / {iname!r}"
-                    )
-                px = png_decode_rgb(idata)
-                text = tdata.decode("utf-8")
-                rows["doc_id"].append(int(tkey))
-                rows["shard_id"].append(int(shard_id))
-                rows["sample_index"].append(idx // 2)
-                rows["txt_chars"].append(len(text))
-                rows["txt_digest"].append(
-                    hashlib.md5(tdata).hexdigest()
-                )
-                rows["img_w"].append(px.shape[1])
-                rows["img_h"].append(px.shape[0])
-                rows["pixel_digest"].append(
-                    hashlib.md5(px.tobytes()).hexdigest()
-                )
-        out = pd.DataFrame(rows)
-        for c in ("doc_id", "shard_id", "sample_index", "txt_chars",
-                  "img_w", "img_h"):
-            out[c] = out[c].astype("int64")
-        yield out
+    members = list(tar_unpack(blob))
+    if len(members) % 2:
+        raise ValueError(f"shard {shard_id}: odd member count {len(members)}")
+    for idx in range(0, len(members), 2):
+        (tname, tdata), (iname, idata) = members[idx], members[idx + 1]
+        tkey, tdot, text_ext = tname.partition(".")
+        ikey, idot, img_ext = iname.partition(".")
+        if (text_ext, img_ext) != ("txt", "img") or tkey != ikey:
+            raise ValueError(f"WebDataset pairing violation: {tname!r} / {iname!r}")
+        px = png_decode_rgb(idata)
+        yield (
+            int(tkey),
+            shard_id,
+            idx // 2,
+            len(tdata.decode("utf-8")),
+            hashlib.md5(tdata).hexdigest(),
+            px.shape[1],
+            px.shape[0],
+            hashlib.md5(px.tobytes()).hexdigest(),
+        )
 
 
 @query(
@@ -3143,11 +2772,9 @@ def k5_webdataset_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design: the groupBy is the synthesis stand-in (a trainer
     READS shards — one whole file per task, zero shuffle, sequential
     I/O; that streaming-friendliness is the entire reason WebDataset
-    exists); parse + decode is one map-only Arrow-batched pass, a
+    exists); parse + decode is one map-only `map_rows` pass, a
     shard never leaves the executor that read it."""
-    return wds_shards(spark, sf_dir).mapInPandas(
-        wds_sample_batches, WDS_SCHEMA
-    )
+    return map_rows(wds_shards(spark, sf_dir), wds_sample_rows, WDS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3169,56 +2796,29 @@ WAV_G711_SCHEMA = StructType(
 )
 
 
-def wav_g711_batches(batches: Iterator, _nothing=None):
-    """Encode each payload as a real G.711 WAV (even doc_ids fmt 7 /
+def wav_g711_row(doc_id, p):
+    """Encode a payload as a real G.711 WAV (even doc_ids fmt 7 /
     mu-law, odd fmt 6 / A-law), parse it back with the RIFF chunk
     walker, and DISPATCH the decoder on the container's fmt tag —
     the decision a real audio pipeline makes per file. An unknown
     tag raises NAMED (pytest-pinned), because the wrong-compander
-    failure mode is silent garbage, never an error."""
-    import numpy as np
-    import pandas as pd
-
-    def one(doc_id, p):
-        if p is None:
-            # NULL payload: the container constants are still known
-            # (the oracle emits them unconditionally — same NULL
-            # contract as k5_wav_decode); PCM-derived stats go NULL.
-            return (
-                7 if doc_id % 2 == 0 else 6,
-                WAV_RATE, WAV_BITS, None, None, None, None,
-            )
-        tag = 7 if doc_id % 2 == 0 else 6
-        wav = _build_wav(bytes(p), fmt_tag=tag)
-        fmt_tag, rate, _channels, bits, data = _parse_wav(wav)
-        if fmt_tag == 7:
-            decode = ulaw_decode
-        elif fmt_tag == 6:
-            decode = alaw_decode
-        else:
-            raise ValueError(
-                f"no decoder for WAV fmt tag {fmt_tag} "
-                "(1=PCM handled by k5_wav_decode; 6/7=G.711)"
-            )
-        x = np.frombuffer(data, dtype=np.uint8)
-        if not len(x):
-            return (fmt_tag, rate, bits, 0, None, None, None)
-        pcm = decode(x)
-        return (
-            fmt_tag, rate, bits,
-            len(x), int(pcm.sum()), int(pcm.min()), int(pcm.max()),
+    failure mode is silent garbage, never an error. A NULL payload
+    still has the container constants (the oracle emits them
+    unconditionally, as in k5_wav_decode); its PCM stats go NULL."""
+    tag = 7 if doc_id % 2 == 0 else 6
+    if p is None:
+        return [(doc_id, tag, WAV_RATE, WAV_BITS, None, None, None, None)]
+    fmt_tag, rate, _channels, bits, data = _parse_wav(_build_wav(p, fmt_tag=tag))
+    if fmt_tag == 7:
+        decode = ulaw_decode
+    elif fmt_tag == 6:
+        decode = alaw_decode
+    else:
+        raise ValueError(
+            f"no decoder for WAV fmt tag {fmt_tag} "
+            "(1=PCM handled by k5_wav_decode; 6/7=G.711)"
         )
-
-    for pdf in batches:
-        out = [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])]
-        frame = {"doc_id": pdf["doc_id"]}
-        for i, c in enumerate(("fmt_tag", "sample_rate", "bits")):
-            frame[c] = pd.array([o[i] for o in out], dtype="Int32")
-        for i, c in enumerate(
-            ("n_samples", "sum_pcm", "min_pcm", "max_pcm"), start=3
-        ):
-            frame[c] = pd.array([o[i] for o in out], dtype="Int64")
-        yield pd.DataFrame(frame)
+    return [(doc_id, fmt_tag, rate, bits, *_g711_stats(data, decode))]
 
 
 @query(
@@ -3259,9 +2859,7 @@ def k5_wav_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag + dispatch + expansion end-to-end; an unknown fmt tag raises
     NAMED rather than guessing.
 
-    Scale shape: one map-only Arrow-batched pass, same as every K5
+    Scale shape: one map-only `map_rows` pass, same as every K5
     audio cert."""
     m = media_table(spark, sf_dir)
-    return m.select("doc_id", "payload").mapInPandas(
-        wav_g711_batches, WAV_G711_SCHEMA
-    )
+    return map_rows(m.select("doc_id", "payload"), wav_g711_row, WAV_G711_SCHEMA)

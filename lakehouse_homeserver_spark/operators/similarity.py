@@ -349,6 +349,12 @@ def _nearest_clusters(emb_col: str, centroids: list[list[float]], n: int) -> F.C
     )
 
 
+def _arrow_matrix(col) -> "np.ndarray":
+    """(n, d) numpy matrix of a non-empty, fixed-width Arrow list
+    column, read through the flattened values buffer."""
+    return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
+
+
 def _safe_norms(M: "np.ndarray") -> "np.ndarray":
     """Row L2 norms with zero mapped to 1.0: a zero embedding would
     otherwise turn its normalized row into NaNs (numpy only warns)
@@ -1031,7 +1037,7 @@ def k3_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at 100 TB: the codebook is a bounded model collect
     (16x64 floats — the IVF-centroid precedent); assignment is then
-    MAP-ONLY as an Arrow-batched numpy kernel over mapInPandas — the
+    MAP-ONLY as a batch-vectorized numpy kernel over mapInArrow — the
     vectorized BLAS shape real PQ coders (FAISS) use, ~µs/vector.
     (A pure-expression variant was measured first: the 8×16×8-term
     tree costs ~15 s of py4j construction OR blows janino's 64 KB
@@ -1073,27 +1079,30 @@ def k3_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = np.array(seeds, dtype=np.float64)  # PQ_K × 64
 
     def assign(batches):
-        import math
+        import pyarrow as pa
 
-        import pandas as pd
-
-        for pdf in batches:
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            out = {"vec_id": pdf["vec_id"], "label": pdf["label"]}
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            E = _arrow_matrix(batch.column(2)).astype(np.float64)
+            codes = []
             total = None
             for m in range(PQ_M):
                 lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
                 diff = E[:, None, lo:hi] - cb[None, :, lo:hi]
                 d = (diff * diff).sum(axis=2)  # n × PQ_K
-                out[f"code_{m}"] = d.argmin(axis=1).astype("int64")
+                codes.append(pa.array(d.argmin(axis=1).astype(np.int64)))
                 mins = d.min(axis=1)
                 total = mins if total is None else total + mins
-            out["distortion"] = [
-                math.floor(v * 1e6 + 0.5) / 1e6 for v in total
-            ]
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), batch.column(1), *codes,
+                 pa.array(np.floor(total * 1e6 + 0.5) / 1e6)],
+                names=["vec_id", "label"]
+                + [f"code_{m}" for m in range(PQ_M)]
+                + ["distortion"],
+            )
 
-    return e.select("vec_id", "label", "embedding").mapInPandas(
+    return e.select("vec_id", "label", "embedding").mapInArrow(
         assign, out_schema
     )
 
@@ -1282,28 +1291,39 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cc = (cb * cb).sum(axis=1)  # K exact int64 norms
 
         def kern(batches):
-            import pandas as pd
+            import pyarrow as pa
 
-            for pdf in batches:
-                Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                qcol = batch.column(batch.num_columns - 1)
+                Q = _arrow_matrix(qcol).astype(np.int64)
                 qq = (Q * Q).sum(axis=1)
                 dots = Q @ cb.T  # int64-exact (numpy integer matmul)
                 d2 = qq[:, None] + cc[None, :] - 2 * dots
                 key = d2 * _SEM_MULT + cids[None, :]
                 jmin = key.argmin(axis=1)  # first min == SQL MIN key
-                out = {"cluster": cids[jmin]}
-                if final:
-                    rows = np.arange(len(jmin))
-                    out["vec_id"] = pdf["vec_id"]
-                    out["label"] = pdf["label"]
-                    out["embedding"] = pdf["embedding"]
-                    out["csim"] = dots[rows, jmin].astype(np.float64) / (
-                        np.sqrt(qq.astype(np.float64))
-                        * np.sqrt(cc[jmin].astype(np.float64))
+                cluster = pa.array(cids[jmin])
+                if not final:
+                    yield pa.RecordBatch.from_arrays(
+                        [cluster, qcol], names=["cluster", "q"]
                     )
-                else:
-                    out["q"] = pdf["q"]
-                yield pd.DataFrame(out)
+                    continue
+                csim = dots[np.arange(len(jmin)), jmin].astype(np.float64) / (
+                    np.sqrt(qq.astype(np.float64))
+                    * np.sqrt(cc[jmin].astype(np.float64))
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column(0),
+                        cluster,
+                        batch.column(1),
+                        batch.column(2),
+                        # a zero-norm vector's 0/0 cosine is NULL
+                        pa.array(csim, mask=np.isnan(csim)),
+                    ],
+                    names=["vec_id", "cluster", "label", "embedding", "csim"],
+                )
 
         return kern
 
@@ -1311,7 +1331,7 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums = [F.sum(F.element_at("q", i + 1)).alias(f"s{i}") for i in range(d)]
     for _ in range(SEMDEDUP_ROUNDS):
         rows = (
-            q.select("q").mapInPandas(
+            q.select("q").mapInArrow(
                 assign_kernel(cents, final=False),
                 "cluster long, q array<bigint>",
             )
@@ -1327,13 +1347,13 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in rows
         )
 
-    # persist: mapInPandas is a narrow transformation, so without it
+    # persist: mapInArrow is a narrow transformation, so without it
     # the corpus scan + quantize + numpy assignment kernel execute
     # THREE times (both self-join sides and the final left join) —
     # the dominant cost of the operator tripled (r6 review finding).
     assigned = (
         q.select("vec_id", "label", "embedding", "q")
-        .mapInPandas(
+        .mapInArrow(
             assign_kernel(cents, final=True),
             "vec_id long, cluster long, label int, "
             "embedding array<float>, csim double",
@@ -1481,27 +1501,30 @@ def k3_ivfpq_search(
 
     # -- index: cluster id (JVM expression) + PQ codes (numpy kernel)
     def encode(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            E = _arrow_matrix(batch.column(1)).astype(np.float64)
             # L2-normalize BEFORE coding: the refine metric is cosine,
             # and on the unit sphere L2² = 2−2·cos — ADC ordering then
             # agrees with the final metric (the FAISS METRIC_INNER_
             # PRODUCT-on-normalized-vectors convention). Skipping this
             # measurably halves shortlist recall on the fixture.
             E /= _safe_norms(E)
-            out = {
-                "neighbor_id": pdf["vec_id"],
-                "cluster_id": pdf["cluster_id"],
-            }
+            codes = []
             for m in range(PQ_M):
                 lo, hi = m * PQ_SUB, (m + 1) * PQ_SUB
                 diff = E[:, None, lo:hi] - cbs[m][None, :, :]
-                out[f"code_{m}"] = (
-                    (diff * diff).sum(axis=2).argmin(axis=1).astype("int64")
+                codes.append(
+                    pa.array((diff * diff).sum(axis=2).argmin(axis=1).astype(np.int64))
                 )
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), batch.column(2), *codes],
+                names=["neighbor_id", "cluster_id"]
+                + [f"code_{m}" for m in range(PQ_M)],
+            )
 
     codes = (
         e.select(
@@ -1511,7 +1534,7 @@ def k3_ivfpq_search(
                 "cluster_id"
             ),
         )
-        .mapInPandas(
+        .mapInArrow(
             encode,
             "neighbor_id long, cluster_id int, "
             + ", ".join(f"code_{m} long" for m in range(PQ_M)),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..sources import load_table as T
 from .dedup import SQL_NORM, norm_text
 
-from .common import make_registry
+from .common import make_registry, map_rows
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -1066,14 +1066,15 @@ def mg_candidates_fn(batches):
     """Per-partition Misra-Gries: a bounded dict of MG_COUNTERS
     streaming counters; emits the surviving candidate tokens (n=0)
     plus one NULL-token row carrying the partition's total count, so
-    N rides the same pass. Module-level so tests can drive it past
-    the decrement path directly."""
-    import pandas as pd
+    N rides the same pass. A `mapInArrow` function over the `token`
+    column; module-level so tests can drive it past the decrement
+    path directly."""
+    import pyarrow as pa
 
     counters: dict[str, int] = {}
     total = 0
-    for pdf in batches:
-        for t in pdf["token"]:
+    for batch in batches:
+        for t in batch.column(0).to_pylist():
             total += 1
             if t in counters:
                 counters[t] += 1
@@ -1085,11 +1086,12 @@ def mg_candidates_fn(batches):
                     counters[k] -= 1
                 for k in drop:
                     del counters[k]
-    yield pd.DataFrame(
-        {
-            "token": list(counters.keys()) + [None],
-            "n": [0] * len(counters) + [total],
-        }
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(list(counters) + [None], pa.string()),
+            pa.array([0] * len(counters) + [total], pa.int64()),
+        ],
+        names=["token", "n"],
     )
 
 
@@ -1124,8 +1126,6 @@ def d14_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold filter removes false candidates), so the oracle is the
     plain GROUP BY ... HAVING — sketch-assisted ≠ approximate.
     """
-    import pandas as pd
-
     d = T(spark, sf_dir, "documents")
     toks = (
         d.select(
@@ -1133,7 +1133,7 @@ def d14_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("token") != "")
     )
-    mg = toks.mapInPandas(mg_candidates_fn, "token string, n long").cache()
+    mg = toks.mapInArrow(mg_candidates_fn, "token string, n long").cache()
     n_total = mg.agg(F.sum("n")).collect()[0][0] or 0
     cands = mg.filter(F.col("token").isNotNull()).select("token").distinct()
     # two corpus passes total: the MG/candidate+count pass above, and
@@ -2115,46 +2115,22 @@ WARC_RECORD_SCHEMA = (
 )
 
 
-def warc_record_batches(batches):
-    """Arrow-batched parse kernel: each .warc.gz blob -> its records,
-    streaming member-by-member (memory is bounded by one record, not
-    the archive — a 1 GB real-world WARC never materializes inflated).
+def warc_record_rows(file_id, blob):
+    """Parse kernel: one .warc.gz blob -> its records, streaming
+    member-by-member (memory is bounded by one record, not the
+    archive — a 1 GB real-world WARC never materializes inflated).
     rec_index is the PARSE-ORDER position inside the file, so the
     oracle's doc_id-ordered row_number certifies the container walk
     preserved record order."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "doc_id", "file_id", "rec_index", "warc_type", "target_uri",
-            "http_status", "content_length", "payload",
-        )}
-        for file_id, blob in zip(pdf["file_id"], pdf["warc"]):
-            for idx, rec in enumerate(_split_gzip_members(blob)):
-                wtype, doc_id, uri, status, clen, payload = (
-                    _parse_warc_record(rec)
-                )
-                rows["doc_id"].append(doc_id)
-                rows["file_id"].append(int(file_id))
-                rows["rec_index"].append(idx)
-                rows["warc_type"].append(wtype)
-                rows["target_uri"].append(uri)
-                rows["http_status"].append(status)
-                rows["content_length"].append(clen)
-                rows["payload"].append(payload)
-        out = pd.DataFrame(rows)
-        for c in ("doc_id", "file_id", "rec_index", "content_length"):
-            out[c] = out[c].astype("int64")
-        out["http_status"] = out["http_status"].astype("int32")
-        yield out
+    for idx, rec in enumerate(_split_gzip_members(blob)):
+        wtype, doc_id, uri, status, clen, payload = _parse_warc_record(rec)
+        yield (doc_id, file_id, idx, wtype, uri, status, clen, payload)
 
 
 def warc_parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Archive corpus -> one row per WARC record (parse stage only,
     map-only over the file blobs)."""
-    return warc_files(spark, sf_dir).mapInPandas(
-        warc_record_batches, WARC_RECORD_SCHEMA
-    )
+    return map_rows(warc_files(spark, sf_dir), warc_record_rows, WARC_RECORD_SCHEMA)
 
 
 def _warc_oracle_cte() -> str:
@@ -2214,7 +2190,7 @@ def k4_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode end-to-end lossless, including record ORDER (rec_index is
     parse-order, the oracle's is doc_id-ordered row_number).
 
-    100 TB design: parse is map-only mapInPandas over archive blobs,
+    100 TB design: parse is one map-only `map_rows` pass over archive blobs,
     streaming one gzip member at a time (peak memory = one record);
     the only shuffle is the synthesis stand-in groupBy that plays the
     crawler's role (a production run reads .warc.gz files directly —
@@ -2268,7 +2244,7 @@ def k4_cc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps only archive-present pages (NULL-text docs have no record).
 
     100 TB design: after the synthesis stand-in shuffle, one map-only
-    pass: parse kernel (Arrow-batched) then extraction regexes and
+    pass: parse kernel (`map_rows`) then extraction regexes and
     gate array expressions fused by codegen — no joins, no shuffle,
     the payload never leaves the executor that inflated it."""
     e = _html_extract_exprs(duck=False)
@@ -2315,38 +2291,26 @@ def _nfc_synth_sql() -> str:
     )
 
 
-def nfc_normalize_batches(batches):
-    """Arrow-batched NFC kernel: per-row unicodedata.normalize, char
-    counts before/after (Python len == SQL LENGTH, both codepoints),
-    md5 of the normalized UTF-8. NULL raw -> all-NULL row (matching
-    nfc_normalize(NULL)/md5(NULL) in the oracle)."""
+def nfc_normalize_row(doc_id, raw):
+    """NFC kernel: unicodedata.normalize, char counts before/after
+    (Python len == SQL LENGTH, both codepoints), md5 of the normalized
+    UTF-8. NULL raw -> all-NULL row (matching nfc_normalize(NULL)/
+    md5(NULL) in the oracle)."""
     import hashlib
     import unicodedata
 
-    import pandas as pd
-
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "doc_id", "n_before", "n_after", "n_composed", "norm_digest",
-        )}
-        for doc_id, raw in zip(pdf["doc_id"], pdf["raw"]):
-            rows["doc_id"].append(doc_id)
-            if raw is None:
-                for c in ("n_before", "n_after", "n_composed"):
-                    rows[c].append(None)
-                rows["norm_digest"].append(None)
-                continue
-            norm = unicodedata.normalize("NFC", raw)
-            rows["n_before"].append(len(raw))
-            rows["n_after"].append(len(norm))
-            rows["n_composed"].append(len(raw) - len(norm))
-            rows["norm_digest"].append(
-                hashlib.md5(norm.encode("utf-8")).hexdigest()
-            )
-        out = pd.DataFrame(rows)
-        for c in ("n_before", "n_after", "n_composed"):
-            out[c] = pd.array(out[c], dtype="Int64")
-        yield out
+    if raw is None:
+        return [(doc_id, None, None, None, None)]
+    norm = unicodedata.normalize("NFC", raw)
+    return [
+        (
+            doc_id,
+            len(raw),
+            len(norm),
+            len(raw) - len(norm),
+            hashlib.md5(norm.encode("utf-8")).hexdigest(),
+        )
+    ]
 
 
 @query(
@@ -2369,7 +2333,7 @@ def k4_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     text carries an appended DECOMPOSED suffix (base letter +
     combining mark, repeated doc_id-modularly — sequences whose
     compositions are stable across Unicode versions), and the
-    Arrow-batched kernel normalizes with CPython's unicodedata while
+    per-row kernel normalizes with CPython's unicodedata while
     the oracle replays DuckDB's independent utf8proc implementation.
     Char counts before/after, the per-doc composed-codepoint count,
     and the md5 of the normalized text must all hash-match — two
@@ -2383,12 +2347,13 @@ def k4_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     both encodings (macOS filenames and some CMS exports are NFD).
 
     Scale shape: one map-only pass — the synthesis is a JVM string
-    expression, normalization an Arrow-batched mapInPandas kernel
-    (unicodedata is C-speed per string); zero shuffle, scan-bound."""
+    expression, normalization a `map_rows` kernel (unicodedata is
+    C-speed per string); zero shuffle, scan-bound."""
     d = T(spark, sf_dir, "documents")
     raw = d.selectExpr("doc_id", f"{_nfc_synth_sql()} AS raw")
-    return raw.mapInPandas(
-        nfc_normalize_batches,
+    return map_rows(
+        raw,
+        nfc_normalize_row,
         "doc_id long, n_before bigint, n_after bigint, "
         "n_composed bigint, norm_digest string",
     )

@@ -1,10 +1,18 @@
 """Vectorized Python UDF surface — SURVEY.md §2.J.
 
 The engine's rule is UDF-as-last-resort (everything in relational.py
-is pure expression code), but the surface itself must exist and be
-fast when semantics genuinely need Python (numpy/scipy-style math,
-model inference). Both demos here are Arrow-batched — data crosses
-the JVM↔Python boundary as columnar batches, never row-at-a-time:
+is pure expression code). Where semantics genuinely need Python,
+there is one path across the JVM↔Python boundary per shape, and data
+always crosses as Arrow batches, never row-at-a-time:
+
+- map kernels run on `mapInArrow`: per-row kernels through
+  `map_rows` (operators/common.py), batch-vectorized numpy kernels
+  on `mapInArrow` directly (`j_arrow_batch_norms` below);
+- pandas is used only for grouped ops (`applyInPandas`,
+  `applyInPandasWithState`).
+
+The queries in this module exist to exercise the pandas UDF API
+itself, so they are the one place a scalar `pandas_udf` remains:
 
 - scalar `pandas_udf`: per-batch numpy over an array column
   (embedding L2-normalization — the preprocessing step every vector
@@ -352,8 +360,8 @@ def j_arrow_batch_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the kernel views the list column's values buffer as one flat
     numpy array, ZERO copies, and emits a new batch. For dense
     numeric kernels (vector math, audio frames, image tensors) this
-    is the lowest-overhead Python escape hatch, and the right
-    default when no pandas semantics are needed.
+    is the lowest-overhead Python escape hatch, and the engine's map
+    path whenever no grouped pandas semantics are needed.
 
     Float contract: the fold runs dimension-at-a-time (strided numpy
     adds = an explicit left fold, the r2-semdedup precedent; the r5

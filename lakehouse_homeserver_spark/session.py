@@ -206,7 +206,7 @@ _SHIPPED: set[str] = set()
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to the executors' python workers.
 
-    Pandas-UDF closures are cloudpickled **by reference** (module +
+    Python-kernel closures are cloudpickled **by reference** (module +
     qualname), so the worker process must be able to import
     ``lakehouse_homeserver_spark`` — which fails when the driver
     process runs from an arbitrary cwd (the harness does) and on any

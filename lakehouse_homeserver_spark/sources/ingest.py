@@ -45,6 +45,22 @@ SRC_NS = "src"
 META_NS = "metadata"
 
 
+def _drop_orphan_location(spark: SparkSession, table: str) -> None:
+    """Delete the managed location of a `db.name` table that has no
+    catalog entry. Such a directory is an orphan of a killed run or a
+    lost metastore (the warehouse outlives a Derby catalog): nothing
+    owns its files, and CREATE would refuse it with
+    LOCATION_ALREADY_EXISTS."""
+    db, name = table.split(".")
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(
+        spark.catalog.getDatabase(db).locationUri.rstrip("/") + "/" + name.lower()
+    )
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.exists(path):
+        fs.delete(path, True)
+
+
 @dataclass
 class TableFormat:
     """Write-path seam (SURVEY.md §1.4). `parquet` locally; swap
@@ -76,10 +92,12 @@ class TableFormat:
     def create_or_replace(
         self, df: DataFrame, table: str, properties: dict | None = None
     ) -> None:
-        if not df.sparkSession.catalog.tableExists(table):
-            self.create(df, table, properties=properties)
-        else:
+        spark = df.sparkSession
+        if spark.catalog.tableExists(table):
             df.write.format(self.name).mode("overwrite").saveAsTable(table)
+            return
+        _drop_orphan_location(spark, table)
+        self.create(df, table, properties=properties)
 
     def append(
         self, df: DataFrame, table: str, properties: dict | None = None

@@ -134,15 +134,14 @@ _TABLE_MEMO = weakref.WeakKeyDictionary()
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql use."""
     key = os.path.abspath(sf_dir)
-    # Sentinel guard on the memo fast path (ADVICE r12 low): the memo
-    # assumes no code drops/shadows a fixture temp view within the
-    # session. Verify one sentinel still resolves (~1 ms catalog
-    # lookup, no job) before skipping re-registration, so a future
-    # cert calling dropTempView/createOrReplaceTempView with a TABLES
-    # name degrades to a re-register instead of silently running
-    # later sql_* queries against a missing/shadowed view.
-    if _VIEWS_CURRENT.get(spark) == key and spark.catalog.tableExists(
-        TABLES[0]
+    # Guard on the memo fast path: the memo assumes no code drops a
+    # fixture temp view within the session. Verify every view still
+    # resolves (catalog lookups, no job) before skipping
+    # re-registration, so a dropTempView of any TABLES name degrades
+    # to a re-register instead of silently running later sql_*
+    # queries against a missing view.
+    if _VIEWS_CURRENT.get(spark) == key and all(
+        spark.catalog.tableExists(name) for name in TABLES
     ):
         return
     for name in TABLES:

@@ -145,7 +145,7 @@ def main() -> None:
     warm = spark.range(32_000).repartition(
         int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
-    warm.mapInPandas(lambda it: it, "id long").write.format("noop").mode(
+    warm.mapInArrow(lambda it: it, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
 

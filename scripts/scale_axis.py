@@ -66,7 +66,7 @@ def cmd_run(sf_dir: str, out_path: str, names: list[str]) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm = spark.range(32_000).repartition(int(cpus))
-    warm.mapInPandas(lambda it: it, "id long").write.format("noop").mode(
+    warm.mapInArrow(lambda it: it, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
     queries = all_queries()

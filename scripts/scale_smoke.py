@@ -102,7 +102,7 @@ OPS = [
     "k6_leakage_free_split",
     "ts_gap_fill",
     # round-10 addition: the real PNG codec round trip at 10x docs —
-    # encode+decode are chained map-only mapInPandas passes, so the
+    # encode+decode are chained map-only `map_rows` passes, so the
     # ratio must track the corpus (zlib+unfilter cost is per-image,
     # no shuffle anywhere).
     "k5_png_decode",
@@ -138,7 +138,7 @@ OPS = [
     "k5_webdataset_shard",
     # late-r11 wave 4: container-driven G.711 dispatch (map-only;
     # per-byte bit formula after the RIFF walk) and Unicode NFC
-    # normalization (vectorized pandas UDF, scan-bound).
+    # normalization (per-row `map_rows` kernel, scan-bound).
     "k5_wav_g711_decode",
     "k4_unicode_nfc",
 ]

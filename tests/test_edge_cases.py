@@ -392,3 +392,65 @@ def test_wav_parser_fails_loudly_on_corrupt_containers():
     short[4:8] = struct.pack("<I", 4)  # RIFF size covers only "WAVE"
     with _pytest.raises(ValueError, match="missing fmt or data"):
         mm._parse_wav(bytes(short))
+
+
+def test_map_rows_contract(spark):
+    """`map_rows`, the one map path across the Python boundary: typed
+    NULLs pass through (a bigint stays a NULL bigint, never a double
+    or NaN), a kernel may emit 0, 1 or many rows per input row, empty
+    partitions yield nothing, and a kernel's ValueError reaches the
+    driver with its message."""
+    from pyspark.errors import PythonException
+
+    from lakehouse_homeserver_spark.operators.common import map_rows
+
+    df = spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30)], "k bigint, v bigint"
+    )
+
+    fan_out = {1: 0, 2: 1, 3: 3}
+
+    def fan(k, v):
+        return [(k, v, i) for i in range(fan_out[k])]
+
+    out = map_rows(df, fan, "k bigint, v bigint, i int")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("k", "bigint"), ("v", "bigint"), ("i", "int"),
+    ]
+    rows = sorted(out.collect())
+    assert [(r.k, r.i) for r in rows] == [(2, 0), (3, 0), (3, 1), (3, 2)]
+    assert rows[0].v is None
+    assert {type(r.v) for r in rows[1:]} == {int}
+    assert out.filter(F.col("v").isNull()).count() == 1
+    assert out.filter(F.isnan(F.col("v").cast("double"))).count() == 0
+
+    # more partitions than rows: most partitions are empty
+    spread = map_rows(df.repartition(7), lambda k, v: [(k, v)], "k bigint, v bigint")
+    assert spread.rdd.getNumPartitions() == 7
+    assert sorted(spread.collect()) == sorted(df.collect())
+
+    def boom(k, v):
+        if k == 3:
+            raise ValueError(f"corrupt payload in row {k}")
+        return [(k,)]
+
+    with pytest.raises(PythonException, match="ValueError: corrupt payload in row 3"):
+        map_rows(df, boom, "k bigint").collect()
+
+
+def test_register_views_restores_any_dropped_view(spark, sf_dir):
+    """register_views' memo fast path probes every fixture view, not
+    only the first: dropping a later one makes the next call
+    re-register it."""
+    from lakehouse_homeserver_spark.sources import TABLES, register_views
+
+    register_views(spark, sf_dir)
+    victim = TABLES[-1]
+    assert victim != TABLES[0]
+    spark.catalog.dropTempView(victim)
+    assert not spark.catalog.tableExists(victim)
+    register_views(spark, sf_dir)
+    assert spark.catalog.tableExists(victim)
+    assert spark.sql(f"SELECT COUNT(*) FROM {victim}").first()[0] == (
+        spark.read.parquet(f"{sf_dir}/{victim}.parquet").count()
+    )

@@ -274,30 +274,11 @@ def test_resize_real_bounded_deterministic_and_exact(spark, sf_dir):
     want = (
         arr.reshape(4, 2, 4, 2, 3).sum(axis=(1, 3)) // 4
     ).astype(np.uint8)
-    import pandas as pd
-
-    out = pd.concat(
-        multimodal.resize_png_batches(
-            iter(
-                [
-                    pd.DataFrame(
-                        {
-                            "doc_id": [1, 2],
-                            "payload": [
-                                multimodal.png_encode_rgb(
-                                    arr.astype(np.uint8)
-                                ),
-                                None,
-                            ],
-                        }
-                    )
-                ]
-            )
-        )
+    [row] = multimodal.resize_png_row(
+        1, multimodal.png_encode_rgb(arr.astype(np.uint8))
     )
-    assert out.iloc[0].thumb_hex == bytes(want.reshape(-1)).hex()
-    assert out.iloc[1].width is pd.NA or out.iloc[1].width != out.iloc[1].width
-    assert out.iloc[1].thumb_hex is None
+    assert row == (1, 4, 4, bytes(want.reshape(-1)).hex())
+    assert multimodal.resize_png_row(2, None) == [(2, None, None, None)]
 
     # corrupt payload fails loudly, never resizes to garbage
     import pytest as _pytest
@@ -306,27 +287,13 @@ def test_resize_real_bounded_deterministic_and_exact(spark, sf_dir):
     corrupt = bytearray(good)
     corrupt[good.index(b"IDAT") + 9] ^= 0xFF
     with _pytest.raises(ValueError):
-        list(
-            multimodal.resize_png_batches(
-                iter(
-                    [
-                        pd.DataFrame(
-                            {"doc_id": [1], "payload": [bytes(corrupt)]}
-                        )
-                    ]
-                )
-            )
-        )
+        multimodal.resize_png_row(1, bytes(corrupt))
     # odd dimensions (not divisible by the box factor) fail by name
     odd = multimodal.png_encode_rgb(
         (np.arange(7 * 8 * 3) % 256).astype(np.uint8).reshape(7, 8, 3)
     )
     with _pytest.raises(ValueError, match="divisible"):
-        list(
-            multimodal.resize_png_batches(
-                iter([pd.DataFrame({"doc_id": [1], "payload": [odd]})])
-            )
-        )
+        multimodal.resize_png_row(1, odd)
 
 
 def test_normalize_embeddings_unit_norm(spark, sf_dir):
@@ -461,7 +428,7 @@ def test_minhash_kernel_matches_jvm_xxhash64(spark):
     from pyspark.sql import functions as F
 
     from lakehouse_homeserver_spark.functions.minhash import (
-        minhash_from_hashes,
+        minhash_from_offsets,
         minhash_sigs_udf,
         perm_hashes,
     )
@@ -495,11 +462,22 @@ def test_minhash_kernel_matches_jvm_xxhash64(spark):
         ).collect()
     }
     assert got == exp
-    # pure-numpy fold agrees too (incl. the empty-doc identity row)
-    mat = minhash_from_hashes(
-        [np.array(r[1], dtype=np.int64) for r in rows], 16
-    )
+    # pure-numpy fold agrees too (incl. the empty-doc identity row),
+    # also on offsets that do not start at 0 (a sliced Arrow batch)
+    flat = np.array([h for r in rows for h in r[1]], dtype=np.int64)
+    offsets = np.cumsum([5] + [len(r[1]) for r in rows])
+    mat = minhash_from_offsets(flat, offsets, 16)
     assert {rows[i][0]: mat[i].tolist() for i in range(3)} == exp
+    # a NULL shingle list has a NULL signature, its neighbours are
+    # unaffected
+    ndf = spark.createDataFrame(rows + [(4, None)], "doc_id long, hs array<long>")
+    got = {
+        r.doc_id: (None if r.s is None else list(r.s))
+        for r in ndf.select(
+            "doc_id", minhash_sigs_udf(16)(F.col("hs")).alias("s")
+        ).collect()
+    }
+    assert got == {**exp, 4: None}
 
 
 def test_mmr_rerank_properties(spark, sf_dir):
@@ -660,30 +638,22 @@ def test_ppm_decoder_round_trips_a_known_image(spark, sf_dir):
     check exact channel means — proving the parser reads actual PPM
     structure (header skip, row-major RGB interleave), not byte
     heuristics. Then: decoder must reject a non-PPM payload loudly."""
-    import pandas as pd
-
     from lakehouse_homeserver_spark.operators import multimodal as mm
 
     img = b"P6\n2 2\n255\n" + bytes(
         [255, 0, 0,  0, 255, 0,
          0, 0, 255,  255, 255, 255]
     )
-    out = pd.concat(
-        mm.decode_ppm_batches(iter([pd.DataFrame({"doc_id": [1], "payload": [img]})]))
-    )
-    r = out.iloc[0]
-    assert (r.width, r.height) == (2, 2)
-    assert r.mean_r == (255 + 0 + 0 + 255) / 4.0
-    assert r.mean_g == (0 + 255 + 0 + 255) / 4.0
-    assert r.mean_b == (0 + 0 + 255 + 255) / 4.0
+    [(doc_id, width, height, mean_r, mean_g, mean_b)] = mm.decode_ppm_row(1, img)
+    assert (doc_id, width, height) == (1, 2, 2)
+    assert mean_r == (255 + 0 + 0 + 255) / 4.0
+    assert mean_g == (0 + 255 + 0 + 255) / 4.0
+    assert mean_b == (0 + 0 + 255 + 255) / 4.0
+    assert mm.decode_ppm_row(2, None) == [(2, None, None, None, None, None)]
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        list(
-            mm.decode_ppm_batches(
-                iter([pd.DataFrame({"doc_id": [1], "payload": [b"JFIF..."]})])
-            )
-        )
+        mm.decode_ppm_row(1, b"JFIF...")
 
 
 def test_png_decoder_round_trips_known_and_random_images():
@@ -718,24 +688,13 @@ def test_png_decoder_round_trips_known_and_random_images():
     ).astype(np.uint8)
     assert np.array_equal(mm.png_decode_rgb(mm.png_encode_rgb(grad)), grad)
 
-    import pandas as pd
-
-    out = pd.concat(
-        mm.png_decode_batches(
-            iter(
-                [
-                    pd.DataFrame(
-                        {"doc_id": [7], "payload": [mm.png_encode_rgb(known)]}
-                    )
-                ]
-            )
-        )
+    [(doc_id, width, height, mean_r, mean_g, mean_b)] = mm.png_decode_row(
+        7, mm.png_encode_rgb(known)
     )
-    r = out.iloc[0]
-    assert (r.width, r.height) == (3, 2)
-    assert r.mean_r == (255 + 0 + 0 + 10 + 200 + 1) / 6.0
-    assert r.mean_g == (0 + 255 + 0 + 20 + 150 + 2) / 6.0
-    assert r.mean_b == (0 + 0 + 255 + 30 + 100 + 3) / 6.0
+    assert (doc_id, width, height) == (7, 3, 2)
+    assert mean_r == (255 + 0 + 0 + 10 + 200 + 1) / 6.0
+    assert mean_g == (0 + 255 + 0 + 20 + 150 + 2) / 6.0
+    assert mean_b == (0 + 0 + 255 + 30 + 100 + 3) / 6.0
 
 
 def test_png_decoder_fails_loudly_on_corrupt_files():
@@ -1099,7 +1058,7 @@ def test_misra_gries_candidates_contain_all_heavy_hitters(spark):
 
     from lakehouse_homeserver_spark.operators.text import mg_candidates_fn
 
-    mg = df.mapInPandas(mg_candidates_fn, "token string, n long")
+    mg = df.mapInArrow(mg_candidates_fn, "token string, n long")
     assert sum(r.n for r in mg.collect() if r.token is None) == n_total
     cands = mg.filter("token IS NOT NULL").select("token").distinct()
     cand_set = {r.token for r in cands.collect()}
@@ -1532,7 +1491,6 @@ def test_mjpeg_stream_split_and_corruption():
     frame body that still carries valid SOI/EOI markers does not
     crash the sampler — it is never decoded)."""
     import numpy as np
-    import pandas as pd
     import pytest as _pytest
 
     from lakehouse_homeserver_spark.operators import multimodal as mm
@@ -1554,12 +1512,10 @@ def test_mjpeg_stream_split_and_corruption():
             )
         )
     clip = b"".join(frames)
-    out = pd.concat(
-        mm.mjpeg_frame_batches(
-            iter([pd.DataFrame({"doc_id": [1], "payload": [clip]})])
-        )
-    )
-    assert list(out.frame_no) == [0, 2, 4]
+    out = {r[1]: r for r in mm.mjpeg_frame_rows(1, clip)}
+    assert list(out) == [0, 2, 4]
+    assert {r[0] for r in out.values()} == {1}
+    assert list(mm.mjpeg_frame_rows(1, None)) == []
     # frame 2's quad RGB matches its encoded constants
     fb = vals[12:18].astype(np.float64)
     r = np.clip(np.floor(fb[:4] + 1.402 * (fb[5] - 128) + 0.5), 0, 255)
@@ -1574,35 +1530,23 @@ def test_mjpeg_stream_split_and_corruption():
     want = b"".join(
         bytes([int(r[q]), int(g[q]), int(b[q])]) for q in range(4)
     ).hex()
-    assert out[out.frame_no == 2].iloc[0].quad_hex == want
+    assert out[2][4] == want
 
     # mid-stream garbage where an SOI should be
     bad = frames[0] + b"JUNK" + b"".join(frames[1:])
     with _pytest.raises(ValueError, match="expected SOI"):
-        list(
-            mm.mjpeg_frame_batches(
-                iter([pd.DataFrame({"doc_id": [1], "payload": [bad]})])
-            )
-        )
+        list(mm.mjpeg_frame_rows(1, bad))
     # truncated final frame
     with _pytest.raises(ValueError, match="EOI"):
-        list(
-            mm.mjpeg_frame_batches(
-                iter([pd.DataFrame({"doc_id": [1], "payload": [clip[:-4]]})])
-            )
-        )
+        list(mm.mjpeg_frame_rows(1, clip[:-4]))
     # corrupt an UNSAMPLED frame's entropy interior (frame 1): marker
     # structure intact, so the splitter passes it and the sampler
     # never decodes it
     f1 = bytearray(frames[1])
     f1[f1.index(b"\xff\xda") + 14] ^= 0x10
     clip2 = frames[0] + bytes(f1) + b"".join(frames[2:])
-    out2 = pd.concat(
-        mm.mjpeg_frame_batches(
-            iter([pd.DataFrame({"doc_id": [1], "payload": [clip2]})])
-        )
-    )
-    assert list(out2.frame_no) == [0, 2, 4]
+    out2 = [r[1] for r in mm.mjpeg_frame_rows(1, clip2)]
+    assert out2 == [0, 2, 4]
 
 
 def test_jpeg_oracle_color_formula_is_double_typed():
@@ -2205,17 +2149,11 @@ def test_webdataset_shard_pairing_and_tar_contract(spark, tmp_path):
 
 def _drain_wds(blob: bytes):
     """Run one shard blob through the wds parse kernel."""
-    import pandas as pd
-
     from lakehouse_homeserver_spark.operators.multimodal import (
-        wds_sample_batches,
+        wds_sample_rows,
     )
 
-    return list(
-        wds_sample_batches(
-            iter([pd.DataFrame({"shard_id": [0], "shard": [blob]})])
-        )
-    )
+    return list(wds_sample_rows(0, blob))
 
 
 def test_wav_g711_dispatch_contract():
@@ -2225,14 +2163,13 @@ def test_wav_g711_dispatch_contract():
     this cert exists to catch); (b) an unknown fmt tag raises NAMED
     instead of guessing; (c) the PCM-path cert still pins fmt 1."""
     import numpy as np
-    import pandas as pd
 
     from lakehouse_homeserver_spark.operators.multimodal import (
         _build_wav,
         _parse_wav,
         alaw_decode,
         ulaw_decode,
-        wav_g711_batches,
+        wav_g711_row,
     )
 
     codes = bytes(range(256))
@@ -2242,15 +2179,14 @@ def test_wav_g711_dispatch_contract():
     assert (ulaw_decode(np.frombuffer(f7[4], dtype=np.uint8))
             != alaw_decode(np.frombuffer(f6[4], dtype=np.uint8))).any()
 
-    # kernel dispatch: doc 0 -> mu-law sum, doc 1 -> A-law sum
-    pdf = pd.DataFrame({"doc_id": [0, 1], "payload": [codes, codes]})
-    out = pd.concat(list(wav_g711_batches(iter([pdf]))))
-    rows = {int(r.doc_id): r for r in out.itertuples()}
-    assert rows[0].fmt_tag == 7 and rows[1].fmt_tag == 6
-    assert rows[0].sum_pcm == int(
+    # kernel dispatch: doc 0 -> mu-law sum, doc 1 -> A-law sum; the
+    # row layout is (doc_id, fmt_tag, rate, bits, n, sum, min, max)
+    rows = {d: wav_g711_row(d, codes)[0] for d in (0, 1)}
+    assert rows[0][1] == 7 and rows[1][1] == 6
+    assert rows[0][5] == int(
         ulaw_decode(np.frombuffer(codes, dtype=np.uint8)).sum()
     )
-    assert rows[1].sum_pcm == int(
+    assert rows[1][5] == int(
         alaw_decode(np.frombuffer(codes, dtype=np.uint8)).sum()
     )
 
@@ -2263,7 +2199,6 @@ def test_wav_g711_dispatch_contract():
     wav2 = _build_wav(codes, fmt_tag=2)
     fmt_tag = mm._parse_wav(wav2)[0]
     assert fmt_tag == 2
-    pdf2 = pd.DataFrame({"doc_id": [0], "payload": [codes]})
 
     def fake_build(p, fmt_tag=1):
         return wav2
@@ -2272,7 +2207,7 @@ def test_wav_g711_dispatch_contract():
     mm._build_wav = fake_build
     try:
         with _pytest.raises(ValueError, match="no decoder for WAV fmt tag 2"):
-            list(wav_g711_batches(iter([pdf2])))
+            wav_g711_row(0, codes)
     finally:
         mm._build_wav = orig
 

@@ -193,3 +193,20 @@ def test_label_gate_tolerates_post_commit_artifact_drop(monkeypatch):
     monkeypatch.setattr(mod, "_last_commit_time", lambda p: 500)
     hard, soft = mod._tolerated(stale)
     assert hard == stale and soft == []
+
+
+def test_package_has_no_map_in_pandas():
+    """One map path across the Python boundary: map kernels go
+    through `map_rows` / `mapInArrow`, and pandas is used only for
+    grouped ops (`applyInPandas`). A `.mapInPandas(` call in the
+    package is a second path."""
+    pkg = os.path.join(REPO, "lakehouse_homeserver_spark") + os.sep
+    bad = []
+    for path in _py_sources():
+        if not path.startswith(pkg):
+            continue
+        with open(path) as fh:
+            for lineno, line in enumerate(fh, 1):
+                if ".mapInPandas(" in line:
+                    bad.append(f"{os.path.relpath(path, REPO)}:{lineno}")
+    assert not bad, "mapInPandas call sites: " + ", ".join(bad)

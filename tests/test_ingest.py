@@ -246,11 +246,29 @@ def json_landing(tmp_path, spark, sf_dir):
     return str(tmp_path / "landing"), len(rows), half
 
 
+def _plant_orphan(spark, table: str) -> str:
+    """Leave `table`'s managed location behind with no catalog entry
+    — what a killed run or a lost Derby metastore leaves — holding
+    one stale parquet file (n_nationkey 999)."""
+    db, name = table.split(".")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    loc = spark.catalog.getDatabase(db).locationUri.rstrip("/") + "/" + name
+    spark.createDataFrame(
+        [(999, "STALE", 0, "stale")],
+        "n_nationkey long, n_name string, n_regionkey long, n_comment string",
+    ).coalesce(1).write.mode("overwrite").parquet(loc)
+    return loc
+
+
 def test_json_landing_full_and_incremental(spark, json_landing, tmp_path):
     """A5/A6 over a JSONL landing zone: the format seam changes the
     codec, not the load semantics — full load takes the newest file,
-    incremental appends only unseen files and re-runs are no-ops."""
+    incremental appends only unseen files and re-runs are no-ops.
+    Hermetic: an orphaned warehouse location for the table is planted
+    first and must not change the outcome."""
     landing, total, half = json_landing
+    _plant_orphan(spark, "src.nation")
     lh = Lakehouse(spark, source_format="json")
     try:
         n_full = lh.load_full("nation", landing)
@@ -261,6 +279,33 @@ def test_json_landing_full_and_incremental(spark, json_landing, tmp_path):
         assert n_inc == half
         assert lh.table("nation").count() == total
         assert lh.load_incremental("nation", landing) == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS src.nation")
+        spark.sql("DROP TABLE IF EXISTS metadata.nation_loaded_files")
+
+
+def test_orphaned_location_is_replaced_not_read(spark, sf_dir, tmp_path):
+    """A managed location with no catalog entry (killed run, lost
+    metastore) must not break CREATE with LOCATION_ALREADY_EXISTS,
+    and none of its stale files may be read: the table holds exactly
+    the loaded rows. Covers both creating verbs, full and
+    incremental, and the orphaned bookkeeping table."""
+    d = tmp_path / "landing" / "nation"
+    d.mkdir(parents=True)
+    shutil.copy(f"{sf_dir}/nation.parquet", d / "batch_0.parquet")
+    want = sorted(
+        tuple(r) for r in spark.read.parquet(f"{sf_dir}/nation.parquet").collect()
+    )
+    lh = Lakehouse(spark)
+    try:
+        for load in (lh.load_full, lh.load_incremental):
+            _plant_orphan(spark, "src.nation")
+            _plant_orphan(spark, "metadata.nation_loaded_files")
+            assert load("nation", str(tmp_path / "landing")) == len(want)
+            assert sorted(tuple(r) for r in lh.table("nation").collect()) == want
+            assert [r.file_path for r in lh.loaded_files("nation").collect()] == [
+                str(d / "batch_0.parquet")
+            ]
     finally:
         spark.sql("DROP TABLE IF EXISTS src.nation")
         spark.sql("DROP TABLE IF EXISTS metadata.nation_loaded_files")
