@@ -1,8 +1,7 @@
 """Baseline-sequential JPEG codec (ITU-T T.81), stdlib + numpy only.
 
-VERDICT r10 next-round #3: the last multimodal codec seam. This module
-implements the public spec directly — no codec library exists in this
-environment and none is used:
+This module implements the public spec directly — no codec library
+is used:
 
   * encoder: YCbCr planes -> level shift -> 8x8 forward DCT (float64
     basis-matrix form) -> quantize (round) -> zigzag -> DC-difference

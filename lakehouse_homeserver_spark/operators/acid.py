@@ -909,7 +909,7 @@ def a27_spec_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a29_stream_cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVM over a mutating table, driver-certified END TO
-    END (SURVEY I-ext / VERDICT r2 next-round #8): a snapshot source
+    END (SURVEY I-ext): a snapshot source
     receives create → append → row-level MoR delete, a Structured
     Streaming change-feed reader (`format("snapshot")` +
     `readChangeFeed`) folds every commit into a keyed aggregate view
@@ -963,7 +963,7 @@ def a29_stream_cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a30_stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch MERGE materialized view, driver-certified (SURVEY
-    I-ext / VERDICT r2 next-round #8): the events fixture is split
+    I-ext): the events fixture is split
     into a 3-file landing dir, drained file-by-file by a Structured
     Streaming file source (maxFilesPerTrigger=1, availableNow), and
     folded into a per-user totals snapshot table by idempotent MERGE
@@ -1431,10 +1431,10 @@ def a37_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mirror's Spark side never wrote.
 _XENGINE_ORACLE_BASE = "/tmp/lakehouse-xengine/nation"
 
-# Single registry of every persistent /tmp fixture family (ADVICE r6:
-# the janitor's hardcoded lists silently deleted any family added
-# without updating them — now scripts/fixture_janitor.py IMPORTS this
-# registry, so registering a family here is the one required step).
+# Single registry of every persistent /tmp fixture family:
+# scripts/fixture_janitor.py IMPORTS this registry (a hardcoded list
+# there would silently delete any family added without updating it),
+# so registering a family here is the one required step.
 # Fixed families: SF-invariant content at one fixed dir each.
 # Fingerprinted families: per-SF dirs named
 # `<prefix><sf_basename>-<content_fingerprint>`; value = the source
@@ -1458,11 +1458,11 @@ def _source_fingerprint(sf_dir: str, table: str) -> str:
     (names + sizes + mtimes — driver-side stat only, no Spark job).
     Folded into persistent-fixture tags so a regenerated dataset, or
     two sf_dirs sharing a basename, rebuild instead of reusing a
-    stale table (ADVICE r5 low on a50). Nanosecond mtimes (ADVICE r6
-    low): integer-second truncation let a same-size in-place regen
-    within one second reuse the stale fixture. A MISSING source is an
-    error, not an empty hash — two sf_dirs both lacking the table
-    would otherwise collide on one fixture path."""
+    stale table. Nanosecond mtimes: integer-second truncation let a
+    same-size in-place regen within one second reuse the stale
+    fixture. A MISSING source is an error, not an empty hash — two
+    sf_dirs both lacking the table would otherwise collide on one
+    fixture path."""
     import hashlib
 
     p = os.path.join(sf_dir, f"{table}.parquet")
@@ -1489,7 +1489,7 @@ def _build_fixture_once(base: str, tag: str, build) -> None:
     destroy it. Validity is an on-disk sentinel written after a
     successful build; builds run under an exclusive flock with a
     double-check inside, so when the driver cert and the parity
-    mirror start concurrently (the ADVICE r4 race: one process
+    mirror start concurrently (the race: one process
     rmtree's the table while the other reads it) the first caller
     builds and the second reuses the winner's files. A crashed
     half-build leaves no sentinel and is rebuilt under the lock."""
@@ -1819,7 +1819,7 @@ def a49_pyds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact V2 node for a Python data source scan in this Spark
     # version: `BatchScan snapshot[...] (Python)`. The r4 version
     # accepted any plan containing the substring "snapshot" — a
-    # fallback incidental path text could satisfy (ADVICE r4).
+    # fallback incidental path text could satisfy.
     pyds_read = "BatchScan snapshot[" in plan and "(Python)" in plan
     return (
         df.groupBy(F.col("n_regionkey").cast("bigint").alias("n_regionkey"))
@@ -1882,13 +1882,13 @@ def a50_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixtures, so the path must be SF-tagged): the r4 version
     # rebuilt the 3-commit table + sleeps into a fresh leaked
     # mkdtemp on EVERY call, so bench sweeps measured table build,
-    # not the timestamp-travel read (ADVICE r4). Commit timestamps
+    # not the timestamp-travel read. Commit timestamps
     # persist in the log, so re-reads stay valid across processes.
     # The tag folds a content fingerprint of the orders source (file
     # sizes + mtimes) in with the SF basename: two sf_dirs sharing a
     # basename, or a regenerated orders fixture, get a REBUILD at a
     # fresh path instead of silently serving a table built from old
-    # data (ADVICE r5 low).
+    # data.
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     sf_tag = f"{sf_tag}-{_source_fingerprint(sf_dir, 'orders')}"
     base = f"/tmp/lakehouse-tstravel-{sf_tag}/orders_ts"
@@ -2125,7 +2125,7 @@ def a52_catalog_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The rebuild rmtree covers only dirname(_SQLCAT_TABLE);
         # catalog.db lives beside it, so a corrupt/stale db from a
         # crashed half-build must be cleared explicitly here
-        # (ADVICE r5 low) before the fresh schema is created.
+        # before the fresh schema is created.
         if os.path.exists(_SQLCAT_DB):
             os.remove(_SQLCAT_DB)
         SqlCatalogStore(_SQLCAT_DB)  # create schema alongside the table
@@ -2423,8 +2423,8 @@ def a55_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a56_catalog_resolved_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTTP catalog resolution as the ONLY metadata path (VERDICT r5
-    next-round #8, closing the last contract daylight to the
+    """HTTP catalog resolution as the ONLY metadata path (closing
+    the last contract daylight to the
     reference's `type=rest` catalog wiring, extract_load.py:42-46):
     a47 proved Spark can resolve a table through the REST client and
     scan the served file list natively; here the resolution runs

@@ -210,7 +210,7 @@ def k2_ngram_jaccard(
         # Unbounded vocabulary: the source block is no longer a safe
         # unit of work (one dominant source → O(block²) pairs at
         # 100 TB). Switch to MinHash-band blocking with the same
-        # exact-Jaccard verification (VERDICT r1 item 5) — LSH-recall,
+        # exact-Jaccard verification — LSH-recall,
         # NOT exhaustive, so consumers whose contract is the exact
         # pair set (verified_pairs and the graph family whose oracles
         # recompute it exhaustively) must pass require_exact=True and
@@ -435,7 +435,7 @@ def minhash_signatures(
       groupBy MIN); r3 numpy kernel ≈ 0.8 s incl. Arrow transfer —
       Catalyst evaluates higher-order-function lambdas row-at-a-time
       in the interpreter, so the grid belongs in a vectorized kernel
-      (VERDICT r2 next-round #5, same lesson as PQ/aHash).
+      (same lesson as PQ/aHash).
     """
     from ..functions.minhash import minhash_sigs_udf
 
@@ -1051,7 +1051,7 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor always dies. A committed pair table is exactly what a
     production 100 TB pipeline fans out from, survives any worker,
     and is time-travelable alongside the corpus snapshot it was
-    derived from (VERDICT r2 next-round #7).
+    derived from.
     """
     import os
 
@@ -1068,7 +1068,7 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # flock serializes the two-threads-race the old memo had.
         sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
         # Prefix comes from the acid.FIXTURE_FAMILIES registry so the
-        # janitor's keep-list and this path can't diverge (ADVICE r6).
+        # janitor's keep-list and this path can't diverge.
         from .acid import FIXTURE_FAMILIES_FINGERPRINTED
 
         prefix = next(

@@ -1,4 +1,4 @@
-"""Format-interop certificates: Avro manifest round-trip (VERDICT r11 #3).
+"""Format-interop certificates: Avro manifest round-trip.
 
 The reference's tables are Iceberg (`/root/reference/Dockerfile:57-78`,
 `config/iceberg-template.properties`) — their on-disk metadata is Avro

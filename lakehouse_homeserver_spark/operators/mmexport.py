@@ -1,6 +1,6 @@
-"""Corpus -> training-shard export composition (VERDICT r11 #6).
+"""Corpus -> training-shard export composition.
 
-Round 11 closed the two ends of the LLM-data pipeline separately:
+The two ends of the LLM-data pipeline also exist separately:
 ingestion composes (`k4_cc_pipeline`: WARC -> extract -> Gopher gate)
 and export exists standalone (`k5_webdataset_shard`: docs -> ustar
 WebDataset shards -> verified parse-back). This module supplies the

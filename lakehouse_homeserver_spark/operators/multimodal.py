@@ -297,10 +297,10 @@ def resize_png_row(doc_id, p):
     """,
 )
 def k5_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize over compressed payloads (SURVEY K5;
-    VERDICT r10 #2 — the digest stand-in is deleted): each row's 8x8
-    RGB pixels (the same 192 text-derived bytes as the PNG/PPM certs)
-    are encoded into a genuine PNG, then the resize stage decodes it,
+    """REAL image resize over compressed payloads (SURVEY K5): each
+    row's 8x8 RGB pixels (the same 192 text-derived bytes as the
+    PNG/PPM certs) are encoded into a genuine PNG, then the resize
+    stage decodes it,
     box-downsamples 2x2 with exact integer floor arithmetic, and
     re-encodes a real 4x4 PNG thumbnail — decode -> resample ->
     encode, the actual work of a 100 TB thumbnail job. The emitted
@@ -545,9 +545,8 @@ def png_encode_rgb(px) -> bytes:
 
 
 def png_decode(b: bytes):
-    """Real PNG decode (VERDICT r9 next-round #4 — closes the
-    compressed-codec seam; r10 widened to the 8-bit gray/RGB/RGBA
-    color types): signature check, chunk walk with CRC32 verification
+    """Real PNG decode (the 8-bit gray/RGB/RGBA and palette color
+    types): signature check, chunk walk with CRC32 verification
     on EVERY chunk, IHDR parse, multi-IDAT concat, zlib inflate, then
     per-scanline un-filtering of all five spec filter types (Paeth
     included) at the color type's byte-per-pixel offset. Returns a
@@ -587,7 +586,7 @@ def png_decode(b: bytes):
             raise ValueError(f"PNG CRC mismatch in {ctype!r} chunk")
         if ctype == b"IHDR":
             if w is not None:
-                # ADVICE r10: a CRC-valid second IHDR would silently
+                # A CRC-valid second IHDR would silently
                 # rewrite dims/bpp mid-file — spec says exactly one.
                 raise ValueError("PNG with duplicate IHDR chunk")
             if len(data) != 13:
@@ -614,7 +613,7 @@ def png_decode(b: bytes):
                 raise ValueError("PNG PLTE chunk before IHDR")
             if idat:
                 # spec chunk order: PLTE precedes IDAT (same posture
-                # as the ADVICE r10 IDAT-before-IHDR check)
+                # as the IDAT-before-IHDR check)
                 raise ValueError("PNG PLTE chunk after IDAT")
             if palette is not None:
                 raise ValueError("PNG with duplicate PLTE chunk")
@@ -632,7 +631,7 @@ def png_decode(b: bytes):
             )
         elif ctype == b"IDAT":
             if w is None:
-                # ADVICE r10: IDAT before IHDR is a chunk-order
+                # IDAT before IHDR is a chunk-order
                 # malformation the CRC walk alone can't see.
                 raise ValueError("PNG IDAT chunk before IHDR")
             idat.extend(data)
@@ -648,7 +647,7 @@ def png_decode(b: bytes):
         raise ValueError("truncated PNG: no IEND")
     stride = w * bpp
     want = h * (1 + stride)
-    # Bounded inflate (ADVICE r10): an unbounded zlib.decompress lets
+    # Bounded inflate: an unbounded zlib.decompress lets
     # a tiny malicious IDAT (~1:1000 inflation) allocate arbitrary
     # memory before the size check runs. Cap the output at the exact
     # post-filter size the IHDR promises (+1 byte so an oversized
@@ -779,10 +778,9 @@ def png_decode_row(doc_id, p):
 )
 def k5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end REAL compressed-image decode over a binary column
-    (VERDICT r9 #4 — the first codec behind the former
-    NotImplementedError seam to become a real decode certificate):
-    each row's pixels (8x8 RGB derived from the doc's text, the same
-    192 bytes the PPM cert uses) are encoded into a genuine PNG file —
+    (a real decode certificate, not a stand-in): each row's pixels
+    (8x8 RGB derived from the doc's text, the same 192 bytes the PPM
+    cert uses) are encoded into a genuine PNG file —
     zlib-compressed IDAT, CRC'd chunks, per-scanline filters cycling
     ALL FIVE spec types — and the Arrow-batched decoder then actually
     decodes it: chunk walk + CRC verify, inflate, un-filter
@@ -1513,7 +1511,7 @@ def _jpeg_rgb_sql(chan: str, ybyte: str) -> str:
 )
 def k5_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end REAL entropy-coded JPEG decode over a binary column
-    (VERDICT r10 #3 — closes the LAST codec seam): each row's 18
+    (the baseline JPEG codec): each row's 18
     text-derived bytes become a genuine baseline-sequential 4:2:0
     JPEG (SOI/DQT/SOF0/DHT/SOS markers, Annex K Huffman tables,
     cross-MCU DC prediction, byte-stuffed entropy stream — built by
@@ -1611,9 +1609,9 @@ def media_mixed_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"{_MEDIA_MIXED_GRAYS_SQL}{_AHASH_BANDS_SQL}{_AHASH_PAIRS_SQL}",
 )
 def k5_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-format compressed-media dedup (VERDICT r10 #3's second
-    half — 'extend the near-dup pipeline to a mixed PNG/JPEG
-    corpus'): half the corpus arrives as PNG files, half as baseline
+    """Mixed-format compressed-media dedup (the near-dup pipeline
+    over a mixed PNG/JPEG corpus): half the corpus arrives as PNG
+    files, half as baseline
     JPEGs; the hash kernel SNIFFS each payload's magic, runs the
     matching REAL decoder (zlib+unfilter or Huffman+IDCT), normalizes
     both to the same 8x8 aHash cell grid — PNG pixels 1:1, the 32x32

@@ -2496,7 +2496,7 @@ def c10_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression that silently reintroduces a shuffle flips a hashed
     boolean, not just a pytest.
 
-    Table hygiene (ADVICE r3): deterministic per-SF table names with
+    Table hygiene: deterministic per-SF table names with
     mode("overwrite") — never uuid-tagged — and any legacy `c10_*`
     table for another tag is dropped on the way in, so repeated
     bench/verify runs leave at most 2 tables per scale factor."""
@@ -2640,7 +2640,7 @@ def _c10_join_with_plan_facts(
     """,
 )
 def c10_bucketed_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """READ side of the bucketed-join certification (VERDICT r3 #7):
+    """READ side of the bucketed-join certification:
     identical join, aggregate, and hashed plan facts as
     `c10_bucketed_join`, but the bucketed tables are written at most
     once — reused across processes when they already exist in the
@@ -2676,7 +2676,7 @@ _A38_LAYOUTS: dict = {}
 )
 def a38_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning, driver-certified with its plan
-    facts (VERDICT r3 #8 — previously pytest-only static pruning):
+    facts (beyond the static pruning the plan tests check):
     the fact table is a Hive-layout parquet write partitioned by
     order year; the dim table carries a `recent` attribute known only
     at runtime. Joining fact to the filtered dim on the partition
@@ -2771,7 +2771,7 @@ def a38_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def a39_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join pruning, driver-certified with its
-    plan facts (VERDICT r3 #8 — previously pytest-only): on a
+    plan facts: on a
     selective shuffle join, Catalyst builds a bloom filter from the
     FILTERED build side (`bloom_filter_agg`) and injects a
     `might_contain` probe into the other side's scan, so probe rows
@@ -3128,7 +3128,7 @@ def a44_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/scripts/extract_load.py:32 leaves partition
     tuning entirely to the engine."""
     # Host-independent thresholds, set/restored like a42/a43's tuned
-    # confs (ADVICE r4): the session default shuffle.partitions is
+    # confs: the session default shuffle.partitions is
     # the local core count, and on a low-core host AQE with
     # parallelismFirst may decline to coalesce — flipping a hashed
     # boolean on a correct engine. Pin a deliberately-too-high static

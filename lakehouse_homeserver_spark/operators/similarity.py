@@ -524,7 +524,7 @@ def k3_knn_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force SQL serve as the oracle while the query still
     exercises the full IVF machinery end-to-end: k-means training,
     cluster assignment, the broadcast probe equi-join, and candidate
-    scoring (VERDICT r2 next-round #6). The APPROXIMATE configuration
+    scoring. The APPROXIMATE configuration
     (nprobe={N_PROBE} < nlist={N_LIST}) is certified separately by
     `k3_ivf_recall`, which runs it against brute force and pins
     recall bounds the driver hash-checks.
@@ -1122,8 +1122,8 @@ def _sem_k(n: int) -> int:
     at SEMDEDUP_K_CAP, so the codebook the driver trains/broadcasts
     is O(K*d) <= CAP*d REGARDLESS of corpus size. (The r4 design used
     K = n/64 raw corpus vectors collected to the driver — O(n*d)
-    driver memory and an O(n^2*d) assignment kernel, the VERDICT r4
-    scale-killer. The SemDeDup paper itself fixes K, e.g. 50k at
+    driver memory and an O(n^2*d) assignment kernel, which does not
+    scale. The SemDeDup paper itself fixes K, e.g. 50k at
     billions of docs; CAP is that constant, small here to fit the
     fixture.)"""
     import math
@@ -1230,7 +1230,7 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (a doc is dropped iff SOME same-cluster doc beats it) makes
     the result order-free and engine-checkable.
 
-    Engine shape and 100 TB plan (r5 redesign — VERDICT r4 #3):
+    Engine shape and 100 TB plan:
     - Codebook: K = min({SEMDEDUP_K_CAP}, max(8, isqrt(n))) centroids
       TRAINED by {SEMDEDUP_ROUNDS} distributed Lloyd rounds (the
       `k3_kmeans` machinery: integer-exact fixed-point coordinates,

@@ -782,8 +782,8 @@ _BPE_LOCAL: dict[tuple, list | None] = {}
 # regression on k4_bpe_token_count was exactly that overhead.
 BPE_DRIVER_VOCAB_MAX = 50_000
 
-# Separate, MUCH smaller bound for the literal-map TOKENIZER arm
-# (VERDICT r8 what's-wrong #2): `GetMapValue` on a literal
+# Separate, MUCH smaller bound for the literal-map TOKENIZER arm:
+# `GetMapValue` on a literal
 # ArrayBasedMapData is a linear scan per lookup and the 2N lit()
 # expressions inflate the analyzed plan — the same >~10^2-literal-
 # terms cliff the r4 PQ rework documented. Measured on a synthetic
@@ -1664,7 +1664,7 @@ def k4_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# K4 — HTML -> text extraction (VERDICT r10 next-round #6): the first
+# K4 — HTML -> text extraction: the first
 # text-analysis stage of a CommonCrawl-style training-data pipeline.
 # ---------------------------------------------------------------------------
 
@@ -1809,8 +1809,8 @@ def _html_extract_oracle() -> str:
 
 @query("k4_html_extract", oracle=_html_extract_oracle())
 def k4_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML -> text extraction (VERDICT r10 #6 — the missing first
-    stage of a CommonCrawl-style corpus build): each document's raw
+    """HTML -> text extraction (the first stage of a
+    CommonCrawl-style corpus build): each document's raw
     HTML (synthesized deterministically from the fixture text — a
     multi-line script block, a style block, a pure-link nav, an
     entity-bearing headline, <p>-broken body text, a link-heavy
@@ -1929,7 +1929,7 @@ def _gzip_member(data: bytes) -> bytes:
 # Zip-bomb guard for the member walk: a WARC record's true size is
 # only known AFTER inflation (Content-Length lives inside), so the
 # cap is a fixed sanity bound far above any real record — the same
-# bounded-inflate posture ADVICE r10 demanded of png_decode, where
+# bounded-inflate posture as png_decode, where
 # the IHDR made an exact cap possible.
 WARC_MEMBER_CAP = 1 << 26  # 64 MiB inflated per record
 

@@ -1366,7 +1366,7 @@ def i7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     output-mode semantics; the certified surface is the join itself.
 
     The joined pair stream lands in a PARQUET sink and is read back
-    for the aggregate (VERDICT r3 #6) — the pair set never
+    for the aggregate — the pair set never
     materializes on the driver, which is the truthful 100 TB shape: a
     production attribution join writes its pairs to a table that
     downstream jobs aggregate.
@@ -1964,7 +1964,7 @@ def i11_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def i12_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`applyInPandasWithState` driver-certified end to end (SURVEY
-    I3/J-state; VERDICT r5 next-round #4 — the batch twin
+    I3/J-state — the batch twin
     `ts_rich_sessions` is green but the STATEFUL RUNTIME path, with
     its EventTimeTimeout discipline, never rode a driver hash): the
     events fixture is replayed as 3 time-ordered landing files plus

@@ -1,7 +1,8 @@
 """Central query registry: merges every operator module's QUERIES/ORACLES.
 
 This is the single source of truth consumed by ``__spark_entry__.py``
-(driver contract) and by the local parity tests / bench.
+(driver contract) and by the local parity tests / bench. Queries come
+in module order, then definition order within each module.
 """
 
 from __future__ import annotations
@@ -10,213 +11,45 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_MODULES = []
-
-# Driver-verification priority. The correctness harness budgets ~50
-# entries per round, taken in registry order; names listed here are
-# emitted first, in this order; everything else follows in module
-# order.
-#
-# STANDING CADENCE (VERDICT r6 next-round #2, adopted as the default
-# for every future round): the window is filled in this order —
-#   1. queries whose code/oracle changed after their latest driver
-#      verdict (the r5 rule, applied exhaustively: own body, shared
-#      helper, fixture tag, or kernel — anything on the result path);
-#   2. any remaining slots go to rolling re-certification,
-#      OLDEST-VERDICT-FIRST (compute the union of CORRECTNESS_r* and
-#      take the earliest latest-round entries), so session-tuning
-#      drift can't age a verdict past ~2-3 rounds unnoticed.
-#
-# ROUND-12 window = 50 names, machine-derived
-# (`scripts/stale_verdicts.py`, enforced by tests/test_stale_verdicts.py).
-# Composition (VERDICT r11 next-round #1/#2/#3/#6):
-#   (a) NEW queries, never sampled (3): a57_sql_dml (the SQL-text
-#       MERGE/UPDATE/DELETE front-end routed to the certified
-#       SnapshotTable ops — r11 #2), a58_avro_manifest (from-spec
-#       Avro OCF + Iceberg manifest-list export with an independent
-#       reader round-trip — r11 #3), k7_multimodal_export (the
-#       dedup -> Gopher gate -> WebDataset-shard export composition —
-#       r11 #6);
-#   (b) r12 edit hits (5): k5_gif_decode (ADVICE r11 zero-dimension
-#       geometry guard + the r12 LZW kernel rewrite), and the four
-#       optimization-round behavior-adjacent edits — a34_profile
-#       (Expand+Sort -> per-column groupBy restructure),
-#       a40_agg_pushdown (fresh-read fix under its conf window),
-#       a30_stream_upsert_totals (landing-prep sort reuse),
-#       i12_stateful_session_timeout (sessionize_fn per-key rewrite).
-#       They take the 4 slots of the alphabetically-last (d) names
-#       (k3_knn_lsh, k3_mmr_rerank, k3_pq_quantize,
-#       k3_random_projection — valid r6 verdicts, lead the r13 age
-#       pool together with the three r11 leftovers);
-#   (c) the ENTIRE r5-era verdict-age tier (23): the a45/a46/a48
-#       plan-fact certs, the k4 classic text-quality family, the
-#       k6 sampling family, k7_incremental_dedup/k7_shard_manifest,
-#       the sql_* dialect batch, ts_pattern_match;
-#   (d) 23 of the 26-name r6-era tier, alphabetical within the tie —
-#       the 3 alphabetically-last (k5_multimodal_meta,
-#       k8_decontaminate, ts_value_spikes) carry valid r6 verdicts,
-#       were NOT edited this round, and lead the r13 age pool (the
-#       r11 verdict's #1 asked for all 49 in one window; the three
-#       mandated new certificates displaced exactly these three).
-# ROUND-13 window = 50 names, machine-derived
-# (`scripts/stale_verdicts.py`, enforced by tests/test_stale_verdicts.py).
-# Composition (VERDICT r12 next-round #6 + ADVICE r12 #1):
-#   (a) the 9 r13 optimization-round edit hits, per the mechanical
-#       call graph: k3_kmeans (SQL-string Lloyd rounds),
-#       k5_jpeg_decode / k5_media_near_dup / k5_mjpeg_frames (the
-#       F.16 Huffman-decode rewrite), a30_stream_upsert_totals
-#       (prepare_events_landing persist/unpersist),
-#       i12_stateful_session_timeout (scale-adaptive state-partition
-#       pin), k3_knn_ivf / k3_ivf_recall / k3_ivfpq_search (the
-#       ivf_train bounded-sample persist). The r13 worker shim
-#       (session.py) and the register_views sentinel guard are
-#       session plumbing the graph correctly does not put on any
-#       result path; they were nonetheless re-verified by FOUR full
-#       275/275 sweeps after landing, incl. one at sf0.1
-#       (OPTIMIZATION_r13.md).
-#   (b) 41 of the 45 names deferred in r12 under the metadata-memo
-#       justification — the rotation VERDICT r12 #6 mandated; the
-#       four that did not fit (alphabetically last within the tie,
-#       the r12 convention) carry their own DEFERRED entries below.
-#       Includes a29_stream_cdc_view, whose r12 deferral ADVICE r12
-#       #1 flagged as mischaracterized (the apply_cdc_batch persist
-#       was a behavioral edit, not the memo) — it is now IN the
-#       window, carrying both the r12 persist and the r13 shim
-#       effect.
-# 9 + 41 = 50: the age tiers resume in r14.
-PRIORITY: tuple[str, ...] = (
-    # (a) r13 edit hits
-    "k3_kmeans",
-    "k5_jpeg_decode",
-    "k5_media_near_dup",
-    "k5_mjpeg_frames",
-    "a30_stream_upsert_totals",
-    "i12_stateful_session_timeout",
-    "k3_knn_ivf",
-    "k3_ivf_recall",
-    "k3_ivfpq_search",
-    # (b) the full r12 DEFERRED rotation (45)
-    "a10_snapshot_lineage", "a12_time_travel", "a13_merge_upsert",
-    "a14_table_stats", "a15_file_skipping", "a16_incremental_read",
-    "a17_zero_copy_clone", "a18_rollback", "a19_delete_where",
-    "a20_mor_delete", "a21_bloom_skipping", "a22_wap_publish",
-    "a24_schema_history", "a25_change_feed", "a26_ivm_view",
-    "a27_spec_history", "a29_stream_cdc_view", "a31_compaction",
-    "a32_zorder_skipping", "a33_expire_orphans",
-    "a35_partition_overwrite", "a36_positional_delete",
-    "a37_check_constraints", "a41_cross_engine_read",
-    "a47_rest_catalog", "a49_pyds_roundtrip", "a50_timestamp_travel",
-    "a51_ingest_lifecycle", "a52_catalog_persistence",
-    "a54_pyds_pushdown", "a56_catalog_resolved_scan",
-    "i10_stream_restart_exactly_once", "i11_stream_dedup",
-    "i7_stream_stream_join", "i8_stream_static_enrich",
-    "i9_stream_outer_join", "j_udtf_term_expand", "k2_dup_clusters",
-    "k3_contrastive_pairs", "k6_leakage_free_split",
-    "k8_bloom_decontaminate",
-)
-
-# Explicit, justification-carrying deferrals (see stale_verdicts.py
-# --check): queries reached by an edit since the last verdict commit
-# that did NOT fit the window. Round 13 rotated 41 of the 45
-# r12-deferred names into the window above (VERDICT r12 #6:
-# "DEFERRED shrinks toward empty" — 45 → 4); the round's own 9 edit
-# hits all fit. The four deferrals (alphabetically last within the
-# r12-rotation tie, the r12 convention) share one accurate
-# justification:
-_ROTATION_DEFERRAL = (
-    "r12 metadata-memo edit only (load_table handle — no behavioral "
-    "code on this query's result path changed in r12 or r13); "
-    "displaced from the 50-slot r13 window by the round's own edit "
-    "hits (behavioral edits that must be driver-sampled first). "
-    "Re-verified in-round by the r13 full 275/275 sweeps at sf0.01 "
-    "AND sf0.1; rotates into the r14 window first."
-)
-# The one-Arrow-path change (every map kernel moved from mapInPandas
-# onto mapInArrow / `map_rows`, MinHash onto an Arrow UDF) plus the
-# ingest orphaned-location fix reach 48 queries by the call graph;
-# the window is full, so the ones outside it share one justification:
-_ARROW_PATH_DEFERRAL = (
-    "Python map kernel moved from mapInPandas to mapInArrow "
-    "(map_rows) with the same per-row logic, or MinHash from a pandas "
-    "UDF to an Arrow UDF, or reached only through a shared helper "
-    "(the ingest orphaned-location delete, _arrow_matrix). "
-    "Re-verified by the full 275/275 sweep at sf0.01 and by sweeps of "
-    "every k-family query and d14 at sf0.1 and at local[4] with 7 "
-    "shuffle partitions; the 50-slot window is full."
-)
-DEFERRED: dict[str, str] = {
-    **{
-        name: _ROTATION_DEFERRAL
-        for name in (
-            "k9_cc_bigstar",
-            "k9_pagerank_dupgraph",
-            "k9_triangle_count",
-            "ts_ewma",
-        )
-    },
-    **{
-        name: _ARROW_PATH_DEFERRAL
-        for name in (
-            "a57_sql_dml", "d14_heavy_hitters", "j_arrow_batch_norms",
-            "k2_minhash_lsh", "k2_ngram_jaccard", "k3_embedding_near_dup",
-            "k3_knn_lsh", "k3_pq_quantize", "k3_random_projection",
-            "k3_semdedup", "k4_cc_pipeline", "k4_unicode_nfc",
-            "k4_warc_parse", "k5_ahash_near_dup", "k5_alaw_decode",
-            "k5_bmp_decode", "k5_gif_decode", "k5_multimodal_features",
-            "k5_pcm_frames", "k5_png_decode", "k5_png_near_dup",
-            "k5_ppm_decode", "k5_resize_real", "k5_ulaw_decode",
-            "k5_wav_decode", "k5_wav_g711_decode", "k5_webdataset_shard",
-            "k7_multimodal_export",
-        )
-    },
-}
-
 
 def _load_modules():
-    global _MODULES
-    if _MODULES:
-        return _MODULES
-    from .operators import relational
+    from .operators import (
+        relational,
+        dedup,
+        similarity,
+        text,
+        multimodal,
+        timeseries,
+        sqlsurface,
+        sampling,
+        udfs,
+        pipeline,
+        acid,
+        quality,
+        retrieval,
+        dml,
+        interop,
+        mmexport,
+    )
 
-    mods = [relational]
-    for name in (
-        "dedup",
-        "similarity",
-        "text",
-        "multimodal",
-        "timeseries",
-        "sqlsurface",
-        "sampling",
-        "udfs",
-        "pipeline",
-        "acid",
-        "quality",
-        "retrieval",
-        "dml",
-        "interop",
-        "mmexport",
-    ):
-        try:
-            mods.append(
-                __import__(
-                    f"lakehouse_homeserver_spark.operators.{name}",
-                    fromlist=[name],
-                )
-            )
-        except ModuleNotFoundError as e:
-            # Only tolerate the module itself being absent (optional
-            # extension); an import bug INSIDE a present module must
-            # raise, not silently drop its queries from the registry
-            # (that failure mode cost round-1 driver coverage).
-            if e.name != f"lakehouse_homeserver_spark.operators.{name}":
-                raise
-    _MODULES = mods
-    return mods
-
-
-def _prioritized(names):
-    rank = {n: i for i, n in enumerate(PRIORITY)}
-    return sorted(names, key=lambda n: (rank.get(n, len(PRIORITY)),))
+    return [
+        relational,
+        dedup,
+        similarity,
+        text,
+        multimodal,
+        timeseries,
+        sqlsurface,
+        sampling,
+        udfs,
+        pipeline,
+        acid,
+        quality,
+        retrieval,
+        dml,
+        interop,
+        mmexport,
+    ]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -226,9 +59,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         out.update(m.QUERIES)
-    # Dict insertion order is the driver's verification order — emit
-    # PRIORITY names first (see comment above), stable otherwise.
-    return {n: out[n] for n in _prioritized(out)}
+    return out
 
 
 def all_oracles() -> dict[str, str]:

@@ -37,7 +37,8 @@ DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # When the driver's own pyspark is a directory install (bytecode
 # cache warm), the shim prepends it to the worker's PYTHONPATH so the
 # same release imports in ~0.4 s. Results are unaffected: it is the
-# identical pyspark version either way, only resolved from a path
+# identical pyspark version either way (checked against the
+# version.py in $SPARK_HOME's pyspark.zip), only resolved from a path
 # with a __pycache__.
 _WORKER_SHIM = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -46,13 +47,33 @@ _WORKER_SHIM = os.path.join(
 )
 
 
+def _zip_pyspark_version(zip_path: str) -> str | None:
+    """`__version__` from a pyspark.zip's pyspark/version.py, or None
+    when the archive or the assignment cannot be read."""
+    import re
+    import zipfile
+
+    try:
+        with zipfile.ZipFile(zip_path) as zf:
+            src = zf.read("pyspark/version.py").decode()
+    except (OSError, KeyError, zipfile.BadZipFile, UnicodeDecodeError):
+        return None
+    m = re.search(
+        r"^__version__(?:\s*:\s*str)?\s*=\s*['\"]([^'\"]+)['\"]", src, re.M
+    )
+    return m.group(1) if m else None
+
+
 def _worker_shim_env(real_python: str) -> dict[str, str]:
     """Env the shim needs, or {} when it must not be used: driver
     pyspark lives in a zip/egg (no bytecode-cached dir to point at),
     the shim is missing, or the configured worker interpreter is a
     different major.minor than the driver's (its workers could not
     import the driver's install; Spark itself rejects such a mismatch
-    at run time, but don't let the shim be the thing that breaks)."""
+    at run time, but don't let the shim be the thing that breaks), or
+    $SPARK_HOME's pyspark.zip is a different pyspark release than the
+    driver's (the shim would put the driver's release in front of the
+    one the workers are meant to run)."""
     import shutil
     import subprocess
     import sys
@@ -62,6 +83,14 @@ def _worker_shim_env(real_python: str) -> dict[str, str]:
     pkg_dir = os.path.dirname(os.path.abspath(pyspark.__file__))
     if not os.path.isdir(pkg_dir) or not os.access(_WORKER_SHIM, os.X_OK):
         return {}
+    spark_home = os.environ.get("SPARK_HOME")
+    if spark_home:
+        zip_path = os.path.join(spark_home, "python", "lib", "pyspark.zip")
+        if (
+            os.path.isfile(zip_path)
+            and _zip_pyspark_version(zip_path) != pyspark.__version__
+        ):
+            return {}
     driver_ver = "%d.%d" % sys.version_info[:2]
     resolved = shutil.which(real_python)
     if resolved is None:

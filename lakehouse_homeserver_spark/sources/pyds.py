@@ -113,7 +113,7 @@ def _resolve_manifest(table_path: str, e: dict) -> dict:
 
 def _entry_file_seq(entry: dict) -> dict[str, int]:
     """Per-data-file sequence numbers — LOCAL mirror of the engine's
-    `snapshot._file_seq` spec rule (ADVICE r9 #1): only a MISSING
+    `snapshot._file_seq` spec rule: only a MISSING
     `seq` map falls back to per-entry-version defaults (pre-seq-era
     entries); a present-but-empty/partial map means unlisted files
     predate every delete (callers default them to 0 via
@@ -752,7 +752,7 @@ class MetadataReader(DataSourceReader):
             return out
         if self._table == "files":
             e = _read_entry(self._path, self._version)
-            # List the seq the read paths actually USE (ADVICE r9 #2):
+            # List the seq the read paths actually USE:
             # the None-vs-empty fallback, then get(f, 0) for files
             # absent from a partial map — so the metadata listing
             # matches delete-application semantics exactly.

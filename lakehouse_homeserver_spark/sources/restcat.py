@@ -214,7 +214,7 @@ class CatalogServer:
         self._store = store
         self._credential = credential
         # token -> monotonic expiry; expired entries are evicted on
-        # issue and on check, so the set stays bounded (ADVICE r5).
+        # issue and on check, so the set stays bounded.
         # The lock serializes dict mutation vs iteration: handlers run
         # on ThreadingHTTPServer threads, and an unlocked any()/
         # items() scan racing a concurrent token issue is a
@@ -280,7 +280,7 @@ class CatalogServer:
         form = urllib.parse.parse_qs((body or b"").decode())
         cid = form.get("client_id", [None])[0]
         sec = form.get("client_secret", [None])[0]
-        # constant-time secret comparison (ADVICE r5): loopback test
+        # constant-time secret comparison: loopback test
         # fixture today, but keep the contract honest for anything
         # this surface ever fronts.
         cred_ok = (

@@ -80,7 +80,7 @@ def read_pandas(table: str, version: int | None = None):
     e = read_entry(table, v)
     cols = [f["name"] for f in json.loads(e["schema"])["fields"]]
     data = os.path.join(table, "data")
-    # Mirror the engine's _file_seq rule EXACTLY (ADVICE r8 #3): only a
+    # Mirror the engine's _file_seq rule EXACTLY: only a
     # missing/None seq map falls back to per-entry-version defaults; a
     # present-but-empty map means "no files carry a seq" and files
     # absent from it default to 0 via seq.get(fname, 0) below. The

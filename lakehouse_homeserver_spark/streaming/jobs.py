@@ -39,7 +39,7 @@ from pyspark.sql.types import StructType
 def await_or_raise(q: StreamingQuery, timeout_s: int = 300) -> None:
     """`awaitTermination(timeout)` returns False on timeout — callers
     that ignore it would read a possibly partial sink and certify
-    incomplete results (ADVICE r5 low on i8/i11). Stop the hung query
+    incomplete results. Stop the hung query
     and fail loudly instead."""
     if not q.awaitTermination(timeout_s):
         q.stop()
@@ -259,16 +259,21 @@ def prepare_events_landing(
     # the in-time-order arrival a file-by-file stream replay needs —
     # the watermark advances monotonically across slices. (Global sort
     # window: test/demo helper only, never a data-plane path.)
-    # Materialize the ntile ONCE (optimization r12, guide §2.4): each
-    # per-slice write is a separate Spark job, and the lazy form
-    # re-ran the global-sort window behind every one of them — N
-    # slices paid N full sorts of the events table. persist/unpersist
-    # (ADVICE r12 low): the first write materializes the sort, later
-    # writes reuse the cached slices, and — unlike localCheckpoint,
-    # whose blocks cannot be released through the DataFrame API — the
-    # storage is reclaimed on exit, so a session calling this helper
-    # many times (the test suite does ~14×) does not accumulate
-    # pinned block copies for its lifetime.
+    # `event_id` is the events fixture's key, so (ts, event_id) is a
+    # total order: the ntile assigns every row the same slice on any
+    # recompute, and the persisted slices do not depend on whether a
+    # cached block was evicted (tests/test_streaming.py checks the key
+    # is unique in every fixture).
+    # Materialize the ntile ONCE: each per-slice write is a separate
+    # Spark job, and the lazy form re-ran the global-sort window
+    # behind every one of them — N slices paid N full sorts of the
+    # events table. With persist/unpersist the first write
+    # materializes the sort, later writes reuse the cached slices,
+    # and — unlike localCheckpoint, whose blocks cannot be released
+    # through the DataFrame API — the storage is reclaimed on exit,
+    # so a session calling this helper many times (the test suite
+    # does ~14×) does not accumulate pinned block copies for its
+    # lifetime.
     sliced = events.withColumn(
         "_slice", F.ntile(slices).over(Window.orderBy("ts", "event_id"))
     ).persist()

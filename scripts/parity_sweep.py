@@ -35,10 +35,12 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import multiprocessing
 import os
 import sys
 import time
 import traceback
+from concurrent.futures import ProcessPoolExecutor
 
 import decimal
 import math
@@ -97,13 +99,20 @@ def canon(pdf: pd.DataFrame) -> list[str]:
     return sorted(out)
 
 
-def main() -> int:
+def _load_entry():
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
 
+
+def run_engine(names: list[str]) -> dict[str, tuple | None]:
+    """Phase 1: run every named query on a driver-shaped session.
+    Returns name -> (row count, sorted column names, canon rows,
+    seconds), or None when the query raised."""
+    qs = _load_entry().queries()
     # Driver-faithful: a VANILLA session (no engine tuning — each
     # query applies tune_session itself, exactly like the harness),
     # but with a real driver heap: sf0.1's array-heavy ops on the
@@ -125,55 +134,86 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    out: dict[str, tuple | None] = {}
+    try:
+        for name in names:
+            t1 = time.time()
+            try:
+                spdf = qs[name](spark, SF).toPandas()
+                out[name] = (
+                    len(spdf),
+                    sorted(spdf.columns),
+                    canon(spdf),
+                    time.time() - t1,
+                )
+            except Exception:
+                out[name] = None
+                print(f"{name}: ERROR in Spark", flush=True)
+                traceback.print_exc()
+    finally:
+        spark.stop()
+    return out
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'"
-        )
 
+def main() -> int:
+    mod = _load_entry()
     qs, osql = mod.queries(), mod.oracle_sql()
     only = set(sys.argv[1:])
     unknown = sorted(only - set(qs))
     if unknown:
         print(f"unknown query name(s): {unknown}", flush=True)
         return 2
-    fails, errs = [], []
-    n_run = 0
+    names = [n for n in qs if not only or n in only]
     t0 = time.time()
-    for i, (name, fn) in enumerate(qs.items()):
-        if only and name not in only:
+    # The engine runs first, in a child process, and DuckDB runs after
+    # that child (and with it the driver JVM) has exited: the two
+    # engines' memory never adds up (one oracle alone peaks near 9 GB
+    # at sf0.1, and the allocator keeps it). Every query still runs
+    # before its oracle, so an oracle that reads files its query wrote
+    # sees them.
+    fork = multiprocessing.get_context("fork")
+    with ProcessPoolExecutor(max_workers=1, mp_context=fork) as pool:
+        engine = pool.submit(run_engine, names).result()
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'"
+        )
+    fails, errs = [], []
+    for i, name in enumerate(qs):
+        if name not in engine:
             continue
-        n_run += 1
-        t1 = time.time()
-        try:
-            spdf = fn(spark, SF).toPandas()
-            status = "rows-only"
-            if name in osql:
-                odf = con.execute(osql[name]).df()
-                ok = (
-                    len(spdf) == len(odf)
-                    and sorted(spdf.columns) == sorted(odf.columns)
-                    and canon(spdf) == canon(odf)
-                )
-                status = "OK" if ok else "FAIL"
-                if not ok:
-                    fails.append(name)
-            print(
-                f"[{i + 1}/{len(qs)}] {name}: {status} "
-                f"({time.time() - t1:.1f}s)",
-                flush=True,
-            )
-        except Exception:
+        label = f"[{i + 1}/{len(qs)}] {name}"
+        if engine[name] is None:
             errs.append(name)
-            print(f"[{i + 1}/{len(qs)}] {name}: ERROR", flush=True)
-            traceback.print_exc()
+            print(f"{label}: ERROR", flush=True)
+            continue
+        n_rows, cols, rows, secs = engine[name]
+        status = "rows-only"
+        if name in osql:
+            try:
+                odf = con.execute(osql[name]).df()
+            except Exception:
+                errs.append(name)
+                print(f"{label}: ERROR in DuckDB", flush=True)
+                traceback.print_exc()
+                continue
+            ok = (
+                n_rows == len(odf)
+                and cols == sorted(odf.columns)
+                and rows == canon(odf)
+            )
+            status = "OK" if ok else "FAIL"
+            if not ok:
+                fails.append(name)
+        print(f"{label}: {status} ({secs:.1f}s)", flush=True)
     print(
         json.dumps(
             {
                 "sf_dir": SF,
                 "total_sec": round(time.time() - t0, 1),
-                "n": n_run,
+                "n": len(engine),
                 "fails": fails,
                 "errs": errs,
             }

@@ -17,8 +17,10 @@
 # importing that same installation are exactly as consistent as the
 # zip (same release the JVM shipped with) and skip the compile.
 # session.py exports SPARK_GRAFT_PYSPARK_DIR = the driver pyspark's
-# parent dir only in that case; this shim PREPENDS it (the zip stays
-# on the path as fallback) and execs the driver's own interpreter.
+# parent dir only in that case, and only when the version.py inside
+# $SPARK_HOME's pyspark.zip names the driver's pyspark release; this
+# shim PREPENDS it (the zip stays on the path as fallback) and execs
+# the driver's own interpreter.
 if [ -n "$SPARK_GRAFT_PYSPARK_DIR" ]; then
   PYTHONPATH="$SPARK_GRAFT_PYSPARK_DIR${PYTHONPATH:+:$PYTHONPATH}"
   export PYTHONPATH

@@ -454,3 +454,29 @@ def test_register_views_restores_any_dropped_view(spark, sf_dir):
     assert spark.sql(f"SELECT COUNT(*) FROM {victim}").first()[0] == (
         spark.read.parquet(f"{sf_dir}/{victim}.parquet").count()
     )
+
+
+def test_worker_shim_requires_matching_pyspark_release(monkeypatch, tmp_path):
+    """The worker shim puts the driver's pyspark in front of
+    $SPARK_HOME's pyspark.zip; it stays off when the two are
+    different releases."""
+    import sys
+    import zipfile
+
+    import pyspark
+
+    from lakehouse_homeserver_spark.session import _worker_shim_env
+
+    def spark_home_with(version: str) -> str:
+        home = tmp_path / version
+        (home / "python" / "lib").mkdir(parents=True)
+        with zipfile.ZipFile(home / "python" / "lib" / "pyspark.zip", "w") as zf:
+            zf.writestr("pyspark/version.py", f"__version__: str = '{version}'\n")
+        return str(home)
+
+    monkeypatch.setenv("SPARK_HOME", spark_home_with(pyspark.__version__))
+    shim = _worker_shim_env(sys.executable)
+    assert shim["SPARK_GRAFT_REAL_PYTHON"] == sys.executable
+
+    monkeypatch.setenv("SPARK_HOME", spark_home_with("0.0.1-other"))
+    assert _worker_shim_env(sys.executable) == {}

@@ -106,22 +106,6 @@ def test_scratch_mkdtemp_prefixes_are_namespaced():
     )
 
 
-def test_survey_labels_match_correctness_union():
-    """VERDICT r6+r7 recurring item: SURVEY §8's inline 'driver-green
-    rN' labels went stale every round when hand-edited. They are now
-    generated from the CORRECTNESS_r*.json union by
-    scripts/refresh_survey_labels.py; this gate fails the suite if
-    anyone forgets to run it after a new CORRECTNESS artifact lands."""
-    r = subprocess.run(
-        ["python", os.path.join(REPO, "scripts", "refresh_survey_labels.py"),
-         "--check"],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-    assert r.returncode == 0, r.stdout[-3000:]
-
-
 def test_janitor_dry_run_never_fails():
     """The janitor's contract is exit code 0 always; a missing table
     in one sf_dir must not abort the sweep (r8 advice — the
@@ -135,64 +119,6 @@ def test_janitor_dry_run_never_fails():
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "== kept (live fixture families) ==" in r.stdout
-
-
-def test_label_gate_tolerates_post_commit_artifact_drop(monkeypatch):
-    """VERDICT r8 what's-wrong #1: the driver drops CORRECTNESS_r{N}
-    AFTER the builder's last commit, so --check must tolerate labels
-    whose ONLY staleness source is an artifact committed after
-    SURVEY.md's last commit (or still untracked) — and keep failing
-    on labels the builder had a chance to refresh."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "refresh_survey_labels",
-        os.path.join(REPO, "scripts", "refresh_survey_labels.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    stale = [(1, "q_x", "driver-green r8 (CORRECTNESS_r08)",
-              "driver-green r9 (CORRECTNESS_r09)")]
-    monkeypatch.setattr(
-        mod, "_rounds_by_query", lambda: {"q_x": [7, 8, 9]}
-    )
-
-    times = {"SURVEY.md": 100, "CORRECTNESS_r09.json": 200}
-    monkeypatch.setattr(mod, "_last_commit_time", lambda p: times[p])
-    hard, soft = mod._tolerated(stale)
-    assert hard == [] and soft == stale  # artifact landed after SURVEY
-
-    times = {"SURVEY.md": 300, "CORRECTNESS_r09.json": 200}
-    hard, soft = mod._tolerated(stale)
-    assert hard == stale and soft == []  # builder saw it; must refresh
-
-    # untracked artifact (no commit yet) reads as "newer than any"
-    times = {"SURVEY.md": 300, "CORRECTNESS_r09.json": 2**63}
-    hard, soft = mod._tolerated(stale)
-    assert hard == [] and soft == stale
-
-    # forgotten-refresh masking (r9 review finding): label is TWO
-    # rounds stale; the intermediate artifact was committed before
-    # SURVEY.md — the builder saw it and forgot. Even though the
-    # latest artifact landed post-commit, the label must stay hard.
-    stale2 = [(1, "q_x", "driver-green r7 (CORRECTNESS_r07)",
-               "driver-green r9 (CORRECTNESS_r09)")]
-    times = {"SURVEY.md": 300, "CORRECTNESS_r08.json": 200,
-             "CORRECTNESS_r09.json": 400}
-    hard, soft = mod._tolerated(stale2)
-    assert hard == stale2 and soft == []
-
-    # degenerate git info fails CLOSED: no repo -> None everywhere
-    times = {"SURVEY.md": 300, "CORRECTNESS_r09.json": 400}
-    monkeypatch.setattr(mod, "_last_commit_time", lambda p: None)
-    hard, soft = mod._tolerated(stale)
-    assert hard == stale and soft == []
-    # shallow clone: every file collapses to the tip timestamp ->
-    # strict > keeps it hard
-    monkeypatch.setattr(mod, "_last_commit_time", lambda p: 500)
-    hard, soft = mod._tolerated(stale)
-    assert hard == stale and soft == []
 
 
 def test_package_has_no_map_in_pandas():
@@ -210,3 +136,20 @@ def test_package_has_no_map_in_pandas():
                 if ".mapInPandas(" in line:
                     bad.append(f"{os.path.relpath(path, REPO)}:{lineno}")
     assert not bad, "mapInPandas call sites: " + ", ".join(bad)
+
+
+def test_package_cites_no_round_history():
+    """Engine comments state what the code does and why, not the
+    history behind it: a `VERDICT rN` / `ADVICE rN` citation in the
+    package is provenance, not a reason."""
+    pkg = os.path.join(REPO, "lakehouse_homeserver_spark") + os.sep
+    cite = re.compile(r"\b(VERDICT|ADVICE) r\d+")
+    bad = []
+    for path in _py_sources():
+        if not path.startswith(pkg):
+            continue
+        with open(path) as fh:
+            for lineno, line in enumerate(fh, 1):
+                if cite.search(line):
+                    bad.append(f"{os.path.relpath(path, REPO)}:{lineno}")
+    assert not bad, "round-history citations: " + ", ".join(bad)

@@ -1,124 +1,51 @@
-"""Standing parity-sweep gate (VERDICT r9 next-round #3).
+"""Full-registry oracle-parity gates, run through `scripts/parity_sweep.py`.
 
-The sf0.1 and adversarial-parallelism sweeps (`scripts/parity_sweep.py`)
-caught four real latent cross-engine divergences in r9 — but they were
-scripts someone had to remember to run. This gate runs a seeded,
-round-rotating SAMPLE of both axes inside the normal pytest suite, so
-the e1-collateral class (engine and oracle drifting apart where only
-the big-SF or odd-parallelism run can see it) fails CI in the round it
-happens.
+Every `queries()` entry runs in a fresh driver-shaped session and must
+hash-match its DuckDB oracle (rows-only entries must run). Each test
+is one subprocess of the sweep script, the same code a manual sweep
+runs, from a cwd outside the repo (keeps the by-value-pickled Python
+data source covered).
 
-Sample per axis (documented in SURVEY.md round-10 note):
-  * up to 4 "newest-edited" queries — mechanically derived by
-    `scripts/stale_verdicts.py`'s call graph (queries reached by any
-    package edit since the last round's verdict commit);
-  * 8 rotating as a TRUE cycle — one FIXED md5(name)-shuffled order
-    of all oracle-backed queries, each round taking the next 8-name
-    slice (offset = 8 * round mod N, wraparound), where round = max
-    committed CORRECTNESS round + 1. A cycle, not independent
-    per-round draws (those would cover only ~63% of the registry in
-    32 rounds — coupon collector; r10 review), so every query
-    provably passes all axes within ceil(N/8) ~= 33 rounds. Registry
-    growth shifts the wheel slightly between rounds; the advancing
-    offset keeps coverage near-cyclic with no curation.
+Tier-1 (always runs):
+  * the whole registry at sf0.01 in the script's default session shape
+    (`local[16]`, 16 shuffle partitions), the shape the driver uses.
 
-Axes:
-  * sf0.1 at the default session shape — 10x the driver gate's data;
-  * sf0.01 at local[4] / 7 shuffle partitions — partition-count
-    invariance (the 1000-executor property);
-  * a 4-query slice under local-cluster[2,2,1024] — real executor
-    JVMs (driver-JVM-sharing assumptions).
-
-Each axis is one subprocess of the real sweep script (same code the
-manual runs use — no second implementation to drift).
+Slow tier (`SPARK_GRAFT_SLOW_TESTS=1`), fixed inputs:
+  * the whole registry at sf0.1, where divergences that only show at
+    10x the data live (ROUND half-ties, sign of zero, decimal-cast
+    accumulation, SF-calibrated recall bounds);
+  * the whole registry at sf0.01 on `local[4]` with 7 shuffle
+    partitions: a result that depends on the partition count
+    (order-dependent float reductions) is a latent cluster bug;
+  * `BOUNDARY_QUERIES` under `local-cluster[2,2,1024]`: separate
+    Worker and executor JVMs, wire shuffle, serialized closures and
+    executor-side Python workers, where driver-JVM-sharing
+    assumptions break.
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
 import json
 import os
-import re
 import subprocess
 import sys
 
 import pytest
 
+from lakehouse_homeserver_spark.registry import all_queries
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SWEEP = os.path.join(REPO, "scripts", "parity_sweep.py")
-SCRIPTS = os.path.join(REPO, "scripts")
 
-N_EDITED = 4
-N_ROTATING = 8
-
-
-def _round_number() -> int:
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
-
-
-def _sample() -> list[str]:
-    # sys.path inserts are scoped to this function (ADVICE r10: a
-    # permanent SCRIPTS insert lets scripts/*.py shadow same-named
-    # modules for every test that runs after this module in-process).
-    saved = list(sys.path)
-    sys.path.insert(0, REPO)
-    sys.path.insert(0, SCRIPTS)
-    try:
-        return _sample_inner()
-    finally:
-        # full snapshot restore: stale_verdicts inserts REPO again at
-        # import time, so removing only our own two entries leaks one
-        sys.path[:] = saved
-
-
-def _sample_inner() -> list[str]:
-    from lakehouse_homeserver_spark.registry import all_oracles
-
-    import stale_verdicts as sv
-
-    oracle_backed = sorted(all_oracles())
-    edited: list[str] = []
-    try:
-        commits = sv.round_commits()
-        if commits:
-            base = commits[max(commits)]
-            edited = sorted(
-                n for n in sv.compute_hits(base) if n in set(oracle_backed)
-            )[:N_EDITED]
-    except (subprocess.CalledProcessError, OSError) as exc:
-        # Degenerate GIT state only (shallow clone, no git binary):
-        # fall back to rotation-only rather than skipping the gate.
-        # Anything else (a bug in stale_verdicts itself) must FAIL the
-        # gate, not silently drop its highest-value axis (r10 review).
-        import warnings
-
-        warnings.warn(
-            f"parity gate: edited-query axis degraded to rotation-only "
-            f"({exc!r})",
-            stacklevel=2,
-        )
-        edited = []
-    rnd = _round_number()
-    rest = [n for n in oracle_backed if n not in set(edited)]
-    # TRUE cycle, not independent per-round draws (r10 review #2: a
-    # fresh md5(f"r{round}:{name}") order each round is sampling WITH
-    # replacement — expected coverage after 32 rounds only ~63%, full
-    # coverage a ~180-round coupon-collector). Instead: ONE fixed
-    # hash-shuffled order, and each round takes the next 8-name slice
-    # with wraparound, so every oracle-backed query provably passes
-    # all axes within ceil(N/8) ≈ 33 rounds.
-    wheel = sorted(
-        rest, key=lambda n: hashlib.md5(n.encode()).hexdigest()
-    )
-    start = (N_ROTATING * rnd) % len(wheel)
-    rotating = (wheel + wheel)[start : start + N_ROTATING]
-    return edited + rotating
+# Python-boundary queries for the local-cluster axis: a per-row
+# `map_rows` kernel, a batch `mapInArrow` kernel, the Python data
+# source write/read path, and the applyInPandasWithState runtime.
+BOUNDARY_QUERIES = [
+    "k5_png_decode",
+    "j_arrow_batch_norms",
+    "a49_pyds_roundtrip",
+    "i12_stateful_session_timeout",
+]
 
 
 def _run_sweep(names: list[str], env_extra: dict[str, str]) -> dict:
@@ -129,8 +56,7 @@ def _run_sweep(names: list[str], env_extra: dict[str, str]) -> dict:
         text=True,
         timeout=1500,
         env=env,
-        cwd="/tmp",  # outside the repo: keeps the pyds cloudpickle
-        # by-value registration covered (verify-skill gotcha)
+        cwd="/tmp",  # outside the repo (see the module docstring)
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     assert lines, (
@@ -140,62 +66,53 @@ def _run_sweep(names: list[str], env_extra: dict[str, str]) -> dict:
     )
     summary = json.loads(lines[-1])
     assert proc.returncode == 0 and not summary["fails"] and not summary["errs"], (
-        f"parity sweep sample diverged: fails={summary['fails']} "
+        f"parity sweep diverged: fails={summary['fails']} "
         f"errs={summary['errs']}\nstdout tail: {proc.stdout[-3000:]}"
     )
     return summary
 
 
-@pytest.fixture(scope="module")
-def sample_names() -> list[str]:
-    names = _sample()
-    assert len(names) >= N_ROTATING, names
-    return names
-
-
-@pytest.mark.slow
-def test_parity_sample_at_sf01(sample_names):
-    """Axis 1: the rotating sample must hash-match DuckDB at sf0.1 —
-    10x the driver gate's SF, where the r9 ROUND/half-tie/recall-bound
-    divergences lived."""
+def test_full_registry_parity_at_sf001():
+    """Every registered query matches its oracle at sf0.01 in the
+    driver's session shape."""
     summary = _run_sweep(
-        sample_names,
-        {"SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.1"},
+        [], {"SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.01"}
     )
-    assert summary["n"] == len(sample_names)
+    assert summary["n"] == len(all_queries())
 
 
 @pytest.mark.slow
-def test_parity_sample_at_adversarial_parallelism(sample_names):
-    """Axis 2: same sample at local[4] / 7 shuffle partitions at the
-    driver's sf0.01 — any result that depends on partition count
-    (order-dependent float reductions) is a latent cluster bug."""
+def test_full_registry_parity_at_sf01():
+    """Every registered query matches its oracle at sf0.1."""
     summary = _run_sweep(
-        sample_names,
+        [], {"SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.1"}
+    )
+    assert summary["n"] == len(all_queries())
+
+
+@pytest.mark.slow
+def test_full_registry_parity_at_adversarial_parallelism():
+    """Every registered query matches its oracle at sf0.01 on
+    local[4] with 7 shuffle partitions."""
+    summary = _run_sweep(
+        [],
         {
             "SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.01",
             "SPARK_GRAFT_PARITY_MASTER": "local[4]",
             "SPARK_GRAFT_PARITY_PARTITIONS": "7",
         },
     )
-    assert summary["n"] == len(sample_names)
+    assert summary["n"] == len(all_queries())
 
 
 @pytest.mark.slow
-def test_parity_sample_under_local_cluster(sample_names):
-    """Axis 3 (VERDICT r9 #5, standing form): a 4-query slice of the
-    rotating sample under local-cluster[2,2,1024] — separate Worker +
-    executor JVMs, wire shuffle, serialized closures, executor-side
-    Python workers. This is the topology where driver-JVM-sharing
-    assumptions (broadcast object identity, state-store plumbing, the
-    by-value-pickled Python data source) break; local[32] structurally
-    cannot falsify them. Four queries keep the axis inside the suite
-    budget (~2 min incl. cluster startup); the full 22-query
-    certificate lives in SCALE.md round-10. PYTHONPATH is exported so
-    executor-side Python workers can import package-level kernels
-    (task closures reference them by module path)."""
+def test_boundary_queries_under_local_cluster():
+    """The Python-boundary queries match their oracles under
+    local-cluster[2,2,1024]. PYTHONPATH is exported so executor-side
+    Python workers can import package-level kernels (task closures
+    reference them by module path)."""
     summary = _run_sweep(
-        sample_names[:4],
+        BOUNDARY_QUERIES,
         {
             "SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.01",
             "SPARK_GRAFT_PARITY_MASTER": "local-cluster[2,2,1024]",
@@ -205,35 +122,4 @@ def test_parity_sample_under_local_cluster(sample_names):
             + os.environ.get("PYTHONPATH", ""),
         },
     )
-    assert summary["n"] == 4
-
-
-def test_rotation_wheel_cycles_full_registry():
-    """VERDICT r10 #7 invariant: the advancing-slice rotation must
-    cover the ENTIRE oracle-backed registry within ceil(N/8)
-    consecutive rounds even as the registry grows — the property the
-    r10 review fixed (independent per-round draws covered only ~63%
-    in 32 rounds). Simulated directly over the real wheel order."""
-    import math
-
-    saved = list(sys.path)
-    sys.path.insert(0, REPO)
-    try:
-        from lakehouse_homeserver_spark.registry import all_oracles
-
-        names = sorted(all_oracles())
-    finally:
-        sys.path[:] = saved
-    wheel = sorted(names, key=lambda n: hashlib.md5(n.encode()).hexdigest())
-    n = len(wheel)
-    rounds_needed = math.ceil(n / N_ROTATING)
-    base_round = 17  # arbitrary start: the property must hold anywhere
-    seen: set[str] = set()
-    for rnd in range(base_round, base_round + rounds_needed):
-        start = (N_ROTATING * rnd) % n
-        seen.update((wheel + wheel)[start : start + N_ROTATING])
-    # consecutive fixed-stride slices with wraparound tile the wheel
-    assert seen == set(wheel), (
-        f"rotation missed {len(set(wheel) - seen)} of {n} queries "
-        f"in {rounds_needed} rounds"
-    )
+    assert summary["n"] == len(BOUNDARY_QUERIES)

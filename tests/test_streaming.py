@@ -500,3 +500,24 @@ def test_scaled_state_partitions_tracks_volume():
     assert scaled_state_partitions(
         "/root/testdata/sf0.1", rows_per_partition=1_250, hi=8
     ) == "8"
+
+
+def test_events_key_makes_slice_order_total():
+    """`prepare_events_landing` slices by `ntile` over (ts, event_id);
+    that order is total, and the persisted slices are the same on any
+    recompute, only while `event_id` is unique in every events
+    fixture. DuckDB only: no Spark job."""
+    import duckdb
+
+    paths = sorted(glob.glob("/root/testdata/sf*/events.parquet"))
+    assert paths, "no events fixtures found"
+    con = duckdb.connect()
+    try:
+        for path in paths:
+            n, distinct = con.execute(
+                "SELECT count(*), count(DISTINCT event_id) "
+                f"FROM '{path}'"
+            ).fetchone()
+            assert n > 0 and n == distinct, (path, n, distinct)
+    finally:
+        con.close()
