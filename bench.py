@@ -109,10 +109,11 @@ def main() -> None:
     warm.mapInPandas(lambda it: it, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
-    import tempfile
+    from lakehouse_homeserver_spark.workspace import scratch
 
-    with tempfile.TemporaryDirectory(prefix="lakehouse-scratch-bench-warm-") as d:
-        spark.range(100).write.mode("overwrite").parquet(os.path.join(d, "w"))
+    spark.range(100).write.mode("overwrite").parquet(
+        os.path.join(scratch("bench-warm"), "w")
+    )
 
     # SPARK_GRAFT_BENCH_REPEATS > 1 runs N full INTERLEAVED sweeps and
     # reports the per-query MEDIAN (+ spread): on a co-tenant box with

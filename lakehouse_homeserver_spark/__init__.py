@@ -21,6 +21,8 @@ Layout
   text tooling) — all built-in-function compositions, no slow UDFs.
 - ``plans``      : plan-introspection helpers (assert pushdown /
   broadcast / codegen) used by tests to keep plans scale-worthy.
+- ``workspace``  : owner of every directory written outside the
+  warehouse: per-process scratch and build-once fixtures.
 
 Design rules (100 TB):
 - DataFrame/SQL only; RDDs never.

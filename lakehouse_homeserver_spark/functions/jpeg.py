@@ -324,7 +324,7 @@ def jpeg_encode_baseline(y: np.ndarray, cb: np.ndarray | None = None,
         cb = np.asarray(cb, dtype=np.uint8)
         cr = np.asarray(cr, dtype=np.uint8)
         if cr.shape != cb.shape:
-            # loud-failure posture (r11 review #2): numpy slicing
+            # loud-failure posture: numpy slicing
             # would silently crop a mismatched cr to the cb grid
             raise ValueError(
                 f"cr shape {cr.shape} != cb shape {cb.shape}"

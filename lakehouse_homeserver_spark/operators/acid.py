@@ -14,17 +14,18 @@ reads are exposed by construction in the reference stack
 (/root/reference/scripts/extract_load.py:94-110, README.md:109-111,
 config/iceberg-template.properties:1-5).
 
-The demo tables land in a fresh temp directory per invocation (the
-result DataFrame scans them lazily, so the directory must outlive the
-query — harness/bench processes are ephemeral). Table-build cost is
-three small commits of fixture slices; the data plane never leaves
-Spark.
+The demo tables land in a fresh scratch directory per invocation
+(`workspace.scratch`: the result DataFrame scans them lazily, so the
+directory lives until the process ends). The cross-engine and catalog
+certificates read build-once tables under `workspace.FIXTURES`
+instead, so repeated runs measure the read, not the build.
+Table-build cost is three small commits of fixture slices; the data
+plane never leaves Spark.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +34,7 @@ from ..sources import load_table as T
 from ..streaming.jobs import await_or_raise, pinned_shuffle
 from ..sources.registry import table_row_count
 from ..sources.snapshot import SnapshotNotFound, SnapshotTable
+from ..workspace import FIXTURES, fixture, scratch
 from .common import make_registry, dec, dsum, sql_dsum
 
 QUERIES, ORACLES, query = make_registry()
@@ -48,7 +50,7 @@ def _demo_table(spark: SparkSession, sf_dir: str, *, evolve: bool) -> SnapshotTa
     writes — the slice keeps the bench honest while the oracle applies
     the identical predicate."""
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-demo-")
+    root = scratch("snap-demo")
     t = SnapshotTable(spark, os.path.join(root, "orders_acid"))
     t.create(orders.filter(F.col("o_orderkey") % 3 == 0))
     t.append(orders.filter(F.col("o_orderkey") % 3 == 1))
@@ -213,7 +215,7 @@ def a13_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberate edge the oracle shares.
     """
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-merge-"), "cust")
+        spark, os.path.join(scratch("snap-merge"), "cust")
     )
     t.create(T(spark, sf_dir, "customer").filter(F.col("c_custkey") % 5 == 0))
     t.merge(_merge_source(spark, sf_dir), on=["c_custkey"])
@@ -292,7 +294,7 @@ def a19_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-del-"), "orders")
+        spark, os.path.join(scratch("snap-del"), "orders")
     )
     orders = T(spark, sf_dir, "orders")
     n = table_row_count(sf_dir, "orders")
@@ -360,7 +362,7 @@ def a20_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-mor-"), "orders")
+        spark, os.path.join(scratch("snap-mor"), "orders")
     )
     orders = T(spark, sf_dir, "orders")
     n = table_row_count(sf_dir, "orders")
@@ -461,7 +463,7 @@ def a15_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-only, before any executor starts.
     """
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-skip-"), "orders")
+        spark, os.path.join(scratch("snap-skip"), "orders")
     )
     orders = T(spark, sf_dir, "orders")
     bounds = [0, 5000, 10000, 15000, 10**12]
@@ -502,7 +504,7 @@ def a16_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream jobs stay O(new data) at 100 TB.
     """
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-inc-"), "cust")
+        spark, os.path.join(scratch("snap-inc"), "cust")
     )
     c = T(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
@@ -543,7 +545,7 @@ def a17_zero_copy_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_snapshot.py.
     """
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-clone-")
+    root = scratch("snap-clone")
     src = SnapshotTable(spark, os.path.join(root, "src"))
     src.create(orders.filter(F.col("o_orderkey") % 3 == 0))
     src.append(orders.filter(F.col("o_orderkey") % 3 == 1))
@@ -591,7 +593,7 @@ def a21_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer "which files can contain key X" without opening any file.
     """
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-bloom-"), "orders")
+        spark, os.path.join(scratch("snap-bloom"), "orders")
     ).with_bloom_filters("o_orderkey")
     orders = T(spark, sf_dir, "orders")
     for i in range(4):
@@ -636,7 +638,7 @@ def a22_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed files (not a copy), publish costs one log write, and a
     bad batch never touches the production table's lineage.
     """
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-wap-")
+    root = scratch("snap-wap")
     cust = T(spark, sf_dir, "customer")
     t = SnapshotTable(spark, os.path.join(root, "customer"))
     t.create(cust.filter(F.col("c_custkey") % 3 == 0))
@@ -763,7 +765,7 @@ def a25_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     `SnapshotTable.changes_between`).
     """
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-cdf-")
+    root = scratch("snap-cdf")
     t = SnapshotTable(spark, os.path.join(root, "orders_cdf"))
     t.create(orders.filter(F.col("o_orderkey") % 3 == 0))
     t.append(orders.filter(F.col("o_orderkey") % 3 == 1))
@@ -821,7 +823,7 @@ def a26_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.ivm import IncrementalAggregate
 
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-ivm-")
+    root = scratch("snap-ivm")
     src = SnapshotTable(spark, os.path.join(root, "src"))
     dest = SnapshotTable(spark, os.path.join(root, "view"))
     ivm = IncrementalAggregate(
@@ -868,7 +870,7 @@ def a27_spec_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest; here the METADATA is the contract under test).
     """
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-spec-")
+    root = scratch("snap-spec")
     t = SnapshotTable(spark, os.path.join(root, "orders_spec"))
     t.create(orders.filter(F.col("o_orderkey") % 3 == 0))
     t.set_partition_spec(["o_custkey"])
@@ -925,7 +927,7 @@ def a29_stream_cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import stream_cdc_aggregate
 
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-scdc-")
+    root = scratch("snap-scdc")
     src = SnapshotTable(spark, os.path.join(root, "src"))
     view_path = os.path.join(root, "view")
     src.create(orders.filter(F.col("o_orderkey") % 3 == 0))
@@ -978,7 +980,7 @@ def a30_stream_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_upsert_user_totals,
     )
 
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-snap-sup-")
+    root = scratch("snap-sup")
     landing = os.path.join(root, "landing")
     table = os.path.join(root, "user_totals")
     prepare_events_landing(spark, sf_dir, landing, slices=3)
@@ -1028,7 +1030,7 @@ def a31_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     512 MiB-class scan units without touching settled data.
     """
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-opt-"), "orders")
+        spark, os.path.join(scratch("snap-opt"), "orders")
     )
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     t.create(orders.filter(F.col("o_orderkey") % 4 < 2).coalesce(1))
@@ -1187,7 +1189,7 @@ def a33_expire_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     live file, always the debris) is the property this query pins.
     """
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-gc-"), "orders")
+        spark, os.path.join(scratch("snap-gc"), "orders")
     )
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     t.create(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(1))
@@ -1255,7 +1257,7 @@ def a35_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite cost is O(restated partitions), and readers never observe
     a mix of old and new."""
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-dpo-"), "orders")
+        spark, os.path.join(scratch("snap-dpo"), "orders")
     )
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     t.create(orders.coalesce(1))
@@ -1324,7 +1326,7 @@ def a36_positional_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-pos-"), "orders")
+        spark, os.path.join(scratch("snap-pos"), "orders")
     )
     orders = T(spark, sf_dir, "orders")
     n = table_row_count(sf_dir, "orders")
@@ -1391,7 +1393,7 @@ def a37_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshot import ConstraintViolation
 
     t = SnapshotTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-snap-chk-"), "orders")
+        spark, os.path.join(scratch("snap-chk"), "orders")
     )
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
     t.create(orders.filter(F.col("o_orderkey") % 2 == 0))
@@ -1422,97 +1424,11 @@ def a37_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir -> cross-engine fixture table path built by THIS process.
-# The path is deliberately SF-independent: `nation` is the TPC-H
+# The cross-engine table is SF-independent: `nation` is the TPC-H
 # fixed 25-row table at every scale factor (asserted in
-# tests/test_edge_cases.py), so one fixture serves the driver run
-# (sf0.01) and the local parity mirror (sf0.001) alike — a tagged
-# path made the static oracle string point at a directory the
-# mirror's Spark side never wrote.
-_XENGINE_ORACLE_BASE = "/tmp/lakehouse-xengine/nation"
-
-# Single registry of every persistent /tmp fixture family:
-# scripts/fixture_janitor.py IMPORTS this registry (a hardcoded list
-# there would silently delete any family added without updating it),
-# so registering a family here is the one required step.
-# Fixed families: SF-invariant content at one fixed dir each.
-# Fingerprinted families: per-SF dirs named
-# `<prefix><sf_basename>-<content_fingerprint>`; value = the source
-# table whose _source_fingerprint keys staleness.
-FIXTURE_FAMILIES_FIXED = {
-    "lakehouse-fixture-locks",  # flock files for _build_fixture_once
-    "lakehouse-xengine",  # a41 cross-engine table
-    "lakehouse-restcat",  # a47/a56 REST-served table
-    "lakehouse-pyds",  # a49 round-trip table
-    "lakehouse-pydspush",  # a54 pushdown table
-    "lakehouse-sqlcat",  # a52 sqlite catalog + table
-}
-FIXTURE_FAMILIES_FINGERPRINTED = {
-    "lakehouse-tstravel-": "orders",  # a50 timestamp travel
-    "lakehouse-duppairs-": "documents",  # verified near-dup pair table
-}
-
-
-def _source_fingerprint(sf_dir: str, table: str) -> str:
-    """Short content fingerprint of one source table's parquet files
-    (names + sizes + mtimes — driver-side stat only, no Spark job).
-    Folded into persistent-fixture tags so a regenerated dataset, or
-    two sf_dirs sharing a basename, rebuild instead of reusing a
-    stale table. Nanosecond mtimes: integer-second truncation let a
-    same-size in-place regen within one second reuse the stale
-    fixture. A MISSING source is an error, not an empty hash — two
-    sf_dirs both lacking the table would otherwise collide on one
-    fixture path."""
-    import hashlib
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    parts: list[str] = []
-    if os.path.isdir(p):
-        for f in sorted(os.listdir(p)):
-            st = os.stat(os.path.join(p, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(p):
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        raise FileNotFoundError(
-            f"fixture source table missing: {p} — refusing to mint a "
-            "fingerprint for a nonexistent dataset"
-        )
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
-
-
-def _build_fixture_once(base: str, tag: str, build) -> None:
-    """Cross-process-safe build-once for the fixed-path /tmp fixtures
-    (a41/a47/a49): their content is deterministic and SF-invariant,
-    so a fixture already built by ANY process is valid — never
-    destroy it. Validity is an on-disk sentinel written after a
-    successful build; builds run under an exclusive flock with a
-    double-check inside, so when the driver cert and the parity
-    mirror start concurrently (the race: one process
-    rmtree's the table while the other reads it) the first caller
-    builds and the second reuses the winner's files. A crashed
-    half-build leaves no sentinel and is rebuilt under the lock."""
-    import fcntl
-    import shutil
-
-    root = os.path.dirname(base)
-    sentinel = os.path.join(root, f".fixture-ok-{tag}")
-    if os.path.exists(sentinel):
-        return
-    lock_dir = "/tmp/lakehouse-fixture-locks"
-    os.makedirs(lock_dir, exist_ok=True)
-    with open(os.path.join(lock_dir, f"{tag}.lock"), "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(sentinel):
-                return
-            shutil.rmtree(root, ignore_errors=True)
-            build()
-            with open(sentinel, "w") as s:
-                s.write("ok")
-        finally:
-            fcntl.flock(lk, fcntl.LOCK_UN)
+# tests/test_edge_cases.py), so one fixture serves every SF and the
+# static oracle string can name its path.
+_XENGINE_ORACLE_BASE = f"{FIXTURES}/xengine/nation"
 
 
 @query(
@@ -1570,11 +1486,9 @@ def a41_cross_engine_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deterministic content, memoized per process: repeat invocations
     (bench sweeps) measure the two-commit read, not the rebuild."""
-    base = _XENGINE_ORACLE_BASE
-
-    def build() -> None:
+    def build(root: str) -> None:
         nations = T(spark, sf_dir, "nation")
-        t = SnapshotTable(spark, base)
+        t = SnapshotTable(spark, os.path.join(root, "nation"))
         t.create(nations.repartition(2))
         t.delete_where(F.col("n_nationkey") % 5 == 0)
         t.append(
@@ -1583,7 +1497,7 @@ def a41_cross_engine_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    _build_fixture_once(base, "xengine-v1", build)
+    base = os.path.join(fixture("xengine", build), "nation")
     t = SnapshotTable(spark, base)
     n_live = len(t.entry(t.latest_version())["manifest"])
     n_data = len(
@@ -1621,13 +1535,11 @@ def _restcat_server(spark: SparkSession, sf_dir: str):
     build-once; the HTTP server is per-process state over it."""
     from ..sources.restcat import CatalogServer
 
-    base = _RESTCAT_BASE
-
-    def build() -> None:
+    def build(root: str) -> None:
         nations = T(spark, sf_dir, "nation").withColumn(
             "n_bucket", F.col("n_nationkey") % 4
         )
-        t = SnapshotTable(spark, base)
+        t = SnapshotTable(spark, os.path.join(root, "analytics", "nation"))
         t.create(nations.repartition(2))
         t.append(
             nations.withColumn(
@@ -1636,7 +1548,7 @@ def _restcat_server(spark: SparkSession, sf_dir: str):
         )
         t.delete_where(F.col("n_nationkey") % 7 == 3)
 
-    _build_fixture_once(base, "restcat-v1", build)
+    base = os.path.join(fixture("restcat", build), "analytics", "nation")
     if _RESTCAT.get("base") != base:
         server = CatalogServer()
         server.register("analytics", "nation", base)
@@ -1644,7 +1556,7 @@ def _restcat_server(spark: SparkSession, sf_dir: str):
         _RESTCAT.update({"base": base, "server": server})
     return _RESTCAT["server"]
 
-_RESTCAT_BASE = "/tmp/lakehouse-restcat/analytics/nation"
+_RESTCAT_BASE = f"{FIXTURES}/restcat/analytics/nation"
 
 
 @query(
@@ -1737,7 +1649,7 @@ def a47_rest_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Process-global pyds round-trip fixture path (SF-invariant nation).
-_PYDS_RT_BASE = "/tmp/lakehouse-pyds/nation"
+_PYDS_RT_BASE = f"{FIXTURES}/pyds/nation"
 
 
 @query(
@@ -1783,10 +1695,9 @@ def a49_pyds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pyds import SnapshotDataSource
 
     spark.dataSource.register(SnapshotDataSource)
-    base = _PYDS_RT_BASE
 
-    def build() -> None:
-        os.makedirs(os.path.dirname(base), exist_ok=True)
+    def build(root: str) -> None:
+        base = os.path.join(root, "nation")
         nations = T(spark, sf_dir, "nation").select(
             "n_regionkey", "n_nationkey"
         )
@@ -1806,7 +1717,7 @@ def a49_pyds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).save(base)
 
-    _build_fixture_once(base, "pyds-rt-v1", build)
+    base = os.path.join(fixture("pyds", build), "nation")
     n_commits = len(
         [
             f
@@ -1817,7 +1728,7 @@ def a49_pyds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.format("snapshot").load(base)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # Exact V2 node for a Python data source scan in this Spark
-    # version: `BatchScan snapshot[...] (Python)`. The r4 version
+    # version: `BatchScan snapshot[...] (Python)`. An earlier version
     # accepted any plan containing the substring "snapshot" — a
     # fallback incidental path text could satisfy.
     pyds_read = "BatchScan snapshot[" in plan and "(Python)" in plan
@@ -1877,32 +1788,25 @@ def a50_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``option("timestampAsOf", ms)`` (pytest-pinned)."""
     import time as _time
 
-    # Memoized at a per-SF fixed path (the fixture derives from
-    # `orders`, which differs by SF — unlike the SF-invariant nation
-    # fixtures, so the path must be SF-tagged): the r4 version
-    # rebuilt the 3-commit table + sleeps into a fresh leaked
-    # mkdtemp on EVERY call, so bench sweeps measured table build,
-    # not the timestamp-travel read. Commit timestamps
-    # persist in the log, so re-reads stay valid across processes.
-    # The tag folds a content fingerprint of the orders source (file
-    # sizes + mtimes) in with the SF basename: two sf_dirs sharing a
-    # basename, or a regenerated orders fixture, get a REBUILD at a
-    # fresh path instead of silently serving a table built from old
-    # data.
-    sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    sf_tag = f"{sf_tag}-{_source_fingerprint(sf_dir, 'orders')}"
-    base = f"/tmp/lakehouse-tstravel-{sf_tag}/orders_ts"
+    # A build-once fixture keyed by the `orders` source (it differs
+    # by SF, unlike the nation fixtures), so repeated runs measure
+    # the timestamp-travel read, not the 3-commit build and its
+    # sleeps. Commit timestamps persist in the log, so re-reads stay
+    # valid across processes; a regenerated orders table gets a
+    # fresh build.
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
 
-    def build() -> None:
-        t = SnapshotTable(spark, base)
+    def build(root: str) -> None:
+        t = SnapshotTable(spark, os.path.join(root, "orders_ts"))
         t.create(orders.filter(F.col("o_orderkey") % 3 == 0))
         _time.sleep(0.003)
         t.append(orders.filter(F.col("o_orderkey") % 3 == 1))
         _time.sleep(0.003)
         t.create_or_replace(orders.filter(F.col("o_orderstatus") == "F"))
 
-    _build_fixture_once(base, f"tstravel-{sf_tag}-v1", build)
+    base = os.path.join(
+        fixture("tstravel", build, source=(sf_dir, "orders")), "orders_ts"
+    )
     t = SnapshotTable(spark, base)
     ts1 = t._entry_raw(1)["timestamp_ms"]
     ts2 = t._entry_raw(2)["timestamp_ms"]
@@ -1989,7 +1893,7 @@ def a51_ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.ingest import Lakehouse, SnapshotFormat
 
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-a51-ingest-")
+    root = scratch("a51-ingest")
     try:
         landing = os.path.join(root, "landing")
         prefix = os.path.join(landing, "nation_ing")
@@ -2057,9 +1961,9 @@ def a51_ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Fixed fixture paths for the persistent-catalog cert (SF-invariant
 # `region`, 5 rows at every SF — same reasoning as the nation
-# fixtures). The sqlite db and the table live under one root so one
-# sentinel covers both.
-_SQLCAT_ROOT = "/tmp/lakehouse-sqlcat"
+# fixtures). The sqlite db and the table live in one fixture
+# directory, built and rebuilt together.
+_SQLCAT_ROOT = f"{FIXTURES}/sqlcat"
 _SQLCAT_TABLE = f"{_SQLCAT_ROOT}/analytics/region_cat"
 _SQLCAT_DB = f"{_SQLCAT_ROOT}/catalog.db"
 _SQLCAT_CRED = ("spark-engine", "fixture-secret")
@@ -2113,24 +2017,19 @@ def a52_catalog_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.restcat import CatalogServer, RestCatalog, SqlCatalogStore
 
-    def build() -> None:
+    def build(root: str) -> None:
         region = T(spark, sf_dir, "region").select("r_regionkey")
-        t = SnapshotTable(spark, _SQLCAT_TABLE)
+        t = SnapshotTable(spark, os.path.join(root, "analytics", "region_cat"))
         t.create(region.repartition(1))
         t.append(
             region.withColumn(
                 "r_regionkey", F.col("r_regionkey") + 10
             ).repartition(1)
         )
-        # The rebuild rmtree covers only dirname(_SQLCAT_TABLE);
-        # catalog.db lives beside it, so a corrupt/stale db from a
-        # crashed half-build must be cleared explicitly here
-        # before the fresh schema is created.
-        if os.path.exists(_SQLCAT_DB):
-            os.remove(_SQLCAT_DB)
-        SqlCatalogStore(_SQLCAT_DB)  # create schema alongside the table
+        # create the catalog schema alongside the table
+        SqlCatalogStore(os.path.join(root, "catalog.db"))
 
-    _build_fixture_once(_SQLCAT_TABLE, "sqlcat-v1", build)
+    fixture("sqlcat", build)
 
     srv1 = CatalogServer(
         store=SqlCatalogStore(_SQLCAT_DB), credential=_SQLCAT_CRED
@@ -2204,9 +2103,6 @@ def a52_catalog_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PYDS_PUSH_BASE = "/tmp/lakehouse-pydspush/nation"
-
-
 @query(
     "a54_pyds_pushdown",
     oracle="""
@@ -2254,13 +2150,14 @@ def a54_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pyds import SnapshotDataSource, SnapshotReader
 
     spark.dataSource.register(SnapshotDataSource)
-    base = _PYDS_PUSH_BASE
 
-    def build() -> None:
+    def build(root: str) -> None:
         nation = T(spark, sf_dir, "nation").select(
             "n_nationkey", "n_regionkey"
         )
-        t = SnapshotTable(spark, base).with_bloom_filters("n_nationkey")
+        t = SnapshotTable(
+            spark, os.path.join(root, "nation")
+        ).with_bloom_filters("n_nationkey")
         bounds = [(0, 6), (7, 12), (13, 18), (19, 24)]
         lo, hi = bounds[0]
         t.create(
@@ -2273,7 +2170,7 @@ def a54_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).repartition(1)
             )
 
-    _build_fixture_once(base, "pydspush-v1", build)
+    base = os.path.join(fixture("pydspush", build), "nation")
     t = SnapshotTable(spark, base)
     entry = t.entry(t.latest_version())
     schema = t.read().schema

@@ -215,7 +215,7 @@ def k2_ngram_jaccard(
         # pair set (verified_pairs and the graph family whose oracles
         # recompute it exhaustively) must pass require_exact=True and
         # fail loudly here instead of silently diverging from their
-        # oracles (r6 review finding).
+        # oracles.
         if require_exact:
             raise ValueError(
                 "corpus vocabulary exceeds the 63-token exact-kernel "
@@ -335,10 +335,9 @@ def _banded_jaccard_pairs(
         F.col("n_tok").alias("nb"),
     )
     # Size prefilter derived from THE CALLER'S threshold as exact
-    # integer arithmetic (J(A,B) <= min/max sizes): the r5 version
+    # integer arithmetic (J(A,B) <= min/max sizes): an earlier version
     # hardcoded tau=0.8's 5/4 ratio, so any other threshold silently
-    # dropped true pairs beyond the documented LSH recall loss
-    # (r6 review finding).
+    # dropped true pairs beyond the documented LSH recall loss.
     from fractions import Fraction
 
     frac = Fraction(threshold).limit_denominator(10_000)
@@ -401,7 +400,7 @@ def _perm_hash(i: int):
     `lambda h, i=i: xxhash64(h, lit(i))` silently replaces the
     permutation index with the token's array position — every
     "permutation" collapses to the same min and the whole signature
-    degenerates to one effective hash (found by the round-2 fallback
+    degenerates to one effective hash (found by the fallback
     recall test; the s-curve math only holds with independent
     permutations)."""
     return lambda h: F.xxhash64(h, F.lit(i))
@@ -520,8 +519,8 @@ def k2_minhash_lsh(
     # Cache the SMALL (doc_id, sig) projection only: the banded
     # self-join consumes it on both sides and ReusedExchange does not
     # fire across the band explode, so an uncached sig pass runs
-    # twice (measured 14.5 s). Caching WITH the shingle arrays (the
-    # round-1 shape) paid 7.3 s of materialization; sig-only caching
+    # twice (measured 14.5 s). Caching WITH the shingle arrays (an
+    # earlier shape) paid 7.3 s of materialization; sig-only caching
     # costs ~4 s and verification re-shingles just the candidate docs
     # below (broadcast semi-join — work scales with |candidates|).
     sigs = minhash_signatures(docs, num_hashes).select("doc_id", "sig").cache()
@@ -689,7 +688,7 @@ def k2_simhash_near_pairs(
     if max_hamming >= 6:
         # NOT an assert: under python -O an assert vanishes and the
         # banding pigeonhole silently stops being complete — the op
-        # would return a quietly-partial pair set (r6 review finding).
+        # would return a quietly-partial pair set.
         raise ValueError(
             "banding guarantee requires max_hamming < bands (6): "
             f"got {max_hamming}"
@@ -923,8 +922,7 @@ def k8_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = F.array(*[F.lit(i) for i in range(_BLOOM_K)])
     # The eval gram set is consumed THREE times (sizing count, bloom
     # build, exact-contamination semi-join) and each lazy use re-ran
-    # the corpus-wide tokenize+shingle+explode behind it (r6 review
-    # finding); it is eval-set-sized, so materialize it once.
+    # the corpus-wide tokenize+shingle+explode behind it; it is eval-set-sized, so materialize it once.
     ev = (
         grams.filter(F.col("doc_id") % 29 == 0)
         .select("gram")
@@ -1045,7 +1043,7 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     apiece.
 
     This is a real table write (the repo's own ACID commit path), not
-    a `localCheckpoint` memo (the r2 shape): checkpoint blocks live
+    a `localCheckpoint` memo (an earlier shape): checkpoint blocks live
     only in executor storage, so an executor loss silently forces
     full lineage recomputation — and on a 1000-executor run some
     executor always dies. A committed pair table is exactly what a
@@ -1056,42 +1054,28 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources.snapshot import SnapshotTable
-    from .acid import _build_fixture_once, _source_fingerprint
+    from ..workspace import fixture
 
     key = (spark.sparkContext.applicationId, sf_dir)
     df = _PAIRS_MEMO.get(key)
     if df is None:
-        # Content-fingerprinted fixed path (the a50 pattern) instead
-        # of a leaked per-process mkdtemp (r6 review finding): the
-        # ~9 s derivation is shared ACROSS processes, regenerated
-        # datasets rebuild, fixture_janitor knows the prefix, and the
-        # flock serializes the two-threads-race the old memo had.
-        sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-        # Prefix comes from the acid.FIXTURE_FAMILIES registry so the
-        # janitor's keep-list and this path can't diverge.
-        from .acid import FIXTURE_FAMILIES_FINGERPRINTED
-
-        prefix = next(
-            p
-            for p, tbl in FIXTURE_FAMILIES_FINGERPRINTED.items()
-            if tbl == "documents"
-        )
-        tag = f"{prefix.removeprefix('lakehouse-')}{sf_tag}-{_source_fingerprint(sf_dir, 'documents')}"
-        base = f"/tmp/lakehouse-{tag}/verified_pairs"
-
-        def build() -> None:
-            t = SnapshotTable(spark, base)
+        # A build-once fixture keyed by the `documents` source: the
+        # ~9 s derivation is shared across processes, a regenerated
+        # dataset rebuilds, and the build lock serializes concurrent
+        # first callers.
+        def build(root: str) -> None:
+            t = SnapshotTable(spark, os.path.join(root, "verified_pairs"))
             # require_exact: the graph consumers' oracles recompute
             # the EXHAUSTIVE pair set — an LSH-recall subset must
-            # fail loudly, not certify quietly wrong (r6 review).
+            # fail loudly, not certify quietly wrong.
             t.create(
                 k2_ngram_jaccard(spark, sf_dir, require_exact=True).select(
                     "doc_a", "doc_b"
                 )
             )
 
-        _build_fixture_once(base, tag, build)
-        df = SnapshotTable(spark, base).read()
+        root = fixture("duppairs", build, source=(sf_dir, "documents"))
+        df = SnapshotTable(spark, os.path.join(root, "verified_pairs")).read()
         _PAIRS_MEMO[key] = df
     return df
 
@@ -1425,7 +1409,7 @@ def k1_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # STRUCT — the r5 integer encoding doc_id*2^20+pos silently
     # wrapped signed-64 for doc_id >= 2^43 (snowflake/hash-derived
     # ids), corrupting the canonical choice exactly where DuckDB's
-    # checked BIGINT would error instead (r6 review finding). Struct
+    # checked BIGINT would error instead. Struct
     # ordering is overflow-free at any id range; both engines use it.
     enc = F.struct(F.col("doc_id").alias("d"), F.col("pos").alias("p"))
     canon = (
@@ -1591,7 +1575,7 @@ def k9_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Loop parallelism is EDGE-sized (2 directed edges per pair), same
     # rationale as the components loop at :1116: the per-round
     # exchanges and map-side scans carry the edge list, and every
-    # surplus reducer is paid PR_ITERS times. The r4 version keyed
+    # surplus reducer is paid PR_ITERS times. An earlier version keyed
     # this on n_nodes and inherited the pair table's few read
     # partitions through the checkpoint — on a dense dup graph (the
     # 10x smoke's salted clones: 10M pairs over 50k nodes) that
@@ -2312,8 +2296,7 @@ def k2_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # No broadcast HINT on the shingle-frequency table: at corpus
     # scale the distinct-shingle table is itself corpus-sized and a
-    # forced broadcast would collect it to the driver (r6 review
-    # finding). AQE broadcasts it at runtime whenever its MEASURED
+    # forced broadcast would collect it to the driver. AQE broadcasts it at runtime whenever its MEASURED
     # size is small (it is, on every fixture), and falls back to a
     # shingle-keyed hash join when it is not — the documented design.
     ordered = (

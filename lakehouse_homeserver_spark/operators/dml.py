@@ -50,7 +50,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +57,7 @@ from pyspark.sql import functions as F
 from ..sources import load_table as T
 from ..sources.snapshot import SnapshotTable
 
+from ..workspace import scratch
 from .common import make_registry
 
 QUERIES, ORACLES, query = make_registry()
@@ -587,11 +587,7 @@ def a57_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(statement length)."""
     cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal",
             "c_mktsegment"]
-    t = SnapshotTable(
-        spark,
-        os.path.join(tempfile.mkdtemp(prefix="lakehouse-scratch-dml-"),
-                     "cust"),
-    )
+    t = SnapshotTable(spark, os.path.join(scratch("dml"), "cust"))
     c = T(spark, sf_dir, "customer")
     t.create(c.filter(F.col("c_custkey") % 3 == 0).select(cols))
 

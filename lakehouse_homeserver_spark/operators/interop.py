@@ -17,7 +17,6 @@ surviving aggregate is hash-checked by the oracle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from ..sources.avromanifest import (
 )
 from ..sources.snapshot import SnapshotTable
 
+from ..workspace import scratch
 from .common import dsum, make_registry, sql_dsum
 
 QUERIES, ORACLES, query = make_registry()
@@ -81,7 +81,7 @@ def a58_avro_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = SnapshotTable(
         spark,
         os.path.join(
-            tempfile.mkdtemp(prefix="lakehouse-scratch-avro-"), "orders"
+            scratch("avro"), "orders"
         ),
     )
     o = T(spark, sf_dir, "orders")

@@ -1095,7 +1095,7 @@ _AHASH_SQL = (
 )
 
 # The candidate-pairs + exact-Hamming tail shared VERBATIM by
-# k5_ahash_near_dup and k5_png_near_dup (r10 review: a copy would let
+# k5_ahash_near_dup and k5_png_near_dup (a copy would let
 # a one-sided banding/threshold edit drift the two oracles apart
 # silently).
 _AHASH_PAIRS_SQL = f""",
@@ -1327,8 +1327,8 @@ def _ahash_candidate_pairs(hashes: DataFrame, m: int, r: int) -> DataFrame:
     oracle=f"{_AHASH_SQL}{_AHASH_PAIRS_SQL}",
 )
 def k5_png_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPLETE multimodal dedup pipeline over COMPRESSED media
-    (r10): binary PNG payloads (zlib IDAT, CRC'd chunks, all-5-filter
+    """The COMPLETE multimodal dedup pipeline over COMPRESSED media:
+    binary PNG payloads (zlib IDAT, CRC'd chunks, all-5-filter
     scanlines — the ingestion stand-in `png_encode_row` builds
     real files) -> REAL codec decode (`png_decode_rgb`: chunk walk +
     CRC verify + inflate + un-filter) -> 64-bit aHash over the decoded
@@ -1410,7 +1410,7 @@ def _jpeg_quadrant_payload(b) -> bytes | None:
     bytes 17/18 the global Cb/Cr — the block-constant construction
     under which the float DCT chain is exactly invertible (see
     functions/jpeg.py). Shared by the single-format and mixed-corpus
-    encoders (r11 review #6: a geometry edit applied to one copy would
+    encoders (a geometry edit applied to one copy would
     silently leave the other certificate on the old layout)."""
     import numpy as np
 
@@ -1460,7 +1460,7 @@ def _jpeg_rgb_val_sql(
     ints. cb/cr default to the single-image payload's byte positions;
     the MJPEG oracle passes per-frame positions.
 
-    The coefficients are CAST to DOUBLE explicitly (r11 review #1):
+    The coefficients are CAST to DOUBLE explicitly:
     DuckDB types bare literals as DECIMAL and would evaluate the
     formula in exact decimal arithmetic, which disagrees with the
     decoder's float64 at floor(x+0.5) ties (measured: 36 (y,cb,cr)
@@ -1557,7 +1557,7 @@ _JPEG_YBYTE = (
     f"ascii(substring(body, CAST({_JPEG_QUAD_OF_CELL} + 1 AS INTEGER), 1))"
 )
 
-# WHERE text IS NOT NULL (r11 review #4): the engine kernels DROP
+# WHERE text IS NOT NULL: the engine kernels DROP
 # NULL payloads, but without the guard the oracle's CASE bits fall to
 # ELSE 0 for NULL grays, minting an all-zero hash that band-matches
 # real images — a NULL-text fixture row would emit oracle-only pairs.
@@ -1626,7 +1626,7 @@ def k5_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the shared banding SQL, so a hash match certifies BOTH
     decoders through the dedup consumer in one verdict. NULL-text
     rows drop on BOTH sides (kernel: no payload; oracle: WHERE text
-    IS NOT NULL — r11 review #4), so the pairs are parity-true even
+    IS NOT NULL), so the pairs are parity-true even
     on a NULL-bearing corpus.
 
     100 TB design: identical to k5_png_near_dup — pre-encode
@@ -1703,7 +1703,7 @@ def mjpeg_encode_row(doc_id, b):
 
 def _mjpeg_frame_end(p: bytes, pos: int) -> int:
     """End offset (exclusive) of the baseline JPEG frame starting at
-    `pos` — an honest MJPEG splitter (r11 review #3: segment payloads
+    `pos` — an honest MJPEG splitter (segment payloads
     are NOT byte-stuffed, so a raw FF D9 inside a DQT/DHT/APPn/COM
     body must be skipped STRUCTURALLY, not found with a byte search).
     Walk the length-prefixed header segments to SOS, then scan the

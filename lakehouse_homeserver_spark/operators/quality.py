@@ -221,7 +221,7 @@ def a23_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) BETWEEN 1 AND 1000000000 AS passed
     FROM events
     UNION ALL
-    -- NOT(...) forms, not MAX < cutoff (r7 review): the engine
+    -- NOT(...) forms, not MAX < cutoff: the engine
     -- deliberately treats MAX(ts) IS NULL — an empty or all-NULL
     -- feed — as a VIOLATION ("a dead feed must not read as fresh");
     -- NOT(MAX >= cutoff) is true for NULL the same way, while the

@@ -245,7 +245,7 @@ def k10_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         # Integer `div`, not double `/`+cast: the double form loses
         # exactness past doc_id 2^53 and rounds rather than floors,
-        # putting a doc in the wrong segment (r7 review; same
+        # putting a doc in the wrong segment (same
         # overflow class as the r6 dedup canon-key fix). The oracle's
         # `//` is integer floor-div — identical for non-negative ids.
         F.expr(f"doc_id div {INDEX_SEGMENT_DOCS}").alias("segment"),

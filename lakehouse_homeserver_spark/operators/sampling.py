@@ -87,11 +87,11 @@ def _binomial_ok(n_sampled, n_total, frac) -> F.Column:
     stratum) yet meaningful at every stratum size and scale factor.
     This is how seeded-engine-specific samples get a cross-engine
     oracle: the oracle recomputes the exact stratum sizes and pins the
-    bound column to TRUE (VERDICT round-1 item 9).
+    bound column to TRUE.
 
     `frac` is a float OR a per-row Column (per-stratum fractions) —
     the Column form exists so k6_stratified_sample shares this body
-    instead of hand-copying the formula (r7 review)."""
+    instead of hand-copying the formula."""
     f = F.lit(frac) if isinstance(frac, float) else frac
     expect = f * n_total
     slack = F.lit(5.0) * F.sqrt(f * (F.lit(1.0) - f) * n_total) + F.lit(1.0)
@@ -317,7 +317,7 @@ def k6_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint: the inventory is ~one row per domain, but the
     # wt/tot/budget/quota chain hangs 3 broadcast subtrees off it and
     # Spark re-executes the corpus groupBy under each one (no CSE
-    # across broadcast-exchange boundaries — r7 review; the same
+    # across broadcast-exchange boundaries; the same
     # measured behavior retrieval.py documents). Materializing the
     # tiny table once makes every derivation corpus-free.
     w = (
@@ -423,7 +423,7 @@ def k6_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
     # localCheckpoint: 5 derivations hang off this ~20-row table via
     # broadcast joins, and Spark re-executes the corpus groupBy under
-    # each broadcast subtree (no cross-exchange CSE — r7 review).
+    # each broadcast subtree (no cross-exchange CSE).
     # One eager materialization makes the whole rate chain
     # corpus-free; the corpus is then scanned exactly twice (counts +
     # the kept audit), not ~6 times.
@@ -438,7 +438,7 @@ def k6_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_i",
         F.sqrt(F.col("n_i").cast("double") / F.col("n")).alias("w_i"),
     )
-    # Order-free normalizer (r7 review): a raw double SUM(w_i) folds
+    # Order-free normalizer: a raw double SUM(w_i) folds
     # in partition-completion order, so s — hence every q_i and rate
     # — could drift an ulp between engines or partitionings,
     # violating the docstring's bit-reproducibility contract. Rounding
@@ -542,7 +542,7 @@ def k6_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import k2_dup_clusters
 
     cl = k2_dup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
-    # the one shared bucketing contract (r7 review: this was an
+    # the one shared bucketing contract (this was an
     # inline expression-for-expression copy of split_bucket that
     # could drift from k6_hash_split/pipeline consumers)
     bucket = split_bucket("cluster_id")

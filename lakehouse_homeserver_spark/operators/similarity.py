@@ -219,7 +219,7 @@ def k3_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the probe buckets (bucket xor distinct single bits) are
         # pairwise distinct, so a (query, neighbor) pair can match at
         # most one probe — the dedup was a full extra shuffle of the
-        # candidate set for identical rows (r6 review finding).
+        # candidate set for identical rows.
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .drop("rn")
@@ -358,9 +358,9 @@ def _arrow_matrix(col) -> "np.ndarray":
 def _safe_norms(M: "np.ndarray") -> "np.ndarray":
     """Row L2 norms with zero mapped to 1.0: a zero embedding would
     otherwise turn its normalized row into NaNs (numpy only warns)
-    and the NaN poisons every downstream distance/argmin (r6 review
-    finding). Dividing a zero row by 1.0 leaves it zero — a
-    deterministic, order-stable representative."""
+    and the NaN poisons every downstream distance/argmin. Dividing
+    a zero row by 1.0 leaves it zero — a deterministic, order-stable
+    representative."""
     import numpy as np
 
     norms = np.sqrt((M * M).sum(axis=1))[:, None]
@@ -469,7 +469,6 @@ def k3_knn_ivf(
 
     e = T(spark, sf_dir, "embeddings")
     # footer-probe row count: saves a corpus-wide count job per build
-    # (r6 review finding)
     centroids = ivf_train(
         spark, e, nlist=nlist, n=table_row_count(sf_dir, "embeddings")
     )
@@ -732,7 +731,7 @@ def k3_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             if best_id is None:
                 # pool smaller than MMR_K: the oracle's pick CTEs
                 # simply go empty — emitting (qid, rank, NULL) rows
-                # here diverged from it (r6 review finding).
+                # here diverged from it.
                 break
             selected.append(best_id)
             out.append((qid, rank, best_id, best_score))
@@ -881,8 +880,8 @@ def k3_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_min("e").alias("mn"),
         ((F.array_max("e") - F.array_min("e")) / 255.0).alias("scale"),
         # Constant vectors (max == min) give scale 0: dividing by it
-        # NULLs every code in Spark but hard-errors in DuckDB's cast
-        # (r6 review finding). A unit divisor maps them to code 0 and
+        # NULLs every code in Spark but hard-errors in DuckDB's cast.
+        # A unit divisor maps them to code 0 and
         # an exact dequant (mn + 0*scale = mn) in BOTH engines.
         F.when(
             F.array_max("e") == F.array_min("e"), F.lit(1.0)
@@ -1280,7 +1279,7 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not seeds:
         raise ValueError(
             "k3_semdedup: embeddings table is empty — nothing to "
-            "deduplicate (clean-empty convention, r6 review)"
+            "deduplicate (clean-empty convention)"
         )
     cents = [(i + 1, list(r["q"])) for i, r in enumerate(seeds)]
     d = len(cents[0][1])
@@ -1350,7 +1349,7 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: mapInArrow is a narrow transformation, so without it
     # the corpus scan + quantize + numpy assignment kernel execute
     # THREE times (both self-join sides and the final left join) —
-    # the dominant cost of the operator tripled (r6 review finding).
+    # the dominant cost of the operator tripled.
     assigned = (
         q.select("vec_id", "label", "embedding", "q")
         .mapInArrow(
@@ -1760,7 +1759,7 @@ def k3_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not seeds:
         raise ValueError(
             "k3_kmeans: embeddings table is empty — nothing to "
-            "cluster (clean-empty convention, r6 review)"
+            "cluster (clean-empty convention)"
         )
     d = len(seeds[0]["q"])
     cents = [(int(r["vec_id"]), list(r["q"])) for r in seeds]

@@ -395,7 +395,7 @@ sql_query(
         -- divide: a bare AVG(DECIMAL) types as DECIMAL(22,6) in
         -- Spark (rounded at 6 dp) but DOUBLE in DuckDB, so the
         -- threshold itself could differ by ~5e-7 and flip a
-        -- customer's membership (r7 review; the repo-wide davg
+        -- customer's membership (the repo-wide davg
         -- contract from operators/common.py)
         SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
                / COUNT(*)
@@ -412,7 +412,7 @@ sql_query(
 
 
 # ---------------------------------------------------------------------------
-# Round-3 TPC-H additions. The fixture schema (FIXTURES.md) lacks
+# More TPC-H queries. The fixture schema (FIXTURES.md) lacks
 # partsupp, l_commitdate/l_receiptdate, o_comment and p_container, so
 # Q2/Q9/Q11/Q16/Q20 are out of reach and Q13/Q17/Q21 are adapted to
 # equivalent predicates over columns the fixtures do have (adaptation

@@ -77,7 +77,7 @@ def k4_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUALITY_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
 # one constant, interpolated into BOTH engine texts (the LANG_MARKERS
-# pattern) so the two stopword lists cannot drift apart (r6 review).
+# pattern) so the two stopword lists cannot drift apart.
 _QUALITY_STOPWORDS_SQL = (
     "[" + ",".join(f"'{w}'" for w in QUALITY_STOPWORDS) + "]"
 )
@@ -174,7 +174,7 @@ def k4_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the normalized token array ONCE (the k4_fingerprint
     # CSE lesson): inlining norm_text+split into every marker score
     # re-ran the normalization regex 19x per row in the optimized
-    # plan — measured 0.78 -> 0.31 s at sf0.1 (r6 review finding).
+    # plan — measured 0.78 -> 0.31 s at sf0.1.
     d = d.select(
         "doc_id",
         "lang",
@@ -670,7 +670,7 @@ def k4_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
     # COALESCE on both engine texts: NULL text diverged (DuckDB's
     # NULL || [] is [] -> n_feats 0; Spark's size(concat(NULL,..))
-    # is NULL). '' tokenizes to [''] identically in both (r6 review).
+    # is NULL). '' tokenizes to [''] identically in both.
     toks = F.split(F.coalesce(norm_text(F.col("text")), F.lit("")), " ")
 
     def weight(t):
@@ -719,7 +719,7 @@ def _bpe_oracle() -> str:
     is NULL there and an unguarded REPLACE(sym, NULL, ...) would
     NULL-poison every later round's vocabulary, returning NULL token
     counts where Spark (which simply stops merging) returns real
-    ones (r6 review finding)."""
+    ones."""
     parts = [
         f"""
     WITH w0 AS MATERIALIZED (
@@ -1416,7 +1416,7 @@ def _gopher_oracle_tail(src: str) -> str:
 
 def gopher_gate(d: DataFrame) -> DataFrame:
     """The Gopher rule computation over any (doc_id, text) DataFrame
-    — factored out (r11) so the extract->gate composition runs the
+    — factored out so the extract->gate composition runs the
     IDENTICAL gate, not a copy."""
     nt = norm_text(F.col("text"))
     toks = F.split(nt, " ")
@@ -1524,7 +1524,7 @@ def k4_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha * unigram MLE when a bigram is unseen. The CCNet-style
     fluency filter one rung above `k4_unigram_lm_score`.
 
-    Honesty note (r6 review): with the model trained on the SAME
+    Honesty note: with the model trained on the SAME
     bigram stream it scores, every scored bigram exists in the model
     by construction, so the backoff branch is exercised only when
     the model is trained on a held-out corpus — the production
@@ -1580,7 +1580,7 @@ def k4_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corpus (Heaps-law sublinear but unbounded), and a hint
         # overrides the threshold — AQE broadcasts it at runtime only
         # while its MEASURED size is small, else a shuffled hash join
-        # (r6 review finding; matches the docstring's claimed
+        # (matches the docstring's claimed
         # fallback).
         bi.join(model, ["w1", "w2"], "left")
         .join(F.broadcast(u1), "w1")
@@ -1873,8 +1873,8 @@ def _html_quality_oracle() -> str:
 
 @query("k4_html_quality_pipeline", oracle=_html_quality_oracle())
 def k4_html_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed corpus front-end, driver-certified end-to-end
-    (r11): raw HTML -> boilerplate-stripped extraction
+    """The composed corpus front-end, driver-certified end-to-end:
+    raw HTML -> boilerplate-stripped extraction
     (`html_extracted`, the k4_html_extract stage) -> the Gopher
     quality gate (`gopher_gate`, the k4_gopher_rules stage) applied
     to the EXTRACTED text. This is the first two stages of every

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table as T
 from ..streaming.jobs import await_or_raise, pinned_shuffle
+from ..workspace import scratch
 from .common import dsum, make_registry, sql_dsum
 
 QUERIES, ORACLES, query = make_registry()
@@ -37,13 +38,11 @@ def _linked_landing(path: str) -> str:
     not recurse into symlinked subdirectories, so leaves are linked
     individually.
 
-    The scratch dir lives under the janitor-swept
-    'lakehouse-scratch-' namespace (r8 advice: the old per-query
-    'i7-events-'-style prefixes evaded the double-quote-only hygiene
-    gate AND the janitor's sweep, leaking /tmp dirs indefinitely)."""
-    import tempfile
+    The landing dir is process scratch (`workspace.scratch`): the
+    stream reads it after this returns, and it is removed when the
+    process ends."""
 
-    d = tempfile.mkdtemp(prefix="lakehouse-scratch-landing-")
+    d = scratch("landing")
     if os.path.isdir(path):
         leaves = [
             os.path.join(path, f)
@@ -300,7 +299,7 @@ def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the old double-divide + bigint cast TRUNCATED toward zero, so a
     # pre-1970 timestamp landed one bucket high of the oracle's `//`
     # floor, and double division loses exactness past 2^53 µs
-    # (r7 review; same class at ts_interpolate / ts_m4 / cohort).
+    # (same class at ts_interpolate / ts_m4 / cohort).
     bucket = ts_us - F.pmod(ts_us, F.lit(HOUR_US))
     bounds = e.agg(
         F.min(bucket).alias("lo"), F.max(bucket).alias("hi")
@@ -338,7 +337,7 @@ def ts_rollup_day_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour("ts").cast("bigint").alias("hour"),
         "value",
     )
-    # Unique view name + drop-after-analysis (r7 review): a FIXED
+    # Unique view name + drop-after-analysis: a FIXED
     # name on the shared session races concurrent query builds —
     # another registration between createOrReplaceTempView and
     # spark.sql would swap the data. spark.sql resolves the view at
@@ -582,7 +581,7 @@ def ts_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (us - pmod) div n = FLOOR division in pure integer
         # arithmetic; bare `div` truncates toward zero and would put
         # a pre-1970 event in the wrong cohort week vs the oracle's
-        # `//` (r7 review)
+        # `//`
         "user_id",
         F.expr(
             f"(unix_micros(ts) - pmod(unix_micros(ts), {WEEK_US}))"
@@ -591,7 +590,7 @@ def ts_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     firsts = e.groupBy("user_id").agg(F.min("w").alias("cohort_week"))
     activity = e.distinct()
-    # No broadcast hint on firsts (r7 review): it is a PER-USER table
+    # No broadcast hint on firsts: it is a PER-USER table
     # — corpus-scaled, not dimension-sized — and a forced hint
     # bypasses AQE's size check at exactly the scale the docstring
     # claims. AQE broadcasts it when small, shuffles when not; both
@@ -890,7 +889,7 @@ def _ewma_terms() -> tuple[str, str]:
 
 def _ewma_sql(us_fn: str) -> str:
     num, den = _ewma_terms()
-    # NULLIF on the denominator (r7 review): when value and all 15
+    # NULLIF on the denominator: when value and all 15
     # prior lags are NULL both sums are 0.0, and 0/0 is where the
     # engines split — Spark yields IEEE NaN, DuckDB yields NULL.
     # NULLIF makes both emit NULL (an all-NULL history has no EWMA).
@@ -1279,7 +1278,7 @@ def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         # x is epoch-µs (~1.7e15): summed as DECIMAL so the partial
         # sums can't overflow int64 (~5,400 rows/bucket would) — the
         # DuckDB oracle's SUM(BIGINT) widens to HUGEINT the same way;
-        # both sides cast the exact integer sum to double (r7 review)
+        # both sides cast the exact integer sum to double
         (
             F.sum(F.col("x").cast("decimal(38,0)")).cast("double")
             / F.count(F.lit(1))
@@ -1372,7 +1371,6 @@ def i7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream jobs aggregate.
     """
     import os
-    import tempfile
 
     from ..sources.registry import normalize_events_ts, table_path
 
@@ -1406,7 +1404,7 @@ def i7_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "inner",
     )
-    sink_dir = tempfile.mkdtemp(prefix="lakehouse-scratch-i7-pairs-")
+    sink_dir = scratch("i7-pairs")
     with pinned_shuffle(spark):
         q = (
             joined.writeStream.format("parquet")
@@ -1459,9 +1457,8 @@ def i8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates for free.
 
     The stream (availableNow over the fixture, one micro-batch) lands
-    enriched rows in a PARQUET sink (r5: the r3 version used a memory
-    sink — the full enriched stream held in driver memory, the exact
-    hazard class the r3 brief flagged for i7; same fix as i7/:1313 and
+    enriched rows in a PARQUET sink (a memory sink would hold
+    the full enriched stream in driver memory; same fix as i7/:1313 and
     i9/:1580 — executor-side files, zero driver residency) and the
     certified result aggregates the read-back per event type — event
     counts, above-personal-average flags (profile avg is the
@@ -1469,7 +1466,6 @@ def i8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine), and exact value totals. The oracle
     recomputes the identical enrichment relationally."""
     import os
-    import tempfile
 
     from ..sources.registry import normalize_events_ts, table_path
     from ..streaming.jobs import enrich_events, user_profile
@@ -1482,7 +1478,7 @@ def i8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = normalize_events_ts(
         spark.readStream.schema(schema).parquet(d)
     )
-    sink_dir = tempfile.mkdtemp(prefix="lakehouse-scratch-i8-enriched-")
+    sink_dir = scratch("i8-enriched")
     q = (
         enrich_events(stream, profile)
         .writeStream.format("parquet")
@@ -1645,7 +1641,6 @@ def i9_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NULL rows land in the same parquet sink as the matches (no
     driver-side data plane)."""
     import os
-    import tempfile
 
     from ..sources.registry import normalize_events_ts, table_path
 
@@ -1675,7 +1670,7 @@ def i9_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    sink = tempfile.mkdtemp(prefix="lakehouse-scratch-i9-pairs-")
+    sink = scratch("i9-pairs")
     with pinned_shuffle(spark):
         q = (
             joined.writeStream.format("parquet")
@@ -1761,7 +1756,6 @@ def i10_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
     bit-identical to the oracle's one-pass aggregate."""
     import os
     import shutil
-    import tempfile
 
     from ..sources.registry import normalize_events_ts, table_path
     from ..sources.snapshot import SnapshotTable
@@ -1769,7 +1763,7 @@ def i10_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFra
     events = T(spark, sf_dir, "events")
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
 
-    work = tempfile.mkdtemp(prefix="lakehouse-scratch-i10-")
+    work = scratch("i10")
     landing = os.path.join(work, "landing")
     os.makedirs(landing)
 
@@ -1884,7 +1878,6 @@ def i11_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from `events` (event_id is unique in the fixture, asserted by
     n_unique_rows matching the oracle's COUNT(*))."""
     import os
-    import tempfile
 
     from ..sources.registry import normalize_events_ts, table_path
 
@@ -1906,7 +1899,7 @@ def i11_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink_dir = tempfile.mkdtemp(prefix="lakehouse-scratch-i11-dedup-")
+    sink_dir = scratch("i11-dedup")
     with pinned_shuffle(spark):
         q = (
             deduped.writeStream.format("parquet")
@@ -1992,13 +1985,12 @@ def i12_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's incremental contract (extract_load.py:154-165)
     generalized to continuous per-key state."""
     import os
-    import tempfile
     import time as _time
 
     from ..streaming.jobs import events_schema
     from ..streaming.stateful import stream_rich_sessions
 
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-i12-sessions-")
+    root = scratch("i12-sessions")
     landing = os.path.join(root, "landing")
     os.makedirs(landing)
     events = T(spark, sf_dir, "events")

@@ -84,8 +84,8 @@ def j_normalize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The UDF still produces the full unit vector (that's the §J
     surface); the query projects driver-checkable scalars from it —
-    array-typed outputs crash the harness canonicalizer (VERDICT
-    round-1 item 1), and scalars give a STRONGER check: `unit0` is
+    array-typed outputs crash the harness canonicalizer,
+    and scalars give a STRONGER check: `unit0` is
     the bit-exact first unit component the DuckDB oracle recomputes
     from scratch, `norm_ok` pins ‖unit‖₂ = 1 within float32 slack.
     """
@@ -244,7 +244,7 @@ def j_udtf_term_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
             if text is None:
                 # LATERAL over NULL text yields no rows — the
                 # oracle's unnest does the same; without the guard
-                # one NULL row killed the whole query (r7 review)
+                # one NULL row killed the whole query
                 return
             toks = _re.sub(r"\s+", " ", text.lower()).strip().split(" ")
             first: dict[str, int] = {}
@@ -381,7 +381,7 @@ def j_arrow_batch_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb = batch.column(batch.schema.get_field_index("embedding"))
             if isinstance(emb, pa.ChunkedArray):  # pragma: no cover
                 emb = emb.combine_chunks()
-            # dim from the batch's own offsets (r7 review): the old
+            # dim from the batch's own offsets: the old
             # pre-scan `.first()` launched an extra Spark job per
             # invocation just to measure it, and crashed on an empty
             # table; fixed-width vectors are a fixture contract the

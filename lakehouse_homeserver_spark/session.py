@@ -241,12 +241,14 @@ def _ship_package(spark: SparkSession) -> None:
     process runs from an arbitrary cwd (the harness does) and on any
     real cluster where the package isn't pre-installed on executors.
     ``sc.addPyFile`` of a package zip is the standard deployment path
-    (same mechanism as ``spark-submit --py-files``); content-hashed
-    filename keeps the call idempotent across sessions and edits.
+    (same mechanism as ``spark-submit --py-files``). The zip is
+    written once per session into the process's scratch, so it goes
+    when the process ends.
     """
     import hashlib
-    import tempfile
     import zipfile
+
+    from .workspace import scratch
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     app_id = spark.sparkContext.applicationId
@@ -263,18 +265,14 @@ def _ship_package(spark: SparkSession) -> None:
             digest.update(path.encode())
             digest.update(fh.read())
     zpath = os.path.join(
-        tempfile.gettempdir(),
+        scratch("pyfiles"),
         f"lakehouse_homeserver_spark-{digest.hexdigest()[:12]}.zip",
     )
-    if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for path in sources:
-                arc = os.path.join(
-                    "lakehouse_homeserver_spark",
-                    os.path.relpath(path, pkg_dir),
-                )
-                zf.write(path, arc)
-        os.replace(tmp, zpath)  # atomic vs concurrent test workers
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for path in sources:
+            arc = os.path.join(
+                "lakehouse_homeserver_spark", os.path.relpath(path, pkg_dir)
+            )
+            zf.write(path, arc)
     spark.sparkContext.addPyFile(zpath)
     _SHIPPED.add(app_id)

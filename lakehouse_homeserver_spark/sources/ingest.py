@@ -191,9 +191,9 @@ class SnapshotFormat(TableFormat):
         path's documented contract ("full load resets bookkeeping to
         exactly the loaded file"): files ingested before a
         full-replace are no longer in the table, so a later
-        incremental must re-ingest them. (r5 fix — the r4 version
-        unioned the whole history, so a pre-replace file was treated
-        as seen forever; surfaced by the a51 lifecycle cert.)"""
+        incremental must re-ingest them. (Unioning the whole history
+        would treat a pre-replace file as seen forever; the a51
+        lifecycle cert checks this.)"""
         t = self._table(table)
         if not t.exists():
             return []

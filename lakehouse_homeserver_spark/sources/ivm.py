@@ -100,7 +100,7 @@ class IncrementalAggregate:
             F.col("cnt").alias("cnt_b"),
             F.col("total").alias("tot_b"),
         )
-        # eqNullSafe per key (r7 review): a name-list join compiles to
+        # eqNullSafe per key: a name-list join compiles to
         # EqualTo, which never matches NULL group keys, so a NULL-key
         # group would duplicate in the view on every refresh instead
         # of merging (groupBy treats NULL as one group; the merge
@@ -133,7 +133,7 @@ class IncrementalAggregate:
         if self.dest.exists():
             merged = self._merge(self.dest.read(), delta)
         else:
-            # same zero-group rule as _merge (r7 review): a group
+            # same zero-group rule as _merge: a group
             # fully inserted-then-deleted inside the first consumed
             # range must not persist as a phantom (cnt=0) view row.
             merged = delta.filter(F.col("cnt") != 0)

@@ -36,7 +36,7 @@ remains the fast path: it hands the manifest straight to the native
 parquet scan (JVM vectorized reader, pushdown, pruning). Same table,
 same snapshots, two doors.
 
-Filter pushdown (r5): `SnapshotReader.pushFilters` requires
+Filter pushdown: `SnapshotReader.pushFilters` requires
 ``spark.sql.python.filterPushdown.enabled=true`` — Spark 4.1 REFUSES
 to plan a reader that overrides pushFilters while the conf is off
 (DATA_SOURCE_PUSHDOWN_DISABLED). The engine sets it in
@@ -84,7 +84,7 @@ def _versions(table_path: str) -> list[int]:
     # tolerate foreign .json files (notes.json etc.) exactly like
     # SnapshotTable.versions() — a stray non-numeric name must not
     # kill a RUNNING stream, whose latestOffset calls this every
-    # trigger (r7 review)
+    # trigger
     out = []
     for f in os.listdir(log):
         if not f.endswith(".json") or f.startswith("."):
@@ -895,7 +895,7 @@ class SnapshotDataSource(DataSource):
     def reader(self, schema: StructType):
         if self._cdc():
             # A batch reader would silently serve the HEAD rows with
-            # null CDC columns — no deletes, no versions (r7 review).
+            # null CDC columns — no deletes, no versions.
             # Fail loudly like the version/timestampAsOf guards; the
             # batch change-feed surface is SnapshotTable.changes_between.
             raise ValueError(
@@ -992,7 +992,7 @@ class SnapshotWriter(DataSourceArrowWriter):
         from .snapshot import SnapshotTable
 
         added = [m.file for m in messages if m and m.file]
-        # The active session, not None (r7 review): commit_staged's
+        # The active session, not None: commit_staged's
         # constraint-enforcement branch reads the staged files through
         # spark — with None it crashed with AttributeError and left
         # the staged parquet orphaned instead of reporting the

@@ -202,7 +202,7 @@ class CatalogServer:
     ) -> None:
         # In-memory registry when no store is given (r4 behavior);
         # a SqlCatalogStore makes registrations survive restarts.
-        # The lock mirrors _tokens_lock (r7 review): handlers run on
+        # The lock mirrors _tokens_lock: handlers run on
         # ThreadingHTTPServer threads, and an unlocked iteration over
         # _tables racing a concurrent register() is a RuntimeError
         # (dict changed size) -> spurious 500. _ns_mem makes
@@ -578,7 +578,7 @@ class RestCatalog:
         (manifest + schema + MoR delete files) drives the whole plan,
         then data bytes come straight from the files — they never
         touch the catalog, the defining property of the REST-catalog
-        architecture. r7 review fix: the first cut scanned
+        architecture. The first cut scanned
         ``x-manifest`` alone, so MoR-deleted rows RESURFACED in the
         served table (equality/positional delete files were served in
         ``x-entry`` but never applied) and pre-evolution files

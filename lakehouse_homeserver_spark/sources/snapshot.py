@@ -198,7 +198,7 @@ def _footer_stats(path: str) -> tuple[int, dict]:
     # A column's range is only a skipping index if EVERY row group
     # contributed stats: a partial range understates the file and
     # prune_files would skip rows living in the uncovered groups.
-    # "No stats" is the only safe fallback (r6 review finding).
+    # "No stats" is the only safe fallback.
     full = {c for c, n in covered.items() if n == md.num_row_groups}
     return md.num_rows, {c: [mins[c], maxs[c]] for c in mins if c in full}
 
@@ -261,8 +261,8 @@ def _bloom_probe_keys(value) -> list:
     ints for int columns, floats for double columns), so a probe
     whose Python type differs (int 5 vs stored 5.0) must also try
     the cross-type spelling — a single-form probe returns a
-    definite-no and a pruned file silently loses matching rows
-    (r6 review finding). Probing extra keys only ADDS potential
+    definite-no and a pruned file silently loses matching rows.
+    Probing extra keys only ADDS potential
     hits: pruning stays sound, never unsound."""
     keys = [value]
     if isinstance(value, (int, float)) and not isinstance(value, bool):
@@ -430,8 +430,8 @@ class SnapshotTable:
         idempotence ledgers (stream_batch_id / stream_src_hi) only
         need the most recent stream commit: a full history() walk
         re-read O(#snapshots) entries PLUS their sidecars on every
-        micro-batch, O(N²) driver I/O over a stream's life
-        (r7 review). Stream commits write monotone ids/spans, so the
+        micro-batch, O(N²) driver I/O over a stream's life.
+        Stream commits write monotone ids/spans, so the
         newest one IS the max."""
         for v in reversed(self.versions()):
             props = self._entry_raw(v).get("properties", {})
@@ -910,7 +910,7 @@ class SnapshotTable:
         # deletes here, so e.row_count == sum of manifest footers):
         # footer reads stay O(rewritten + added), never O(live files)
         # — a pruned overwrite of 2 of 1M files must not do 1M driver
-        # footer opens (r6 review finding).
+        # footer opens.
         row_count = e["row_count"]
         for f in sorted(candidates):
             rows, _ = _footer_stats(os.path.join(self._data_path, f))
@@ -990,8 +990,7 @@ class SnapshotTable:
             # on None, so split it out — and disable file pruning when
             # present (footer stats don't index NULLs, so a range-
             # pruned file could hide old NULL rows from the rewrite
-            # and readers would see both generations; r6 review
-            # finding).
+            # and readers would see both generations).
             non_null = [v for v in vals if v is not None]
             pred = F.col(cols[0]).isin(non_null) if non_null else F.lit(False)
             if len(non_null) < len(vals):
@@ -1173,8 +1172,8 @@ class SnapshotTable:
         `_commit`, so any metadata commit through `_commit_manifest`
         (add_constraint, set_partition_spec, rollback, MoR delete,
         compaction, cherry-pick) silently DROPPED it and blooms
-        stopped being built for all later appends (r6 review
-        finding) — inheriting it here covers both commit paths."""
+        stopped being built for all later appends — inheriting it
+        here covers both commit paths."""
         out: dict = {}
         spec = self.partition_spec()
         if spec:
@@ -1363,8 +1362,8 @@ class SnapshotTable:
             # Publishing is still an incoming batch: the target's
             # CHECK constraints gate it exactly like append's
             # enforcement — otherwise clone->append->cherry_pick
-            # lands rows add_constraint promised could never land
-            # (r6 review finding). One O(batch) boolean aggregate
+            # lands rows add_constraint promised could never land.
+            # One O(batch) boolean aggregate
             # over the branch's added files, read from the SOURCE
             # so a violation links nothing.
             incoming = self.spark.read.schema(
@@ -2389,7 +2388,7 @@ class SnapshotTable:
             # SHALLOW CLONE copies table properties): without them a
             # WAP staging branch has no CHECK constraints, no bloom
             # config and no partition spec, so branch appends skip
-            # enforcement the source promises (r6 review finding).
+            # enforcement the source promises.
             "properties": {
                 **{
                     k: val
@@ -2424,7 +2423,7 @@ class SnapshotTable:
         any TAGGED snapshot (Iceberg ref retention — a pinned corpus
         release must survive GC until its tag is dropped).
 
-        Two deletion classes (r6 review finding): files referenced by
+        Two deletion classes: files referenced by
         an EXPIRED snapshot are lineage-tracked and deleted
         immediately; files referenced by NO snapshot at all (crash
         debris — but also the staged files of a commit IN FLIGHT
@@ -2466,7 +2465,7 @@ class SnapshotTable:
             referenced_expired.update(
                 d["file"] for d in e.get("delete_files", [])
             )
-        # Carry ingest bookkeeping before dropping entries (r7 review):
+        # Carry ingest bookkeeping before dropping entries:
         # `Lakehouse.ingested_files` DERIVES the seen-file set from
         # per-commit `ingested_files` properties, so expiring old
         # commits silently shrank it and the next load_incremental

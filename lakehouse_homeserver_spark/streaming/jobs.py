@@ -391,7 +391,7 @@ def upsert_user_totals_batch(
 
     t = SnapshotTable(spark, table_path)
     if t.exists():
-        # Tail-first ledger probe (r7 review — the full history()
+        # Tail-first ledger probe (the full history()
         # walk was O(N) entry+sidecar reads per trigger): batch ids
         # are monotone within the checkpoint lineage (the guarantee's
         # documented scope), so the newest recorded id tells whether
@@ -409,7 +409,7 @@ def upsert_user_totals_batch(
                 # Ids regressed: a recreated checkpoint (restart at 0)
                 # was pointed at an existing totals table. Silently
                 # skipping would drop every new batch whose id
-                # collides with history (r8 advice — data loss); fail
+                # collides with history (data loss); fail
                 # loudly with the documented recovery instead.
                 raise ValueError(
                     f"{table_path}: incoming batch_id {batch_id} < "
@@ -566,7 +566,7 @@ def apply_cdc_batch(
     t = SnapshotTable(spark, view_path)
     applied_hi = -1
     if t.exists():
-        # Tail-first (r7 review): each micro-batch folds a contiguous
+        # Tail-first: each micro-batch folds a contiguous
         # monotone version span, so the NEWEST commit carrying
         # stream_src_hi holds the max — no O(#snapshots) history walk
         # per trigger.

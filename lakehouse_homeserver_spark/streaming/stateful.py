@@ -86,7 +86,7 @@ def sessionize_fn(
 ) -> Iterator[pd.DataFrame]:
     """Grouped-map state function: one user's new events per batch.
 
-    Vectorized (r6): the original per-event Python loop (branch +
+    Vectorized: the original per-event Python loop (branch +
     string concat per row, one 1-row DataFrame per closed session)
     made the custom operator the one row-at-a-time path in the repo —
     i12's 10× smoke put it at 3.7×. Session boundaries are now a
@@ -153,7 +153,7 @@ def sessionize_fn(
     # NaN (NULL value) contributes 0 to the session sum — the batch
     # twin's F.sum skips NULLs, which is additive-identical; without
     # the guard, floor(NaN).astype(int64) silently injects INT64_MIN
-    # and corrupts value_cents (r7 review). Known residual edge: a
+    # and corrupts value_cents. Known residual edge: a
     # session whose EVERY value is NULL sums to NULL in the twin but
     # 0 here — matching that would mean widening the state tuple.
     vals = batch["value"].to_numpy(np.float64)[order]
@@ -175,7 +175,7 @@ def sessionize_fn(
             # must not move the open session's clock BACKWARD — that
             # both split sessions the globally-ordered batch twin
             # keeps together and regressed the timeout horizon,
-            # firing the close early (r7 review).
+            # firing the close early.
             cur[1] = max(cur[1], int(us[cont_end - 1]))
             cur[2] += cont_end
             cur[3] = cur[3] + "," + ",".join(et[:cont_end])
@@ -384,7 +384,7 @@ def _spike_processor_cls():
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            # Vectorized (r7 review): prior_n/prior_sum are prefix
+            # Vectorized: prior_n/prior_sum are prefix
             # aggregates — arange + shifted cumsum — and the flag is
             # one comparison; the old per-row zip loop was exactly
             # the row-at-a-time shape the r6 sessionizer rewrite

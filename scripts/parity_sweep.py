@@ -152,6 +152,10 @@ def run_engine(names: list[str]) -> dict[str, tuple | None]:
                 traceback.print_exc()
     finally:
         spark.stop()
+        # This child leaves through os._exit, which skips atexit.
+        from lakehouse_homeserver_spark import workspace
+
+        workspace.release()
     return out
 
 

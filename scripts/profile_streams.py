@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from lakehouse_homeserver_spark.session import get_spark  # noqa: E402
+from lakehouse_homeserver_spark.workspace import scratch  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -67,7 +67,7 @@ def timed_stream(start_fn, timeout_s: int = 300) -> dict:
 
 def probe_file(spark) -> dict:
     """Bare file-source stream: 1 tiny parquet file -> noop-ish sink."""
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-sprobe-file-")
+    root = scratch("sprobe-file")
     land = os.path.join(root, "land")
     os.makedirs(land)
     spark.range(10).coalesce(1).write.mode("overwrite").parquet(land)
@@ -89,7 +89,7 @@ def probe_file(spark) -> dict:
 
 def probe_file_feb(spark) -> dict:
     """File source + foreachBatch (the a30/i10 shape)."""
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-sprobe-feb-")
+    root = scratch("sprobe-feb")
     land = os.path.join(root, "land")
     os.makedirs(land)
     spark.range(10).coalesce(1).write.mode("overwrite").parquet(land)
@@ -117,7 +117,7 @@ def probe_pyds(spark) -> dict:
     from lakehouse_homeserver_spark.sources.pyds import SnapshotDataSource
     from lakehouse_homeserver_spark.sources.snapshot import SnapshotTable
 
-    root = tempfile.mkdtemp(prefix="lakehouse-scratch-sprobe-pyds-")
+    root = scratch("sprobe-pyds")
     t = SnapshotTable(spark, os.path.join(root, "t"))
     t.create(spark.range(10).select(F.col("id").alias("k")))
     t.append(spark.range(10, 20).select(F.col("id").alias("k")))

@@ -170,7 +170,7 @@ def main() -> None:
     if scaled and os.path.isdir(os.path.join(scaled, "lineitem.parquet")):
         print(f"reusing scaled clones at {scaled}")
     else:
-        scaled = tempfile.mkdtemp(prefix="lakehouse-scratch-sf-relscaled-")
+        scaled = tempfile.mkdtemp(prefix="lakehouse-scale-rel-")
         t0 = time.time()
         build_scaled(spark, scaled, copies)
         print(

@@ -8,7 +8,9 @@ across copies; the salt token is appended, leaving the original
 5-gram/shingle structure intact.
 
 Usage: python scripts/scale_smoke.py [copies]   (default 10)
-Writes nothing to the repo; scratch data lands in a temp dir.
+Writes nothing to the repo: the clones and the Spark warehouse land in
+one `lakehouse-scale-*` temp dir, kept for reuse (printed at the end
+of the build).
 """
 
 from __future__ import annotations
@@ -277,8 +279,6 @@ def _unit_count(name: str, spark, sf_dir: str) -> int:
 
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark()
-    spark.sparkContext.setLogLevel("ERROR")
     # SPARK_GRAFT_SMOKE_SCALED_DIR reuses an already-built clone dir —
     # the quiet-box protocol (SCALE.md): re-measure an in-sequence
     # outlier in a FRESH PROCESS without paying the clone build:
@@ -286,10 +286,20 @@ def main() -> None:
     #   SPARK_GRAFT_SMOKE_OPS=<op> python scripts/scale_smoke.py
     # (the full run prints its scaled dir for exactly this reuse).
     scaled = os.environ.get("SPARK_GRAFT_SMOKE_SCALED_DIR")
-    if scaled and os.path.isdir(os.path.join(scaled, "documents.parquet")):
+    reuse = bool(scaled) and os.path.isdir(
+        os.path.join(scaled, "documents.parquet")
+    )
+    if not reuse:
+        scaled = tempfile.mkdtemp(prefix="lakehouse-scale-")
+    # The warehouse lives beside the clones, so tables written from
+    # them (bucketed c10 tables) go when the clone dir is removed.
+    spark = get_spark(
+        extra_conf={"spark.sql.warehouse.dir": os.path.join(scaled, "warehouse")}
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    if reuse:
         print(f"reusing scaled clones at {scaled}")
     else:
-        scaled = tempfile.mkdtemp(prefix="lakehouse-scratch-sf-scaled-")
         build_scaled(spark, scaled, copies)
         print(f"scaled clones at {scaled} (reusable via SPARK_GRAFT_SMOKE_SCALED_DIR)")
     qs = all_queries()

@@ -8,7 +8,9 @@ data source covered).
 
 Tier-1 (always runs):
   * the whole registry at sf0.01 in the script's default session shape
-    (`local[16]`, 16 shuffle partitions), the shape the driver uses.
+    (`local[16]`, 16 shuffle partitions), the shape the driver uses;
+  * four scratch and fixture queries from a temp dir planted with a
+    killed run's leftovers.
 
 Slow tier (`SPARK_GRAFT_SLOW_TESTS=1`), fixed inputs:
   * the whole registry at sf0.1, where divergences that only show at
@@ -32,7 +34,7 @@ import sys
 
 import pytest
 
-from lakehouse_homeserver_spark.registry import all_queries
+from lakehouse_homeserver_spark.registry import all_oracles, all_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SWEEP = os.path.join(REPO, "scripts", "parity_sweep.py")
@@ -79,6 +81,53 @@ def test_full_registry_parity_at_sf001():
         [], {"SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.01"}
     )
     assert summary["n"] == len(all_queries())
+
+
+def test_leftovers_do_not_change_outcomes(tmp_path):
+    """A run whose temp dir holds a killed run's scratch root, an
+    old-style scratch dir, a half-built fixture (junk parquet, no
+    sentinel) and a stale-fingerprint fixture still matches every
+    oracle, and removes all four."""
+    names = [
+        "a10_snapshot_lineage",
+        "a41_cross_engine_read",
+        "a50_timestamp_travel",
+        "k2_dup_clusters",
+    ]
+    assert set(names) <= set(all_oracles())
+    dead_pid = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    fixtures = tmp_path / "lakehouse-fixtures"
+    junk = fixtures / "xengine" / "nation" / "data" / "junk.parquet"
+    planted = [
+        tmp_path / f"lakehouse-scratch-{dead_pid}",
+        tmp_path / "lakehouse-scratch-snap-demo-xxxx",
+        junk,
+        fixtures / "tstravel-sf0.001-0123456789",
+    ]
+    (planted[0] / "snap-demo-abc").mkdir(parents=True)
+    planted[1].mkdir()
+    junk.parent.mkdir(parents=True)
+    junk.write_bytes(b"not a parquet file")
+    (planted[3] / "orders_ts").mkdir(parents=True)
+    (planted[3] / ".fixture-ok").write_text("ok")
+
+    summary = _run_sweep(
+        names,
+        {
+            "SPARK_GRAFT_PARITY_SF_DIR": "/root/testdata/sf0.001",
+            "TMPDIR": str(tmp_path),
+        },
+    )
+    assert summary["n"] == len(names)
+    assert [str(p) for p in planted if p.exists()] == []
+    assert [
+        e for e in os.listdir(tmp_path) if e.startswith("lakehouse-scratch-")
+    ] == []
 
 
 @pytest.mark.slow
