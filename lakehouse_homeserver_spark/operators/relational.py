@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table as T
-from ..workspace import scratch
+from ..workspace import catalog_table, save_table, scratch
 from .common import make_registry, davg, dec, dsum, sql_davg, sql_dsum
 
 QUERIES, ORACLES, query = make_registry()
@@ -2496,90 +2496,47 @@ def c10_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression that silently reintroduces a shuffle flips a hashed
     boolean, not just a pytest.
 
-    Table hygiene: deterministic per-SF table names with
-    mode("overwrite") — never uuid-tagged — and any legacy `c10_*`
-    table for another tag is dropped on the way in, so repeated
-    bench/verify runs leave at most 2 tables per scale factor."""
-    orders_t, lineitem_t = _c10_bucketed_tables(
-        spark, sf_dir, overwrite=True
+    The write runs once per process and sf_dir, into scratch, as an
+    external table named apart from `c10_bucketed_join_read`'s
+    fixture tables: every process's certification is a real
+    shuffle-at-write."""
+    import os
+
+    tables = _C10_WRITTEN.get(sf_dir)
+    if tables is None or not all(map(spark.catalog.tableExists, tables)):
+        d = scratch("c10_write")
+        tables = tuple(
+            save_table(
+                T(spark, sf_dir, short),
+                f"{os.path.basename(d).replace('-', '_')}_{short}",
+                os.path.join(d, short),
+                key,
+            )
+            for short, key in _C10_KEYS
+        )
+        _C10_WRITTEN[sf_dir] = tables
+    return _c10_join_with_plan_facts(spark, *tables)
+
+
+_C10_KEYS = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
+
+# sf_dir -> the (orders, lineitem) tables THIS process wrote for c10
+_C10_WRITTEN: dict = {}
+
+
+def _c10_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple:
+    """The two bucketed tables `c10_bucketed_join_read` joins: keyed
+    fixtures, written once across processes."""
+    return tuple(
+        catalog_table(
+            spark,
+            f"c10_{short}",
+            lambda short=short: T(spark, sf_dir, short),
+            (sf_dir, short),
+            bucket_key=key,
+        )
+        for short, key in _C10_KEYS
     )
-    return _c10_join_with_plan_facts(spark, orders_t, lineitem_t)
-
-
-def _c10_sf_tag(sf_dir: str) -> str:
-    import os
-    import re
-
-    return re.sub(
-        r"[^0-9A-Za-z]", "_", os.path.basename(sf_dir.rstrip("/"))
-    ) or "default"
-
-
-# (sf_dir tag) pairs already written by THIS process — bounds writes
-# to one per table per process while keeping every process's
-# certification a real shuffle-at-write.
-_C10_WRITTEN: set = set()
-
-
-def _c10_bucketed_tables(
-    spark: SparkSession, sf_dir: str, *, overwrite: bool
-) -> tuple:
-    """Create (or reuse) the two bucketed catalog tables the c10
-    queries join. `overwrite=True` rewrites once per process (the
-    write-side certification); `overwrite=False` reuses a prior
-    COMPLETED write even across processes: the session catalog is
-    in-memory (metadata gone each process) but the warehouse
-    DIRECTORY persists, so a `_SUCCESS`-marked location is registered
-    back as an EXTERNAL bucketed table over the existing files
-    instead of paying the 2-table write again (the old
-    code rmtree'd the byte-identical data and rewrote it, so the
-    read-side bench measured exactly the write it exists to avoid;
-    fixture parquet is immutable, so a completed prior write is
-    equivalent). No legacy-tag drop loop anymore: it could never see
-    pre-r4 tables (not in a fresh catalog) and it DROPPED live tables
-    for any custom SPARK_GRAFT_SF_DIR tag outside a hardcoded list."""
-    import os
-    import shutil
-
-    tag = _c10_sf_tag(sf_dir)
-    spark.sql("CREATE DATABASE IF NOT EXISTS bucketed")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for short, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        name = f"bucketed.c10_{short}_{tag}"
-        path = os.path.join(wh, "bucketed.db", name.split(".", 1)[1])
-        fresh = (sf_dir, name) not in _C10_WRITTEN
-        exists = spark.catalog.tableExists(name)
-        if (
-            not exists
-            and not (overwrite and fresh)
-            and os.path.exists(os.path.join(path, "_SUCCESS"))
-        ):
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in T(spark, sf_dir, short).schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {name} ({cols}) USING PARQUET"
-                f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS"
-                f" LOCATION '{path}'"
-            )
-            exists = True
-        if (overwrite and fresh) or not exists:
-            # a clean slate either way: the catalog entry may be the
-            # external registration above (saveAsTable-overwrite onto
-            # an external table trips LOCATION_ALREADY_EXISTS), and a
-            # crashed write leaves a dir without _SUCCESS
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(path, ignore_errors=True)
-            (
-                T(spark, sf_dir, short)
-                .write.bucketBy(8, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-        _C10_WRITTEN.add((sf_dir, name))
-    return f"bucketed.c10_orders_{tag}", f"bucketed.c10_lineitem_{tag}"
 
 
 def _c10_join_with_plan_facts(
@@ -2642,18 +2599,13 @@ def _c10_join_with_plan_facts(
 def c10_bucketed_join_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """READ side of the bucketed-join certification:
     identical join, aggregate, and hashed plan facts as
-    `c10_bucketed_join`, but the bucketed tables are written at most
-    once — reused across processes when they already exist in the
-    warehouse (the fixture parquet is immutable, so a prior run's
-    bucketed copy is byte-identical). This is the number that matters
-    at 100 TB: bucketing pays the shuffle ONCE at write time, and
-    every subsequent join on the bucket key runs exchange-free — the
-    bench should see that steady-state read cost, not re-measure the
-    write each sweep."""
-    orders_t, lineitem_t = _c10_bucketed_tables(
-        spark, sf_dir, overwrite=False
-    )
-    return _c10_join_with_plan_facts(spark, orders_t, lineitem_t)
+    `c10_bucketed_join`, but the bucketed tables are keyed fixtures,
+    written once and reused across processes. This is the number that
+    matters at 100 TB: bucketing pays the shuffle ONCE at write time,
+    and every subsequent join on the bucket key runs exchange-free —
+    the bench should see that steady-state read cost, not re-measure
+    the write each sweep."""
+    return _c10_join_with_plan_facts(spark, *_c10_bucketed_tables(spark, sf_dir))
 
 
 # sf_dir -> partitioned-layout dir written by THIS process (a38)
@@ -3351,51 +3303,26 @@ def a48_codegen_partial_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (sf tag, table) pairs built+ANALYZEd by THIS process (the session
-# catalog is in-memory, so stats are per-process state like c10's
-# table metadata).
-_A53_BUILT: set = set()
-
-
 def _a53_stats_tables(spark: SparkSession, sf_dir: str) -> tuple:
     """Three catalog tables with ANALYZE'd column statistics — the
     input CBO needs (reorder costs come from rowCount/NDV/min-max,
-    which path-based parquet scans don't carry)."""
-    import os
-    import shutil
-
-    tag = _c10_sf_tag(sf_dir)
-    spark.sql("CREATE DATABASE IF NOT EXISTS cbo")
-    spec = {
-        f"cbo.a53_li_{tag}": (
-            "lineitem",
-            ["l_orderkey", "l_quantity", "l_extendedprice"],
-        ),
-        f"cbo.a53_od_{tag}": (
-            "orders",
-            ["o_orderkey", "o_custkey", "o_orderpriority"],
-        ),
-        f"cbo.a53_cu_{tag}": ("customer", ["c_custkey", "c_mktsegment"]),
-    }
-    for name, (src, cols) in spec.items():
-        if (sf_dir, name) in _A53_BUILT:
-            continue
-        if not spark.catalog.tableExists(name):
-            # warehouse dir persists across processes; catalog
-            # metadata does not (same note as _c10_bucketed_tables)
-            wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-                "file:"
-            )
-            shutil.rmtree(
-                os.path.join(wh, "cbo.db", name.split(".", 1)[1]),
-                ignore_errors=True,
-            )
-            T(spark, sf_dir, src).select(*cols).write.mode(
-                "overwrite"
-            ).saveAsTable(name)
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-        _A53_BUILT.add((sf_dir, name))
-    return tuple(spec)
+    which path-based parquet scans don't carry). Stats live in the
+    session catalog, so each session ANALYZEs once."""
+    spec = (
+        ("a53_li", "lineitem", ["l_orderkey", "l_quantity", "l_extendedprice"]),
+        ("a53_od", "orders", ["o_orderkey", "o_custkey", "o_orderpriority"]),
+        ("a53_cu", "customer", ["c_custkey", "c_mktsegment"]),
+    )
+    return tuple(
+        catalog_table(
+            spark,
+            name,
+            lambda src=src, cols=cols: T(spark, sf_dir, src).select(*cols),
+            (sf_dir, src),
+            analyze=True,
+        )
+        for name, src, cols in spec
+    )
 
 
 @query(
@@ -3443,8 +3370,8 @@ def a53_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     every stage regardless of AQE. Statistics maintenance (ANALYZE
     after ingest, the reference delegates the same to engine
     defaults) is what keeps multi-dim star queries fact-last. Stats
-    are in-memory-catalog state here, so each process re-ANALYZEs
-    once (bounded: 3 footer-light passes).
+    are in-memory-catalog state here, so each session ANALYZEs the
+    shared fixture tables once (bounded: 3 footer-light passes).
     """
     import re as _re
 
@@ -3514,48 +3441,27 @@ def a53_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (sf_dir, table) pairs written by THIS process (c10's convention).
-_C12_WRITTEN: set = set()
-
-
 def _c12_sortfree_tables(spark: SparkSession, sf_dir: str) -> tuple:
     """Bucketed+sorted tables with EXACTLY ONE FILE PER BUCKET: the
     pre-write `repartition(8, key)` uses the same murmur3 bucket hash
     as `bucketBy`, so each write task owns one whole bucket — the
     layout Spark's bucket-scan output ordering requires."""
-    import os
-    import shutil
-
-    tag = _c10_sf_tag(sf_dir)
-    spark.sql("CREATE DATABASE IF NOT EXISTS bucketed")
-    for short, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        name = f"bucketed.c12_{short}_{tag}"
-        if (sf_dir, name) in _C12_WRITTEN:
-            continue
-        if not spark.catalog.tableExists(name):
-            wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-                "file:"
-            )
-            shutil.rmtree(
-                os.path.join(wh, "bucketed.db", name.split(".", 1)[1]),
-                ignore_errors=True,
-            )
-            cols = (
-                ["o_orderkey", "o_orderpriority", "o_totalprice"]
-                if short == "orders"
-                else ["l_orderkey", "l_extendedprice"]
-            )
-            (
-                T(spark, sf_dir, short)
-                .select(*cols)
-                .repartition(8, F.col(key))
-                .write.bucketBy(8, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-        _C12_WRITTEN.add((sf_dir, name))
-    return f"bucketed.c12_orders_{tag}", f"bucketed.c12_lineitem_{tag}"
+    cols = {
+        "orders": ["o_orderkey", "o_orderpriority", "o_totalprice"],
+        "lineitem": ["l_orderkey", "l_extendedprice"],
+    }
+    return tuple(
+        catalog_table(
+            spark,
+            f"c12_{short}",
+            lambda short=short, key=key: T(spark, sf_dir, short)
+            .select(*cols[short])
+            .repartition(8, F.col(key)),
+            (sf_dir, short),
+            bucket_key=key,
+        )
+        for short, key in _C10_KEYS
+    )
 
 
 @query(

@@ -8,33 +8,30 @@ bookkeeping table then `append` + record the new files (:154-165),
 create-if-absent (:106-110), empty source → clean no-op (:141-143),
 snapshot GC per load (:167-171).
 
-This module re-expresses those semantics Spark-natively with two
-deliberate improvements over the reference (SURVEY.md §3.1 notes):
+Every load commits to a snapshot-log table (`SnapshotFormat`, over
+sources/snapshot.py), the local stand-in for the reference's Iceberg
+v2 tables: `db.table` lives at `<warehouse>/db/table`, and the catalog
+is the directory tree itself, so cross-run state needs no metastore.
+The files a load ingested ride inside its commit as a snapshot
+property: "append data" and "record loaded files" are one atomic
+operation, which closes the crash window the reference's
+read-modify-write bookkeeping leaves open.
+
+Three deliberate departures from the reference (SURVEY.md §3.1):
 
 1. "Latest" file for a full load is explicit — (mtime, path) order —
    instead of bare lexicographic `sorted(list)[-1]` (:147).
 2. The unseen-file check is a distributed left-anti join against the
-   bookkeeping table instead of a driver-side Python set difference
+   loaded-file set instead of a driver-side Python set difference
    (:155-156) — at 100 TB the landing listing can be millions of
    objects; an anti-join scales, a driver set doesn't.
 3. The bare `except:` that treats *any* metadata failure as "nothing
    loaded yet" (:60-61) is narrowed to "table does not exist".
-
-Table format seam: table CREATE goes through the real
-`DataFrameWriterV2` path (`writeTo().using().create()` — the API the
-reference calls for every write, :94-110); replace/append fall back
-to V1 `saveAsTable` because Spark's built-in V2SessionCatalog rejects
-V2 append/REPLACE on v1 tables (errors verified in-environment). On a
-cluster with Delta/Iceberg jars all three verbs take the writeTo()
-surface with the reference's exact table options
-(write.format.default=parquet, format-version=2); the seam is
-`TableFormat`.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,107 +39,21 @@ from pyspark.sql import functions as F
 from .snapshot import SnapshotTable
 
 SRC_NS = "src"
-META_NS = "metadata"
 
 
-def _drop_orphan_location(spark: SparkSession, table: str) -> None:
-    """Delete the managed location of a `db.name` table that has no
-    catalog entry. Such a directory is an orphan of a killed run or a
-    lost metastore (the warehouse outlives a Derby catalog): nothing
-    owns its files, and CREATE would refuse it with
-    LOCATION_ALREADY_EXISTS."""
-    db, name = table.split(".")
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(
-        spark.catalog.getDatabase(db).locationUri.rstrip("/") + "/" + name.lower()
-    )
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(path):
-        fs.delete(path, True)
-
-
-@dataclass
-class TableFormat:
-    """Write-path seam (SURVEY.md §1.4). `parquet` locally; swap
-    `delta`/`iceberg` + catalog conf on a real cluster.
-
-    `atomic_ingest`: the format can fold ingest bookkeeping into the
-    data commit itself (single atomic operation). `mvcc`: readers of
-    old snapshots are isolated from concurrent rewrites, so table
-    rewrites need no driver-side materialization barrier."""
-
-    name: str = "parquet"
-    atomic_ingest: bool = False
-    mvcc: bool = False
-
-    def create(
-        self, df: DataFrame, table: str, properties: dict | None = None
-    ) -> None:
-        """A7 create: the REAL DataFrameWriterV2 call path —
-        `writeTo(t).using(fmt).create()`, the exact API shape the
-        reference uses for every write (extract_load.py:94-110).
-        Spark's built-in V2SessionCatalog supports V2 CREATE TABLE AS
-        SELECT but not V2 append/REPLACE on v1 tables (verified in
-        this environment: "Cannot write into v1 table" / "does not
-        support REPLACE TABLE AS SELECT"), so locally only this verb
-        routes through V2; with Delta/Iceberg jars on the classpath
-        the other two verbs take the same writeTo() surface."""
-        df.writeTo(table).using(self.name).create()
-
-    def create_or_replace(
-        self, df: DataFrame, table: str, properties: dict | None = None
-    ) -> None:
-        spark = df.sparkSession
-        if spark.catalog.tableExists(table):
-            df.write.format(self.name).mode("overwrite").saveAsTable(table)
-            return
-        _drop_orphan_location(spark, table)
-        self.create(df, table, properties=properties)
-
-    def append(
-        self, df: DataFrame, table: str, properties: dict | None = None
-    ) -> None:
-        df.write.format(self.name).mode("append").saveAsTable(table)
-
-    def exists(self, spark: SparkSession, table: str) -> bool:
-        return spark.catalog.tableExists(table)
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.table(table)
-
-    def expire(self, spark: SparkSession, table: str, retain_days: int) -> None:
-        if self.name == "delta":
-            spark.sql(f"VACUUM {table} RETAIN {retain_days * 24} HOURS")
-
-    def ingested_files(self, spark: SparkSession, table: str) -> list[str]:
-        raise NotImplementedError("only atomic_ingest formats track this")
-
-
-class SnapshotFormat(TableFormat):
-    """ACID table format backed by sources/snapshot.py — the local
-    stand-in for the reference's Iceberg tables, with the actual
-    transactional behaviors (atomic commit, lineage, time travel,
-    snapshot expiry) rather than the parquet seam's no-ops.
-
-    Ingest bookkeeping rides INSIDE each commit as a snapshot
-    property, so "append data" + "record loaded files" is ONE atomic
-    operation — closing the crash window the two-step parquet path
-    (and the reference's read-modify-write, extract_load.py:154-165)
-    leaves open."""
+class SnapshotFormat:
+    """ACID table format backed by sources/snapshot.py: atomic
+    commits, lineage, time travel and snapshot expiry. A rewrite
+    lands as a new snapshot while its readers keep the old manifest,
+    so a table can be rewritten from a plan that reads it."""
 
     def __init__(self, spark: SparkSession, warehouse_dir: str):
-        super().__init__(name="snapshot", atomic_ingest=True, mvcc=True)
         self.spark = spark
         self.warehouse_dir = warehouse_dir
 
     def _table(self, table: str) -> SnapshotTable:
         path = os.path.join(self.warehouse_dir, *table.split("."))
         return SnapshotTable(self.spark, path)
-
-    def create(
-        self, df: DataFrame, table: str, properties: dict | None = None
-    ) -> None:
-        self._table(table).create(df, properties=properties)
 
     def create_or_replace(
         self, df: DataFrame, table: str, properties: dict | None = None
@@ -154,46 +65,31 @@ class SnapshotFormat(TableFormat):
     ) -> None:
         self._table(table).append(df, properties=properties)
 
-    def exists(self, spark: SparkSession, table: str) -> bool:
+    def exists(self, table: str) -> bool:
         return self._table(table).exists()
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return self._table(table).read()
-
-    def read_version(self, table: str, version: int) -> DataFrame:
+    def read(self, table: str, version: int | None = None) -> DataFrame:
         return self._table(table).read(version=version)
 
     def history(self, table: str) -> list[dict]:
         return self._table(table).history()
 
-    def expire(self, spark: SparkSession, table: str, retain_days: int) -> None:
+    def expire(self, table: str, retain_days: int) -> None:
         # Deterministic count-based retention (see SnapshotTable doc);
         # retain_days maps to a timestamp_ms filter on a wall-clock
         # deployment.
         self._table(table).expire_snapshots(keep_last=max(retain_days, 1))
 
-    def clone(
-        self, table: str, dest_table: str, version: int | None = None
-    ) -> SnapshotTable:
-        """Zero-copy clone (Delta SHALLOW CLONE shape): dest_table's
-        first snapshot references table's data files as of `version`.
-        See SnapshotTable.clone for the GC-safety argument."""
-        return self._table(table).clone(
-            os.path.join(self.warehouse_dir, *dest_table.split(".")),
-            version=version,
-        )
-
-    def ingested_files(self, spark: SparkSession, table: str) -> list[str]:
+    def ingested_files(self, table: str) -> list[str]:
         """Union of per-commit `ingested_files` properties across the
-        CURRENT lineage — the bookkeeping table, derived instead of
-        separately written. A replacing commit ("create"/"overwrite",
-        i.e. a full load) RESETS the set, matching the non-atomic
-        path's documented contract ("full load resets bookkeeping to
-        exactly the loaded file"): files ingested before a
-        full-replace are no longer in the table, so a later
-        incremental must re-ingest them. (Unioning the whole history
-        would treat a pre-replace file as seen forever; the a51
-        lifecycle cert checks this.)"""
+        CURRENT lineage — the loaded-file set, derived from the log
+        instead of separately written. A replacing commit
+        ("create"/"overwrite", i.e. a full load) RESETS the set to
+        exactly the loaded file: files ingested before a full-replace
+        are no longer in the table, so a later incremental must
+        re-ingest them. (Unioning the whole history would treat a
+        pre-replace file as seen forever; the a51 lifecycle cert
+        checks this.)"""
         t = self._table(table)
         if not t.exists():
             return []
@@ -211,18 +107,15 @@ class Lakehouse:
     def __init__(
         self,
         spark: SparkSession,
-        fmt: TableFormat | None = None,
+        fmt: SnapshotFormat,
         source_format: str = "parquet",
     ):
         self.spark = spark
-        self.fmt = fmt or TableFormat()
+        self.fmt = fmt
         # landing-file format: parquet (reference parity), or json/csv
         # for extractors that drop those (schema inferred on read,
         # same schema-on-read contract either way)
         self.source_format = source_format
-        # A8: CREATE NAMESPACE IF NOT EXISTS (extract_load.py:79)
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {SRC_NS}")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {META_NS}")
 
     # -- source discovery (A2) ---------------------------------------------
     def list_landing_files(self, landing_dir: str, table: str) -> list[str]:
@@ -245,34 +138,16 @@ class Lakehouse:
         )
 
     # -- bookkeeping (A3/A4: extract_load.py:55-66) ------------------------
-    def _bookkeeping_table(self, table: str) -> str:
-        return f"{META_NS}.{table}_loaded_files"
-
     def loaded_files(self, table: str) -> DataFrame:
         """file_path list already ingested; empty DF if never loaded.
 
         Narrowed failure handling vs the reference's bare `except:`
-        (:60-61): only "table missing" means "nothing loaded yet".
-        Atomic formats derive this from commit properties instead of a
-        separately-written bookkeeping table.
+        (:60-61): only "table missing" means "nothing loaded yet". The
+        list is derived from commit properties, not a separately
+        written bookkeeping table.
         """
-        if self.fmt.atomic_ingest:
-            files = self.fmt.ingested_files(self.spark, f"{SRC_NS}.{table}")
-            return self.spark.createDataFrame(
-                [(p,) for p in files], "file_path string"
-            )
-        bk = self._bookkeeping_table(table)
-        if not self.spark.catalog.tableExists(bk):
-            return self.spark.createDataFrame([], "file_path string")
-        return self.spark.table(bk).select("file_path")
-
-    def _record_loaded(self, table: str, file_paths: list[str]) -> None:
-        df = self.spark.createDataFrame([(p,) for p in file_paths], ["file_path"])
-        bk = self._bookkeeping_table(table)
-        if self.spark.catalog.tableExists(bk):
-            self.fmt.append(df, bk)
-        else:
-            self.fmt.create_or_replace(df, bk)
+        files = self.fmt.ingested_files(f"{SRC_NS}.{table}")
+        return self.spark.createDataFrame([(p,) for p in files], "file_path string")
 
     # -- loads (A5/A6/A7: extract_load.py:75-110,118-165) ------------------
     def _read(self, paths: list[str]) -> DataFrame:
@@ -304,12 +179,6 @@ class Lakehouse:
         self.fmt.create_or_replace(
             df, f"{SRC_NS}.{table}", properties={"ingested_files": [latest]}
         )
-        if not self.fmt.atomic_ingest:
-            # Full load resets bookkeeping to exactly the loaded file.
-            bk = self._bookkeeping_table(table)
-            self.fmt.create_or_replace(
-                self.spark.createDataFrame([(latest,)], ["file_path"]), bk
-            )
         return n
 
     def load_incremental(self, table: str, landing_dir: str) -> int:
@@ -319,7 +188,8 @@ class Lakehouse:
         landing listing never has to fit in driver memory as a
         Python set. Re-running with no new files is a 0-row no-op —
         the idempotence contract the reference's race-prone
-        read-modify-write only approximates.
+        read-modify-write only approximates. The new files are
+        recorded in the same commit as their rows.
         """
         files = self.list_landing_files(landing_dir, table)
         if not files:
@@ -339,56 +209,40 @@ class Lakehouse:
             return 0
         target = f"{SRC_NS}.{table}"
         props = {"ingested_files": new_files}
-        if self.fmt.exists(self.spark, target):
+        if self.fmt.exists(target):
             self.fmt.append(df, target, properties=props)
         else:
             self.fmt.create_or_replace(df, target, properties=props)
-        if not self.fmt.atomic_ingest:
-            # Two-step bookkeeping: documented crash window (a failure
-            # here double-loads on re-run). SnapshotFormat closes it by
-            # folding `props` into the commit above.
-            self._record_loaded(table, new_files)
         return n
 
     # -- maintenance (A10: extract_load.py:167-171) ------------------------
     def expire_snapshots(self, table: str, retain_days: int = 3) -> None:
         """Snapshot GC (A10). The reference calls
         `iceberg.system.expire_snapshots(..., now-3d)` after every
-        load (extract_load.py:167-171). SnapshotFormat executes the
-        real thing (drops old log entries + unreferenced data files,
-        tests/test_snapshot.py proves files actually disappear);
-        plain parquet has no lineage so it stays a no-op; Delta maps
-        to VACUUM.
+        load (extract_load.py:167-171); this drops old log entries and
+        unreferenced data files (tests/test_snapshot.py proves files
+        actually disappear).
         """
-        self.fmt.expire(self.spark, f"{SRC_NS}.{table}", retain_days)
+        self.fmt.expire(f"{SRC_NS}.{table}", retain_days)
 
     def table(self, table: str) -> DataFrame:
-        return self.fmt.read(self.spark, f"{SRC_NS}.{table}")
+        return self.fmt.read(f"{SRC_NS}.{table}")
 
     def table_at(self, table: str, version: int) -> DataFrame:
         """Time-travel read (A12): the table as of snapshot `version`
-        — Iceberg/Trino `FOR VERSION AS OF` equivalent. Only snapshot
-        lineage formats support it."""
-        if not isinstance(self.fmt, SnapshotFormat):
-            raise NotImplementedError(
-                f"time travel needs a snapshot format, not {self.fmt.name!r}"
-            )
-        return self.fmt.read_version(f"{SRC_NS}.{table}", version)
+        — Iceberg/Trino `FOR VERSION AS OF` equivalent."""
+        return self.fmt.read(f"{SRC_NS}.{table}", version=version)
 
     def _carry_ingest_props(self, target: str) -> dict | None:
         """Maintenance rewrites (compact / optimize_layout*) REPLACE
         the table contents without changing which landing files the
-        rows derive from. On atomic formats the ingested-file set is
-        DERIVED from commit properties and a replacing commit resets
-        it (TableFormat.ingested_files) — so the rewrite commit must
+        rows derive from. The loaded-file set is DERIVED from commit
+        properties and a replacing commit resets it
+        (`SnapshotFormat.ingested_files`) — so the rewrite commit must
         carry the current set forward, or the next load_incremental
         re-ingests every previously loaded file and silently
-        duplicates rows. Non-atomic formats keep bookkeeping in a
-        separate table that maintenance never touches: nothing to
-        carry."""
-        if not self.fmt.atomic_ingest:
-            return None
-        files = self.fmt.ingested_files(self.spark, target)
+        duplicates rows."""
+        files = self.fmt.ingested_files(target)
         return {"ingested_files": files} if files else None
 
     def compact(self, table: str, target_files: int = 1) -> int:
@@ -396,18 +250,10 @@ class Lakehouse:
         incremental appends leave one file per load; rewrite the table
         into target_files files. At cluster scale target_files ≈
         table_bytes / 512 MiB. Returns the row count (sanity echo).
-
-        Implementation note: Spark refuses to overwrite a table that
-        its own plan reads (UNSUPPORTED_OVERWRITE) — `localCheckpoint`
-        materializes the rows and severs the lineage so the rewrite is
-        a plain write. (On a cluster with unreliable executors, stage
-        through a temp table instead.)
         """
         target = f"{SRC_NS}.{table}"
         props = self._carry_ingest_props(target)
-        df = self.fmt.read(self.spark, target)
-        if not self.fmt.mvcc:
-            df = df.localCheckpoint(eager=True)
+        df = self.fmt.read(target)
         n = df.count()
         self.fmt.create_or_replace(
             df.coalesce(target_files), target, properties=props
@@ -422,15 +268,10 @@ class Lakehouse:
         """
         target = f"{SRC_NS}.{table}"
         props = self._carry_ingest_props(target)
-        df = self.fmt.read(self.spark, target)
-        if not self.fmt.mvcc:
-            # Non-MVCC formats can't overwrite a table their own plan
-            # reads; snapshot tables can — the rewrite lands as a new
-            # snapshot while the scan keeps the old manifest, so no
-            # driver-side materialization barrier is needed at scale.
-            df = df.localCheckpoint(eager=True)
-        rewritten = df.repartitionByRange(*sort_cols).sortWithinPartitions(
-            *sort_cols
+        rewritten = (
+            self.fmt.read(target)
+            .repartitionByRange(*sort_cols)
+            .sortWithinPartitions(*sort_cols)
         )
         self.fmt.create_or_replace(rewritten, target, properties=props)
 
@@ -457,9 +298,7 @@ class Lakehouse:
         """
         target = f"{SRC_NS}.{table}"
         props = self._carry_ingest_props(target)
-        df = self.fmt.read(self.spark, target)
-        if not self.fmt.mvcc:
-            df = df.localCheckpoint(eager=True)
+        df = self.fmt.read(target)
         qs = [i / (1 << bits) for i in range(1, 1 << bits)]
         row = df.agg(
             F.percentile_approx(col_a, qs, 10_000).alias("ba"),
@@ -468,9 +307,9 @@ class Lakehouse:
         if row["ba"] is None or row["bb"] is None:
             # empty table / all-NULL cluster column: there is no
             # distribution to z-order by — rewrite is a no-op, like
-            # compact()/optimize_layout on the same inputs (r7
-            # review: _quantile_bucket iterated None and crashed
-            # with an obscure TypeError).
+            # compact()/optimize_layout on the same inputs
+            # (_quantile_bucket would iterate None and crash with an
+            # obscure TypeError).
             return
         z = zorder_key(
             _quantile_bucket(F.col(col_a), row["ba"]),
@@ -521,10 +360,13 @@ def main(argv: list[str] | None = None) -> int:
     """CLI mirroring the reference's entry point (README.md:56-61):
 
         python -m lakehouse_homeserver_spark.sources.ingest \\
-            <table> <full|incremental> [landing_dir] [--format parquet|json|csv]
+            <table> <full|incremental> [landing_dir] [--format parquet|json|csv] \\
+            [--warehouse DIR]
 
     Same contract: empty source → clean exit 0 (:141-143); any error →
     traceback + exit 1 (:176-180); per-load snapshot GC (:167-171).
+    Cross-run state is the commit log under `--warehouse` (default
+    `./warehouse`, the reference's warehouse mount point).
     """
     import argparse
     import traceback
@@ -536,21 +378,17 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("load_type", choices=["full", "incremental"])
     p.add_argument("landing_dir", nargs="?", default="./landing")
     p.add_argument("--format", default="parquet", choices=["parquet", "json", "csv"])
+    p.add_argument("--warehouse", default="./warehouse")
     args = p.parse_args(argv)
 
-    # Persistent catalog for cross-run state (the reference uses a
-    # REST catalog + Postgres for the same reason, extract_load.py:42-46):
-    # Spark's default in-memory catalog forgets tables between CLI
-    # invocations while their warehouse dirs survive -> re-runs would
-    # hit LOCATION_ALREADY_EXISTS. Hive catalogImplementation persists
-    # the metastore (local Derby) next to the warehouse.
-    spark = get_spark(
-        app_name=f"ingest-{args.table}",
-        extra_conf={"spark.sql.catalogImplementation": "hive"},
-    )
+    spark = get_spark(app_name=f"ingest-{args.table}")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        lh = Lakehouse(spark, source_format=args.format)
+        lh = Lakehouse(
+            spark,
+            SnapshotFormat(spark, os.path.abspath(args.warehouse)),
+            source_format=args.format,
+        )
         if args.load_type == "full":
             n = lh.load_full(args.table, args.landing_dir)
         else:

@@ -15,6 +15,11 @@ warehouse. Two lifetimes, both under ``tempfile.gettempdir()``:
   deterministic, so a fixture built by any process is valid; a keyed
   fixture folds a fingerprint of its source table into its name, so a
   regenerated dataset gets a fresh build and the stale one is removed.
+  ``catalog_table`` puts a session catalog table over a keyed fixture.
+
+Catalog tables are always external: their files live in a fixture or
+in scratch, never under ``spark.sql.warehouse.dir``, whose managed
+locations outlive the in-memory catalog that owns them.
 
 Importing this module creates nothing.
 """
@@ -158,3 +163,62 @@ def fixture(
                         os.path.join(FIXTURES, entry), ignore_errors=True
                     )
     return path
+
+
+def save_table(df, table: str, path: str, bucket_key: str | None = None) -> str:
+    """Write `df` as parquet at `path` and register it as the external
+    catalog table `table`, bucketed and sorted by `bucket_key` into 8
+    buckets when given (bucketed writes need a catalog table)."""
+    w = df.write.mode("overwrite").option("path", path)
+    if bucket_key:
+        w = w.bucketBy(8, bucket_key).sortBy(bucket_key)
+    w.saveAsTable(table)
+    return table
+
+
+def catalog_table(
+    spark,
+    name: str,
+    df: Callable,
+    source: tuple[str, str],
+    bucket_key: str | None = None,
+    analyze: bool = False,
+) -> str:
+    """A catalog table over the keyed fixture `fixture(name, …, source)`,
+    whose files `df()` writes once. The table is named after the
+    fixture directory, so a second dataset with the same basename gets
+    its own build and never resolves to the first one's table.
+
+    The catalog is per session: a session that lacks the table
+    registers it over the fixture's files (and, with `analyze`,
+    computes column statistics for the cost-based optimizer)."""
+
+    def build(path: str) -> None:
+        # Bucketed writes need a catalog table. Drop it again (external:
+        # the files stay) so this session registers it below, the same
+        # way every other session does.
+        table = save_table(df(), _table_name(path), path, bucket_key)
+        spark.sql(f"DROP TABLE {table}")
+
+    path = fixture(name, build, source)
+    table = _table_name(path)
+    if not spark.catalog.tableExists(table):
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in df().schema
+        )
+        buckets = (
+            f" CLUSTERED BY ({bucket_key}) SORTED BY ({bucket_key}) INTO 8 BUCKETS"
+            if bucket_key
+            else ""
+        )
+        spark.sql(
+            f"CREATE TABLE {table} ({cols}) USING PARQUET{buckets}"
+            f" LOCATION '{path}'"
+        )
+        if analyze:
+            spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR ALL COLUMNS")
+    return table
+
+
+def _table_name(path: str) -> str:
+    return re.sub(r"\W", "_", os.path.basename(path))

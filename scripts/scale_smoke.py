@@ -8,9 +8,9 @@ across copies; the salt token is appended, leaving the original
 5-gram/shingle structure intact.
 
 Usage: python scripts/scale_smoke.py [copies]   (default 10)
-Writes nothing to the repo: the clones and the Spark warehouse land in
-one `lakehouse-scale-*` temp dir, kept for reuse (printed at the end
-of the build).
+Writes nothing to the repo: the clones land in one `lakehouse-scale-*`
+temp dir, kept for reuse (printed at the end of the build); c12's
+bucketed tables are workspace fixtures keyed by the clones.
 """
 
 from __future__ import annotations
@@ -291,11 +291,7 @@ def main() -> None:
     )
     if not reuse:
         scaled = tempfile.mkdtemp(prefix="lakehouse-scale-")
-    # The warehouse lives beside the clones, so tables written from
-    # them (bucketed c10 tables) go when the clone dir is removed.
-    spark = get_spark(
-        extra_conf={"spark.sql.warehouse.dir": os.path.join(scaled, "warehouse")}
-    )
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     if reuse:
         print(f"reusing scaled clones at {scaled}")

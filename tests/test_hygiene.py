@@ -40,6 +40,21 @@ def test_package_tmp_dirs_come_from_workspace():
     assert not bad, "temp dirs outside workspace.py: " + ", ".join(bad)
 
 
+def test_package_catalog_tables_come_from_workspace():
+    """Catalog tables are external tables over workspace fixtures or
+    scratch (`workspace.save_table` / `catalog_table`). A managed
+    table, a database or a metastore elsewhere in the package puts
+    files under `spark.sql.warehouse.dir`, which outlive the
+    in-memory catalog that owns them."""
+    bad = _package_hits(
+        r"saveAsTable\(|spark\.sql\.warehouse\.dir|catalogImpl"
+        r"|CREATE DATABASE",
+        re.IGNORECASE,
+        skip=("workspace.py",),
+    )
+    assert not bad, "catalog state outside workspace.py: " + ", ".join(bad)
+
+
 def test_package_has_no_map_in_pandas():
     """One map path across the Python boundary: map kernels go
     through `map_rows` / `mapInArrow`, and pandas is used only for

@@ -1,16 +1,19 @@
 """Ingestion-semantics unit tests (SURVEY.md §5.4) — the reference's
-contract replicated: full-load replaces, incremental appends only
-unseen files, empty source is a no-op, bookkeeping round-trips,
-re-runs are idempotent."""
+contract replicated on the snapshot log: full-load replaces,
+incremental appends only unseen files, empty source is a no-op,
+bookkeeping rides inside each commit, re-runs are idempotent."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
-from lakehouse_homeserver_spark.sources.ingest import Lakehouse
+from lakehouse_homeserver_spark.sources.ingest import Lakehouse, SnapshotFormat
+from lakehouse_homeserver_spark.sources.snapshot import SnapshotNotFound
 
 
 @pytest.fixture()
@@ -30,13 +33,25 @@ def landing(tmp_path, spark, sf_dir):
 
 
 @pytest.fixture()
-def lh(spark, tmp_path_factory):
-    lh = Lakehouse(spark)
-    yield lh
-    for t in spark.catalog.listTables("src"):
-        spark.sql(f"DROP TABLE IF EXISTS src.{t.name}")
-    for t in spark.catalog.listTables("metadata"):
-        spark.sql(f"DROP TABLE IF EXISTS metadata.{t.name}")
+def landing3(tmp_path, spark, sf_dir):
+    """nation split into 3 landing files by n_nationkey % 3."""
+    d = tmp_path / "landing" / "nation"
+    d.mkdir(parents=True)
+    df = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    for i in range(3):
+        out = tmp_path / f"p{i}"
+        df.filter(F.col("n_nationkey") % 3 == i).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(out))
+        src = next(f for f in os.listdir(out) if f.endswith(".parquet"))
+        shutil.copy(out / src, d / f"batch_{i}.parquet")
+        os.utime(d / f"batch_{i}.parquet", (1000 + i, 1000 + i))
+    return str(tmp_path / "landing")
+
+
+@pytest.fixture()
+def lh(spark, tmp_path):
+    return Lakehouse(spark, SnapshotFormat(spark, str(tmp_path / "wh")))
 
 
 def _counts(spark, landing):
@@ -62,11 +77,16 @@ def test_incremental_appends_only_unseen(spark, lh, landing):
     n1 = lh.load_incremental("lineitem", landing)
     assert n1 == total
     assert lh.table("lineitem").count() == total
-    # idempotent re-run: nothing new
+    # Bookkeeping is derived from commit properties, not a side table.
+    src_dir = os.path.join(landing, "lineitem")
+    assert sorted(r.file_path for r in lh.loaded_files("lineitem").collect()) == [
+        os.path.join(src_dir, f"batch_{i}.parquet") for i in range(3)
+    ]
+    # idempotent re-run: nothing new, no new snapshot
     assert lh.load_incremental("lineitem", landing) == 0
     assert lh.table("lineitem").count() == total
+    assert len(lh.fmt.history("src.lineitem")) == 1
     # drop a new file → only it is appended
-    src_dir = os.path.join(landing, "lineitem")
     first = sorted(os.listdir(src_dir))[0]
     new = os.path.join(src_dir, "batch_new.parquet")
     shutil.copy(os.path.join(src_dir, first), new)
@@ -82,16 +102,18 @@ def test_empty_source_is_noop(spark, lh, tmp_path):
     empty.mkdir()
     assert lh.load_full("nothing", str(empty)) == 0
     assert lh.load_incremental("nothing", str(empty)) == 0
-    assert not spark.catalog.tableExists("src.nothing")
+    assert not lh.fmt.exists("src.nothing")
 
 
-def test_expire_snapshots_is_safe_and_table_survives(spark, lh, landing):
-    """A10 maintenance seam: expire_snapshots after a load must not
-    disturb the table (no-op on plain parquet; VACUUM with Delta)."""
-    n = lh.load_full("lineitem", landing)
-    assert n > 0
-    lh.expire_snapshots("lineitem", retain_days=3)
-    assert lh.table("lineitem").count() == n
+def test_expire_snapshots_is_safe_and_table_survives(spark, lh, landing3):
+    """A10 maintenance: expiry after a load keeps the current state
+    and drops the expired versions."""
+    lh.load_incremental("nation", landing3)
+    lh.load_full("nation", landing3)
+    lh.expire_snapshots("nation", retain_days=1)
+    assert lh.table("nation").count() == 8
+    with pytest.raises(SnapshotNotFound):
+        lh.table_at("nation", 1)
 
 
 def test_full_then_incremental_roundtrip(spark, lh, landing):
@@ -107,25 +129,24 @@ def test_full_then_incremental_roundtrip(spark, lh, landing):
     assert lh.load_incremental("lineitem", landing) == 0
 
 
-def test_compact_preserves_rows_and_reduces_files(spark, lh, landing):
-    import glob as g
+def _live_files(lh, table: str) -> list[dict]:
+    """The data files the table's current manifest lists."""
+    return lh.fmt._table(f"src.{table}").files()
 
+
+def test_compact_preserves_rows_and_reduces_files(spark, lh, landing):
     lh.load_full("lineitem", landing)
     added = lh.load_incremental("lineitem", landing)
     assert added > 0
     n_before = lh.table("lineitem").count()
-    loc = (
-        spark.sql("DESCRIBE TABLE EXTENDED src.lineitem")
-        .filter("col_name = 'Location'")
-        .collect()[0][1]
-    ).replace("file:", "")
-    files_before = len(g.glob(os.path.join(loc, "*.parquet")))
+    files_before = len(_live_files(lh, "lineitem"))
+    assert files_before > 1
     n = lh.compact("lineitem", target_files=1)
-    files_after = len(g.glob(os.path.join(loc, "*.parquet")))
     assert n == n_before
     assert lh.table("lineitem").count() == n_before
-    assert files_after <= files_before
-    assert files_after == 1
+    assert len(_live_files(lh, "lineitem")) == 1
+    # Compaction is a new snapshot; pre-compaction state is preserved.
+    assert lh.table_at("lineitem", 1).count() == n_before - added
 
 
 def test_optimize_layout_sorts_and_preserves(spark, lh, landing):
@@ -141,25 +162,72 @@ def test_optimize_layout_sorts_and_preserves(spark, lh, landing):
     assert any("l_shipdate" in p for p in pushed_filters(q))
 
 
-def test_tableformat_create_uses_writer_v2(spark, tmp_path):
-    """A7 through the REAL DataFrameWriterV2 verb: create() must make a
-    catalog table readable by name, and a second create() must fail
-    with Spark's V2 table-exists analysis error (proving the call went
-    through writeTo().create(), which has create-exclusive semantics,
-    not saveAsTable overwrite)."""
-    import pytest
-    from pyspark.errors import AnalysisException
+def test_maintenance_rewrite_keeps_ingest_bookkeeping(spark, lh, landing3):
+    """compact()/optimize_layout() issue replacing commits, and a
+    replacing commit resets the loaded-file set derived from commit
+    properties. Without carrying the set forward, the next
+    load_incremental re-ingests every loaded file and silently
+    duplicates rows. The maintenance commit must carry it."""
+    assert lh.load_incremental("nation", landing3) == 25
+    assert lh.compact("nation", target_files=1) == 25
+    # Bookkeeping survives the replacing maintenance commit...
+    assert lh.loaded_files("nation").count() == 3
+    # ...so an incremental re-run is still a 0-row no-op, no dupes.
+    assert lh.load_incremental("nation", landing3) == 0
+    assert lh.table("nation").count() == 25
+    # Same through the sorted-rewrite path.
+    lh.optimize_layout("nation", ["n_nationkey"])
+    assert lh.loaded_files("nation").count() == 3
+    assert lh.load_incremental("nation", landing3) == 0
+    assert lh.table("nation").count() == 25
+    # A genuinely new landing file still flows in afterwards.
+    src_dir = os.path.join(landing3, "nation")
+    shutil.copy(
+        os.path.join(src_dir, "batch_0.parquet"),
+        os.path.join(src_dir, "batch_3.parquet"),
+    )
+    n2 = lh.load_incremental("nation", landing3)
+    assert n2 > 0
+    assert lh.table("nation").count() == 25 + n2
 
-    from lakehouse_homeserver_spark.sources.ingest import TableFormat
 
-    fmt = TableFormat()
-    spark.sql("DROP TABLE IF EXISTS default.v2_create_probe")
-    df = spark.range(7).toDF("id")
-    fmt.create(df, "default.v2_create_probe")
-    assert spark.table("default.v2_create_probe").count() == 7
-    with pytest.raises(AnalysisException):
-        fmt.create(df, "default.v2_create_probe")
-    spark.sql("DROP TABLE IF EXISTS default.v2_create_probe")
+def test_snapshot_ingest_crash_between_data_and_bookkeeping(
+    spark, lh, landing3
+):
+    """Data and bookkeeping are one commit: a crash during publish
+    records NOTHING, so the re-run loads every file exactly once (a
+    two-step write, like the reference's read-modify-write
+    bookkeeping, double-loads on re-run)."""
+    orig_link = os.link
+    calls = {"n": 0}
+
+    def crash_once(src, dst, **kw):
+        calls["n"] += 1
+        raise OSError("injected crash mid-commit")
+
+    os.link = crash_once
+    try:
+        with pytest.raises(Exception, match="injected|commit"):
+            lh.load_incremental("nation", landing3)
+    finally:
+        os.link = orig_link
+    assert calls["n"] >= 1
+    # Nothing visible, nothing bookkept...
+    assert lh.loaded_files("nation").count() == 0
+    # ...so the retry ingests all 25 rows exactly once, never twice.
+    assert lh.load_incremental("nation", landing3) == 25
+    assert lh.table("nation").count() == 25
+    assert lh.load_incremental("nation", landing3) == 0
+
+
+def test_snapshot_ingest_full_load_and_time_travel(spark, lh, landing3):
+    lh.load_incremental("nation", landing3)
+    lh.load_full("nation", landing3)  # newest file replaces
+    assert lh.table("nation").count() == 8  # keys ≡ 2 mod 3 in 0..24
+    # v1 (the incremental load) is still readable as-of.
+    assert lh.table_at("nation", 1).count() == 25
+    ops = [e["operation"] for e in lh.fmt.history("src.nation")]
+    assert ops == ["create", "overwrite"]
 
 
 def test_observation_metrics_ride_the_job(spark, sf_dir):
@@ -246,69 +314,62 @@ def json_landing(tmp_path, spark, sf_dir):
     return str(tmp_path / "landing"), len(rows), half
 
 
-def _plant_orphan(spark, table: str) -> str:
-    """Leave `table`'s managed location behind with no catalog entry
-    — what a killed run or a lost Derby metastore leaves — holding
-    one stale parquet file (n_nationkey 999)."""
-    db, name = table.split(".")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = spark.catalog.getDatabase(db).locationUri.rstrip("/") + "/" + name
-    spark.createDataFrame(
-        [(999, "STALE", 0, "stale")],
-        "n_nationkey long, n_name string, n_regionkey long, n_comment string",
-    ).coalesce(1).write.mode("overwrite").parquet(loc)
-    return loc
-
-
 def test_json_landing_full_and_incremental(spark, json_landing, tmp_path):
-    """A5/A6 over a JSONL landing zone: the format seam changes the
+    """A5/A6 over a JSONL landing zone: the landing format changes the
     codec, not the load semantics — full load takes the newest file,
-    incremental appends only unseen files and re-runs are no-ops.
-    Hermetic: an orphaned warehouse location for the table is planted
-    first and must not change the outcome."""
+    incremental appends only unseen files and re-runs are no-ops."""
     landing, total, half = json_landing
-    _plant_orphan(spark, "src.nation")
-    lh = Lakehouse(spark, source_format="json")
-    try:
-        n_full = lh.load_full("nation", landing)
-        assert n_full == total - half  # newest file = second chunk
-        # full load recorded its file; incremental appends only the
-        # still-unseen first chunk
-        n_inc = lh.load_incremental("nation", landing)
-        assert n_inc == half
-        assert lh.table("nation").count() == total
-        assert lh.load_incremental("nation", landing) == 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS src.nation")
-        spark.sql("DROP TABLE IF EXISTS metadata.nation_loaded_files")
+    lh = Lakehouse(
+        spark, SnapshotFormat(spark, str(tmp_path / "wh")), source_format="json"
+    )
+    n_full = lh.load_full("nation", landing)
+    assert n_full == total - half  # newest file = second chunk
+    # full load recorded its file; incremental appends only the
+    # still-unseen first chunk
+    n_inc = lh.load_incremental("nation", landing)
+    assert n_inc == half
+    assert lh.table("nation").count() == total
+    assert lh.load_incremental("nation", landing) == 0
+
+
+def _plant_leftovers(table_dir: str) -> None:
+    """What a killed writer leaves in a table directory with no commit:
+    a stale data file (n_nationkey 999) and an uncommitted log entry
+    that names it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(table_dir, "data"))
+    os.makedirs(os.path.join(table_dir, "_log"))
+    pq.write_table(
+        pa.table({"n_nationkey": [999], "n_name": ["STALE"]}),
+        os.path.join(table_dir, "data", "stale.parquet"),
+    )
+    with open(os.path.join(table_dir, "_log", ".tmp-killed.json"), "w") as fh:
+        json.dump({"version": 1, "manifest": ["stale.parquet"]}, fh)
 
 
 def test_orphaned_location_is_replaced_not_read(spark, sf_dir, tmp_path):
-    """A managed location with no catalog entry (killed run, lost
-    metastore) must not break CREATE with LOCATION_ALREADY_EXISTS,
-    and none of its stale files may be read: the table holds exactly
-    the loaded rows. Covers both creating verbs, full and
-    incremental, and the orphaned bookkeeping table."""
+    """A table directory holding a killed run's stale data file and
+    uncommitted log entry must not change a load: the table holds
+    exactly the loaded rows and `loaded_files` exactly the landing
+    file. Covers both creating verbs, full and incremental."""
     d = tmp_path / "landing" / "nation"
     d.mkdir(parents=True)
     shutil.copy(f"{sf_dir}/nation.parquet", d / "batch_0.parquet")
     want = sorted(
         tuple(r) for r in spark.read.parquet(f"{sf_dir}/nation.parquet").collect()
     )
-    lh = Lakehouse(spark)
-    try:
-        for load in (lh.load_full, lh.load_incremental):
-            _plant_orphan(spark, "src.nation")
-            _plant_orphan(spark, "metadata.nation_loaded_files")
-            assert load("nation", str(tmp_path / "landing")) == len(want)
-            assert sorted(tuple(r) for r in lh.table("nation").collect()) == want
-            assert [r.file_path for r in lh.loaded_files("nation").collect()] == [
-                str(d / "batch_0.parquet")
-            ]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS src.nation")
-        spark.sql("DROP TABLE IF EXISTS metadata.nation_loaded_files")
+    for verb in ("full", "incremental"):
+        wh = tmp_path / f"wh-{verb}"
+        _plant_leftovers(str(wh / "src" / "nation"))
+        lh = Lakehouse(spark, SnapshotFormat(spark, str(wh)))
+        load = lh.load_full if verb == "full" else lh.load_incremental
+        assert load("nation", str(tmp_path / "landing")) == len(want)
+        assert sorted(tuple(r) for r in lh.table("nation").collect()) == want
+        assert [r.file_path for r in lh.loaded_files("nation").collect()] == [
+            str(d / "batch_0.parquet")
+        ]
 
 
 def test_csv_landing_incremental_roundtrip(spark, sf_dir, tmp_path):
@@ -321,31 +382,26 @@ def test_csv_landing_incremental_roundtrip(spark, sf_dir, tmp_path):
         fh.write("r_regionkey,r_name\n")
         for r in rows:
             fh.write(f"{r.r_regionkey},{r.r_name}\n")
-    lh = Lakehouse(spark, source_format="csv")
-    try:
-        assert lh.load_incremental("region", str(tmp_path / "landing")) == len(rows)
-        got = {
-            (r.r_regionkey, r.r_name) for r in lh.table("region").collect()
-        }
-        assert got == {(r.r_regionkey, r.r_name) for r in rows}
-        assert lh.load_incremental("region", str(tmp_path / "landing")) == 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS src.region")
-        spark.sql("DROP TABLE IF EXISTS metadata.region_loaded_files")
+    lh = Lakehouse(
+        spark, SnapshotFormat(spark, str(tmp_path / "wh")), source_format="csv"
+    )
+    assert lh.load_incremental("region", str(tmp_path / "landing")) == len(rows)
+    got = {(r.r_regionkey, r.r_name) for r in lh.table("region").collect()}
+    assert got == {(r.r_regionkey, r.r_name) for r in rows}
+    assert lh.load_incremental("region", str(tmp_path / "landing")) == 0
 
 
 def test_cli_entry_point_full_then_incremental(spark, sf_dir, tmp_path):
     """The literal reference entry point (README.md:56-61 runs
     `extract_load.py <table> <load_type>`): drive
-    `python -m lakehouse_homeserver_spark.sources.ingest` as a real
-    subprocess twice over one landing dir — a full load must exit 0
-    and report rows; an immediate incremental re-run must be the
-    clean no-new-data no-op (exit 0, :141-143 parity). Runs with
-    cwd=tmp_path so the CLI's Hive-metastore persistence (Derby
-    files, warehouse dir) lands in the sandbox, proving the CLI
-    works from ANY directory like the streaming-source tests do."""
-    import os
-    import shutil
+    `python -m lakehouse_homeserver_spark.sources.ingest` as real
+    subprocesses over one landing dir and one `--warehouse`. A full
+    load exits 0 and reports rows; an immediate incremental re-run is
+    the clean no-new-data no-op (exit 0, :141-143 parity); after a
+    new landing file, a third process appends only that file. The
+    commit log is the only cross-run state: it lands under
+    `--warehouse`, and the cwd gets no metastore, Derby log or Spark
+    warehouse."""
     import subprocess
     import sys
 
@@ -353,6 +409,9 @@ def test_cli_entry_point_full_then_incremental(spark, sf_dir, tmp_path):
     landing.mkdir(parents=True)
     src = os.path.join(sf_dir, "region.parquet")
     shutil.copy(src, landing / "batch0.parquet")
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    wh = tmp_path / "wh"
 
     env = dict(
         os.environ,
@@ -360,7 +419,7 @@ def test_cli_entry_point_full_then_incremental(spark, sf_dir, tmp_path):
     )
 
     def run(load_type):
-        return subprocess.run(
+        out = subprocess.run(
             [
                 sys.executable,
                 "-m",
@@ -368,46 +427,46 @@ def test_cli_entry_point_full_then_incremental(spark, sf_dir, tmp_path):
                 "region_cli",
                 load_type,
                 str(tmp_path / "landing"),
+                "--warehouse",
+                str(wh),
             ],
-            cwd=tmp_path,
+            cwd=cwd,
             env=env,
             capture_output=True,
             text=True,
             timeout=300,
         )
+        assert out.returncode == 0, out.stderr[-2000:]
+        return out.stdout
 
-    out = run("full")
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "loaded 5 rows (full)" in out.stdout, out.stdout
-    # incremental over the same landing state: the one file is already
-    # bookkept by the full load -> clean no-op via the anti-join
-    out2 = run("incremental")
-    assert out2.returncode == 0, out2.stderr[-2000:]
-    assert "no new data" in out2.stdout, out2.stdout
+    assert "loaded 5 rows (full)" in run("full")
+    # the one file is already in the log's loaded-file set -> no-op
+    assert "no new data" in run("incremental")
+    shutil.copy(src, landing / "batch1.parquet")
+    assert "loaded 5 rows (incremental)" in run("incremental")
+
+    lh = Lakehouse(spark, SnapshotFormat(spark, str(wh)))
+    assert lh.table("region_cli").count() == 10
+    assert sorted(
+        r.file_path for r in lh.loaded_files("region_cli").collect()
+    ) == [str(landing / "batch0.parquet"), str(landing / "batch1.parquet")]
+    assert os.path.isdir(wh / "src" / "region_cli" / "_log")
+    assert sorted(os.listdir(cwd)) == []
 
 
-def test_expiry_preserves_incremental_bookkeeping(spark, landing, tmp_path):
-    """Regression (r7 review): `ingested_files` derives from commit
-    properties, and snapshot expiry used to DELETE old commits'
-    properties with them — the next incremental then silently
-    re-ingested those files as duplicate rows. expire_snapshots now
-    folds the expired prefix's bookkeeping into the oldest retained
-    entry."""
-    from lakehouse_homeserver_spark.sources.ingest import (
-        Lakehouse,
-        SnapshotFormat,
-    )
-
-    import shutil as _sh
-
-    fmt = SnapshotFormat(spark, str(tmp_path / "wh"))
-    lh = Lakehouse(spark, fmt=fmt)
+def test_expiry_preserves_incremental_bookkeeping(spark, lh, landing):
+    """`ingested_files` derives from commit properties, and snapshot
+    expiry used to DELETE old commits' properties with them — the
+    next incremental then silently re-ingested those files as
+    duplicate rows. expire_snapshots folds the expired prefix's
+    bookkeeping into the oldest retained entry."""
+    fmt = lh.fmt
     n1 = lh.load_incremental("lineitem", landing)  # commit 1: 3 files
     assert n1 > 0
     # a LATER landing file forces a SECOND commit, so expiry with
     # keep_last=1 really drops commit 1's bookkeeping properties
     d = os.path.join(landing, "lineitem")
-    _sh.copy(
+    shutil.copy(
         os.path.join(d, "batch_0.parquet"),
         os.path.join(d, "batch_3.parquet"),
     )
@@ -415,11 +474,11 @@ def test_expiry_preserves_incremental_bookkeeping(spark, landing, tmp_path):
     t = fmt._table("src.lineitem")
     assert len(t.versions()) >= 2
     before = lh.table("lineitem").count()
-    files_before = set(fmt.ingested_files(spark, "src.lineitem"))
+    files_before = set(fmt.ingested_files("src.lineitem"))
     assert len(files_before) == 4
     t.expire_snapshots(keep_last=1, orphan_grace_ms=0)
     assert len(t.versions()) == 1  # commit 1 really expired
-    assert set(fmt.ingested_files(spark, "src.lineitem")) == files_before
+    assert set(fmt.ingested_files("src.lineitem")) == files_before
     # the re-run must be a no-op, not a duplicate ingest
     n2 = lh.load_incremental("lineitem", landing)
     assert n2 == 0

@@ -152,3 +152,55 @@ def test_keyed_build_replaces_stale_fingerprint(tmp_path, monkeypatch):
     assert os.path.isdir(other_sf)  # another family sharing the prefix
     with pytest.raises(FileNotFoundError):
         workspace.fixture("tt", lambda d: None, source=(str(sf), "lineitem"))
+
+
+@pytest.fixture(scope="module")
+def same_basename_sf_dirs(tmp_path_factory, sf_dir):
+    """Two datasets named like `sf_dir`: a copy, and a copy without the
+    odd `o_orderkey` / `l_orderkey` rows."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    base = os.path.basename(sf_dir.rstrip("/"))
+    full = tmp_path_factory.mktemp("full") / base
+    half = tmp_path_factory.mktemp("half") / base
+    for d in (full, half):
+        d.mkdir()
+        for f in os.listdir(sf_dir):
+            t = pq.read_table(os.path.join(sf_dir, f))
+            key = {"orders.parquet": "o_orderkey", "lineitem.parquet": "l_orderkey"}
+            if d is half and f in key:
+                t = t.filter(pc.equal(pc.bit_wise_and(t[key[f]], 1), 0))
+            pq.write_table(t, d / f)
+    return str(full), str(half)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["c10_bucketed_join_read", "c12_sortfree_bucketed_join", "a53_cbo_join_reorder"],
+)
+def test_catalog_tables_follow_the_dataset(
+    name, spark, same_basename_sf_dirs, tmp_path, monkeypatch
+):
+    """The catalog-table queries read the dataset they are given: two
+    datasets with the same basename, run in one session, each match
+    their own oracle (a table keyed on the basename alone returns the
+    first dataset's rows for the second)."""
+    import duckdb
+
+    from lakehouse_homeserver_spark.registry import all_oracles, all_queries
+
+    monkeypatch.setattr(workspace, "FIXTURES", str(tmp_path / "fixtures"))
+    for d in same_basename_sf_dirs:
+        df = all_queries()[name](spark, d)
+        cols = sorted(df.columns)
+        got = sorted(tuple(r[c] for c in cols) for r in df.collect())
+        con = duckdb.connect()
+        for f in os.listdir(d):
+            con.execute(
+                f"CREATE VIEW {f.removesuffix('.parquet')} AS "
+                f"SELECT * FROM '{os.path.join(d, f)}'"
+            )
+        want = con.execute(all_oracles()[name]).df()[cols]
+        con.close()
+        assert got == sorted(want.itertuples(index=False, name=None)), d
