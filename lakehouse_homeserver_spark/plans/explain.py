@@ -50,9 +50,8 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or (
-        "BroadcastExchange" in formatted_plan(df)
-    )
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
 def assert_no_cartesian(df: DataFrame, allow_broadcast_nl: bool = False) -> None:

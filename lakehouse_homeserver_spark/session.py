@@ -161,6 +161,12 @@ def default_conf() -> dict[str, str]:
     }
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 16g, in MiB."""
+    phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, phys_mib // 2)}m"
+
+
 def get_spark(
     app_name: str = "lakehouse-homeserver-spark",
     master: str | None = None,
@@ -181,12 +187,14 @@ def get_spark(
         # In local mode ONE driver heap is the whole cluster; Spark's
         # 1g default starves 32 concurrent tasks (GC-locker stalls,
         # then OOM on array-heavy ops at 10x corpus in the scaling
-        # smoke). On a real cluster spark-submit owns this knob, so
-        # it is only set for self-built local sessions (static conf —
-        # must be set before the JVM starts).
+        # smoke). Half of physical memory, at most 16g, leaves room
+        # for a second JVM or an oracle process beside this one. On a
+        # real cluster spark-submit owns this knob, so it is only set
+        # for self-built local sessions (static conf — must be set
+        # before the JVM starts).
         conf.setdefault(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
         )
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -1,5 +1,5 @@
-"""Old-vs-new JPEG decoder fuzz (optimization r13 — the LZW-precedent
-harness VERDICT r12 #9 required before touching the Huffman loop).
+"""Old-vs-new JPEG decoder fuzz: the gate for any change to the
+Huffman decode loop, after the LZW decoder's precedent.
 
 Byte-compares the CURRENT decoder against the one at a given git rev:
 valid images (all three samplings, flat + noise content, random dims)

@@ -1,11 +1,11 @@
-"""Full oracle-parity sweep at ANY scale factor (r9).
+"""Full oracle-parity sweep at ANY scale factor.
 
 Runs every `queries()` entry against its `oracle_sql()` through DuckDB
 and compares the driver way (row count, sorted column names,
 order-insensitive repr with columns sorted by name) — the same check
 the driver harness performs at sf0.01, but pointable at any table
-directory. Running it at sf0.1 is the r9 addition that caught four
-latent cross-engine divergences the sf0.01 gate could never see
+directory. Running it at sf0.1 caught four latent cross-engine
+divergences the sf0.01 gate could never see
 (engine-specific ROUND at half-ties and sign-of-zero, decimal-cast
 accumulation drift in the PageRank loop, and an IVF recall bound that
 only held at the calibration SF). Protocol: run from any cwd (the
@@ -17,7 +17,7 @@ Usage:
     SPARK_GRAFT_PARITY_SF_DIR=/root/testdata/sf0.1 \
         python scripts/parity_sweep.py
 
-Third axis (r9): SPARK_GRAFT_PARITY_MASTER / SPARK_GRAFT_PARITY_PARTITIONS
+Third axis: SPARK_GRAFT_PARITY_MASTER / SPARK_GRAFT_PARITY_PARTITIONS
 override the session shape. Running with an ADVERSARIAL partition
 count (e.g. local[4] / 7 shuffle partitions) checks partition-count
 INVARIANCE: on a 1000-executor cluster every reduction runs at a
@@ -27,8 +27,8 @@ is a latent cluster bug even if both engines agree at local[16]/16.
 
 Exit 0 iff every compared query matches and none error. Unknown
 query names on the command line are an ERROR, not a silent no-op
-(r9 review: a misspelled name previously produced a passing sweep
-that compared nothing).
+(a misspelled name would otherwise produce a passing sweep that
+compared nothing).
 """
 
 from __future__ import annotations
@@ -58,6 +58,8 @@ TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
 ).split()
+# Driver heap of the engine child (see run_engine).
+DRIVER_MEM = "8g"
 
 
 def canon(pdf: pd.DataFrame) -> list[str]:
@@ -84,7 +86,7 @@ def canon(pdf: pd.DataFrame) -> list[str]:
             ):
                 v = v.date()
             if isinstance(v, float):
-                # FULL-precision compare (ADVICE r9 #3): the engine's
+                # FULL-precision compare: the engine's
                 # cross-engine contracts are bit-stability contracts
                 # (floor-forms, integer micro-units, in-query display
                 # rounding), so repr(float) must agree exactly — a
@@ -92,7 +94,7 @@ def canon(pdf: pd.DataFrame) -> list[str]:
                 # quantum (k9's 1e-12 micro-units) and could mask the
                 # exact sub-1e-9 drift class this sweep exists to
                 # catch. Sign of zero stays visible (that is how the
-                # r9 sweep caught h6).
+                # sf0.1 sweep caught h6).
                 v = None if math.isnan(v) else v
             vals.append(v)
         out.append(repr(tuple(vals)))
@@ -127,10 +129,7 @@ def run_engine(names: list[str]) -> dict[str, tuple | None]:
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_PARITY_PARTITIONS", "16"),
         )
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_PARITY_DRIVER_MEM", "8g"),
-        )
+        .config("spark.driver.memory", DRIVER_MEM)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,4 +1,4 @@
-"""Stream-startup profiler (optimization r13, VERDICT r12 next-round #3).
+"""Stream-startup profiler.
 
 Quantifies WHERE a streaming certificate's wall time goes, per stream:
 
@@ -12,13 +12,11 @@ plus the per-phase durationMs map of every progress event, so the
 addBatch / latestOffset / commitOffsets split is visible.
 
 Three synthetic probes isolate the per-stream floor by source type
-(file source, file source + foreachBatch, Python data source), then
-the real certificates (a29 / i12 / a30 / i10) run with the same
-instrumentation.
+(file source, file source + foreachBatch, Python data source).
 
 Usage:
     python scripts/profile_streams.py [probe ...]
-        probes: file file_feb pyds a29 i12 a30
+        probes: file file_feb pyds
 """
 
 from __future__ import annotations
@@ -32,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from lakehouse_homeserver_spark import obs  # noqa: E402
 from lakehouse_homeserver_spark.session import get_spark  # noqa: E402
 from lakehouse_homeserver_spark.workspace import scratch  # noqa: E402
 
@@ -140,14 +139,7 @@ def probe_pyds(spark) -> dict:
 def main() -> None:
     spark = get_spark(app_name="lakehouse-stream-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    # same warmup as bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.range(32_000).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
-    warm.mapInArrow(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    obs.warm_up(spark, SF_DIR)
 
     which = sys.argv[1:] or ["file", "file", "file_feb", "pyds", "pyds"]
     probes = {

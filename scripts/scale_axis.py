@@ -1,22 +1,32 @@
-"""Scale-evidence axis (optimization r13, VERDICT r12 next-round #5).
+"""Scale-evidence axis.
 
-At sf0.1 the whole bench is overhead-bound: the r12 driver's 8-core
-run was 1.01× its 32-core run, so the bench cannot evidence
-"scale-safe at 100 TB" for the heavy tail. This axis runs the
-slowest bench queries on a 10× scaled clone (scale_smoke's salted
-clones — documents/embeddings/events/orders/lineitem all scaled) at
-a LOW and a HIGH core count and records the ratio: data-bound
-queries must speed up ~linearly with cores at 10× volume; serial
-residues are named with their reason.
+At sf0.1 the whole bench is overhead-bound: an 8-core sweep ran at
+1.01× the 32-core one, so the bench cannot evidence "scale-safe at
+100 TB" for the heavy tail. This axis runs the slowest bench queries
+on a 10× scaled clone (scale_smoke's salted clones —
+documents/embeddings/events/orders/lineitem all scaled) at a LOW and
+a HIGH core count and records the ratio: data-bound queries must
+speed up ~linearly with cores at 10× volume; serial residues are
+named with their reason.
 
-Usage (two processes — Spark cannot change master in one JVM):
+Usage (one bench process per core count — Spark cannot change master
+in one JVM):
     python scripts/scale_axis.py build /tmp/lakehouse-scale10
-    SPARK_GRAFT_CPUS=8  python scripts/scale_axis.py run /tmp/lakehouse-scale10 out8.json  [query ...]
-    SPARK_GRAFT_CPUS=32 python scripts/scale_axis.py run /tmp/lakehouse-scale10 out32.json [query ...]
-    python scripts/scale_axis.py merge out8.json out32.json plans/r13/scale_axis.json
+    SPARK_GRAFT_CPUS=8  SPARK_GRAFT_SF_DIR=/tmp/lakehouse-scale10 \
+        python bench.py $QUERIES > out8.json
+    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/tmp/lakehouse-scale10 \
+        python bench.py $QUERIES > out32.json
+    python scripts/scale_axis.py merge /tmp/lakehouse-scale10 \
+        out8.json out32.json plans/r13/scale_axis.json
 
-Default query list: the heavy tail of plans/r13/bench_before_local.json
-that is exercisable on the clone (see DEFAULT_QUERIES).
+`merge` reads the two bench lines through their `cores` and
+`queries` keys. The committed artifact's $QUERIES are the heavy tail
+of plans/r13/bench_before_local.json, restricted to queries whose
+inputs build_scaled actually scales (a51/a52/a56 run on SF-invariant
+nation/region fixtures and would measure overhead):
+i12_stateful_session_timeout a29_stream_cdc_view k5_jpeg_decode
+k3_kmeans k3_ivfpq_search k2_ppjoin k5_media_near_dup k10_hybrid_rrf
+k8_bloom_decontaminate k9_cc_bigstar.
 """
 
 from __future__ import annotations
@@ -24,27 +34,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
-
-# Heavy tail of the r13 baseline bench, restricted to queries whose
-# inputs build_scaled actually scales (a51/a52/a56 run on
-# SF-invariant nation/region fixtures and would measure overhead).
-DEFAULT_QUERIES = [
-    "i12_stateful_session_timeout",
-    "a29_stream_cdc_view",
-    "k5_jpeg_decode",
-    "k3_kmeans",
-    "k3_ivfpq_search",
-    "k2_ppjoin",
-    "k5_media_near_dup",
-    "k10_hybrid_rrf",
-    "k8_bloom_decontaminate",
-    "k9_cc_bigstar",
-]
 
 
 def cmd_build(out_dir: str) -> None:
@@ -57,48 +50,26 @@ def cmd_build(out_dir: str) -> None:
     spark.stop()
 
 
-def cmd_run(sf_dir: str, out_path: str, names: list[str]) -> None:
-    from lakehouse_homeserver_spark.registry import all_queries
-    from lakehouse_homeserver_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name=f"scale-axis-{cpus}")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = spark.range(32_000).repartition(int(cpus))
-    warm.mapInArrow(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    queries = all_queries()
-    out = {"cpus": int(cpus), "sf_dir": sf_dir, "queries": {}}
-    for name in names or DEFAULT_QUERIES:
-        fn = queries[name]
-        spark.sparkContext.setJobDescription(f"scale-axis:{name}")
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        out["queries"][name] = round(time.perf_counter() - t0, 3)
-        spark.sparkContext.setJobDescription(None)
-        print(f"[{cpus}c] {name}: {out['queries'][name]}s", file=sys.stderr)
-    with open(out_path, "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-    print(out_path)
-    spark.stop()
+def _bench_line(path: str) -> dict:
+    """The JSON line `bench.py` printed into `path` (its last one)."""
+    with open(path) as fh:
+        lines = [ln for ln in fh if ln.startswith("{")]
+    if not lines:
+        raise SystemExit(f"{path}: no bench JSON line")
+    return json.loads(lines[-1])
 
 
-def cmd_merge(low_path: str, high_path: str, out_path: str) -> None:
-    with open(low_path) as fh:
-        low = json.load(fh)
-    with open(high_path) as fh:
-        high = json.load(fh)
-    core_ratio = low["cpus"] and high["cpus"] / low["cpus"]
+def cmd_merge(sf_dir: str, low_path: str, high_path: str, out_path: str) -> None:
+    low = _bench_line(low_path)
+    high = _bench_line(high_path)
+    core_ratio = high["cores"] / low["cores"]
     rows = {}
     for name, lo_sec in low["queries"].items():
         hi_sec = high["queries"].get(name)
         if hi_sec:
             rows[name] = {
-                f"sec_{low['cpus']}c": lo_sec,
-                f"sec_{high['cpus']}c": hi_sec,
+                f"sec_{low['cores']}c": lo_sec,
+                f"sec_{high['cores']}c": hi_sec,
                 "speedup_low_over_high": round(lo_sec / hi_sec, 2),
             }
     merged = {
@@ -108,7 +79,7 @@ def cmd_merge(low_path: str, high_path: str, out_path: str) -> None:
             "serial/driver-bound at this volume."
         ),
         "core_ratio": core_ratio,
-        "sf_dir": low["sf_dir"],
+        "sf_dir": sf_dir,
         "queries": rows,
     }
     with open(out_path, "w") as fh:
@@ -120,10 +91,8 @@ def main() -> None:
     cmd = sys.argv[1]
     if cmd == "build":
         cmd_build(sys.argv[2])
-    elif cmd == "run":
-        cmd_run(sys.argv[2], sys.argv[3], sys.argv[4:])
     elif cmd == "merge":
-        cmd_merge(sys.argv[2], sys.argv[3], sys.argv[4])
+        cmd_merge(*sys.argv[2:6])
     else:
         raise SystemExit(f"unknown command {cmd!r}")
 

@@ -1,9 +1,8 @@
-"""Relational/TPC-H/join/window/agg scale sweep at 10x clones
-(VERDICT r10 next-round #1).
+"""Relational/TPC-H/join/window/agg scale sweep at 10x clones.
 
-The corpus operators have had a standing 10x smoke since r3
-(`scale_smoke.py`); the RELATIONAL families' 100 TB story rested on
-plan arguments + the sf0.1 bench. This script runs the star-schema
+The corpus operators have a standing 10x smoke (`scale_smoke.py`);
+without this script the RELATIONAL families' 100 TB story would rest
+on plan arguments + the sf0.1 bench. This script runs the star-schema
 families on the same 10x clones (~6M lineitem / 15M orders rows) and
 asserts BOTH halves of the scale claim:
 
@@ -28,11 +27,10 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lakehouse_homeserver_spark import obs  # noqa: E402
 from lakehouse_homeserver_spark.plans import (  # noqa: E402
     assert_no_cartesian,
     formatted_plan,
@@ -41,7 +39,7 @@ from lakehouse_homeserver_spark.plans import (  # noqa: E402
 )
 from lakehouse_homeserver_spark.registry import all_queries  # noqa: E402
 from lakehouse_homeserver_spark.session import get_spark  # noqa: E402
-from scale_smoke import BASE_SF, build_scaled  # noqa: E402
+from scale_smoke import BASE_SF, scaled_clones  # noqa: E402
 
 # family -> ops. Everything here is volume-linear by design (no
 # output-volume-bound pair miners — those live in scale_smoke with
@@ -105,16 +103,15 @@ PLAN_FACTS = {
     "c8_salted_skew_join": ["no_cartesian"],
 }
 
-TIME_TOL = float(os.environ.get("SPARK_GRAFT_SCALE_TIME_TOL", "1.5"))
+TIME_TOL = 1.5
 
 # Ops whose 1x baseline may use a join strategy the scaled run cannot
 # (small build side broadcasts at 1x, becomes a shuffle join at Nx —
-# the legitimate flip VERDICT r11 #4 told us to adjudicate, not
-# suppress). When the wall ratio breaches the bound AND the plans
-# show a BroadcastHashJoin at 1x that is gone at Nx, the baseline is
-# re-measured with broadcast disabled (the 100 TB two-fact regime)
-# and the ratio recomputed against that strategy-normalized number;
-# both readings are printed.
+# a legitimate flip, to be adjudicated, not suppressed). When the wall
+# ratio breaches the bound AND the plans show a BroadcastHashJoin at
+# 1x that is gone at Nx, the baseline is re-measured with broadcast
+# disabled (the 100 TB two-fact regime) and the ratio recomputed
+# against that strategy-normalized number; both readings are printed.
 FLIP_ADJUDICATE = {"c8_salted_skew_join"}
 
 # Output/candidate-volume-bound ops: the clone methodology densifies
@@ -124,7 +121,7 @@ FLIP_ADJUDICATE = {"c8_salted_skew_join"}
 # keeps bucket density ~constant). The honest unit is cost per OUTPUT
 # pair; gate = per-pair cost must not grow beyond UNIT_TOL.
 OUTPUT_BOUND = {"c6_range_join_bucketized": "n_pairs"}
-UNIT_TOL = float(os.environ.get("SPARK_GRAFT_SCALE_UNIT_TOL", "2.0"))
+UNIT_TOL = 2.0
 
 
 def _output_units(df, col: str) -> int:
@@ -166,17 +163,7 @@ def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    scaled = os.environ.get("SPARK_GRAFT_SMOKE_SCALED_DIR")
-    if scaled and os.path.isdir(os.path.join(scaled, "lineitem.parquet")):
-        print(f"reusing scaled clones at {scaled}")
-    else:
-        scaled = tempfile.mkdtemp(prefix="lakehouse-scale-rel-")
-        t0 = time.time()
-        build_scaled(spark, scaled, copies)
-        print(
-            f"scaled clones at {scaled} ({time.time() - t0:.0f}s build; "
-            "reusable via SPARK_GRAFT_SMOKE_SCALED_DIR)"
-        )
+    scaled = scaled_clones(spark, copies)
     qs = all_queries()
     only = os.environ.get("SPARK_GRAFT_SMOKE_OPS")
     wanted = set(only.split(",")) if only else None
@@ -192,11 +179,7 @@ def main() -> None:
             times = []
             units = []
             for sf in (BASE_SF, scaled):
-                t0 = time.time()
-                qs[name](spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                times.append(time.time() - t0)
+                times.append(obs.run(spark, name, qs[name], sf)["sec"])
                 if name in OUTPUT_BOUND:
                     units.append(
                         _output_units(qs[name](spark, sf), OUTPUT_BOUND[name])
@@ -217,11 +200,7 @@ def main() -> None:
                         "spark.sql.autoBroadcastJoinThreshold", "-1"
                     )
                     try:
-                        t0 = time.time()
-                        qs[name](spark, BASE_SF).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        t_smj = time.time() - t0
+                        t_smj = obs.run(spark, name, qs[name], BASE_SF)["sec"]
                     finally:
                         spark.conf.set(
                             "spark.sql.autoBroadcastJoinThreshold", prev

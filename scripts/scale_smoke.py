@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from lakehouse_homeserver_spark import obs  # noqa: E402
 from lakehouse_homeserver_spark.registry import all_queries  # noqa: E402
 from lakehouse_homeserver_spark.session import get_spark  # noqa: E402
 from lakehouse_homeserver_spark.sources import load_table  # noqa: E402
@@ -45,36 +46,35 @@ OPS = [
     "k4_unigram_lm_score",
     "k3_pq_quantize",
     "k6_temperature_resample",
-    # round-2 additions: classifier/BPE/sketch/fuzzy families
+    # classifier/BPE/sketch/fuzzy families
     "k4_hashed_classifier",
     "k4_bpe_token_count",
     "d14_heavy_hitters",
     "d15_count_min",
     "c9_fuzzy_join",
     "k7_incremental_dedup",
-    # round-2 continued: retrieval / exact all-pairs / image hash
+    # retrieval / exact all-pairs / image hash
     "k10_bm25",
     "k10_inverted_index",
     "k2_ppjoin",
     "k5_ahash_near_dup",
     "k4_bigram_lm_score",
     "k4_gopher_rules",
-    # round-3 additions: clustering / bloom decon / substring dedup /
-    # alternating connected components
+    # clustering / bloom decon / substring dedup / alternating
+    # connected components
     "k3_kmeans",
     "k8_bloom_decontaminate",
     "k1_substr_dedup",
     "k9_cc_bigstar",
-    # round-5 additions (VERDICT r4 #8): the r4-landed families plus
-    # the r5-reworked SemDeDup (bounded trained codebook — the brief's
-    # done-criterion is a <=2x ratio here) and one ACID commit-path op
-    # (events/orders clones are scaled too, see build_scaled).
+    # dup-graph PageRank, pattern matching, SemDeDup (bounded trained
+    # codebook — its done-criterion is a <=2x ratio here), one ACID
+    # commit-path op and hybrid retrieval (events/orders clones are
+    # scaled too, see build_scaled).
     "k9_pagerank_dupgraph",
     "ts_pattern_match",
     "k3_semdedup",
     "a12_time_travel",
     "k10_hybrid_rrf",
-    # round-6 additions (VERDICT r5 #6): the r5/r6-landed certs.
     # i11/i12 read the 10x events clone (streaming dedup state /
     # sessionization state at 10x key volume); c12 rebuilds its
     # bucketed orders+lineitem tables from the 10x clones (does the
@@ -88,14 +88,13 @@ OPS = [
     "a51_ingest_lifecycle",
     "a52_catalog_persistence",
     "a56_catalog_resolved_scan",
-    # round-7 additions: ops whose scale posture changed this round —
-    # cohort retention lost its forced per-user broadcast (AQE
-    # decides now; does the 10x clone still plan sanely?) and
-    # temperature resample localCheckpoints its inventory (the rate
-    # chain must be corpus-free at 10x).
+    # cohort retention has no forced per-user broadcast (AQE decides;
+    # does the 10x clone still plan sanely?) and temperature resample
+    # localCheckpoints its inventory (the rate chain must be
+    # corpus-free at 10x).
     "ts_cohort_retention",
     "k6_temperature_resample",
-    # round-8 additions: the WAP commit path at 10x customers (clone/
+    # the WAP commit path at 10x customers (clone/
     # audit/cherry-pick cost must track the staged slice, not the
     # table), the leakage-free split (documents-scaled; its group
     # hashing must stay map-only), and gap-fill over 10x events (the
@@ -103,12 +102,12 @@ OPS = [
     "a22_wap_publish",
     "k6_leakage_free_split",
     "ts_gap_fill",
-    # round-10 addition: the real PNG codec round trip at 10x docs —
+    # the real PNG codec round trip at 10x docs —
     # encode+decode are chained map-only `map_rows` passes, so the
     # ratio must track the corpus (zlib+unfilter cost is per-image,
     # no shuffle anywhere).
     "k5_png_decode",
-    # round-11 additions: the baseline-JPEG round trip (same map-only
+    # the baseline-JPEG round trip (same map-only
     # shape, heavier per-image kernel — Huffman+IDCT in Python), the
     # real resize chain, the HTML extraction pass (pure JVM regex/HOF,
     # must scan-scale), and the mixed-format near-dup (output-volume
@@ -118,12 +117,12 @@ OPS = [
     "k5_resize_real",
     "k4_html_extract",
     "k5_media_near_dup",
-    # late-r11: the extract->gate composition (must stay scan-bound —
+    # the extract->gate composition (must stay scan-bound —
     # one fused map-only pass) and the MJPEG sampler (6-frame encode,
     # 3-frame decode per clip, executor-side fan-out).
     "k4_html_quality_pipeline",
     "k5_mjpeg_frames",
-    # late-r11 wave 2: the WARC container walk (gzip member split +
+    # the WARC container walk (gzip member split +
     # WARC/HTTP parse — the synthesis groupBy is SF-linear in record
     # count, the parse map-only), the container->extract->gate chain,
     # and the BMP / A-law codec certificates (both map-only
@@ -132,13 +131,13 @@ OPS = [
     "k4_cc_pipeline",
     "k5_bmp_decode",
     "k5_alaw_decode",
-    # late-r11 wave 3: the GIF/LZW round trip (map-only; LZW is
+    # the GIF/LZW round trip (map-only; LZW is
     # linear-time per image, so it must scan-scale like the others)
     # and the WebDataset shard round trip (synthesis groupBy is
     # SF-linear in pair count; parse+decode map-only per shard).
     "k5_gif_decode",
     "k5_webdataset_shard",
-    # late-r11 wave 4: container-driven G.711 dispatch (map-only;
+    # container-driven G.711 dispatch (map-only;
     # per-byte bit formula after the RIFF walk) and Unicode NFC
     # normalization (per-row `map_rows` kernel, scan-bound).
     "k5_wav_g711_decode",
@@ -168,14 +167,14 @@ def build_scaled(spark, out_dir: str, copies: int) -> None:
     for p in e_parts[1:]:
         e0 = e0.unionByName(p)
     e0.write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
-    # events/orders scale too (r5): ts_* ops read events and the ACID
+    # events/orders scale too: ts_* ops read events and the ACID
     # commit-path ops read orders — without cloning these, their 10×
     # "ratio" would measure an unscaled input. user_id/o_orderkey
     # offsets are multiples of 10 and of the demo-slice moduli where
     # it matters (%10 filters), so per-copy row volumes stay ~equal.
     events = load_table(spark, BASE_SF, "events")
     orders = load_table(spark, BASE_SF, "orders")
-    # lineitem scales with orders (r6: c12 joins the two bucketed) —
+    # lineitem scales with orders (c12 joins the two bucketed) —
     # the SAME o_orderkey offset per copy keeps join keys aligned, so
     # cloned orders still find their lineitems.
     lineitem = load_table(spark, BASE_SF, "lineitem")
@@ -206,7 +205,7 @@ def build_scaled(spark, out_dir: str, copies: int) -> None:
     for p in l_parts[1:]:
         l0 = l0.unionByName(p)
     l0.write.mode("overwrite").parquet(f"{out_dir}/lineitem.parquet")
-    # customer scales too (r8): the WAP commit-path cert (a22) stages
+    # customer scales too: the WAP commit-path cert (a22) stages
     # and publishes customer SLICES — without cloning, its 10× ratio
     # measured an unscaled input. The offset is a multiple of 3 so the
     # %3 slice volumes stay exactly equal per copy. (Cloned customers
@@ -236,7 +235,7 @@ def build_scaled(spark, out_dir: str, copies: int) -> None:
         )
 
 
-# Output-volume-bound ops (VERDICT r6 next-round #7): their wall-time
+# Output-volume-bound ops: their wall-time
 # ratio at 10x legitimately exceeds 10 because the OUTPUT (near-dup
 # pairs / component rows on a 68x-edge graph) grows superlinearly with
 # the corpus — so the scaling fact worth asserting is cost PER EMITTED
@@ -249,18 +248,18 @@ UNIT_OPS = {
     "k5_ahash_near_dup",
     "k9_cc_bigstar",
     "k6_leakage_free_split",
-    # r9: ppjoin's wall-clock swings 2-4x across rounds (10.2 -> 21-26
-    # -> 10.5 s at 10x this round alone) and every round explains it
-    # with the same prose ("tracks true-pair volume"); per-PAIR cost
-    # makes that claim mechanical the way it already is for ahash/cc.
+    # ppjoin's wall-clock has swung 2-4x between runs (10.2 -> 21-26
+    # -> 10.5 s at 10x), each time explained by the same prose
+    # ("tracks true-pair volume"); per-PAIR cost makes that claim
+    # mechanical the way it already is for ahash/cc.
     "k2_ppjoin",
-    # r11: the mixed PNG/JPEG corpus near-dup — JPEG docs hash into a
+    # the mixed PNG/JPEG corpus near-dup — JPEG docs hash into a
     # 2^16-structured space (16 quadrant bits x4 replication), so
     # true-pair volume grows ~quadratically with corpus size; total
     # wall time legitimately exceeds 10x while per-pair cost must not.
     "k5_media_near_dup",
 }
-UNIT_TOL = float(os.environ.get("SPARK_GRAFT_SMOKE_UNIT_TOL", "1.5"))
+UNIT_TOL = 1.5
 
 
 def _unit_count(name: str, spark, sf_dir: str) -> int:
@@ -277,27 +276,36 @@ def _unit_count(name: str, spark, sf_dir: str) -> int:
     return all_queries()[name](spark, sf_dir).count()
 
 
+def scaled_clones(spark, copies: int) -> str:
+    """The clone dir both scale scripts run on. SPARK_GRAFT_SMOKE_SCALED_DIR
+    reuses an already-built one — the quiet-box protocol (SCALE.md):
+    re-measure an in-sequence outlier in a FRESH PROCESS without paying
+    the clone build:
+      SPARK_GRAFT_SMOKE_SCALED_DIR=<dir> \
+      SPARK_GRAFT_SMOKE_OPS=<op> python scripts/scale_smoke.py
+    Otherwise `copies` clones are built into a new `lakehouse-scale-*`
+    temp dir, which is kept and printed for exactly this reuse."""
+    scaled = os.environ.get("SPARK_GRAFT_SMOKE_SCALED_DIR")
+    if scaled and all(
+        os.path.isdir(os.path.join(scaled, f"{t}.parquet")) for t in TABLES
+    ):
+        print(f"reusing scaled clones at {scaled}")
+        return scaled
+    scaled = tempfile.mkdtemp(prefix="lakehouse-scale-")
+    t0 = time.time()
+    build_scaled(spark, scaled, copies)
+    print(
+        f"scaled clones at {scaled} ({time.time() - t0:.0f}s build; "
+        "reusable via SPARK_GRAFT_SMOKE_SCALED_DIR)"
+    )
+    return scaled
+
+
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    # SPARK_GRAFT_SMOKE_SCALED_DIR reuses an already-built clone dir —
-    # the quiet-box protocol (SCALE.md): re-measure an in-sequence
-    # outlier in a FRESH PROCESS without paying the clone build:
-    #   SPARK_GRAFT_SMOKE_SCALED_DIR=<dir> \
-    #   SPARK_GRAFT_SMOKE_OPS=<op> python scripts/scale_smoke.py
-    # (the full run prints its scaled dir for exactly this reuse).
-    scaled = os.environ.get("SPARK_GRAFT_SMOKE_SCALED_DIR")
-    reuse = bool(scaled) and os.path.isdir(
-        os.path.join(scaled, "documents.parquet")
-    )
-    if not reuse:
-        scaled = tempfile.mkdtemp(prefix="lakehouse-scale-")
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    if reuse:
-        print(f"reusing scaled clones at {scaled}")
-    else:
-        build_scaled(spark, scaled, copies)
-        print(f"scaled clones at {scaled} (reusable via SPARK_GRAFT_SMOKE_SCALED_DIR)")
+    scaled = scaled_clones(spark, copies)
     qs = all_queries()
     # SPARK_GRAFT_SMOKE_OPS=a,b,c re-measures a subset without paying
     # for the full sweep (the clone build is shared either way).
@@ -312,11 +320,7 @@ def main() -> None:
             reps = 3 if name in UNIT_OPS else 1
             best = float("inf")
             for _ in range(reps):
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.time() - t0)
+                best = min(best, obs.run(spark, name, qs[name], sf_dir)["sec"])
             times.append(best)
             if name in UNIT_OPS:
                 rows.append(_unit_count(name, spark, sf_dir))

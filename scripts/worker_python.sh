@@ -1,6 +1,6 @@
 #!/bin/sh
-# Spark Python-worker interpreter shim (optimization r13, guide §4 —
-# the JVM↔Python boundary; VERDICT r12 next-round #3).
+# Spark Python-worker interpreter shim: cuts the per-spawn cost of
+# crossing the JVM↔Python boundary.
 #
 # PythonWorkerFactory prepends $SPARK_HOME/python/lib/pyspark.zip to
 # every worker process's PYTHONPATH, so a FRESHLY SPAWNED worker

@@ -62,9 +62,9 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     # This session shares the box with the parity-sweep subprocesses
     # (tests/test_parity_gate.py, 8g driver heap each). With get_spark's
-    # 16g local default the two JVMs can outgrow a 16 GB box, and the
-    # kernel's OOM killer then takes this one mid-suite; a third of
-    # physical memory keeps the pair inside it.
+    # local default (half of physical memory) the two JVMs can outgrow
+    # a 16 GB box, and the kernel's OOM killer then takes this one
+    # mid-suite; a third of physical memory keeps the pair inside it.
     phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     s = get_spark(
         app_name="lakehouse-tests",
