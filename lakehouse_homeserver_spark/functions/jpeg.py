@@ -153,7 +153,7 @@ def _build_codes(bits, huffval):
 
 def _build_decode(bits, huffval):
     """(BITS, HUFFVAL) -> (maxcode, mincode, valptr, huffval) — the
-    T.81 F.15/F.16 DECODE tables (optimization r13, guide §4.2).
+    T.81 F.15/F.16 DECODE tables.
 
     The previous form was {(length, code): symbol}, probed once per
     BIT with a tuple-hash dict lookup — 75% of the decode kernel's
@@ -543,8 +543,7 @@ def _jpeg_decode_impl(b: bytes) -> np.ndarray:
             )
 
     def decode_block(dc_table, ac_table):
-        # plain-int zigzag buffer + inlined EXTEND (optimization r13,
-        # guide §4.2): per-element numpy stores and the _extend call
+        # plain-int zigzag buffer + inlined EXTEND: per-element numpy stores and the _extend call
         # were measurable at ~3.4 k blocks/image; arithmetic is
         # unchanged (same ints, same error paths).
         zz = [0] * 64
@@ -638,8 +637,7 @@ def _jpeg_decode_impl(b: bytes) -> np.ndarray:
 def _decode_symbol(reader: _BitReader, table: tuple) -> int:
     """T.81 F.16 DECODE over the canonical-array tables, with the
     bit extraction inlined (the per-bit `bits(1)` call + tuple-dict
-    probe was the decode kernel's hot spot — optimization r13,
-    guide §4.2). The byte-fill discipline (stuffing, marker, and
+    probe was the decode kernel's hot spot). The byte-fill discipline (stuffing, marker, and
     truncation errors) is untouched: `_fill` is still the only code
     that advances the byte cursor."""
     maxcode, mincode, valptr, huffval = table

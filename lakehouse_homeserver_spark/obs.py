@@ -6,7 +6,9 @@ every timing reported for a query means the same thing: the query
 function builds its DataFrame (``build_sec``: plan construction plus
 any actions the function runs itself), then the noop sink
 materializes every row without shipping rows to the driver
-(``exec_sec``). ``jobs`` counts the Spark jobs of both phases.
+(``exec_sec``). ``jobs`` counts the Spark jobs of both phases. Once
+the result is consumed, ``run`` releases every pin (``unpin_all``),
+so a query's figures do not depend on which queries ran before it.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.common import unpin_all
 from .workspace import scratch
 
 
@@ -56,7 +59,8 @@ def run(
 ) -> dict[str, float | int]:
     """Build `fn(spark, sf_dir)` and materialize it under the job group
     `name`. Returns ``{"build_sec", "exec_sec", "sec", "jobs"}``, where
-    ``jobs`` is the number of jobs the DAG scheduler started meanwhile."""
+    ``jobs`` is the number of jobs the DAG scheduler started meanwhile.
+    The query's pins are released before it returns."""
     sc = spark.sparkContext
     sc.setJobGroup(name, name)
     try:
@@ -69,6 +73,7 @@ def run(
         jobs = _next_job_id(spark) - jobs0
     finally:
         sc._jsc.clearJobGroup()
+        unpin_all(spark)
     return {
         "build_sec": round(t1 - t0, 3),
         "exec_sec": round(t2 - t1, 3),

@@ -646,8 +646,8 @@ def a22_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The audit scope is everything added SINCE THE BRANCH POINT,
     # expressed in the BRANCH's own version space: clone() restarts
     # numbering at 1, so the branch point is always the clone's
-    # latest_version() right after cloning — NOT the source's (r8
-    # advice: a source-space version >= 2 made added_between an empty
+    # latest_version() right after cloning — NOT the source's (a
+    # source-space version >= 2 made added_between an empty
     # range on the clone, so the audit saw zero staged rows and a
     # clean batch forked after a prior publish would never publish).
     good = t.clone(os.path.join(root, "branch-good"))
@@ -1990,7 +1990,7 @@ _SQLCAT_CRED = ("spark-engine", "fixture-secret")
 )
 def a52_catalog_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persistent + authenticated network catalog — the two seams the
-    r4 REST-catalog cert (a47) left open, certified (SURVEY missing
+    REST-catalog cert (a47) left open, certified (SURVEY missing
     #1 narrows again): the reference's catalog persists to POSTGRES
     (docker-compose.yml:8,18) and fronts the spec's OAuth surface;
     here the same contract runs on the embeddable stand-ins —
@@ -2119,7 +2119,7 @@ def a52_catalog_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a54_pyds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter pushdown through the Python DataSource V2 scan path
-    (Spark 4.1 ``DataSourceReader.pushFilters``, r5): the V2 reader
+    (Spark 4.1 ``DataSourceReader.pushFilters``): the V2 reader
     receives the query's comparison predicates at planning time and
     prunes whole data files via the manifest's commit-time footer
     stats — plus the per-file BLOOM filters for equality — before a

@@ -10,11 +10,21 @@ division is a single IEEE op on identical operands in both engines.
 
 This costs nothing at scale: decimal sums are still map-side partial
 aggregates inside whole-stage codegen.
+
+Session state has one rule each. An intermediate that several actions
+read is materialized with ``pin`` and released with ``unpin`` by the
+query once its result no longer reads it, or by ``unpin_all`` from
+whoever consumed the result (``obs.run``, the parity sweep, the test
+session). A conf a query needs for part of its plan is set with
+``session_conf``, which restores the session on exit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -48,12 +58,10 @@ def sql_davg(expr: str) -> str:
 
 def make_registry():
     """The one (QUERIES, ORACLES, query) registration triple every
-    operator module uses — consolidated r7 (review: 13 modules
-    carried character-identical copies of this decorator, so a
-    registration-time change had 13 places to drift). Bonus the
-    copies never had: duplicate query names raise at import instead
-    of silently shadowing (the r5 grep-truncation incident shipped a
-    shadowed duplicate exactly this way)."""
+    operator module uses, so a registration-time change has one place
+    to go. Duplicate query names raise at import instead of silently
+    shadowing the first definition (a truncated search-and-replace
+    once shipped a shadowed duplicate exactly this way)."""
     queries: dict = {}
     oracles: dict[str, str] = {}
 
@@ -104,3 +112,49 @@ def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
             )
 
     return df.mapInArrow(run, schema)
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize `df` now and return a DataFrame that reads the
+    stored rows: the one way engine code keeps an intermediate that
+    several actions or join sides read. The lineage is cut, so an
+    iterative loop's plan does not grow round by round (a persisted
+    plan does, and a long star-contraction chain ran a 4g driver out
+    of heap rendering it). The blocks stay until `unpin(df)` or
+    `unpin_all`; reading the DataFrame after either raises
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing."""
+    return df.localCheckpoint(eager=True)
+
+
+def unpin(df: DataFrame) -> None:
+    """Release the blocks of `df`, a DataFrame returned by `pin`, now."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def unpin_all(spark: SparkSession) -> None:
+    """Release every pinned intermediate of the session: each RDD the
+    SparkContext holds as persistent, which in this package only
+    `pin` creates. The SparkContext's map is the record; no registry
+    of our own holds references that would keep unreleased pins from
+    the ContextCleaner. Call it only when no query is running in the
+    session, since it also drops the pins of a query still in flight."""
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(False)
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set `conf` on the session for the body of the `with` block. On
+    exit each key gets its prior value back, or is unset if the
+    session had none, so a query never leaves its tuning behind."""
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table as T
 
-from .common import make_registry
+from .common import make_registry, pin, session_conf, unpin
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -271,12 +271,11 @@ def _banded_jaccard_pairs(
     # interpreted fold it replaced (see minhash_signatures for the
     # measured history).
     sig = minhash_sigs_udf(num_hashes)(F.col("hs"))
-    # Small projection cached: both sides of the banded self-join
+    # Small projection pinned: both sides of the banded self-join
     # consume it (ReusedExchange won't fire across the explode).
-    sigs = (
+    sigs = pin(
         toks.withColumn("hs", F.transform("tokens", lambda t: F.xxhash64(t)))
         .select("doc_id", "source", "n_tok", sig.alias("sig"))
-        .cache()
     )
     banded = sigs.select(
         "doc_id",
@@ -303,7 +302,8 @@ def _banded_jaccard_pairs(
     ).select("doc_id", "source", "bb.band", "bb.bhash")
 
     ba, bb = banded.alias("ba"), banded.alias("bb")
-    candidates = (
+    # tiny; feeds both the broadcast id list and the final join
+    candidates = pin(
         ba.join(
             bb,
             (F.col("ba.band") == F.col("bb.band"))
@@ -313,8 +313,8 @@ def _banded_jaccard_pairs(
         )
         .select(F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b"))
         .distinct()
-        .cache()  # tiny; feeds both the broadcast id list and the final join
     )
+    unpin(sigs)  # the result reads the candidates, not the signatures
 
     # Verify with exact Jaccard on the CANDIDATE docs' token sets only
     # (broadcast semi-join; work scales with |candidates|, not corpus).
@@ -428,10 +428,10 @@ def minhash_signatures(
     - each shingle string is hashed ONCE (`xxhash64(s)`), and the
       num_hashes permutations hash the resulting fixed-width bigint
       (~3.5× cheaper than string-hashing per permutation);
-    - r2 history of the fold itself: interpreted
+    - measured shapes of the fold itself: interpreted
       transform+aggregate+zip_with single pass 4.1 s < 6.2 s
       (num_hashes transform+array_min passes) < 9.4 s (explode →
-      groupBy MIN); r3 numpy kernel ≈ 0.8 s incl. Arrow transfer —
+      groupBy MIN); the numpy kernel ≈ 0.8 s incl. Arrow transfer —
       Catalyst evaluates higher-order-function lambdas row-at-a-time
       in the interpreter, so the grid belongs in a vectorized kernel
       (same lesson as PQ/aHash).
@@ -481,7 +481,7 @@ def k2_minhash_lsh(
     """MinHash-LSH near-dup pairs with exact-Jaccard verification
     (SURVEY K2).
 
-    Oracle (added r3): the DuckDB side computes the EXACT pair set —
+    Oracle: the DuckDB side computes the EXACT pair set —
     inverted-index candidate generation (docs sharing >=1 shingle is
     a superset of any Jaccard>0 pair) + exact Jaccard filter. The
     engine's LSH output is always a SUBSET of that set (candidates
@@ -516,14 +516,14 @@ def k2_minhash_lsh(
     """
     docs = T(spark, sf_dir, "documents")
     rows_per_band = num_hashes // bands
-    # Cache the SMALL (doc_id, sig) projection only: the banded
+    # Pin the SMALL (doc_id, sig) projection only: the banded
     # self-join consumes it on both sides and ReusedExchange does not
-    # fire across the band explode, so an uncached sig pass runs
-    # twice (measured 14.5 s). Caching WITH the shingle arrays (an
-    # earlier shape) paid 7.3 s of materialization; sig-only caching
-    # costs ~4 s and verification re-shingles just the candidate docs
-    # below (broadcast semi-join — work scales with |candidates|).
-    sigs = minhash_signatures(docs, num_hashes).select("doc_id", "sig").cache()
+    # fire across the band explode, so an unpinned sig pass runs
+    # twice (measured 14.5 s). Materializing WITH the shingle arrays
+    # (an earlier shape) paid 7.3 s; sig-only costs ~4 s and
+    # verification re-shingles just the candidate docs below
+    # (broadcast semi-join — work scales with |candidates|).
+    sigs = pin(minhash_signatures(docs, num_hashes).select("doc_id", "sig"))
 
     banded = sigs.select(
         "doc_id",
@@ -550,7 +550,8 @@ def k2_minhash_lsh(
 
     a = banded.alias("a")
     b = banded.alias("b")
-    candidates = (
+    # tiny; feeds both the broadcast id list and the final join
+    candidates = pin(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -559,8 +560,8 @@ def k2_minhash_lsh(
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
-        .cache()  # tiny; feeds both the broadcast id list and the final join
     )
+    unpin(sigs)  # the result reads the candidates, not the signatures
 
     # Exact verification: shingle ONLY the candidate docs. The
     # candidate id list is tiny relative to the corpus, so it
@@ -693,10 +694,16 @@ def k2_simhash_near_pairs(
             "banding guarantee requires max_hamming < bands (6): "
             f"got {max_hamming}"
         )
-    # cache: the fingerprint agg (explode + 60-column bit sums) feeds
+    # pin: the fingerprint agg (explode + 60-column bit sums) feeds
     # BOTH sides of the self-join; without it the whole pipeline runs
-    # twice (ReusedExchange doesn't fire across the band explode).
-    fps = k2_simhash(spark, sf_dir).cache()
+    # twice (ReusedExchange doesn't fire across the band explode). The
+    # agg's output is small enough that AQE coalesces it to ONE
+    # partition, and the pinned table's known size then plans a
+    # broadcast join whose probe side is that single task (measured
+    # 2.3-2.7 s of exec at sf0.1); spreading the pinned rows over the
+    # cores first keeps the probe parallel.
+    cores = spark.sparkContext.defaultParallelism
+    fps = pin(k2_simhash(spark, sf_dir).repartition(cores))
     bands = 6
     width = SIMHASH_BITS // bands  # 10 bits
     mask = (1 << width) - 1
@@ -923,12 +930,7 @@ def k8_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The eval gram set is consumed THREE times (sizing count, bloom
     # build, exact-contamination semi-join) and each lazy use re-ran
     # the corpus-wide tokenize+shingle+explode behind it; it is eval-set-sized, so materialize it once.
-    ev = (
-        grams.filter(F.col("doc_id") % 29 == 0)
-        .select("gram")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ev = pin(grams.filter(F.col("doc_id") % 29 == 0).select("gram").distinct())
     n_ev = ev.count()  # eval-set-sized driver scalar — sizes the filter
     m = _BLOOM_BITS_PER_GRAM * max(n_ev, 16)
 
@@ -1031,12 +1033,9 @@ def k8_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_PAIRS_MEMO: dict[tuple, DataFrame] = {}
-
-
 def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified near-dup pair list (k2_ngram_jaccard's output),
-    WRITTEN ONCE per (session, dataset) as a snapshot table and read
+    WRITTEN ONCE per dataset as a snapshot table and read
     back by every graph consumer (dup clusters, PageRank, triangles,
     contrastive triplets). Without this each consumer re-derives the
     pairs from the corpus — at sf0.1 that is ~9 s of identical work
@@ -1056,28 +1055,23 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshot import SnapshotTable
     from ..workspace import fixture
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIRS_MEMO.get(key)
-    if df is None:
-        # A build-once fixture keyed by the `documents` source: the
-        # ~9 s derivation is shared across processes, a regenerated
-        # dataset rebuilds, and the build lock serializes concurrent
-        # first callers.
-        def build(root: str) -> None:
-            t = SnapshotTable(spark, os.path.join(root, "verified_pairs"))
-            # require_exact: the graph consumers' oracles recompute
-            # the EXHAUSTIVE pair set — an LSH-recall subset must
-            # fail loudly, not certify quietly wrong.
-            t.create(
-                k2_ngram_jaccard(spark, sf_dir, require_exact=True).select(
-                    "doc_a", "doc_b"
-                )
+    # A build-once fixture keyed by the `documents` source: the ~9 s
+    # derivation is shared across processes and calls (a warm fixture
+    # costs one stat of its sentinel), a regenerated dataset rebuilds,
+    # and the build lock serializes concurrent first callers.
+    def build(root: str) -> None:
+        t = SnapshotTable(spark, os.path.join(root, "verified_pairs"))
+        # require_exact: the graph consumers' oracles recompute the
+        # EXHAUSTIVE pair set — an LSH-recall subset must fail loudly,
+        # not certify quietly wrong.
+        t.create(
+            k2_ngram_jaccard(spark, sf_dir, require_exact=True).select(
+                "doc_a", "doc_b"
             )
+        )
 
-        root = fixture("duppairs", build, source=(sf_dir, "documents"))
-        df = SnapshotTable(spark, os.path.join(root, "verified_pairs")).read()
-        _PAIRS_MEMO[key] = df
-    return df
+    root = fixture("duppairs", build, source=(sf_dir, "documents"))
+    return SnapshotTable(spark, os.path.join(root, "verified_pairs")).read()
 
 @query(
     "k2_dup_clusters",
@@ -1139,8 +1133,9 @@ def k2_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB. For adversarially long chains the O(log n)-round
     alternating large-star/small-star algorithm (Kiveris et al.,
     "Connected Components in MapReduce and Beyond") drops in behind
-    the same interface. `localCheckpoint` truncates lineage each
-    round so the plan does not grow with iterations.
+    the same interface. Each round is pinned, which truncates lineage
+    so the plan does not grow with iterations, and the round it
+    supersedes is released.
 
     The DuckDB oracle computes the same fixpoint with a recursive CTE
     (UNION-dedup guarantees termination), making an ITERATIVE
@@ -1150,49 +1145,45 @@ def k2_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = T(spark, sf_dir, "documents").select("doc_id")
     pairs = verified_pairs(spark, sf_dir)
-    edges = (
+    # pair generation must not re-run per round
+    edges = pin(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .localCheckpoint(eager=True)  # pair generation must not re-run per round
     )
     # Propagate only over edge-touched nodes; singletons can't move.
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .select("doc_id", F.col("doc_id").alias("label"))
-        .localCheckpoint(eager=True)
     )
     # Size the per-round shuffles to the EDGE list, not the corpus:
     # the frontier is orders of magnitude smaller than the table it
     # came from, and every wasted reducer is paid diameter-many times.
     # ~250k edge-endpoints per partition; the conf is restored before
     # the (corpus-sized) final join/window below executes.
-    edges_n = edges.count()  # checkpointed — a metadata-cheap job
+    edges_n = edges.count()  # pinned — a metadata-cheap job
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     loop_parts = max(2, min(sess_parts, edges_n // 250_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with session_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         prev_sum = None
         for _ in range(25):
             nbr = edges.join(
                 labels, edges["src"] == labels["doc_id"], "inner"
             ).select(F.col("dst").alias("doc_id"), "label")
-            labels = (
-                labels.union(nbr)
-                .groupBy("doc_id")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=True)
+            nxt = pin(
+                labels.union(nbr).groupBy("doc_id").agg(F.min("label").alias("label"))
             )
+            unpin(labels)
+            labels = nxt
             cur_sum = labels.agg(F.sum("label")).first()[0]
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
         else:  # pragma: no cover - 25 rounds covers diameter 25; fixture is ~2
             raise RuntimeError("connected components did not converge in 25 rounds")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+    unpin(edges)
 
     cc = docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
@@ -1406,7 +1397,7 @@ def k1_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Canonical occurrence = lexicographic MIN of (doc_id, pos) as a
-    # STRUCT — the r5 integer encoding doc_id*2^20+pos silently
+    # STRUCT — an earlier integer encoding doc_id*2^20+pos silently
     # wrapped signed-64 for doc_id >= 2^43 (snowflake/hash-derived
     # ids), corrupting the canonical choice exactly where DuckDB's
     # checked BIGINT would error instead. Struct
@@ -1477,7 +1468,7 @@ def _pr_stage(k: int) -> str:
     """One unrolled PageRank iteration as a DuckDB CTE: r_{k+1}(v) =
     (1-d)/N + d * Σ_{u→v} floor(r_k(u)/deg(u) * 1e12 + 0.5)/1e12, the
     inner sum made order-independent by summing INTEGER micro-units
-    (BIGINT, exact). r9 contract rework: the old form rounded doubles
+    (BIGINT, exact). An earlier contract rounded doubles
     (ROUND(x,12)) and cast through DECIMAL — both are engine-specific
     decimal-rounding steps (Spark HALF_UP on the binary expansion vs
     DuckDB scaled-double rounding), and at sf0.1 thirteen rows came
@@ -1555,7 +1546,7 @@ def k9_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Symmetrized dup edges mean no dangling nodes, so the classic
     teleport term (1-d)/N is exact.
 
-    Float contract (r9 rework): the per-node in-sum is the only
+    Float contract: the per-node in-sum is the only
     order-dependent reduction — contributions are quantized to
     INTEGER micro-units (floor(x * 1e12 + 0.5), a bigint) and summed
     exactly, so the sum is order-free with no decimal types on the
@@ -1586,13 +1577,12 @@ def k9_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3.4x faster at 10x.
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     loop_parts = max(2, min(sess_parts, (2 * n_pairs) // 250_000 + 1))
-    edges = (
+    edges = pin(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .repartition(loop_parts)
-        .localCheckpoint(eager=True)
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.count()
@@ -1608,9 +1598,8 @@ def k9_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = deg.select("src", F.lit(1.0 / float(n_nodes)).alias("r")).select(
         F.col("src").alias("node"), "r"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for _ in range(PR_ITERS):
+    with session_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
+        for i in range(PR_ITERS):
             # BROADCAST the node-sized tables (rank, degree) into the
             # edge scan — measured essential, not a nicety: the
             # checkpointed `r` carries no size stats, so without the
@@ -1643,7 +1632,7 @@ def k9_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the deep lineage and the plan-time cost dominates at
             # this graph size, so truncating per round wins even with
             # fixed rounds.
-            r = (
+            nxt = pin(
                 contrib.groupBy("dst")
                 .agg(
                     (
@@ -1653,10 +1642,11 @@ def k9_pagerank_dupgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("r")
                 )
                 .select(F.col("dst").alias("node"), "r")
-                .localCheckpoint(eager=True)
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+            if i:  # round 0 read the unpinned uniform start vector
+                unpin(r)
+            r = nxt
+    unpin(edges)
     pr_q = F.floor(F.col("r") * F.lit(1e10) + F.lit(0.5))
     w = Window.orderBy(F.desc(pr_q), "node")
     return r.select(
@@ -2282,12 +2272,11 @@ def k2_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array as a grouping KEY, measured 13-19 s at sf0.1; this form
     # runs ~3 s. Write-once-fan-out, same precedent as the near-dup
     # pair table.
-    sets = (
+    sets = pin(
         d.select("doc_id", tk.alias("tk"))
         .filter(F.size("tk") >= 3)
         .select("doc_id", shingles.alias("tokens"))
         .withColumn("n_tok", F.size("tokens"))
-        .localCheckpoint(eager=True)
     )
     freq = (
         sets.select(F.explode("tokens").alias("t"))
@@ -2472,11 +2461,7 @@ def cc_alternating(edges: DataFrame, max_rounds: int = 30):
     path). Takes an (u, v) edge DataFrame, returns (labels, rounds)
     where labels maps every edge-touched doc_id to its component
     minimum."""
-    edges = (
-        edges.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = pin(edges.filter(F.col("u") != F.col("v")).distinct())
 
     def sym(e):  # both directions, so groupBy(u) sees the full N(u)
         return e.union(
@@ -2499,11 +2484,9 @@ def cc_alternating(edges: DataFrame, max_rounds: int = 30):
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
                 .union(m.select(F.col("u"), F.col("m").alias("v")))
             )
-        return (
-            out.filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        nxt = pin(out.filter(F.col("u") != F.col("v")).distinct())
+        unpin(e)  # the star's input is superseded once its output is pinned
+        return nxt
 
     def fingerprint(e):
         row = e.agg(

@@ -6,7 +6,7 @@ sessions are built with ``IcebergSparkSessionExtensions`` wired in at
 `/root/reference/scripts/extract_load.py:31` precisely so ``MERGE``
 / ``UPDATE`` / ``DELETE`` statements parse, and Trino DML rides
 `config/iceberg-template.properties:1-5`. The repo has had the
-*semantics* certified at API level since r8 (`SnapshotTable.merge`,
+*semantics* certified at API level (`SnapshotTable.merge`,
 `delete_where`, `overwrite_where` — a13/a19/a20/a35/a36), but a user
 migrating off the reference writes statement text, not API calls.
 This module is that route: a deliberately thin parser for the three

@@ -90,7 +90,7 @@ def corpus_to_wds_shards(docs: DataFrame) -> DataFrame:
 )
 def k7_multimodal_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed export pipeline: exact dedup (K1 keep-lowest
-    semantics) -> Gopher gate (`gopher_gate`, the IDENTICAL r11-
+    semantics) -> Gopher gate (`gopher_gate`, the IDENTICAL
     certified rule body) -> WebDataset packing (`_wds_assemble`: real
     ustar, header checksums, same-key .txt/.img pairs with a real PNG
     payload) -> verified parse-back (`wds_sample_rows`: checksum

@@ -39,7 +39,7 @@ from pyspark.sql.types import (
 
 from ..sources import load_table as T
 
-from .common import make_registry, map_rows
+from .common import make_registry, map_rows, pin
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -82,8 +82,8 @@ PAYLOAD_SCHEMA = StructType(
 
 def _decode_image_real(payload: bytes):
     """Format-sniffing image decode over the REAL from-spec codecs:
-    PNG (r10, stdlib zlib + numpy unfilter) and baseline JPEG (r11,
-    functions/jpeg.py — Huffman + IDCT). Formats with no decoder in
+    PNG (stdlib zlib + numpy unfilter) and baseline JPEG
+    (functions/jpeg.py — Huffman + IDCT). Formats with no decoder in
     this environment (GIF, WebP, TIFF, ...) stay behind the loud
     NotImplementedError seam, named — never a silent fake."""
     b = bytes(payload)
@@ -427,9 +427,9 @@ def k5_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     means. 8x8 makes each mean an exact sum/64, so doubles cannot
     drift and the DuckDB oracle (recomputing the channel means from
     the same cycled text bytes via ascii(substring(...))) hash-matches
-    bit-for-bit. Upgrade over the r1 stub: the decode step itself is
-    real (compressed formats too — PNG since r10, baseline JPEG since
-    r11; only out-of-scope codecs keep the loud seam).
+    bit-for-bit. The decode step itself is real (compressed formats
+    too — PNG and baseline JPEG; only out-of-scope codecs keep the
+    loud seam).
 
     Scale shape: one map-only `map_rows` pass, payload never
     shuffled; at 100 TB the decode parallelism is the scan
@@ -446,8 +446,7 @@ def k5_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_BPP = 3  # the RGB fast path the k5 queries use (color type 2)
-# 8-bit bytes-per-pixel by IHDR color type (r10 widening; r11 adds
-# palette): grayscale, truecolor, INDEXED (1 index byte/px, expanded
+# 8-bit bytes-per-pixel by IHDR color type, palette included: grayscale, truecolor, INDEXED (1 index byte/px, expanded
 # through PLTE to RGB on output), truecolor+alpha. Gray+alpha (4)
 # stays a loud failure — no corpus here exercises it and a silent
 # partial decode would be worse than the seam.
@@ -551,7 +550,7 @@ def png_decode(b: bytes):
     per-scanline un-filtering of all five spec filter types (Paeth
     included) at the color type's byte-per-pixel offset. Returns a
     uint8 array — (h, w) for grayscale, (h, w, 3) for RGB AND for
-    8-bit palette images (r11: indices expanded through a validated
+    8-bit palette images (indices expanded through a validated
     PLTE; out-of-range indices and missing PLTE raise), (h, w, 4)
     RGBA. Every malformation raises ValueError LOUDLY — a corrupt
     payload must never decode to silent garbage. 16-bit, gray+alpha,
@@ -794,7 +793,7 @@ def k5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in, decode) fused into one stage — payload never shuffles;
     at 100 TB decode parallelism is scan parallelism, per-image work
     is O(pixels). Baseline JPEG gained its own from-spec decode
-    certificate in r11 (k5_jpeg_decode); neither compressed format
+    certificate (k5_jpeg_decode); neither compressed format
     is a seam anymore.
     """
     d = T(spark, sf_dir, "documents")
@@ -930,7 +929,7 @@ def _build_wav(pcm: bytes, fmt_tag: int = 1) -> bytes:
     chunk, a LIST (INFO) chunk, then data. The LIST chunk exists so
     the parser must genuinely WALK chunks — a fixed-44-byte-offset
     'parser' would read garbage. fmt_tag 1 = u8 PCM (the original
-    cert); 6/7 = G.711 A-law/mu-law code streams (the late-r11
+    cert); 6/7 = G.711 A-law/mu-law code streams (the
     container-dispatch cert, k5_wav_g711_decode)."""
     import struct
 
@@ -1058,11 +1057,11 @@ AHASH_MAX_HAMMING = 7  # pairs with distance <= 7 are "near-dup"
 # (pigeonhole), so candidate generation is an equi-join on
 # (band_idx, band_byte), never an all-pairs scan. At larger corpus
 # sizes the 256-value byte buckets saturate (measured 5.2x at 10x
-# corpus in the r3 scale smoke), so candidate generation widens to
+# corpus in the scale smoke), so candidate generation widens to
 # the multi-index-hashing combinatorial form — see _ahash_band_plan.
 # grays -> mean-threshold bits -> 8 band bytes: the CTE tail shared
 # by every aHash oracle (PPM, PNG, and the mixed PNG/JPEG corpus —
-# r11 refactor so a banding edit cannot drift one oracle silently).
+# shared so a banding edit cannot drift one oracle silently).
 _AHASH_BANDS_SQL = """, b AS (
       SELECT doc_id, grays, list_sum(grays) AS total,
              list_transform(grays, x ->
@@ -1163,7 +1162,7 @@ def _ahash_near_dup_pairs(payloads: DataFrame, gray_of) -> DataFrame:
                 schema=arrow_schema,
             )
 
-    hashes = payloads.mapInArrow(run, AHASH_SCHEMA).localCheckpoint(eager=True)
+    hashes = pin(payloads.mapInArrow(run, AHASH_SCHEMA))
     m, r = _ahash_band_plan(hashes.count())
     return _ahash_candidate_pairs(hashes, m, r)
 
@@ -1232,8 +1231,8 @@ def k5_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ahash_band_plan(n_docs: int) -> tuple:
-    """Corpus-scaled banding for 64-bit codes at Hamming<=7 (VERDICT
-    r3 #3 — the one measured scale-killer). Returns (m, r): split the
+    """Corpus-scaled banding for 64-bit codes at Hamming<=7 (fixed
+    byte bands were the one measured scale-killer). Returns (m, r): split the
     code into m bands of 64//m bits and join on every r-subset of
     bands (C(m, r) keys/doc, key space ~2^(r*(64//m))). Completeness
     needs r <= m - 7; each step trades ~4.5x key fan-out (a per-ROW
@@ -1817,7 +1816,7 @@ def _mjpeg_quad_hex_sql() -> str:
     """,
 )
 def k5_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-pipeline frame sampling with REAL decode (r11 — upgrades
+    """Video-pipeline frame sampling with REAL decode (upgrades
     the K5 video rung past k5_frame_sample's digest framing): each
     row carries a genuine Motion-JPEG clip ({MJPEG_FRAMES} concatenated
     baseline JPEG frames built by the from-spec encoder), and the
@@ -1945,7 +1944,7 @@ _ULAW_PCM_SQL = """list_transform(
     """,
 )
 def k5_ulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-AUDIO codec certificate (r11 — the audio twin of
+    """Compressed-AUDIO codec certificate (the audio twin of
     the PNG/JPEG image certs): each payload is a G.711 mu-law stream
     (the fixture's text bytes as codes — every byte IS a valid mu-law
     code, so no synthesis step is needed), and the Arrow-batched
@@ -2117,7 +2116,7 @@ def bmp_roundtrip_row(doc_id, px):
     """,
 )
 def k5_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third image codec certificate (late r11, alongside PNG and
+    """Third image codec certificate (alongside PNG and
     baseline JPEG): the same text-derived 8x8 RGB pixels as the
     PNG/PPM certs round-trip through a real 24-bit BMP — BGR channel
     order, bottom-up rows, 4-byte row padding, full header checks —
@@ -2224,7 +2223,7 @@ _ALAW_PCM_SQL = """list_transform(
     """,
 )
 def k5_alaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The second G.711 companding certificate (late r11): A-law is
+    """The second G.711 companding certificate: A-law is
     the codec every NON-North-American telephony / VoIP archive
     stores, so a media pipeline that only speaks mu-law silently
     mangles half the world's call audio. Same contract as
@@ -2258,7 +2257,7 @@ def _gif_lzw_encode(indices, mcs: int) -> bytes:
     4096): the real greedy-dictionary encoder, so the decode
     certificate exercises genuine dictionary growth, code-width
     bumps, and the KwKwK case — not a degenerate literal stream."""
-    # Byte-stream-identical rewrite (optimization r12, guide §4.2):
+    # Byte-stream-identical rewrite:
     # the first cut appended 9-12 Python list items PER CODE and kept
     # the dictionary keyed on growing byte strings (an O(match_len)
     # concat+hash per pixel). Codes now pack LSB-first through an
@@ -2327,7 +2326,7 @@ def _gif_lzw_decode(data: bytes, mcs: int, max_px: int) -> bytes:
     nbits = len(data) * 8
     # One big-int view of the LSB-first stream: each code read is a
     # shift+mask instead of `width` per-bit Python indexings
-    # (optimization r12, guide §4.2 — same bytes, same codes).
+    # (same bytes, same codes).
     stream = int.from_bytes(data, "little")
     while True:
         if bitpos + width > nbits:
@@ -2527,7 +2526,7 @@ def gif_roundtrip_row(doc_id, px):
     """,
 )
 def k5_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fourth image-codec certificate (late r11), closing the
+    """Fourth image-codec certificate, closing the
     dictionary-coding family: the same text-derived 8x8 tile as the
     PNG/BMP/PPM certs round-trips through a real GIF87a — exact
     palette construction, power-of-two global color table, and a
@@ -2755,7 +2754,7 @@ def wds_sample_rows(shard_id, blob):
     """,
 )
 def k5_webdataset_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset shard round-trip (late r11 — the TRAINING-side
+    """WebDataset shard round-trip (the TRAINING-side
     container, closing the loop the WARC cert opened on the
     ingestion side): each doc becomes the standard same-key
     (.txt, .img) pair, packed in doc order into real ustar shards
@@ -2844,7 +2843,7 @@ def wav_g711_row(doc_id, p):
     """,
 )
 def k5_wav_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container-driven codec dispatch (late r11 — the composition
+    """Container-driven codec dispatch (the composition
     that makes the two G.711 certs OPERATIONAL): a mixed corpus of
     real G.711 WAV files (even docs mu-law fmt 7, odd docs A-law
     fmt 6) flows through the RIFF chunk walker, and the kernel picks

@@ -298,7 +298,7 @@ def a34_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     null count, exact distinct cardinality, and min/max rendered as
     strings, one profile row per column.
 
-    Plan shape (optimization r12, guide §2.3): the first cut fused
+    Plan shape: the first cut fused
     the three exact COUNT(DISTINCT)s into one aggregate, which Spark
     rewrites as Expand — every row replicated 4× (2.4 M rows at
     sf0.1) — and, because min/max over STRING columns carry immutable

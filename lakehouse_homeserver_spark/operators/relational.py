@@ -28,7 +28,15 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table as T
 from ..workspace import catalog_table, save_table, scratch
-from .common import make_registry, davg, dec, dsum, sql_davg, sql_dsum
+from .common import (
+    davg,
+    dec,
+    dsum,
+    make_registry,
+    session_conf,
+    sql_davg,
+    sql_dsum,
+)
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -861,7 +869,7 @@ def h6_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Head-element arithmetic is done in double with per-element casts
     (not a float fold) so both engines compute the identical IEEE sum.
 
-    r9: display rounding is the FLOOR form (floor(x*1e4 + 0.5)/1e4),
+    Display rounding is the FLOOR form (floor(x*1e4 + 0.5)/1e4),
     not ROUND — pure IEEE ops on bit-identical operands, so both
     engines produce the same double for every FINITE value (Spark's
     floor(double) returns LONG, so NaN/Inf would diverge — the
@@ -1594,7 +1602,7 @@ def e4_analytic_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     row counts), so the raw doubles are bit-identical across engines —
     but a rational CAN land exactly on a 6-dp rounding midpoint, where
     Spark's HALF_UP and DuckDB's scaled-double ROUND disagree (three
-    sf0.1 rows did: 0.0640625-class ties). r9: display rounding is the
+    sf0.1 rows did: 0.0640625-class ties). Display rounding is the
     FLOOR form (floor(x*1e6 + 0.5)/1e6) in both engines — pure IEEE
     ops on identical operands, tie-free by construction. last_value requires the explicit
     unbounded-following frame in BOTH engines — the default frame ends
@@ -2542,9 +2550,7 @@ def _c10_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple:
 def _c10_join_with_plan_facts(
     spark: SparkSession, orders_t: str, lineitem_t: str
 ) -> DataFrame:
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = (
             spark.table(lineitem_t)
             .join(
@@ -2558,8 +2564,6 @@ def _c10_join_with_plan_facts(
         )
         zero_shuffle = "Exchange" not in plan
         smj = "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     return (
         joined.groupBy("o_orderpriority")
         .agg(
@@ -2737,30 +2741,16 @@ def a39_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored. The two booleans — `bloom_built` (bloom_filter_agg on
     the build side) and `bloom_pushed` (might_contain on the probe
     side) — ride the driver hash."""
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
+    confs = {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": (
+            "10000000"
+        ),
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "true"
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "10000000",
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "0",
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with session_conf(spark, confs):
         o = T(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -2773,15 +2763,6 @@ def a39_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = agg._jdf.queryExecution().executedPlan().toString()
         bloom_built = "bloom_filter_agg" in plan
         bloom_pushed = "might_contain" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return agg.select(
         "o_orderpriority",
         "n_items",
@@ -2803,8 +2784,8 @@ def a39_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a40_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet footer-statistics aggregate pushdown, driver-certified
-    with its plan fact (the third plan-certification query of the r4
-    flywheel, after a38 DPP and a39 bloom joins): an unfiltered
+    with its plan fact (the third plan-certification query, after a38
+    DPP and a39 bloom joins): an unfiltered
     MIN/MAX/COUNT is answered entirely from parquet footer metadata —
     the DSv2 scan shows `PushedAggregation` and no data page is ever
     decompressed. At 100 TB this turns "how many rows, what key
@@ -2817,16 +2798,11 @@ def a40_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     default keeps the battle-tested V1 path for general scans). The
     `agg_pushed` boolean rides the driver hash with the values, so
     the certification IS the driver row."""
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.parquet.aggregatePushdown",
-            "spark.sql.sources.useV1SourceList",
-        )
+    confs = {
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": "",
     }
-    try:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    with session_conf(spark, confs):
         # fresh=True: the DSv2/pushdown confs above resolve at
         # spark.read time, so this scan must be planned INSIDE the
         # conf window, never served from the table-handle memo.
@@ -2840,15 +2816,6 @@ def a40_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Materialize the certified values INSIDE the conf window so
         # the collected row really came from the pushed-down plan.
         row = agg.first()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [(row.lo, row.hi, row.n, pushed)],
         "lo bigint, hi bigint, n bigint, agg_pushed boolean",
@@ -2899,27 +2866,13 @@ def a42_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     any real 100 TB fact scan has. At scale this rewrite is what
     turns the classic one-straggler-task join into even parallelism
     without hand-salting."""
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        )
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4096",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16384",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
     }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "4096",
-        )
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "16384"
-        )
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2"
-        )
+    with session_conf(spark, confs):
         li = T(spark, sf_dir, "lineitem").repartition(8)
         left = li.select(
             F.when(F.col("l_orderkey") % 10 != 0, F.lit(0))
@@ -2943,15 +2896,6 @@ def a42_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = agg._jdf.queryExecution().executedPlan().toString()
         skewed = "SortMergeJoin(skew=true)" in plan
         smj = "SortMergeJoin" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [(r.w, r.n_rows, r.total_v, skewed, smj) for r in rows],
         "w bigint, n_rows bigint, total_v double, "
@@ -2992,18 +2936,11 @@ def a43_aqe_join_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash: `final_broadcast_join`, `initial_sort_merge_join`
     (proving the switch actually happened rather than the static
     planner broadcasting from the start), and `local_shuffle_read`."""
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "1024",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "33554432",
     }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", "33554432"
-        )
+    with session_conf(spark, confs):
         li = T(spark, sf_dir, "lineitem")
         o = T(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -3025,15 +2962,6 @@ def a43_aqe_join_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         bhj = "BroadcastHashJoin" in final
         smj0 = "SortMergeJoin" in initial
         local = "AQEShuffleRead local" in final
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [(r.o_orderpriority, r.n_items, bhj, smj0, local) for r in rows],
         "o_orderpriority string, n_items bigint, "
@@ -3056,7 +2984,7 @@ def a43_aqe_join_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a44_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AQE shuffle-partition coalescing, driver-certified with its
-    plan fact (continuing the r4 plan-certification flywheel: a38
+    plan fact (continuing the plan-certification queries: a38
     DPP, a39 bloom, a40 agg pushdown, a42 skew split, a43 join
     conversion): the session plans the aggregation shuffle at
     ``spark.sql.shuffle.partitions`` (32 here, thousands on a real
@@ -3090,10 +3018,7 @@ def a44_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8MB",
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, confs):
         agg = (
             T(spark, sf_dir, "orders")
             .groupBy("o_orderpriority")
@@ -3106,15 +3031,6 @@ def a44_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = agg.collect()
         plan = agg._jdf.queryExecution().executedPlan().toString()
         coalesced = "AQEShuffleRead coalesced" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [(r.o_orderpriority, r.n_orders, r.total_price, coalesced) for r in rows],
         "o_orderpriority string, n_orders bigint, total_price double, "
@@ -3394,36 +3310,26 @@ def a53_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.joinReorder.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
+    cbo_off = {
+        "spark.sql.cbo.enabled": "false",
+        "spark.sql.cbo.joinReorder.enabled": "false",
+    }
+    with session_conf(spark, confs):
         # baseline: CBO off, same stats, same query — written order
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        base_order = rel_order(
-            spark.sql(sql)._jdf.queryExecution().optimizedPlan().toString()
-        )
+        with session_conf(spark, cbo_off):
+            base_order = rel_order(
+                spark.sql(sql)._jdf.queryExecution().optimizedPlan().toString()
+            )
         baseline_not_reordered = base_order.index("a53_li") < base_order.index(
             "a53_cu"
         )
         # CBO on: stats drive the reorder; rows collected under it
-        for k, v in confs.items():
-            spark.conf.set(k, v)
         q = spark.sql(sql)
         rows = q.collect()
         opt = q._jdf.queryExecution().optimizedPlan()
         order = rel_order(opt.toString())
         join_reordered = order.index("a53_cu") < order.index("a53_li")
         stats_avail = bool(opt.stats().rowCount().isDefined())
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (
@@ -3513,10 +3419,7 @@ def c12_sortfree_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with session_conf(spark, confs):
         joined = (
             spark.table(lineitem_t)
             .join(
@@ -3538,15 +3441,6 @@ def c12_sortfree_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderpriority")
             .collect()
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         [
             (r.o_orderpriority, r.n_items, r.revenue, smj, zero_shuffle, zero_sort)

@@ -124,7 +124,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared Okapi-BM25 scoring pipeline: (query_id, doc_id,
     n_terms, score_dec DECIMAL(20,8)) for every candidate pair —
     consumed by `k10_bm25` (top-k) and `k10_hybrid_rrf` (rank pool).
-    Extracted r7 (review finding: the two bodies had drifted into
+    One body (two copies had drifted into
     ~40 duplicated lines; a df-window fix applied to one would
     silently skip the other).
 
@@ -246,7 +246,7 @@ def k10_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Integer `div`, not double `/`+cast: the double form loses
         # exactness past doc_id 2^53 and rounds rather than floors,
         # putting a doc in the wrong segment (same
-        # overflow class as the r6 dedup canon-key fix). The oracle's
+        # overflow class as the dedup canon-key fix). The oracle's
         # `//` is integer floor-div — identical for non-negative ids.
         F.expr(f"doc_id div {INDEX_SEGMENT_DOCS}").alias("segment"),
         F.explode(F.split(norm_text(F.col("text")), " ")).alias("term"),
@@ -532,8 +532,8 @@ def k10_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionings, and join order.
     """
     # -- lexical branch: BM25 ranks (the SHARED k10_bm25 scoring
-    # pipeline, pool-deep — extracted r7, review finding: this body
-    # was a near-verbatim 40-line copy that would drift)
+    # pipeline, pool-deep — shared, because a near-verbatim 40-line
+    # copy would drift)
     w_lex = Window.partitionBy("query_id").orderBy(
         F.col("score_dec").desc(), F.col("doc_id")
     )

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table as T
 
-from .common import make_registry
+from .common import make_registry, pin
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -314,16 +314,14 @@ def k6_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform over the domain).
     """
     d = T(spark, sf_dir, "documents")
-    # localCheckpoint: the inventory is ~one row per domain, but the
+    # pin: the inventory is ~one row per domain, but the
     # wt/tot/budget/quota chain hangs 3 broadcast subtrees off it and
     # Spark re-executes the corpus groupBy under each one (no CSE
     # across broadcast-exchange boundaries; the same
     # measured behavior retrieval.py documents). Materializing the
     # tiny table once makes every derivation corpus-free.
     w = (
-        d.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_avail"))
-        .localCheckpoint(eager=True)
+        pin(d.groupBy("source").agg(F.count(F.lit(1)).alias("n_avail")))
         .select(
             "source",
             "n_avail",
@@ -421,17 +419,13 @@ def k6_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-reproducible, and the audit needs no tolerance bounds.
     """
     d = T(spark, sf_dir, "documents")
-    # localCheckpoint: 5 derivations hang off this ~20-row table via
+    # pin: 5 derivations hang off this ~20-row table via
     # broadcast joins, and Spark re-executes the corpus groupBy under
     # each broadcast subtree (no cross-exchange CSE).
     # One eager materialization makes the whole rate chain
     # corpus-free; the corpus is then scanned exactly twice (counts +
     # the kept audit), not ~6 times.
-    counts = (
-        d.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_i"))
-        .localCheckpoint(eager=True)
-    )
+    counts = pin(d.groupBy("source").agg(F.count(F.lit(1)).alias("n_i")))
     tot = counts.agg(F.sum("n_i").cast("double").alias("n"))
     w = counts.crossJoin(F.broadcast(tot)).select(
         "source",

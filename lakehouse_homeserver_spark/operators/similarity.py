@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine_sim, dot
 from ..sources import load_table as T
 
-from .common import make_registry
+from .common import make_registry, pin, unpin
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -397,15 +397,14 @@ def ivf_train(
         if every > 1
         else corpus
     )
-    # Persist the BOUNDED training sample across training's 1+iters
-    # actions (optimization r13, guide §5 in-query reuse — the a29
-    # micro-batch-persist precedent): without it the seeds collect
-    # and every Lloyd iteration re-scanned the full corpus parquet
-    # and re-applied the hash filter just to re-derive the identical
-    # ~256·nlist-row sample. The sample is O(nlist) by construction
-    # (the whole point of sampled training), so the cache is bounded
-    # at any corpus size; unpersisted before returning.
-    train = train.persist()
+    # Pin the BOUNDED training sample across training's 1+iters
+    # actions (in-query reuse, as for a CDC micro-batch): without it
+    # the seeds collect and every Lloyd iteration re-scanned the full
+    # corpus parquet and re-applied the hash filter just to re-derive
+    # the identical ~256·nlist-row sample. The sample is O(nlist) by
+    # construction (the whole point of sampled training), so the pin
+    # is bounded at any corpus size; released before returning.
+    train = pin(train)
     try:
         seeds = (
             train.select(vec_col)
@@ -445,7 +444,7 @@ def ivf_train(
             centroids = [new.get(i, c) for i, c in enumerate(centroids)]
         return centroids
     finally:
-        train.unpersist()
+        unpin(train)
 
 
 def k3_knn_ivf(
@@ -928,9 +927,9 @@ def k3_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic: md5/xxhash seeds, fixed Lloyd iterations, id
     tie-breaks on rank order.
 
-    Bounds (MEASURED, not guessed — r9 recalibration): mean recall at
+    Bounds (MEASURED, not guessed): mean recall at
     nprobe=4/nlist=16 reads 0.64 at sf0.01 and 0.48 at sf0.1 (the
-    r9 sf0.1 parity sweep caught the old mean>=0.6 bound failing at
+    sf0.1 parity sweep caught the old mean>=0.6 bound failing at
     10x — "holds at any SF" was a claim, not a measurement; recall
     legitimately falls as a fixed-nlist index densifies, which is why
     production IVF grows nlist ~ sqrt(n)). The certificate now pins
@@ -1119,7 +1118,7 @@ def _sem_k(n: int) -> int:
 
     K grows sublinearly while the corpus is small and is HARD-CAPPED
     at SEMDEDUP_K_CAP, so the codebook the driver trains/broadcasts
-    is O(K*d) <= CAP*d REGARDLESS of corpus size. (The r4 design used
+    is O(K*d) <= CAP*d REGARDLESS of corpus size. (An earlier design used
     K = n/64 raw corpus vectors collected to the driver — O(n*d)
     driver memory and an O(n^2*d) assignment kernel, which does not
     scale. The SemDeDup paper itself fixes K, e.g. 50k at
@@ -1235,9 +1234,9 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       `k3_kmeans` machinery: integer-exact fixed-point coordinates,
       deterministic `min(dist*{_SEM_MULT}+cid)` argmin, `sum div
       count` updates), md5-hash-sampled seeds. The driver never holds
-      more than K*d ints — corpus-INDEPENDENT, vs the r4 design's
+      more than K*d ints — corpus-INDEPENDENT, vs an earlier design's
       n/64 collected corpus vectors (O(n*d) driver memory, O(n^2*d)
-      assignment: the r4 scale-killer).
+      assignment: a scale-killer).
     - Training rounds: map-only Arrow/numpy assignment (|q|^2+|c|^2
       -2qC' int64 matmul — exact, no 3-D intermediate) + ONE groupBy
       shuffling K x (d+1) partial-aggregated ints per round; the
@@ -1346,18 +1345,16 @@ def k3_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in rows
         )
 
-    # persist: mapInArrow is a narrow transformation, so without it
+    # pin: mapInArrow is a narrow transformation, so without it
     # the corpus scan + quantize + numpy assignment kernel execute
     # THREE times (both self-join sides and the final left join) —
     # the dominant cost of the operator tripled.
-    assigned = (
-        q.select("vec_id", "label", "embedding", "q")
-        .mapInArrow(
+    assigned = pin(
+        q.select("vec_id", "label", "embedding", "q").mapInArrow(
             assign_kernel(cents, final=True),
             "vec_id long, cluster long, label int, "
             "embedding array<float>, csim double",
         )
-        .persist()
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     removed = (
@@ -1754,7 +1751,7 @@ def k3_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One bounded collect doubles as the empty-corpus probe (the
     # former head() was a second full action just to learn d —
-    # optimization r13, guide §1.2: fewer driver actions per build).
+    # fewer driver actions per build).
     seeds = q.orderBy("vec_id").limit(k).collect()  # k x d ints, bounded
     if not seeds:
         raise ValueError(
@@ -1767,8 +1764,7 @@ def k3_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     def assigned_df():
         # The whole argmin is ONE SQL string → one py4j round-trip per
         # round (the `_nearest_clusters` idiom), replacing ~k×d F.lit
-        # calls of driver↔JVM chatter per rebuild (optimization r13,
-        # guide §1.2 step 2 — the expression tree and its integer
+        # calls of driver↔JVM chatter per rebuild (the expression tree and its integer
         # arithmetic are unchanged: k inlined zip_with/aggregate
         # folds, least() with the *1024+cid tie-break).
         keys = ",".join(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..sources import load_table as T
 from .dedup import SQL_NORM, norm_text
 
-from .common import make_registry, map_rows
+from .common import make_registry, map_rows, pin, unpin
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -766,27 +766,21 @@ def _bpe_oracle() -> str:
 
 
 
-_BPE_MEMO: dict[tuple, tuple] = {}
-# key -> collected [(freq, word, syms)] when the DRIVER path trained
-# (None when the distributed path ran): lets k4_bpe_token_count pick
-# the map-expression tokenizer for bounded vocabularies.
-_BPE_LOCAL: dict[tuple, list | None] = {}
-
 # Vocabularies at or below this many distinct words train DRIVER-SIDE
 # (one Spark job: the corpus-to-word-count reduction; then pure-Python
 # recurrence) — the bounded-model-collect pattern (IVF centroids,
 # SemDeDup codebooks). The distributed recurrence below stays the
 # large-vocab path: 8 rounds x (explode + combiner agg + 1-row argmax)
 # is the right shape when the word table doesn't fit a driver, but it
-# pays ~16 tiny-job schedulings when it trivially does — the r7 bench
-# regression on k4_bpe_token_count was exactly that overhead.
+# pays ~16 tiny-job schedulings when it trivially does — a measured
+# bench regression on k4_bpe_token_count was exactly that overhead.
 BPE_DRIVER_VOCAB_MAX = 50_000
 
 # Separate, MUCH smaller bound for the literal-map TOKENIZER arm:
 # `GetMapValue` on a literal
 # ArrayBasedMapData is a linear scan per lookup and the 2N lit()
 # expressions inflate the analyzed plan — the same >~10^2-literal-
-# terms cliff the r4 PQ rework documented. Measured on a synthetic
+# terms cliff the PQ codebook rework documented. Measured on a synthetic
 # corpus (scripts/bpe_map_boundary.py, 2k docs x 200 words, local[16],
 # best-of-2): broadcast-join is flat ~0.45 s at every vocab size,
 # while the map literal reads 0.45 s @100 words, 0.59 @400, 0.96
@@ -835,26 +829,23 @@ def _bpe_train_local(rows) -> tuple[list, list]:
 
 
 def bpe_train(spark: SparkSession, sf_dir: str):
-    """Run the merge recurrence ONCE per (session, dataset); returns
-    (merges, final_words) where merges = [(rank, left, right, merged,
-    count)] and final_words = the cached (freq, word, sym) vocabulary
-    with all merges applied. Shared by k4_bpe_train (reports the
-    merges) and k4_bpe_token_count (tokenizes with them) — the same
-    memo pattern as dedup.verified_pairs.
+    """Run the merge recurrence; returns (merges, final_words,
+    local_words) where merges = [(rank, left, right, merged, count)],
+    final_words = the (freq, word, sym) vocabulary with all merges
+    applied, and local_words = the collected [(freq, word, syms)] when
+    the DRIVER path trained (None when the distributed path ran), which
+    lets k4_bpe_token_count pick the map-expression tokenizer for
+    bounded vocabularies. Shared by k4_bpe_train (reports the merges)
+    and k4_bpe_token_count (tokenizes with them); each call trains.
 
     Two physical paths, identical semantics: the corpus is always
     reduced ONCE to distinct (word, freq) — vocabulary-sized. A small
-    vocabulary (<= BPE_DRIVER_VOCAB_MAX words, probed by the same
-    head() that fetches it) trains driver-side; a large one runs the
-    distributed recurrence, each round materializing the next
-    vocabulary eagerly and unpersisting the superseded one, so at
-    most two round-tables are ever cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MEMO.get(key)
-    if hit is not None:
-        return hit
+    vocabulary (<= BPE_DRIVER_VOCAB_MAX words) trains driver-side; a
+    large one runs the distributed recurrence, each round pinning the
+    next vocabulary and releasing the superseded one, so at most two
+    round-tables are ever held."""
     d = T(spark, sf_dir, "documents")
-    word_counts = (
+    word_counts = pin(
         d.select(
             F.explode(F.split(norm_text(F.col("text")), " ")).alias("w")
         )
@@ -862,7 +853,6 @@ def bpe_train(spark: SparkSession, sf_dir: str):
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    word_counts = word_counts.cache()
     # full-parallel count, not head(N+1): a collect-limit probe runs
     # the scale-up partition waves (1, 4, 16... attempts) on the agg
     # and costs more than the answer
@@ -870,24 +860,23 @@ def bpe_train(spark: SparkSession, sf_dir: str):
         merges, words = _bpe_train_local(
             [(r["freq"], r["w"]) for r in word_counts.collect()]
         )
-        word_counts.unpersist()
+        unpin(word_counts)
         cur = spark.createDataFrame(
             [
                 (freq, w, "".join(f"{_SEP}{s}{_SEP}" for s in syms))
                 for freq, w, syms in words
             ],
             "freq long, word string, sym string",
-        ).cache()
-        _BPE_MEMO[key] = (merges, cur)
-        _BPE_LOCAL[key] = words
-        return merges, cur
-    cur = word_counts.select(
-        "freq",
-        F.col("w").alias("word"),
-        F.regexp_replace("w", "(.)", f"{_SEP}$1{_SEP}").alias("sym"),
-    ).cache()
-    cur.count()  # materialize, then release the probe's cache
-    word_counts.unpersist()
+        )
+        return merges, cur, words
+    cur = pin(
+        word_counts.select(
+            "freq",
+            F.col("w").alias("word"),
+            F.regexp_replace("w", "(.)", f"{_SEP}$1{_SEP}").alias("sym"),
+        )
+    )
+    unpin(word_counts)
     merges = []
     for rank in range(1, BPE_ROUNDS + 1):
         toks = F.split(
@@ -912,21 +901,20 @@ def bpe_train(spark: SparkSession, sf_dir: str):
         pair, c = best[0]["pair"], best[0]["c"]
         left, right = pair.split(" ", 1)
         merges.append((rank, left, right, left + right, c))
-        nxt = cur.select(
-            "freq",
-            "word",
-            F.replace(
-                F.col("sym"),
-                F.lit(f"{_SEP}{left}{_SEP}{_SEP}{right}{_SEP}"),
-                F.lit(f"{_SEP}{left}{right}{_SEP}"),
-            ).alias("sym"),
-        ).cache()
-        nxt.count()  # materialize before dropping the parent cache
-        cur.unpersist()
+        nxt = pin(
+            cur.select(
+                "freq",
+                "word",
+                F.replace(
+                    F.col("sym"),
+                    F.lit(f"{_SEP}{left}{_SEP}{_SEP}{right}{_SEP}"),
+                    F.lit(f"{_SEP}{left}{right}{_SEP}"),
+                ).alias("sym"),
+            )
+        )
+        unpin(cur)
         cur = nxt
-    _BPE_MEMO[key] = (merges, cur)
-    _BPE_LOCAL[key] = None
-    return merges, cur
+    return merges, cur, None
 
 
 @query("k4_bpe_train", oracle=_bpe_oracle())
@@ -952,7 +940,7 @@ def k4_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained CTEs, so every learned merge and its count is
     hash-checked, ties and all (tie-break: count DESC, pair ASC).
     """
-    merges, _ = bpe_train(spark, sf_dir)
+    merges, _, _ = bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges,
         "rank bigint, left_sym string, right_sym string, "
@@ -1009,9 +997,7 @@ def k4_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically — doc-level token counts are hash-checked end to end.
     """
     d = T(spark, sf_dir, "documents")
-    _, cur = bpe_train(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    local = _BPE_LOCAL.get(key)
+    _, cur, local = bpe_train(spark, sf_dir)
     if local is not None and len(local) <= BPE_TOKENIZE_MAP_MAX:
         tok_map = F.create_map(
             *[
@@ -1133,11 +1119,11 @@ def d14_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("token") != "")
     )
-    mg = toks.mapInArrow(mg_candidates_fn, "token string, n long").cache()
+    mg = pin(toks.mapInArrow(mg_candidates_fn, "token string, n long"))
     n_total = mg.agg(F.sum("n")).collect()[0][0] or 0
     cands = mg.filter(F.col("token").isNotNull()).select("token").distinct()
     # two corpus passes total: the MG/candidate+count pass above, and
-    # the exact recount below — the cached mg table is candidate-sized
+    # the exact recount below — the pinned mg table is candidate-sized
     return (
         toks.join(F.broadcast(cands), "token", "left_semi")
         .groupBy("token")
@@ -1383,7 +1369,7 @@ GOPHER_MIN_WORDS, GOPHER_MAX_WORDS = 15, 80
 def _gopher_oracle_tail(src: str) -> str:
     """The Gopher-gate oracle from CTE `t` onward, over any source
     relation exposing (doc_id, text) — shared by the raw-documents
-    gate and the r11 extract->gate composition so the two oracles
+    gate and the extract->gate composition so the two oracles
     cannot drift. Append after 'WITH ' or after earlier CTEs + ','."""
     return f"""t AS (
       SELECT doc_id, {SQL_NORM} AS nt,
@@ -2329,7 +2315,7 @@ def nfc_normalize_row(doc_id, raw):
     """,
 )
 def k4_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC normalization certificate (late r11): each doc's
+    """Unicode NFC normalization certificate: each doc's
     text carries an appended DECOMPOSED suffix (base letter +
     combining mark, repeated doc_id-modularly — sequences whose
     compositions are stable across Unicode versions), and the

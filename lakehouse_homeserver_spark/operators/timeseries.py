@@ -93,7 +93,7 @@ def _purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared union-window ASOF frame: one row per purchase with
     (event_id, purchase_us, last_click_us) — consumed by
     `c7_asof_join` as-is and by `c7_asof_tolerance` behind one CASE
-    (extracted r7; the two bodies were copies that could drift if the
+    (one body: two copies could drift if the
     union-trick encoding ever changes, e.g. a tie-break fix)."""
     e = T(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
@@ -2049,7 +2049,7 @@ def i12_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _stamp(j)
 
-    # Scale-adaptive state-partition pin (optimization r13, guide §2):
+    # Scale-adaptive state-partition pin (partitioning from input size):
     # 8 is the measured optimum at sf0.1 but caps the summed per-key
     # Python time at 8-way on bigger inputs — the 10× clone runs 2.1×
     # faster at 32 partitions. Results are partition-count invariant

@@ -364,8 +364,8 @@ def j_arrow_batch_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     path whenever no grouped pandas semantics are needed.
 
     Float contract: the fold runs dimension-at-a-time (strided numpy
-    adds = an explicit left fold, the r2-semdedup precedent; the r5
-    semdedup moved to integer-exact arithmetic instead), matching
+    adds = an explicit left fold, as SemDeDup first did; SemDeDup
+    has since moved to integer-exact arithmetic), matching
     DuckDB's list_sum order bit-for-bit before the 6-dp round.
     Map-only: no shuffle, batch in → batch out.
     """

@@ -29,8 +29,8 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Worker interpreter shim (optimization r13, guide §4 — see
-# scripts/worker_python.sh for the measured numbers): freshly spawned
+# Worker interpreter shim (see scripts/worker_python.sh for the
+# measured numbers): freshly spawned
 # Python workers import pyspark through $SPARK_HOME's pyspark.zip,
 # paying ~1.3 s of zipimport bytecode compilation PER PROCESS — and
 # the Python streaming source runner is one fresh process per stream.

@@ -119,8 +119,8 @@ def _entry_file_seq(entry: dict) -> dict[str, int]:
     predate every delete (callers default them to 0 via
     ``.get(f, 0)``). Duplicated here ON PURPOSE rather than imported:
     this module is cloudpickled BY VALUE into the Python streaming
-    source runner, where a relative engine import fails (the r10
-    sweep caught exactly that on a first attempt that imported
+    source runner, where a relative engine import fails (the
+    local-cluster sweep caught exactly that on a first attempt that imported
     `_file_seq`). The format-conformance suite pins all three readers
     (engine, standalone, pyds) to the same rule on hand-crafted
     logs, so drift between the mirrors fails CI."""

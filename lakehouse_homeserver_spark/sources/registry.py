@@ -39,7 +39,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
     Handles both fixture layouts: the driver's single-file
     `<t>.parquet` and Spark-written DIRECTORY tables of part files
     (scripts/scale_smoke.py's scaled clones); `pq.ParquetFile` on a
-    directory raises, which crashed the r5 10× smoke for every
+    directory raises, which crashed the 10× smoke for every
     operator using a footer count to size a model."""
     import pyarrow.parquet as pq
 
@@ -59,7 +59,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
 # is the spark.read.parquet listing + schema round-trip, measured at
 # 120-200 ms per call warm (~1 s cold) on this box — paid hundreds of
 # times per bench sweep because most queries load 1-4 tables
-# (optimization r12, guide §1.2 step 2). Keyed on the live session
+# (fewer driver round-trips per build). Keyed on the live session
 # (plan resolution is conf-dependent at read time, e.g. nanosAsLong)
 # and dropped with it; the fixture zone is immutable by contract, so
 # a pinned file listing cannot go stale.
@@ -76,7 +76,7 @@ def load_table(
     around the scan (a40: ``useV1SourceList``/``aggregatePushdown``
     select the DSv2 path at spark.read time; a memoized handle was
     planned under the session defaults and the PushedAggregation
-    fact silently disappears — caught by the r12 post-memo sweep).
+    fact silently disappears — caught by the post-memo sweep).
 
     ``events.ts`` normalization: the fixture has shipped it both as
     parquet TIMESTAMP(NANOS) (read as raw nanos via ``nanosAsLong``,
@@ -117,8 +117,8 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # Session -> sf_dir whose views are currently registered. Pure
 # METADATA memo (no query results, no data): every sql_* query paid
 # ten spark.read.parquet schema/listing round-trips per call even
-# though the views are identical within a session (optimization r12 —
-# ~0.5 s build per query × 30 queries). Keyed on the live session
+# though the views are identical within a session (~0.5 s build
+# per query × 30 queries). Keyed on the live session
 # object (temp views are per-session) and on sf_dir, so pointing the
 # same session at a different scale factor re-registers; a dead
 # session's entry is dropped by the weak reference.

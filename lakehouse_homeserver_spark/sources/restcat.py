@@ -32,8 +32,8 @@ want spec fields ignore it and read the snapshot log at
 ``metadata-location`` — which is how the DuckDB side of
 ``a47_rest_catalog`` proves the files stay engine-neutral.
 
-r5 narrows the remaining seams the r4 note left open ("Postgres
-persistence + OAuth"):
+This narrows the remaining seams the first catalog left open
+("Postgres persistence + OAuth"):
 
 - :class:`SqlCatalogStore` — a SQLite-backed registry with the same
   table shape Iceberg's JdbcCatalog persists (namespace + table →
@@ -48,7 +48,7 @@ persistence + OAuth"):
   every route except ``config``/``oauth`` requires
   ``Authorization: Bearer <token>``; bad or missing tokens get the
   spec's 401 envelope. Without ``credential`` the server stays open
-  (127.0.0.1-only), preserving the r4 behavior.
+  (127.0.0.1-only), as the first catalog was.
 - Write DDL: ``POST /v1/namespaces`` (CreateNamespace) and the
   spec's table registration ``POST /v1/namespaces/{ns}/register``
   (RegisterTableRequest: name + metadata-location), so a client can
@@ -200,7 +200,7 @@ class CatalogServer:
         store: SqlCatalogStore | None = None,
         credential: tuple[str, str] | None = None,
     ) -> None:
-        # In-memory registry when no store is given (r4 behavior);
+        # In-memory registry when no store is given (the default);
         # a SqlCatalogStore makes registrations survive restarts.
         # The lock mirrors _tokens_lock: handlers run on
         # ThreadingHTTPServer threads, and an unlocked iteration over

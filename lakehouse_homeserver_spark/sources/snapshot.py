@@ -656,7 +656,7 @@ class SnapshotTable:
         On an object store this one call is replaced by the catalog /
         LogStore conditional-put; everything else is storage-agnostic.
 
-        Manifest-list indirection (the r3 seam, implemented r4): past
+        Manifest-list indirection: past
         `manifest_inline_max` live files the O(files) payload —
         manifest, stats, seq, blooms — is written to ONE sidecar under
         `_log/manifests/` first, and the published entry carries just
@@ -2025,8 +2025,7 @@ class SnapshotTable:
         range was EXPIRED: its rows are unrecoverable and an
         incremental feed that silently skips it permanently loses
         data downstream. Raise, like Delta/Iceberg do on incomplete
-        log ranges, instead of returning a quietly-wrong diff (r6
-        review finding). `need_parent` additionally requires
+        log ranges, instead of returning a quietly-wrong diff. `need_parent` additionally requires
         from_version itself (changes_between diffs each commit
         against its TRUE parent)."""
         have = set(self.versions())

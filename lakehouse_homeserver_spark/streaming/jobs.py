@@ -28,12 +28,13 @@ buckets per key; file-source listing cost is amortized with
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+from ..operators.common import pin, session_conf, unpin
 
 
 def await_or_raise(q: StreamingQuery, timeout_s: int = 300) -> None:
@@ -49,22 +50,16 @@ def await_or_raise(q: StreamingQuery, timeout_s: int = 300) -> None:
         )
 
 
-@contextmanager
 def pinned_shuffle(spark: SparkSession, n: str = "8"):
-    """Pin `spark.sql.shuffle.partitions` around a streaming
-    certification run (restored in finally). The streaming certs'
+    """Scope `spark.sql.shuffle.partitions` to `n` around a streaming
+    certification run (a `session_conf`). The streaming certs'
     dominant cost is per-partition state-store lifecycle
     (open/commit x partitions x micro-batches), not data volume --
     measured on i12: 32->8 partitions cut the run 17.3->10.8 s with
     identical results. Checkpoints are fresh per call, so the pinned
     value never conflicts with a prior run's state layout; on a real
     cluster size this to the executor count instead."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return session_conf(spark, {"spark.sql.shuffle.partitions": n})
 
 
 def scaled_state_partitions(
@@ -75,7 +70,7 @@ def scaled_state_partitions(
     hi: int | None = None,
 ) -> str:
     """Scale-ADAPTIVE state-partition pin for stateful streaming
-    certs (optimization r13, guide §2: derive partitioning from input
+    certs (derive partitioning from input
     size instead of a constant tuned for one scale factor).
 
     Measured on the rich-sessionizer (i12): at sf0.1 (100 k events)
@@ -261,22 +256,19 @@ def prepare_events_landing(
     # window: test/demo helper only, never a data-plane path.)
     # `event_id` is the events fixture's key, so (ts, event_id) is a
     # total order: the ntile assigns every row the same slice on any
-    # recompute, and the persisted slices do not depend on whether a
-    # cached block was evicted (tests/test_streaming.py checks the key
-    # is unique in every fixture).
-    # Materialize the ntile ONCE: each per-slice write is a separate
-    # Spark job, and the lazy form re-ran the global-sort window
-    # behind every one of them — N slices paid N full sorts of the
-    # events table. With persist/unpersist the first write
-    # materializes the sort, later writes reuse the cached slices,
-    # and — unlike localCheckpoint, whose blocks cannot be released
-    # through the DataFrame API — the storage is reclaimed on exit,
-    # so a session calling this helper many times (the test suite
-    # does ~14×) does not accumulate pinned block copies for its
-    # lifetime.
-    sliced = events.withColumn(
-        "_slice", F.ntile(slices).over(Window.orderBy("ts", "event_id"))
-    ).persist()
+    # recompute (tests/test_streaming.py checks the key is unique in
+    # every fixture).
+    # Pin the ntile ONCE: each per-slice write is a separate Spark
+    # job, and the lazy form re-ran the global-sort window behind
+    # every one of them — N slices paid N full sorts of the events
+    # table. The pin is released on exit, so a session calling this
+    # helper many times (the test suite does ~14×) does not
+    # accumulate block copies for its lifetime.
+    sliced = pin(
+        events.withColumn(
+            "_slice", F.ntile(slices).over(Window.orderBy("ts", "event_id"))
+        )
+    )
     try:
         for i in range(1, slices + 1):
             (
@@ -287,7 +279,7 @@ def prepare_events_landing(
                 .parquet(landing_dir)
             )
     finally:
-        sliced.unpersist()
+        unpin(sliced)
 
 
 def interval_join(
@@ -579,11 +571,12 @@ def apply_cdc_batch(
         # batches, and only the genuinely-new span is folded.
         batch = batch.filter(F.col("_commit_version") > applied_hi)
     # The micro-batch is consumed by TWO actions (the span scalar and
-    # the delta aggregate feeding the merge); without a persist each
+    # the delta aggregate feeding the merge); without a pin each
     # action re-executes the change-feed scan through the Python
-    # data source (optimization r12 — the documented foreachBatch
-    # reuse pattern; the micro-batch is bounded by definition).
-    batch = batch.persist()
+    # data source (the documented foreachBatch reuse pattern; the
+    # micro-batch is bounded by definition). Released when the batch
+    # is folded, so a long stream holds no pin per batch.
+    batch = pin(batch)
     try:
         span = batch.agg(
             F.min("_commit_version").alias("lo"),
@@ -593,7 +586,7 @@ def apply_cdc_batch(
             return  # empty / fully-replayed batch — nothing new to fold
         _apply_cdc_delta(t, keys, measure, batch, batch_id, span)
     finally:
-        batch.unpersist()
+        unpin(batch)
 
 
 def _apply_cdc_delta(t, keys, measure, batch, batch_id, span) -> None:

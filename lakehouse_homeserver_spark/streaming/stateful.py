@@ -95,7 +95,7 @@ def sessionize_fn(
     emitted rows are bit-identical to the loop's (same HALF_UP cents,
     same (us, event_id) tie order, same dedup-sorted type sets).
 
-    Per-KEY overhead trimmed (optimization r12, guide §4.5): this
+    Per-KEY overhead trimmed: this
     function runs once per active key per micro-batch — thousands of
     invocations each seeing a handful of rows — so constant work per
     call is what `allUpdatesTimeMs` actually measures (~20 s summed
@@ -135,7 +135,7 @@ def sessionize_fn(
     # numpy lexsort over the two key arrays instead of a pandas
     # sort_values + sorted-frame copy: this runs once per key group,
     # so its constant cost is multiplied by thousands of calls per
-    # micro-batch (optimization r12). Tie order within equal (us,
+    # micro-batch. Tie order within equal (us,
     # event_id) is output-invariant (types dedup-sort at emit; sums/
     # counts are order-free), and event_id makes keys unique anyway.
     us_raw = batch["ts"].to_numpy("datetime64[ns]").astype(np.int64) // 1000
@@ -387,7 +387,7 @@ def _spike_processor_cls():
             # Vectorized: prior_n/prior_sum are prefix
             # aggregates — arange + shifted cumsum — and the flag is
             # one comparison; the old per-row zip loop was exactly
-            # the row-at-a-time shape the r6 sessionizer rewrite
+            # the row-at-a-time shape the sessionizer rewrite
             # removed. NaN (NULL value): flag false (NULL comparison
             # in the twin), counts toward prior_n (count(*)), adds 0
             # to prior_sum (F.sum skips NULLs) — and no longer

@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
+from lakehouse_homeserver_spark.operators.common import pin, unpin  # noqa: E402
+
 N_DOCS = 2_000
 WORDS_PER_DOC = 200
 
@@ -44,9 +46,7 @@ def build(spark, n_vocab: int):
     d = spark.createDataFrame(docs, "doc_id long, text string").repartition(
         16
     )
-    d = d.cache()
-    d.count()
-    return d, vocab, toks
+    return pin(d), vocab, toks
 
 
 def run_map_literal(spark, d, vocab, toks) -> tuple:
@@ -81,7 +81,7 @@ def run_broadcast_join(spark, d, vocab, toks) -> tuple:
 def main() -> None:
     # 50k is deliberately NOT a default: the map-literal arm there
     # builds a 100k-expression plan and extrapolates to minutes
-    # (BASELINE.md r9 table stops at the measured 5k point). Pass it
+    # (BASELINE.md's table stops at the measured 5k point). Pass it
     # explicitly to pay that cost on purpose.
     sizes = [int(s) for s in sys.argv[1:]] or [100, 1_000, 5_000]
     spark = (
@@ -93,7 +93,7 @@ def main() -> None:
     # one throwaway to pay JVM/codegen warmup outside the readings
     warm, _, _ = build(spark, 100)
     run_broadcast_join(spark, warm, ["w000000"], [2])
-    warm.unpersist()
+    unpin(warm)
     for n in sizes:
         d, vocab, toks = build(spark, n)
         for arm, fn in (
@@ -115,7 +115,7 @@ def main() -> None:
                 ),
                 flush=True,
             )
-        d.unpersist()
+        unpin(d)
 
 
 if __name__ == "__main__":

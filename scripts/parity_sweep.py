@@ -133,6 +133,8 @@ def run_engine(names: list[str]) -> dict[str, tuple | None]:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    from lakehouse_homeserver_spark.operators.common import unpin_all
+
     out: dict[str, tuple | None] = {}
     try:
         for name in names:
@@ -149,6 +151,8 @@ def run_engine(names: list[str]) -> dict[str, tuple | None]:
                 out[name] = None
                 print(f"{name}: ERROR in Spark", flush=True)
                 traceback.print_exc()
+            finally:
+                unpin_all(spark)
     finally:
         spark.stop()
         # This child leaves through os._exit, which skips atexit.

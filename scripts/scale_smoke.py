@@ -307,6 +307,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     scaled = scaled_clones(spark, copies)
     qs = all_queries()
+    # The first timed op must not absorb JVM, codegen and Python-worker
+    # start, or its 1x time reads high and its ratio low.
+    obs.warm_up(spark, BASE_SF)
     # SPARK_GRAFT_SMOKE_OPS=a,b,c re-measures a subset without paying
     # for the full sweep (the clone build is shared either way).
     only = os.environ.get("SPARK_GRAFT_SMOKE_OPS")

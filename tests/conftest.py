@@ -22,6 +22,7 @@ os.environ["PYTHONPATH"] = (
     else _REPO_ROOT
 )
 
+from lakehouse_homeserver_spark.operators.common import unpin_all  # noqa: E402
 from lakehouse_homeserver_spark.session import get_spark  # noqa: E402
 from lakehouse_homeserver_spark.sources import TABLES  # noqa: E402
 
@@ -74,6 +75,16 @@ def spark():
         },
     )
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_pins(request):
+    """Release every pin a test's queries left in the shared session
+    once the test (and its own fixtures) are done, so no test sees an
+    earlier test's materialized intermediates."""
+    yield
+    if "spark" in request.fixturenames:
+        unpin_all(request.getfixturevalue("spark"))
 
 
 @pytest.fixture(scope="session")

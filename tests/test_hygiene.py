@@ -82,14 +82,46 @@ def test_package_has_no_map_in_pandas():
 
 def test_package_cites_no_round_history():
     """Comments state what the code does and why, not the history
-    behind it: a `VERDICT rN`, `rN review`, `(rN)` or `round-N`
-    citation is provenance, not a reason."""
+    behind it: a `VERDICT rN`, `rN review`, `(rN)`, `round-N`, `since
+    r8`, `optimization r12/r13` or `late r11` citation is provenance,
+    not a reason. A bare `rN` that is a name is not a citation: a
+    function `def r4(`, a SQL CTE `r0 AS (`, a SQL alias (`region r2`,
+    `r2.r_name`), a string `"r2"` or a path such as `plans/r13/`."""
     bad = _package_hits(
         r"\b(VERDICT|ADVICE) r\d+|\br\d+ (review|advice|shape|version)\b"
-        r"|\(r\d+\)|\bround-\d+",
+        r"|\(r\d+\)|\bround-\d+"
+        r"|(?-i:(?<![\w/\"'])(?<!region )r\d{1,2}\b(?!\(|\.\w| AS \())",
         re.IGNORECASE,
     )
     assert not bad, "round-history citations: " + ", ".join(bad)
+
+
+def test_package_pins_through_common():
+    """`operators/common.py` owns materialization: `pin` is the one way
+    to keep an intermediate and `unpin`/`unpin_all` the one way to
+    release it. A `.cache()`, `.persist(`, `.localCheckpoint(`,
+    `.unpersist(` or `clearCache(` elsewhere is storage with no owner,
+    which outlives its query and changes what a later query costs."""
+    bad = _package_hits(
+        r"\.localCheckpoint\(|\.cache\(\)|\.persist\(|\.unpersist\(|clearCache\(",
+        skip=("lakehouse_homeserver_spark/operators/common.py",),
+    )
+    assert not bad, "materialization outside common.py: " + ", ".join(bad)
+
+
+def test_package_sets_conf_through_session_conf():
+    """A query that needs a Spark conf for part of its plan scopes it
+    with `common.session_conf`, which restores the session on exit;
+    only `session.py`'s `tune_session` sets session defaults. A bare
+    `spark.conf.set(` is a conf change that can outlive its query."""
+    bad = _package_hits(
+        r"spark\.conf\.set\(",
+        skip=(
+            "lakehouse_homeserver_spark/operators/common.py",
+            "lakehouse_homeserver_spark/session.py",
+        ),
+    )
+    assert not bad, "conf writes outside session_conf: " + ", ".join(bad)
 
 
 def test_noop_sink_only_in_obs():

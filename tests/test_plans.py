@@ -579,8 +579,6 @@ def test_bpe_token_count_large_vocab_broadcasts(spark, sf_dir, monkeypatch):
 
     want = sorted(map(tuple, text.k4_bpe_token_count(spark, sf_dir).collect()))
     monkeypatch.setattr(text, "BPE_DRIVER_VOCAB_MAX", 0)
-    monkeypatch.setattr(text, "_BPE_MEMO", {})
-    monkeypatch.setattr(text, "_BPE_LOCAL", {})
     df = text.k4_bpe_token_count(spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan, plan

@@ -347,9 +347,7 @@ def test_bpe_driver_and_distributed_paths_equivalent(
 
         def run(threshold):
             monkeypatch.setattr(tx, "BPE_DRIVER_VOCAB_MAX", threshold)
-            monkeypatch.setattr(tx, "_BPE_MEMO", {})
-            monkeypatch.setattr(tx, "_BPE_LOCAL", {})
-            merges, cur = tx.bpe_train(spark, sf)
+            merges, cur, _ = tx.bpe_train(spark, sf)
             vocab = sorted(
                 map(tuple, cur.select("freq", "word", "sym").collect())
             )
