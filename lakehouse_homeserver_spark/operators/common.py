@@ -114,6 +114,19 @@ def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
     return df.mapInArrow(run, schema)
 
 
+def chain(first, second):
+    """One `map_rows` kernel that feeds each output row of `first`
+    straight into `second`, so two per-row stages cross the Python
+    boundary once instead of twice. Only for an intermediate whose
+    Python values are what `to_pylist` would return for it (the Arrow
+    round trip between two `map_rows` passes is then the identity)."""
+
+    def both(*row):
+        return [out for mid in first(*row) for out in second(*mid)]
+
+    return both
+
+
 def pin(df: DataFrame) -> DataFrame:
     """Materialize `df` now and return a DataFrame that reads the
     stored rows: the one way engine code keeps an intermediate that

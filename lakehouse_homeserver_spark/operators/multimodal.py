@@ -39,7 +39,7 @@ from pyspark.sql.types import (
 
 from ..sources import load_table as T
 
-from .common import make_registry, map_rows, pin
+from .common import chain, make_registry, map_rows, pin
 
 QUERIES, ORACLES, query = make_registry()
 
@@ -312,15 +312,14 @@ def k5_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output size is bounded by construction (4x4x3 = 48 pixel bytes +
     fixed PNG framing) — the property that keeps a 100 TB resize
-    job's write volume predictable. Scale shape: two chained map-only
-    `map_rows` passes fused into the scan stage; the payload never
-    shuffles, per-image work is O(pixels).
+    job's write volume predictable. Scale shape: encode and resize
+    are one map-only `map_rows` pass (`chain`) fused into the scan
+    stage; the payload never shuffles, per-image work is O(pixels).
     """
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("pixels"))
-    png = map_rows(src, png_encode_row, PAYLOAD_SCHEMA)
-    return map_rows(png, resize_png_row, RESIZE_REAL_SCHEMA)
+    return map_rows(src, chain(png_encode_row, resize_png_row), RESIZE_REAL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -789,18 +788,17 @@ def k5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode round trip bit-for-bit. 8x8 keeps each mean an exact
     sum/64 (no float drift).
 
-    Scale shape: two chained map-only `map_rows` passes (encode
-    stand-in, decode) fused into one stage — payload never shuffles;
-    at 100 TB decode parallelism is scan parallelism, per-image work
-    is O(pixels). Baseline JPEG gained its own from-spec decode
-    certificate (k5_jpeg_decode); neither compressed format
-    is a seam anymore.
+    Scale shape: encode stand-in and decode are one map-only
+    `map_rows` pass (`chain`) fused into the scan stage — payload
+    never shuffles; at 100 TB decode parallelism is scan parallelism,
+    per-image work is O(pixels). Baseline JPEG gained its own
+    from-spec decode certificate (k5_jpeg_decode); neither compressed
+    format is a seam anymore.
     """
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("pixels"))
-    png = map_rows(src, png_encode_row, PAYLOAD_SCHEMA)
-    return map_rows(png, png_decode_row, PPM_DECODE_SCHEMA)
+    return map_rows(src, chain(png_encode_row, png_decode_row), PPM_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1527,9 +1525,9 @@ def k5_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-13 rounds to 0) and inverts exactly. Arbitrary images are
     near-lossless at quantizer 1 (|err| <= 3, pinned by pytest).
 
-    Scale shape: identical to k5_png_decode — two chained map-only
-    `map_rows` passes; payload never shuffles; decode
-    parallelism is scan parallelism, per-image work O(pixels).
+    Scale shape: identical to k5_png_decode — encode and decode are
+    one map-only `map_rows` pass (`chain`); payload never shuffles;
+    decode parallelism is scan parallelism, per-image work O(pixels).
     Progressive/arithmetic/12-bit/DRI variants stay loud ValueErrors
     (functions/jpeg.py names each).
     """
@@ -1543,8 +1541,7 @@ def k5_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = d.select(
         "doc_id", F.encode(body, "UTF-8").alias("pixels")
     ).repartition(spark.sparkContext.defaultParallelism)
-    jpg = map_rows(src, jpeg_encode_row, PAYLOAD_SCHEMA)
-    return map_rows(jpg, jpeg_decode_row, JPEG_DECODE_SCHEMA)
+    return map_rows(src, chain(jpeg_encode_row, jpeg_decode_row), JPEG_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1831,18 +1828,18 @@ def k5_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same double ops), so a hash match certifies boundary detection +
     per-frame decode + sampling stride in one verdict.
 
-    Scale shape: pre-encode repartition (36-used-byte rows), then two
-    chained map-only `map_rows` passes with executor-side fan-out
-    (1 clip row -> {MJPEG_FRAMES // MJPEG_EVERY} frame rows); payloads
-    never shuffle. NULL-text rows carry no clip and emit no frames
-    (oracle: WHERE text IS NOT NULL)."""
+    Scale shape: pre-encode repartition (36-used-byte rows), then
+    encode and sampling as one map-only `map_rows` pass (`chain`)
+    with executor-side fan-out (1 clip row ->
+    {MJPEG_FRAMES // MJPEG_EVERY} frame rows); payloads never
+    shuffle. NULL-text rows carry no clip and emit no frames (oracle:
+    WHERE text IS NOT NULL)."""
     d = T(spark, sf_dir, "documents")
     body = F.expr("rpad(text || ' x', 192, text || ' x')")
     src = d.select(
         "doc_id", F.encode(body, "UTF-8").alias("pixels")
     ).repartition(spark.sparkContext.defaultParallelism)
-    clips = map_rows(src, mjpeg_encode_row, PAYLOAD_SCHEMA)
-    return map_rows(clips, mjpeg_frame_rows, MJPEG_SCHEMA)
+    return map_rows(src, chain(mjpeg_encode_row, mjpeg_frame_rows), MJPEG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

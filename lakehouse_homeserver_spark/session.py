@@ -36,10 +36,13 @@ DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # the Python streaming source runner is one fresh process per stream.
 # When the driver's own pyspark is a directory install (bytecode
 # cache warm), the shim prepends it to the worker's PYTHONPATH so the
-# same release imports in ~0.4 s. Results are unaffected: it is the
-# identical pyspark version either way (checked against the
-# version.py in $SPARK_HOME's pyspark.zip), only resolved from a path
-# with a __pycache__.
+# same release imports in ~0.4 s, and drops Spark's own archives
+# (pyspark.zip, the py4j zip, the jars) from that path: every task
+# re-reads each archive's index when pyspark invalidates the import
+# caches, ~105 ms per task in all. Results are unaffected: pyspark
+# and py4j are the identical releases either way (checked against
+# the version.py in $SPARK_HOME's pyspark.zip and the py4j zip's
+# name), only resolved from a path with a __pycache__.
 _WORKER_SHIM = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "scripts",
@@ -71,24 +74,40 @@ def _worker_shim_env(real_python: str) -> dict[str, str]:
     different major.minor than the driver's (its workers could not
     import the driver's install; Spark itself rejects such a mismatch
     at run time, but don't let the shim be the thing that breaks), or
-    $SPARK_HOME's pyspark.zip is a different pyspark release than the
-    driver's (the shim would put the driver's release in front of the
-    one the workers are meant to run)."""
+    $SPARK_HOME's pyspark.zip or py4j zip is a different release than
+    the driver's pyspark or py4j (the shim would put the driver's
+    release in place of the one the workers are meant to run), or
+    py4j does not import from pyspark's parent dir (the one dir the
+    shim puts in front)."""
+    import glob
     import shutil
     import subprocess
     import sys
 
+    import py4j
     import pyspark
 
     pkg_dir = os.path.dirname(os.path.abspath(pyspark.__file__))
     if not os.path.isdir(pkg_dir) or not os.access(_WORKER_SHIM, os.X_OK):
         return {}
+    # The shim drops the py4j zip, so py4j must import from the dir it
+    # puts in front.
+    py4j_dir = os.path.dirname(os.path.dirname(os.path.abspath(py4j.__file__)))
+    if py4j_dir != os.path.dirname(pkg_dir):
+        return {}
     spark_home = os.environ.get("SPARK_HOME")
     if spark_home:
-        zip_path = os.path.join(spark_home, "python", "lib", "pyspark.zip")
+        lib = os.path.join(spark_home, "python", "lib")
+        zip_path = os.path.join(lib, "pyspark.zip")
         if (
             os.path.isfile(zip_path)
             and _zip_pyspark_version(zip_path) != pyspark.__version__
+        ):
+            return {}
+        py4j_zip = f"py4j-{py4j.__version__}-src.zip"
+        if any(
+            os.path.basename(z) != py4j_zip
+            for z in glob.glob(os.path.join(lib, "py4j-*-src.zip"))
         ):
             return {}
     driver_ver = "%d.%d" % sys.version_info[:2]
@@ -119,7 +138,8 @@ def _install_worker_shim_env() -> None:
     PythonWorkerFactory spawn inherits the JVM's environment. The
     shim never changes WHICH interpreter runs (it execs the one that
     was configured, or the driver's own) — it only prepends the
-    driver's bytecode-cached pyspark dir to the worker's PYTHONPATH."""
+    driver's bytecode-cached pyspark dir to the worker's PYTHONPATH
+    and drops Spark's own archives from it."""
     import sys
 
     real = os.environ.get("PYSPARK_PYTHON") or sys.executable

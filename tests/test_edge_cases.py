@@ -457,26 +457,116 @@ def test_register_views_restores_any_dropped_view(spark, sf_dir):
 
 
 def test_worker_shim_requires_matching_pyspark_release(monkeypatch, tmp_path):
-    """The worker shim puts the driver's pyspark in front of
-    $SPARK_HOME's pyspark.zip; it stays off when the two are
-    different releases."""
+    """The worker shim puts the driver's pyspark and py4j in place of
+    $SPARK_HOME's pyspark.zip and py4j zip; it stays off when either
+    pair are different releases or py4j is installed apart from
+    pyspark."""
     import sys
     import zipfile
 
+    import py4j
     import pyspark
 
     from lakehouse_homeserver_spark.session import _worker_shim_env
 
-    def spark_home_with(version: str) -> str:
-        home = tmp_path / version
-        (home / "python" / "lib").mkdir(parents=True)
-        with zipfile.ZipFile(home / "python" / "lib" / "pyspark.zip", "w") as zf:
+    def spark_home_with(version: str, py4j_version: str = py4j.__version__) -> str:
+        home = tmp_path / f"{version}-{py4j_version}"
+        lib = home / "python" / "lib"
+        lib.mkdir(parents=True)
+        with zipfile.ZipFile(lib / "pyspark.zip", "w") as zf:
             zf.writestr("pyspark/version.py", f"__version__: str = '{version}'\n")
+        with zipfile.ZipFile(lib / f"py4j-{py4j_version}-src.zip", "w") as zf:
+            zf.writestr("py4j/version.py", f"__version__ = '{py4j_version}'\n")
         return str(home)
 
-    monkeypatch.setenv("SPARK_HOME", spark_home_with(pyspark.__version__))
+    matching = spark_home_with(pyspark.__version__)
+    monkeypatch.setenv("SPARK_HOME", matching)
     shim = _worker_shim_env(sys.executable)
     assert shim["SPARK_GRAFT_REAL_PYTHON"] == sys.executable
 
     monkeypatch.setenv("SPARK_HOME", spark_home_with("0.0.1-other"))
     assert _worker_shim_env(sys.executable) == {}
+
+    monkeypatch.setenv("SPARK_HOME", spark_home_with(pyspark.__version__, "0.0.1"))
+    assert _worker_shim_env(sys.executable) == {}
+
+    # py4j installed apart from pyspark: the dir the shim puts in front
+    # would not hold it.
+    monkeypatch.setenv("SPARK_HOME", matching)
+    elsewhere = tmp_path / "other" / "py4j" / "__init__.py"
+    monkeypatch.setattr(py4j, "__file__", str(elsewhere))
+    assert _worker_shim_env(sys.executable) == {}
+
+
+def _is_spark_archive(path: str) -> bool:
+    """Whether `path` is one of the archives the JVM puts on a Python
+    worker's path: pyspark.zip, the py4j source zip or a jar."""
+    import fnmatch
+
+    name = os.path.basename(path)
+    return (
+        name == "pyspark.zip"
+        or fnmatch.fnmatch(name, "py4j-*-src.zip")
+        or name.endswith(".jar")
+    )
+
+
+def test_worker_shim_drops_spark_archives_from_pythonpath():
+    """The shim prepends the driver's pyspark dir and drops Spark's own
+    archives from PYTHONPATH, keeping every other entry in order."""
+    import subprocess
+    import sys
+
+    from lakehouse_homeserver_spark.session import _WORKER_SHIM
+
+    lib = "/spark-home/python/lib"
+    entries = [
+        f"{lib}/pyspark.zip",
+        f"{lib}/py4j-0.10.9.9-src.zip",
+        "/spark-home/jars/spark-core_2.13-4.1.2.jar",
+        "/keep/a",
+        "/keep/user.zip",
+    ]
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_PYSPARK_DIR": "/driver/site-packages",
+        "SPARK_GRAFT_REAL_PYTHON": sys.executable,
+        "PYTHONPATH": ":".join(entries),
+    }
+    out = subprocess.run(
+        [_WORKER_SHIM, "-c", 'import os; print(os.environ["PYTHONPATH"])'],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert out == "/driver/site-packages:/keep/a:/keep/user.zip"
+
+
+def test_python_worker_path_holds_no_spark_archive(spark):
+    """A Python worker of the session neither has a Spark archive on
+    sys.path nor a zipimporter over one: each would re-read its whole
+    archive index on every task."""
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        archives = [
+            imp.archive
+            for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+        ]
+        paths = ["path"] * len(sys.path) + ["importer"] * len(archives)
+        yield pa.RecordBatch.from_pydict(
+            {"kind": paths, "entry": list(sys.path) + archives}
+        )
+
+    rows = spark.range(1).mapInArrow(probe, "kind string, entry string").collect()
+    assert any(r.kind == "path" for r in rows)
+    bad = [(r.kind, r.entry) for r in rows if _is_spark_archive(r.entry)]
+    assert bad == []
